@@ -27,7 +27,8 @@ import graft.operators.{BlockedCloud, PointCloud}
   * source_dataset `<name>` resolves to `<cloudBaseDir>/<name>` when that
   * directory exists, else `<cloudBaseDir>` itself. With outDir set,
   * each result lands in `<outDir>/<query_name>` as parquet (the S9
-  * result-table sink).
+  * result-table sink). Every query is attempted; the exit status is 1
+  * when any of them failed.
   */
 object QueryRunner {
 
@@ -52,30 +53,23 @@ object QueryRunner {
     if (spec.has("minz")) cloud.withMinZ(withMax, spec.get("minz").asDouble()) else withMax
   }
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: QueryRunner <spec.json> <cloudBaseDir> [outDir]")
-    val Array(specPath, cloudBase) = args.take(2)
-    val outDir = args.lift(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** Run every query of the spec file at `specPath` — each one is
+    * attempted even after an earlier one fails — and return how many
+    * failed. */
+  def run(spark: SparkSession, specPath: String, cloudBase: String,
+      outDir: Option[String]): Int = {
     val root = new ObjectMapper().readTree(new java.io.File(specPath))
-    val queries = root.get("queries")
     val clouds = scala.collection.mutable.Map.empty[String, BlockedCloud]
-    queries.properties().forEach { e =>
+    var failures = 0
+    root.get("queries").properties().forEach { e =>
       val (name, spec) = (e.getKey, e.getValue)
       val t0 = System.nanoTime()
       val ds = spec.get("source_dataset").asText()
       val dir = if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$cloudBase/$ds")))
         s"$cloudBase/$ds" else cloudBase
-      val cloud = clouds.getOrElseUpdate(dir, PointCloud.read(spark, dir))
       println(s"=== ${spec.get("mode").asText()} query $name from $ds ===")
       try {
-        val result = runOne(cloud, spec)
+        val result = runOne(clouds.getOrElseUpdate(dir, PointCloud.read(spark, dir)), spec)
         val n = outDir match {
           case Some(o) =>
             result.write.mode("overwrite").parquet(s"$o/$name")
@@ -84,9 +78,26 @@ object QueryRunner {
         }
         println(f"--> $n rows, ${(System.nanoTime() - t0) / 1e9}%.2fs")
       } catch {
-        case e: Exception => println(s"An error occurred: $e")
+        case e: Exception =>
+          failures += 1
+          println(s"An error occurred: $e")
       }
     }
-    spark.stop()
+    failures
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: QueryRunner <spec.json> <cloudBaseDir> [outDir]")
+    val spark = SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val failures = try run(spark, args(0), args(1), args.lift(2)) finally spark.stop()
+    if (failures > 0) {
+      System.err.println(s"$failures of the spec's queries failed")
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -94,32 +94,37 @@ object PointCloud {
       case None => spec.ratio
     }
     val (headLen, tailLen) = Morton.splitLengths(qxMax, qyMax, ratio)
-
-    val mkey = sfc.morton_encode(
-      quantize(col("x"), spec.offX, spec.scaleX),
-      quantize(col("y"), spec.offY, spec.scaleY))
-    val keyed = points.select(
-      shiftright(mkey, tailLen).as("sfc_head"),
-      mkey.bitwiseAND(lit((1L << tailLen) - 1)).as("sfc_tail"),
-      round(col("z"), 2).as("z")) // z kept at 2 decimals (point_processor.py:47)
-
-    val nParts = spec.blockPartitions.getOrElse(
-      spark.sessionState.conf.numShufflePartitions)
-    val packed = keyed
-      .repartitionByRange(nParts, col("sfc_head"))
-      .sortWithinPartitions("sfc_head", "sfc_tail")
-      .as[(Long, Long, Double)](tuple3Enc)
-      .mapPartitions(packSortedPartition _)(blockEnc)
-      .toDF()
-
     val meta = CloudMeta(spec.name, spec.srid, n, headLen, tailLen,
       spec.scaleX, spec.scaleY, spec.scaleZ, spec.offX, spec.offY, spec.offZ,
       xMin, xMax, yMin, yMax, zMin, zMax)
-    new BlockedCloud(spark, packed, meta)
+    new BlockedCloud(spark, packKeyed(keyPoints(points, meta),
+      spec.blockPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)), meta)
   }
 
   private def quantize(c: Column, off: Double, scale: Double): Column =
     round((c - lit(off)) / lit(scale)).cast(LongType)
+
+  /** (x, y, z) points -> (sfc_head, sfc_tail, z) under `meta`'s grid
+    * and key split. */
+  private def keyPoints(points: DataFrame, meta: CloudMeta): DataFrame = {
+    val mkey = sfc.morton_encode(
+      quantize(col("x"), meta.offX, meta.scaleX),
+      quantize(col("y"), meta.offY, meta.scaleY))
+    points.select(
+      shiftright(mkey, meta.tailLen).as("sfc_head"),
+      mkey.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("sfc_tail"),
+      round(col("z"), 2).as("z")) // z kept at 2 decimals (point_processor.py:47)
+  }
+
+  /** Range-shuffle keyed rows on the head, sort each partition and
+    * stream-pack it into blocks — the one pack pipeline of import,
+    * append and compaction. */
+  private def packKeyed(keyed: DataFrame, nParts: Int): DataFrame =
+    keyed.repartitionByRange(nParts, col("sfc_head"))
+      .sortWithinPartitions("sfc_head", "sfc_tail")
+      .as[(Long, Long, Double)](tuple3Enc)
+      .mapPartitions(packSortedPartition _)(blockEnc)
+      .toDF()
 
   /** Entry point 1 of the reference (importer.py): import LAS file(s)
     * into the blocked-SFC layout. `path` may be one .las file or a
@@ -160,30 +165,42 @@ object PointCloud {
       }
     }
 
-  /** Persist blocks (sorted parquet — row-group min/max stats on sfc_head
-    * replace the reference's B-tree, db/__init__.py:118-126) + metadata. */
-  /** Output sizing for the block store (guide §6): the import's range
-    * partitioning is CPU-count-sized, so without this a small cloud
-    * lands as dozens of ~100 KB files whose per-file open cost +
-    * per-split task scheduling dominate every later scan (measured at
-    * sf0.1: a 3.2 MB store as 33 files made each scan a 32-task stage,
-    * and 8-core runs beat 32-core runs 0.3:1 on pc_voxel_counts).
-    * COALESCE — never repartition — so the sfc range clustering and
-    * per-file min/max pruning survive; the ~128 MB target means a
-    * cluster-scale cloud keeps ceil(bytes/128 MB) files and full write
-    * parallelism, i.e. this is a no-op above laptop volumes. */
-  private[operators] def sizedForWrite(blocks: org.apache.spark.sql.DataFrame,
-      pointCount: Long, estBytesPerPoint: Long): org.apache.spark.sql.DataFrame = {
+  /** Version of the on-disk block layout. Stores cached across runs key
+    * on it, so a layout change re-imports instead of serving old files. */
+  private[graft] val LayoutVersion: Int = 2
+
+  /** Blocks per parquet page. The column index then holds sfc_head
+    * min/max per page of a head-sorted file, and the reader skips every
+    * page a selection's head ranges miss — the reference's B-tree range
+    * scan (db/__init__.py:118-126) at page granularity, inside one file
+    * and one row group. Pages, not row groups: each row group repeats
+    * its dictionaries (128 blocks per row group cost +5.2% bytes per
+    * point, 128 per page +0.4%). */
+  private val BlocksPerPage: Int = 128
+
+  /** The block-store writer every path lands blocks through (import,
+    * append, compaction — 2D and 3D), so each writes the paged layout.
+    * Output sizing (guide §6): the range partitioning is CPU-count-
+    * sized, so without this a small cloud lands as dozens of ~100 KB
+    * files whose per-file open cost + per-split task scheduling
+    * dominate every later scan (measured at sf0.1: a 3.2 MB store as 33
+    * files made each scan a 32-task stage). COALESCE — never
+    * repartition — so the sfc range clustering survives; the ~128 MB
+    * target keeps ceil(bytes/128 MB) files and full write parallelism
+    * at cluster scale. Coalescing to more partitions than exist changes
+    * nothing, so the plan is never run just to count them. */
+  private[operators] def blockWriter(blocks: DataFrame, pointCount: Long,
+      estBytesPerPoint: Long): DataFrameWriter[Row] = {
     val target = 128L << 20
-    val nOut = math.max(1L,
-      (pointCount * estBytesPerPoint + target - 1) / target)
-    if (nOut < blocks.rdd.getNumPartitions) blocks.coalesce(nOut.toInt)
-    else blocks
+    val nOut = math.max(1L, (pointCount * estBytesPerPoint + target - 1) / target)
+    blocks.coalesce(math.min(nOut, Int.MaxValue).toInt).write
+      .option("parquet.page.row.count.limit", BlocksPerPage.toLong)
   }
 
+  /** Persist blocks + metadata. */
   def write(cloud: BlockedCloud, dir: String): Unit = {
-    sizedForWrite(cloud.blocks, cloud.meta.pointCount, estBytesPerPoint = 8L)
-      .write.mode("overwrite").parquet(s"$dir/blocks")
+    blockWriter(cloud.blocks, cloud.meta.pointCount, estBytesPerPoint = 8L)
+      .mode("overwrite").parquet(s"$dir/blocks")
     cloud.spark.createDataset(Seq(cloud.meta))(metaEnc)
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
@@ -217,6 +234,29 @@ object PointCloud {
     new BlockedCloud(spark, blocks, meta)
   }
 
+  /** Stats of an append batch (count, x/y/z min/max) after the grid
+    * guards: the batch must lie inside the stored grid's key space.
+    * The stored key split covers exactly [0, 2^(headLen+tailLen)) — a
+    * delta past that envelope would pack into heads the range
+    * decomposer never emits, so every spatial query would silently
+    * omit it. Reject instead (re-import, or import with headroom, to
+    * widen the grid). */
+  private def checkedDeltaStats(meta: CloudMeta, delta: DataFrame): Row = {
+    val s = delta.agg(count(lit(1)),
+      min("x"), max("x"), min("y"), max("y"), min("z"), max("z")).head()
+    if (s.getLong(0) > 0) {
+      require((s.getDouble(1) - meta.offX) / meta.scaleX > -0.5 &&
+        (s.getDouble(3) - meta.offY) / meta.scaleY > -0.5,
+        "append batch falls below the stored grid offsets")
+      val qxMaxD = math.round((s.getDouble(2) - meta.offX) / meta.scaleX)
+      val qyMaxD = math.round((s.getDouble(4) - meta.offY) / meta.scaleY)
+      require(Morton.bitLength(Morton.encode(qxMaxD, qyMaxD)) <= meta.headLen + meta.tailLen,
+        s"append batch max quantized coords ($qxMaxD, $qyMaxD) exceed the stored " +
+          s"${meta.headLen + meta.tailLen}-bit key space; queries could not see these points")
+    }
+    s
+  }
+
   /** Exactly-once streaming ingest (the 2D mirror of
     * [[PointCloud3.appendBatch]]): the micro-batch packs UNDER THE
     * STORED GRID into its own `blocks_delta/__batch=<id>` partition
@@ -229,31 +269,11 @@ object PointCloud {
   def appendBatch(spark: SparkSession, dir: String, delta: DataFrame,
       batchId: Long): Unit = {
     val meta = spark.read.parquet(s"$dir/meta").as[CloudMeta](metaEnc).head()
-    val s = delta.agg(count(lit(1)),
-      min("x"), max("x"), min("y"), max("y"), min("z"), max("z")).head()
+    val s = checkedDeltaStats(meta, delta)
     if (s.getLong(0) == 0) return // empty micro-batch: nothing to land
-    require((s.getDouble(1) - meta.offX) / meta.scaleX > -0.5 &&
-      (s.getDouble(3) - meta.offY) / meta.scaleY > -0.5,
-      "append batch falls below the stored grid offsets")
-    val qxMaxD = math.round((s.getDouble(2) - meta.offX) / meta.scaleX)
-    val qyMaxD = math.round((s.getDouble(4) - meta.offY) / meta.scaleY)
-    require(Morton.bitLength(Morton.encode(qxMaxD, qyMaxD)) <= meta.headLen + meta.tailLen,
-      s"append batch max quantized coords ($qxMaxD, $qyMaxD) exceed the stored " +
-        s"${meta.headLen + meta.tailLen}-bit key space; queries could not see these points")
-    val mkey = sfc.morton_encode(
-      quantize(col("x"), meta.offX, meta.scaleX),
-      quantize(col("y"), meta.offY, meta.scaleY))
-    delta.select(
-        shiftright(mkey, meta.tailLen).as("sfc_head"),
-        mkey.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("sfc_tail"),
-        round(col("z"), 2).as("z"))
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("sfc_head"))
-      .sortWithinPartitions("sfc_head", "sfc_tail")
-      .as[(Long, Long, Double)](tuple3Enc)
-      .mapPartitions(packSortedPartition _)(blockEnc)
-      .toDF()
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    val packed = packKeyed(keyPoints(delta, meta), spark.sessionState.conf.numShufflePartitions)
+    blockWriter(packed.withColumn("__batch", lit(batchId)), s.getLong(0), estBytesPerPoint = 8L)
+      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch").parquet(s"$dir/blocks_delta")
     spark.createDataset(Seq(BatchLedgerRow(batchId, s.getLong(0),
         s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
@@ -275,36 +295,11 @@ object PointCloud {
     * compaction when fragmentation warrants. */
   def appendPoints(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
     val meta = spark.read.parquet(s"$dir/meta").as[CloudMeta](metaEnc).head()
-    val s = delta.agg(count(lit(1)),
-      min("x"), max("x"), min("y"), max("y"), min("z"), max("z")).head()
-    require(!s.isNullAt(1), "empty append batch")
-    require((s.getDouble(1) - meta.offX) / meta.scaleX > -0.5 &&
-      (s.getDouble(3) - meta.offY) / meta.scaleY > -0.5,
-      "append batch falls below the stored grid offsets")
-    // upper bound: the stored key split covers exactly
-    // [0, 2^(headLen+tailLen)) — a delta past that envelope would pack
-    // into heads the range decomposer never emits, so every spatial
-    // query would silently omit it. Reject instead (re-import, or
-    // import with headroom, to widen the grid).
-    val qxMaxD = math.round((s.getDouble(2) - meta.offX) / meta.scaleX)
-    val qyMaxD = math.round((s.getDouble(4) - meta.offY) / meta.scaleY)
-    require(Morton.bitLength(Morton.encode(qxMaxD, qyMaxD)) <= meta.headLen + meta.tailLen,
-      s"append batch max quantized coords ($qxMaxD, $qyMaxD) exceed the stored " +
-        s"${meta.headLen + meta.tailLen}-bit key space; queries could not see these points")
-    val mkey = sfc.morton_encode(
-      quantize(col("x"), meta.offX, meta.scaleX),
-      quantize(col("y"), meta.offY, meta.scaleY))
-    val keyed = delta.select(
-      shiftright(mkey, meta.tailLen).as("sfc_head"),
-      mkey.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("sfc_tail"),
-      round(col("z"), 2).as("z"))
-    keyed
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("sfc_head"))
-      .sortWithinPartitions("sfc_head", "sfc_tail")
-      .as[(Long, Long, Double)](tuple3Enc)
-      .mapPartitions(packSortedPartition _)(blockEnc)
-      .toDF()
-      .write.mode("append").parquet(s"$dir/blocks")
+    val s = checkedDeltaStats(meta, delta)
+    require(s.getLong(0) > 0, "empty append batch")
+    blockWriter(packKeyed(keyPoints(delta, meta), spark.sessionState.conf.numShufflePartitions),
+        s.getLong(0), estBytesPerPoint = 8L)
+      .mode("append").parquet(s"$dir/blocks")
     val updated = meta.copy(pointCount = meta.pointCount + s.getLong(0),
       xMin = math.min(meta.xMin, s.getDouble(1)), xMax = math.max(meta.xMax, s.getDouble(2)),
       yMin = math.min(meta.yMin, s.getDouble(3)), yMax = math.max(meta.yMax, s.getDouble(4)),
@@ -316,24 +311,19 @@ object PointCloud {
   /** Clustering compaction: merge fragmented blocks so every head is
     * again exactly one block inside one range-clustered file — the
     * post-append maintenance pass. Points stream through the same
-    * range-shuffle + in-partition sort + one-block-in-memory pack as
-    * the initial import (never a per-head collect), land in a staging
+    * range-shuffle + in-partition sort + one-block-in-memory pack and
+    * the same paged block writer as the initial import (never a
+    * per-head collect), land in a staging
     * directory, and swap in with a directory rename (a real deployment
     * would delegate the swap to a table format's atomic commit). */
   def compact(spark: SparkSession, dir: String): Unit = {
     val cloud = read(spark, dir) // base + delta union, ledger-composed meta
-    val blocks = cloud.blocks
-    val repacked = blocks
-      .select(col("sfc_head"), posexplode(col("sfc_tail")).as(Seq("__i", "__t")),
-        col("z"))
-      .select(col("sfc_head"), col("__t").as("sfc_tail"),
-        element_at(col("z"), col("__i") + 1).as("z"))
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("sfc_head"))
-      .sortWithinPartitions("sfc_head", "sfc_tail")
-      .as[(Long, Long, Double)](tuple3Enc)
-      .mapPartitions(packSortedPartition _)(blockEnc)
-      .toDF()
-    repacked.write.mode("overwrite").parquet(s"$dir/blocks_compacting")
+    val keyed = cloud.blocks
+      .select(col("sfc_head"), explode(arrays_zip(col("sfc_tail"), col("z"))).as("p"))
+      .select(col("sfc_head"), col("p.sfc_tail").as("sfc_tail"), col("p.z").as("z"))
+    blockWriter(packKeyed(keyed, spark.sessionState.conf.numShufflePartitions),
+        cloud.meta.pointCount, estBytesPerPoint = 8L)
+      .mode("overwrite").parquet(s"$dir/blocks_compacting")
     // swap via rename-aside: blocks -> blocks_old, staging -> blocks,
     // then delete blocks_old. A crash at any step leaves a recoverable
     // state (the data exists intact under exactly one of the three
@@ -408,18 +398,13 @@ object PointCloud {
 
 /** A stored point cloud + its catalog row; all queries are lazy DataFrames
   * following the reference's filter-refine plan (retrieve_data.py:103-153):
-  * driver-side Morton range decomposition -> pushed sfc_head predicate
-  * (parquet row-group pruning) -> block explode + decode -> exact
-  * geometric predicate. No mid-query materialization, no per-point driver
-  * work (the reference's INSERT-per-point loop, retrieve_data.py:150-151,
-  * is the anti-pattern this replaces).
+  * driver-side Morton range decomposition -> ONE scan with a pushed
+  * sfc_head predicate (parquet page pruning through the column index)
+  * -> block explode + decode -> exact geometric predicate. No
+  * mid-query materialization, no per-point driver work (the
+  * reference's INSERT-per-point loop, retrieve_data.py:150-151, is the
+  * anti-pattern this replaces).
   */
-object BlockedCloud {
-  private[operators] val fusedExplode: Boolean =
-    sys.env.getOrElse("GRAFT_FUSED_EXPLODE",
-      System.getProperty("graft.fusedExplode", "false")).toBoolean
-}
-
 final class BlockedCloud(
     val spark: SparkSession,
     val blocks: DataFrame,
@@ -438,80 +423,55 @@ final class BlockedCloud(
     else Some(Bbox(qxMin.toDouble, qxMax.toDouble, qyMin.toDouble, qyMax.toDouble))
   }
 
-  /** Pushed OR-of-BETWEEN + binary-search membership over the
-    * decomposed ranges — see [[SfcPredicates.headIn]]. */
-  private def headPredicate(ranges: Seq[(Long, Long)]): Column =
-    SfcPredicates.headIn(col("sfc_head"), ranges)
-
   /** Unpack blocks to reconstructed points (x, y, z) — the reference's
-    * explode-decode loop (retrieve_data.py:127-145) as a lazy plan.
-    * Default: composed arrays_zip → explode → native decode expressions
-    * (stays inside whole-stage codegen). GRAFT_FUSED_EXPLODE=true
-    * selects the fused ExplodeBlock generator (no intermediate
-    * zipped-struct array, but CodegenFallback); measured equal within
-    * noise at sf0.1 — see PLANS.md. Both produce identical rows. */
-  private def explodePoints(blk: DataFrame): DataFrame =
-    if (BlockedCloud.fusedExplode) {
-      blk.select(graft.functions.generators.explode_block(
-          col("sfc_head"), col("sfc_tail"), col("z"), meta.tailLen))
-        .select(
-          (col("x_grid").cast("double") * meta.scaleX + meta.offX).as("x"),
-          (col("y_grid").cast("double") * meta.scaleY + meta.offY).as("y"),
-          col("z"))
-    } else {
-      val key = shiftleft(col("sfc_head"), meta.tailLen).bitwiseOR(col("p.sfc_tail"))
-      blk
-        .select(col("sfc_head"), explode(arrays_zip(col("sfc_tail"), col("z"))).as("p"))
-        .select(
-          (sfc.morton_x(key).cast("double") * meta.scaleX + meta.offX).as("x"),
-          (sfc.morton_y(key).cast("double") * meta.scaleY + meta.offY).as("y"),
-          col("p.z").as("z"))
-    }
-
-  private def emptyPoints: DataFrame = explodePoints(blocks.filter(lit(false)))
-
-  /** Two-branch candidate plan: points from fully-contained blocks (no
-    * exact bbox test needed) and points from boundary-straddling blocks
-    * (exact test required) — the reference's two-tier refinement
-    * (retrieve_data.py:128-145). */
-  private def candidates(b: Bbox): (DataFrame, DataFrame) =
-    quantizedBbox(b) match {
-      case None => (emptyPoints, emptyPoints)
-      case Some(qb) =>
-        // 256-range budget: a coarser cover just shifts points from the
-        // contained branch to the exact-tested partial branch — same
-        // result, bounded predicate size at any data scale
-        val hr = MortonRange.decompose(qb, totalBits, meta.tailLen, maxCells = 256)
-        val c = if (hr.contained.nonEmpty)
-          explodePoints(blocks.filter(headPredicate(hr.contained))) else emptyPoints
-        val p = if (hr.partial.nonEmpty)
-          explodePoints(blocks.filter(headPredicate(hr.partial))) else emptyPoints
-        (c, p)
-    }
-
-  private def bboxFilter(b: Bbox): Column =
-    col("x") >= b.xMin && col("x") <= b.xMax && col("y") >= b.yMin && col("y") <= b.yMax
-
-  /** All points with x in [xMin, xMax] and y in [yMin, yMax] (inclusive). */
-  def bboxQuery(b: Bbox): DataFrame = {
-    val (contained, partial) = candidates(b)
-    contained.unionAll(partial.filter(bboxFilter(b)))
+    * explode-decode loop (retrieve_data.py:127-145) as a lazy plan:
+    * arrays_zip → explode → native decode expressions, all inside
+    * whole-stage codegen. A `contained` per-block flag rides along to
+    * every point of the block as the [[SfcPredicates.Contained]] column. */
+  private def explodePoints(blk: DataFrame, contained: Option[Column] = None): DataFrame = {
+    val key = shiftleft(col("sfc_head"), meta.tailLen).bitwiseOR(col("p.sfc_tail"))
+    val tag = contained.map(_.as(SfcPredicates.Contained)).toSeq
+    blk.select((col("sfc_head") +: tag :+
+        explode(arrays_zip(col("sfc_tail"), col("z"))).as("p")): _*)
+      .select(Seq(
+        (sfc.morton_x(key).cast("double") * meta.scaleX + meta.offX).as("x"),
+        (sfc.morton_y(key).cast("double") * meta.scaleY + meta.offY).as("y"),
+        col("p.z").as("z")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
   }
+
+  /** Filter step: the points of every block the bbox's Morton cover
+    * touches, read by ONE scan and tagged [[SfcPredicates.Contained]]
+    * when their block lies wholly inside the bbox — the reference's
+    * two-tier refinement (retrieve_data.py:128-145) as a per-block
+    * flag rather than a second scan. The 256-range budget bounds the
+    * predicate at any data scale; a coarser cover only moves blocks
+    * from contained to partial. */
+  private def candidates(b: Bbox): DataFrame =
+    quantizedBbox(b).map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
+      .filterNot(_.isEmpty) match {
+      case Some(hr) => explodePoints(blocks.filter(SfcPredicates.headIn(col("sfc_head"), hr.all)),
+        Some(SfcPredicates.containedTag(col("sfc_head"), hr)))
+      case None => explodePoints(blocks.filter(lit(false)), Some(lit(false)))
+    }
+
+  private def xyz(df: DataFrame): DataFrame = df.select("x", "y", "z")
+
+  /** All points with x in [xMin, xMax] and y in [yMin, yMax] (inclusive);
+    * points of contained blocks skip the exact test. */
+  def bboxQuery(b: Bbox): DataFrame =
+    xyz(candidates(b).filter(col(SfcPredicates.Contained) ||
+      (col("x") >= b.xMin && col("x") <= b.xMax && col("y") >= b.yMin && col("y") <= b.yMax)))
 
   /** 2D circle selection (z ignored — PostGIS ST_DWithin on 2D points,
     * retrieve_data.py:56-63); boundary inclusive (<= r). */
   def circleQuery(c: Circle): DataFrame = {
-    val (contained, partial) = candidates(c.bbox)
     val d2 = (col("x") - c.cx) * (col("x") - c.cx) + (col("y") - c.cy) * (col("y") - c.cy)
-    contained.unionAll(partial).filter(d2 <= lit(c.r * c.r))
+    xyz(candidates(c.bbox)).filter(d2 <= lit(c.r * c.r))
   }
 
   /** Polygon (with holes) selection, even-odd rule, boundary excluded. */
-  def polygonQuery(p: Polygon): DataFrame = {
-    val (contained, partial) = candidates(p.bbox)
-    contained.unionAll(partial)
-      .filter(sfc.point_in_polygon(col("x"), col("y"), p))
-  }
+  def polygonQuery(p: Polygon): DataFrame =
+    xyz(candidates(p.bbox)).filter(sfc.point_in_polygon(col("x"), col("y"), p))
 
   def polygonQuery(wkt: String): DataFrame =
     polygonQuery(Geometry.parseWktPolygon(wkt))
@@ -526,8 +486,8 @@ final class BlockedCloud(
     * approximates), evaluated per segment as built-in arithmetic that
     * stays inside whole-stage codegen — no geometry library, no UDF.
     * SFC pruning uses the line's bbox grown by r; the exact predicate
-    * then applies to both candidate branches (a block inside the grown
-    * bbox is NOT necessarily inside the buffer, unlike the rectangle
+    * then applies to every candidate (a block inside the grown bbox is
+    * NOT necessarily inside the buffer, unlike the rectangle
     * case). Predicate size is linear in segment count — fine for query
     * shapes (tens of vertices); a million-vertex line would call for a
     * broadcast segment table + range join instead. */
@@ -543,8 +503,6 @@ final class BlockedCloud(
       yMin = math.min(yMin, line(i + 1)); yMax = math.max(yMax, line(i + 1))
       i += 2
     }
-    val (contained, partial) =
-      candidates(Bbox(xMin - r, xMax + r, yMin - r, yMax + r))
     val segs = (0 until line.length / 2 - 1).map { s =>
       (line(2 * s), line(2 * s + 1), line(2 * s + 2), line(2 * s + 3))
     }.filter { case (ax, ay, bx, by) => ax != bx || ay != by }
@@ -562,7 +520,7 @@ final class BlockedCloud(
       val fy = col("y") - (t * dyc + ay)
       fx * fx + fy * fy <= lit(r * r)
     }.reduce(_ || _)
-    contained.unionAll(partial).filter(pred)
+    xyz(candidates(Bbox(xMin - r, xMax + r, yMin - r, yMax + r))).filter(pred)
   }
 
   def polylineBufferQuery(wkt: String, r: Double): DataFrame =

@@ -50,17 +50,19 @@ object PointCloud3 {
     val tailLen = totalBits - headLen
 
     val key = sfc.morton3_encode(xq, yq, zq)
-    val packed = points
-      .select(shiftright(key, tailLen).as("_1"),
-        key.bitwiseAND(lit((1L << tailLen) - 1)).as("_2"))
-      .as[(Long, Long)](tuple2Enc)
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("_1"))
+    new BlockedCloud3(spark, packKeyed(points.select(shiftright(key, tailLen).as("_1"),
+        key.bitwiseAND(lit((1L << tailLen) - 1)).as("_2"))),
+      Cloud3Meta(name, n, headLen, tailLen, zDenom, qxMax, qyMax, qzMax))
+  }
+
+  /** Range-shuffle (head, tail) rows on the head, sort each partition
+    * and stream-pack it into blocks — import, append and compaction. */
+  private def packKeyed(keyed: DataFrame): DataFrame =
+    keyed.as[(Long, Long)](tuple2Enc)
+      .repartitionByRange(keyed.sparkSession.sessionState.conf.numShufflePartitions, col("_1"))
       .sortWithinPartitions("_1", "_2")
       .mapPartitions(packSorted _)(blockEnc)
       .toDF()
-    new BlockedCloud3(spark, packed,
-      Cloud3Meta(name, n, headLen, tailLen, zDenom, qxMax, qyMax, qzMax))
-  }
 
   private def packSorted(it: Iterator[(Long, Long)]): Iterator[PointBlock3] =
     new Iterator[PointBlock3] {
@@ -81,12 +83,13 @@ object PointCloud3 {
       }
     }
 
+  // z rides inside the Morton key here, so rows are narrower than the
+  // 2D store's (sfc_tail, z double) pairs — ~6 B/pt measured
+  private val estBytesPerPoint = 6L
+
   def write(cloud: BlockedCloud3, dir: String): Unit = {
-    // z rides inside the Morton key here, so rows are narrower than
-    // the 2D store's (sfc_tail, z double) pairs — ~6 B/pt measured
-    PointCloud.sizedForWrite(cloud.blocks, cloud.meta.pointCount,
-        estBytesPerPoint = 6L)
-      .write.mode("overwrite").parquet(s"$dir/blocks")
+    PointCloud.blockWriter(cloud.blocks, cloud.meta.pointCount, estBytesPerPoint)
+      .mode("overwrite").parquet(s"$dir/blocks")
     cloud.spark.createDataset(Seq(cloud.meta))(metaEnc)
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
@@ -141,16 +144,11 @@ object PointCloud3 {
       s"append batch max quantized coords ($qx, $qy, $qz) exceed the stored " +
         s"${meta.headLen + meta.tailLen}-bit key space; queries could not see these points")
     val key = sfc.morton3_encode(xq, yq, zq)
-    delta
-      .select(shiftright(key, meta.tailLen).as("_1"),
-        key.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("_2"))
-      .as[(Long, Long)](tuple2Enc)
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("_1"))
-      .sortWithinPartitions("_1", "_2")
-      .mapPartitions(packSorted _)(blockEnc)
-      .toDF()
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    val packed = packKeyed(delta.select(shiftright(key, meta.tailLen).as("_1"),
+      key.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("_2")))
+    PointCloud.blockWriter(packed.withColumn("__batch", lit(batchId)), s.getLong(0),
+        estBytesPerPoint)
+      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch").parquet(s"$dir/blocks_delta")
     spark.createDataset(Seq((batchId, s.getLong(0))))(
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
@@ -161,9 +159,9 @@ object PointCloud3 {
 
   /** Clustering compaction (the 3D mirror of the 2D store's compact):
     * base + streamed delta partitions re-pack through the same range-
-    * shuffle + in-partition sort + streaming pack pipeline into one
-    * clustered blocks directory; the batch ledger folds into the base
-    * metadata and the delta dirs are removed. Swap is rename-aside
+    * shuffle + in-partition sort + streaming pack pipeline and the
+    * paged block writer into one clustered blocks directory; the batch
+    * ledger folds into the base metadata and the delta dirs are removed. Swap is rename-aside
     * (blocks -> blocks_old, staging -> blocks, delete) so a crash at
     * any step leaves the data intact under exactly one name. Run
     * between ingest sessions (a batch replayed from a pre-compact
@@ -172,14 +170,9 @@ object PointCloud3 {
   def compact(spark: SparkSession, dir: String): Unit = {
     import java.nio.file.{Files, Paths}
     val cloud = read(spark, dir) // union view + ledger-composed count
-    cloud.blocks
-      .select(col("sfc_head").as("_1"), explode(col("sfc_tail")).as("_2"))
-      .as[(Long, Long)](tuple2Enc)
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("_1"))
-      .sortWithinPartitions("_1", "_2")
-      .mapPartitions(packSorted _)(blockEnc)
-      .toDF()
-      .write.mode("overwrite").parquet(s"$dir/blocks_compacting")
+    PointCloud.blockWriter(packKeyed(cloud.blocks.select(col("sfc_head").as("_1"),
+        explode(col("sfc_tail")).as("_2"))), cloud.meta.pointCount, estBytesPerPoint)
+      .mode("overwrite").parquet(s"$dir/blocks_compacting")
     def rmdir(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())
@@ -207,22 +200,39 @@ final class BlockedCloud3(
     val blocks: DataFrame,
     val meta: Cloud3Meta) {
 
-  private def headPredicate(ranges: Seq[(Long, Long)]): Column =
-    SfcPredicates.headIn(col("sfc_head"), ranges)
-
-  /** Explode blocks to (x, y, z) with z reconstructed as zq / zDenom —
-    * the IEEE quotient is correctly rounded, so it reproduces the
-    * closest-double-to-decimal form the source data carries. */
-  private def explode3(blk: DataFrame): DataFrame = {
+  /** Explode blocks to grid points (xq, yq, zq); a `contained` per-block
+    * flag rides along as the [[SfcPredicates.Contained]] column. */
+  private def explode3(blk: DataFrame, contained: Option[Column] = None): DataFrame = {
     val key = shiftleft(col("sfc_head"), meta.tailLen).bitwiseOR(col("t"))
-    blk.select(explode(col("sfc_tail")).as("t"), col("sfc_head"))
-      .select(sfc.morton3_x(key).as("xq"), sfc.morton3_y(key).as("yq"),
-        sfc.morton3_z(key).as("zq"))
+    val tag = contained.map(_.as(SfcPredicates.Contained)).toSeq
+    blk.select((explode(col("sfc_tail")).as("t") +: col("sfc_head") +: tag): _*)
+      .select(Seq(sfc.morton3_x(key).as("xq"), sfc.morton3_y(key).as("yq"),
+        sfc.morton3_z(key).as("zq")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
+  }
+
+  /** Grid points -> (x, y, z) with z reconstructed as zq / zDenom — the
+    * IEEE quotient is correctly rounded, so it reproduces the
+    * closest-double-to-decimal form the source data carries. */
+  private def out(df: DataFrame): DataFrame = df.select(
+    col("xq").cast("double").as("x"), col("yq").cast("double").as("y"),
+    (col("zq").cast("double") / meta.zDenom).as("z"))
+
+  private def emptyPoints: DataFrame = out(explode3(blocks.filter(lit(false))))
+
+  /** Filter step, one scan: the grid points of every block the octree
+    * cover of `box` touches, tagged [[SfcPredicates.Contained]] when
+    * their block lies wholly inside the box. */
+  private def candidates(box: Box3): DataFrame = {
+    val hr = MortonRange3.decompose(box, meta.headLen + meta.tailLen, meta.tailLen,
+      maxCells = 2048)
+    if (hr.isEmpty) explode3(blocks.filter(lit(false)), Some(lit(false)))
+    else explode3(blocks.filter(SfcPredicates.headIn(col("sfc_head"), hr.all)),
+      Some(SfcPredicates.containedTag(col("sfc_head"), hr)))
   }
 
   /** All points in the inclusive 3D box (original coordinates) —
     * filter-refine with z pruned AT THE SCAN via the octree ranges,
-    * not post-filtered. */
+    * not post-filtered; points of contained blocks skip the exact test. */
   def boxQuery(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
       zMin: Double, zMax: Double): DataFrame = {
     val qx0 = math.max(0L, math.ceil(xMin).toLong)
@@ -231,25 +241,11 @@ final class BlockedCloud3(
     val qy1 = math.floor(yMax).toLong
     val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
     val qz1 = math.floor(zMax * meta.zDenom).toLong
-    val out = (df: DataFrame) => df.select(
-      col("xq").cast("double").as("x"), col("yq").cast("double").as("y"),
-      (col("zq").cast("double") / meta.zDenom).as("z"))
-    if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1)
-      return out(explode3(blocks.filter(lit(false))))
-    val hr = MortonRange3.decompose(
-      Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
-        qz0.toDouble, qz1.toDouble),
-      meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048)
-    val contained = if (hr.contained.nonEmpty)
-      explode3(blocks.filter(headPredicate(hr.contained)))
-    else explode3(blocks.filter(lit(false)))
-    val partial = if (hr.partial.nonEmpty)
-      explode3(blocks.filter(headPredicate(hr.partial)))
-        .filter(col("xq") >= qx0 && col("xq") <= qx1 &&
-          col("yq") >= qy0 && col("yq") <= qy1 &&
-          col("zq") >= qz0 && col("zq") <= qz1)
-    else explode3(blocks.filter(lit(false)))
-    out(contained.unionAll(partial))
+    if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1) return emptyPoints
+    out(candidates(Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
+        qz0.toDouble, qz1.toDouble))
+      .filter(col(SfcPredicates.Contained) || (col("xq") >= qx0 && col("xq") <= qx1 &&
+        col("yq") >= qy0 && col("yq") <= qy1 && col("zq") >= qz0 && col("zq") <= qz1)))
   }
 
   /** Cylinder selection: 2D circle x height band — the B-suite circle
@@ -260,20 +256,11 @@ final class BlockedCloud3(
       zMin: Double, zMax: Double): DataFrame = {
     val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
     val qz1 = math.floor(zMax * meta.zDenom).toLong
-    val out = (df: DataFrame) => df.select(
-      col("xq").cast("double").as("x"), col("yq").cast("double").as("y"),
-      (col("zq").cast("double") / meta.zDenom).as("z"))
-    if (qz0 > qz1 || r < 0)
-      return out(explode3(blocks.filter(lit(false))))
-    val hr = MortonRange3.decompose(
-      Box3(math.max(0, math.ceil(cx - r)), math.floor(cx + r),
-        math.max(0, math.ceil(cy - r)), math.floor(cy + r),
-        qz0.toDouble, qz1.toDouble),
-      meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048)
-    if (hr.isEmpty) return out(explode3(blocks.filter(lit(false))))
+    if (qz0 > qz1 || r < 0) return emptyPoints
     val d2 = (col("xq") - cx) * (col("xq") - cx) +
       (col("yq") - cy) * (col("yq") - cy)
-    out(explode3(blocks.filter(headPredicate(hr.all)))
+    out(candidates(Box3(math.max(0, math.ceil(cx - r)), math.floor(cx + r),
+        math.max(0, math.ceil(cy - r)), math.floor(cy + r), qz0.toDouble, qz1.toDouble))
       .filter(d2 <= lit(r * r) && col("zq") >= qz0 && col("zq") <= qz1))
   }
 
@@ -281,9 +268,9 @@ final class BlockedCloud3(
     * boundary excluded — same convention as the 2D store) crossed with
     * a height band, all three dimensions pruned AT THE SCAN by one
     * octree decomposition of (polygon bbox x z band). Exact point-in-
-    * polygon (codegen) runs on both candidate branches — a block
-    * inside the prism's bounding box is not necessarily inside the
-    * polygon — while the z band is re-checked only on partial blocks. */
+    * polygon (codegen) runs on every candidate — a block inside the
+    * prism's bounding box is not necessarily inside the polygon — while
+    * the z band is re-checked only on partial blocks. */
   def polygonQuery(p: graft.core.Polygon, zMin: Double, zMax: Double): DataFrame = {
     val b = p.bbox
     val qx0 = math.max(0L, math.ceil(b.xMin).toLong)
@@ -292,23 +279,10 @@ final class BlockedCloud3(
     val qy1 = math.floor(b.yMax).toLong
     val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
     val qz1 = math.floor(zMax * meta.zDenom).toLong
-    val out = (df: DataFrame) => df.select(
-      col("xq").cast("double").as("x"), col("yq").cast("double").as("y"),
-      (col("zq").cast("double") / meta.zDenom).as("z"))
-    if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1)
-      return out(explode3(blocks.filter(lit(false))))
-    val hr = MortonRange3.decompose(
-      Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
-        qz0.toDouble, qz1.toDouble),
-      meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048)
-    val contained = if (hr.contained.nonEmpty)
-      explode3(blocks.filter(headPredicate(hr.contained)))
-    else explode3(blocks.filter(lit(false)))
-    val partial = if (hr.partial.nonEmpty)
-      explode3(blocks.filter(headPredicate(hr.partial)))
-        .filter(col("zq") >= qz0 && col("zq") <= qz1)
-    else explode3(blocks.filter(lit(false)))
-    out(contained.unionAll(partial))
+    if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1) return emptyPoints
+    out(candidates(Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
+        qz0.toDouble, qz1.toDouble))
+      .filter(col(SfcPredicates.Contained) || (col("zq") >= qz0 && col("zq") <= qz1)))
       .filter(sfc.point_in_polygon(col("x"), col("y"), p))
   }
 

@@ -6,14 +6,15 @@ import org.apache.spark.sql.functions.{col, lit}
 /** Scan predicates over decomposed SFC head ranges, shared by the 2D
   * and 3D blocked stores.
   *
-  * Two cost surfaces pull in opposite directions: parquet row-group
-  * pruning wants the ranges as a pushable OR-of-BETWEEN, but Spark
-  * re-evaluates pushed data filters per ROW, where a fine
+  * Two cost surfaces pull in opposite directions: parquet page pruning
+  * (the column index's per-page min/max) wants the ranges as a pushable
+  * OR-of-BETWEEN, but Spark re-evaluates pushed data filters per ROW,
+  * where a fine
   * decomposition's OR is O(ranges) per row and overflows whole-stage
   * codegen's method limits past ~1k terms (measured: a 2048-cell
   * z-slab decomposition ran 6x slower than 512 through the OR tree).
   * So the predicate splits: a COARSENED cover (<= maxPushed ranges,
-  * merged at the widest gaps — row-group stats are themselves coarse,
+  * merged at the widest gaps — page stats are themselves coarse,
   * so little pruning is lost) that Catalyst pushes down, AND an exact
   * binary-search membership expression (O(log ranges) per row,
   * constant-size generated code) that restores full precision. Fine
@@ -53,4 +54,20 @@ private[operators] object SfcPredicates {
     else pushed && graft.functions.sfc.in_sorted_ranges(c,
       sorted.map(_._1).toArray, sorted.map(_._2).toArray)
   }
+
+  /** Name of the per-block flag [[containedTag]] feeds through the
+    * explode: true when the point's block lies wholly inside the query. */
+  val Contained = "__contained"
+
+  /** Per-block flag over a scan already filtered to contained ∪ partial:
+    * head in `contained` (the blocks whose points may skip the exact
+    * test), as one binary search per block — never a second scan. */
+  def containedTag(c: Column, hr: graft.core.HeadRanges): Column =
+    if (hr.contained.isEmpty) lit(false)
+    else if (hr.partial.isEmpty) lit(true)
+    else {
+      val merged = graft.core.MortonRange.mergeRanges(hr.contained)
+      graft.functions.sfc.in_sorted_ranges(c,
+        merged.map(_._1).toArray, merged.map(_._2).toArray)
+    }
 }

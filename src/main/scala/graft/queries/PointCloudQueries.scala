@@ -34,79 +34,65 @@ object PointCloudQueries {
     * local cache, and reopen lazily — queries then scan stats-bearing
     * parquet exactly as a long-lived deployment would.
     *
-    * Weakly keyed by session identity; `BlockedCloud` strongly holds
-    * its session, so values are kept behind a `SoftReference` (else the
+    * The on-disk cache path keys on the source CONTENT fingerprint (the
+    * recursive part-file walk — a bare size+mtime of the path misses
+    * in-place part rewrites of directory-shaped parquet), the import
+    * arguments and [[PointCloud.LayoutVersion]]: regenerated test data,
+    * a changed import, or a new block layout must never serve a stale
+    * store.
+    *
+    * Weakly keyed by session identity; a cloud strongly holds its
+    * session, so values are kept behind a `SoftReference` (else the
     * value chain would pin the weak key forever — the WeakHashMap
-    * self-reference pitfall). One entry per source dir, replaced when
-    * the source fingerprint changes. */
+    * self-reference pitfall). One entry per (root, source dir),
+    * replaced when the cache path changes. */
   private val openClouds =
     new java.util.WeakHashMap[SparkSession,
-      java.util.HashMap[String, (String, java.lang.ref.SoftReference[BlockedCloud])]]()
+      java.util.HashMap[String, (String, java.lang.ref.SoftReference[AnyRef])]]()
 
-  def cloud(spark: SparkSession, dir: String): BlockedCloud = synchronized {
-    // the on-disk cache path fingerprints the source CONTENT (the
-    // recursive part-file walk — a bare size+mtime of the path misses
-    // in-place part rewrites of directory-shaped parquet) —
-    // regenerated test data must never serve a stale cache
+  private def cached[C <: AnyRef](spark: SparkSession, root: String, dir: String,
+      importArgs: String)(build: String => Unit)(open: String => C): C = synchronized {
     val fp = DatasetFingerprint.of(s"$dir/lineitem.parquet")
-    val cacheDir =
-      s"/tmp/graft_pc_cache/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$fp"
+    val args = Integer.toHexString(importArgs.hashCode)
+    val cacheDir = s"$root/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${fp}_${args}_" +
+      s"v${PointCloud.LayoutVersion}"
     var m = openClouds.get(spark)
     if (m == null) {
-      m = new java.util.HashMap[String, (String, java.lang.ref.SoftReference[BlockedCloud])]()
+      m = new java.util.HashMap[String, (String, java.lang.ref.SoftReference[AnyRef])]()
       openClouds.put(spark, m)
     }
-    val cur = m.get(dir)
+    val cur = m.get(s"$root|$dir")
     if (cur != null && cur._1 == cacheDir) {
       val open = cur._2.get()
-      if (open != null) return open
+      if (open != null) return open.asInstanceOf[C]
     }
-    if (!Files.exists(Paths.get(s"$cacheDir/meta/_SUCCESS"))) {
-      // head 12 / tail 14 on the 8192 grid: 4096 quadtree cells of
-      // 128x128 — healthy block occupancy at bench scale (~150 pts/blk
-      // at sf0.1) instead of the degenerate 1-pt blocks a 0.7 ratio
-      // yields on sparse data; cell size 128 is pinned in the
-      // pc_histogram oracle
-      val c = PointCloud.importPoints(rawPoints(spark, dir),
-        ImportSpec(name = "li_pts", ratio = 12.0 / 26))
-      PointCloud.write(c, cacheDir)
-    }
-    val bc = PointCloud.read(spark, cacheDir)
-    m.put(dir, (cacheDir, new java.lang.ref.SoftReference(bc)))
-    bc
+    if (!Files.exists(Paths.get(s"$cacheDir/meta/_SUCCESS"))) build(cacheDir)
+    val c = open(cacheDir)
+    m.put(s"$root|$dir", (cacheDir, new java.lang.ref.SoftReference[AnyRef](c)))
+    c
   }
 
-  /** 3D-keyed cloud cache (same fingerprint discipline as [[cloud]]):
-    * z participates in the Morton key, so height-selective queries
-    * prune at the scan. */
-  private val openClouds3 =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.HashMap[String, (String, java.lang.ref.SoftReference[graft.operators.BlockedCloud3])]]()
+  // head 12 / tail 14 on the 8192 grid: 4096 quadtree cells of 128x128
+  // — healthy block occupancy at bench scale (~150 pts/blk at sf0.1)
+  // instead of the degenerate 1-pt blocks a 0.7 ratio yields on sparse
+  // data; cell size 128 is pinned in the pc_histogram oracle
+  private val cloudSpec = ImportSpec(name = "li_pts", ratio = 12.0 / 26)
 
-  def cloud3(spark: SparkSession, dir: String): graft.operators.BlockedCloud3 =
-    synchronized {
-      val fp = DatasetFingerprint.of(s"$dir/lineitem.parquet")
-      val cacheDir =
-        s"/tmp/graft_pc3_cache/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$fp"
-      var m = openClouds3.get(spark)
-      if (m == null) {
-        m = new java.util.HashMap[String, (String, java.lang.ref.SoftReference[graft.operators.BlockedCloud3])]()
-        openClouds3.put(spark, m)
-      }
-      val cur = m.get(dir)
-      if (cur != null && cur._1 == cacheDir) {
-        val open = cur._2.get()
-        if (open != null) return open
-      }
-      if (!Files.exists(Paths.get(s"$cacheDir/meta/_SUCCESS"))) {
-        val c = graft.operators.PointCloud3.importPoints(
-          rawPoints(spark, dir), name = "li_pts3", zDenom = 100.0, ratio = 0.5)
-        graft.operators.PointCloud3.write(c, cacheDir)
-      }
-      val bc = graft.operators.PointCloud3.read(spark, cacheDir)
-      m.put(dir, (cacheDir, new java.lang.ref.SoftReference(bc)))
-      bc
-    }
+  def cloud(spark: SparkSession, dir: String): BlockedCloud =
+    cached(spark, "/tmp/graft_pc_cache", dir, cloudSpec.toString) { cacheDir =>
+      PointCloud.write(PointCloud.importPoints(rawPoints(spark, dir), cloudSpec), cacheDir)
+    }(PointCloud.read(spark, _))
+
+  /** 3D-keyed cloud cache (same key discipline as [[cloud]]): z
+    * participates in the Morton key, so height-selective queries prune
+    * at the scan. */
+  def cloud3(spark: SparkSession, dir: String): graft.operators.BlockedCloud3 = {
+    val (name, zDenom, ratio) = ("li_pts3", 100.0, 0.5)
+    cached(spark, "/tmp/graft_pc3_cache", dir, (name, zDenom, ratio).toString) { cacheDir =>
+      graft.operators.PointCloud3.write(graft.operators.PointCloud3.importPoints(
+        rawPoints(spark, dir), name, zDenom, ratio), cacheDir)
+    }(graft.operators.PointCloud3.read(spark, _))
+  }
 
   /** Query results as (x: long, y: long, z: double) on the integer grid. */
   private def xyz(df: DataFrame): DataFrame =

@@ -50,4 +50,21 @@ class QueryRunnerSpec extends AnyFunSuite {
       parse("""{"mode": "nn", "geometry": [25.2, 25.2], "k": 4}"""))
     assert(nn.count() == 4)
   }
+
+  test("run attempts every query and returns the failure count") {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft_qr_run")
+    PointCloud.write(cloud, base.resolve("qr").toString)
+    val specFile = base.resolve("spec.json")
+    Files.writeString(specFile, """{"queries": {
+      "ok_bbox": {"source_dataset": "qr", "mode": "bbox", "geometry": [10, 20, 10, 20]},
+      "bad_mode": {"source_dataset": "qr", "mode": "hexagon", "geometry": [0, 1]},
+      "missing_store": {"source_dataset": "nowhere", "mode": "bbox", "geometry": [0, 1, 0, 1]},
+      "ok_circle": {"source_dataset": "qr", "mode": "circle", "geometry": [[25, 25], 5]}}}""")
+    val out = base.resolve("out").toString
+    assert(QueryRunner.run(spark, specFile.toString, base.toString, Some(out)) == 2)
+    // the queries after a failure still ran
+    assert(spark.read.parquet(s"$out/ok_bbox").count() == 121)
+    assert(Files.exists(Paths.get(s"$out/ok_circle/_SUCCESS")))
+  }
 }

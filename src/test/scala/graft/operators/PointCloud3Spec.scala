@@ -134,4 +134,31 @@ class PointCloud3Spec extends AnyFunSuite {
     assert(multiset(compacted.boxQuery(5, 95, 5, 95, 1.005, 25.005)) ==
       multiset(rebuilt.boxQuery(5, 95, 5, 95, 1.005, 25.005)))
   }
+
+  test("3D box and polygon prism read the stored cloud in one scan, never a union") {
+    val rng = new scala.util.Random(41)
+    val pts = (1 to 5000).map { _ =>
+      (rng.nextInt(100).toDouble, rng.nextInt(100).toDouble, rng.nextInt(3000) / 100.0)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_plan").toString
+    PointCloud3.write(
+      PointCloud3.importPoints(pts.toDF("x", "y", "z"), zDenom = 100.0, ratio = 0.5), dir)
+    val c = PointCloud3.read(spark, dir)
+    val poly = graft.core.Geometry.parseWktPolygon(
+      "POLYGON ((9.5 9.5, 60.5 9.5, 60.5 40.5, 40.5 40.5, 40.5 60.5, 9.5 60.5, 9.5 9.5))")
+    val inBand = (z: Double) => z >= 5.005 && z <= 20.005
+    Seq(
+      ("box", c.boxQuery(10, 60, 20, 80, 5.005, 20.005), (p: (Double, Double, Double)) =>
+        p._1 >= 10 && p._1 <= 60 && p._2 >= 20 && p._2 <= 80 && inBand(p._3)),
+      ("polygon prism", c.polygonQuery(poly, 5.005, 20.005), (p: (Double, Double, Double)) =>
+        poly.contains(p._1, p._2) && inBand(p._3))
+    ).foreach { case (name, df, in) =>
+      val plan = df.queryExecution.sparkPlan
+      assert(plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+        .size == 1, name)
+      assert(plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty, name)
+      val got = df.collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
+      assert(got == pts.filter(in).sorted && got.nonEmpty, name)
+    }
+  }
 }

@@ -434,4 +434,73 @@ class PointCloudSpec extends AnyFunSuite {
     val after = PointCloud.read(spark, dir)
     assert(after.meta == meta0)
   }
+
+  private object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** (FileScans, Unions) in a frame's physical plan. */
+  private def scansAndUnions(df: DataFrame): (Int, Int) = {
+    val p = df.queryExecution.sparkPlan
+    (p.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size,
+      p.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.size)
+  }
+
+  /** Rows the executed frame's scans handed up — blocks read. */
+  private def blocksRead(df: DataFrame): Long = {
+    df.collect()
+    plans.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metrics("numOutputRows").value
+    }.sum
+  }
+
+  test("every 2D selection reads the store in one scan, never a union") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_plan").toString
+    PointCloud.write(cloud, dir)
+    val stored = PointCloud.read(spark, dir)
+    val b = Bbox(1000, 1300, 2000, 2300)
+    val c = Circle(3000.5, 3000.5, 200.3)
+    val hole = Geometry.parseWktPolygon(
+      "POLYGON ((1000.5 1000.5, 4000.5 1000.5, 4000.5 4000.5, 1000.5 4000.5, 1000.5 1000.5), " +
+        "(2000.5 2000.5, 3000.5 2000.5, 3000.5 3000.5, 2000.5 3000.5, 2000.5 2000.5))")
+    val selections = Seq(
+      ("bbox", stored.bboxQuery(b), (p: (Double, Double, Double)) => b.contains(p._1, p._2)),
+      ("circle", stored.circleQuery(c), (p: (Double, Double, Double)) => c.contains(p._1, p._2)),
+      ("polygon with hole", stored.polygonQuery(hole),
+        (p: (Double, Double, Double)) => hole.contains(p._1, p._2)))
+    selections.foreach { case (name, df, in) =>
+      assert(scansAndUnions(df) == ((1, 0)), name)
+      assert(collected(df) == raw.filter(in).sorted, name)
+    }
+    val corridor = stored.polylineBufferQuery(
+      "LINESTRING (500.5 3500.5, 2000.5 2000.5, 3500.5 3000.5)", 150.25)
+    assert(scansAndUnions(corridor) == ((1, 0)), "polyline buffer")
+    assert(collected(corridor) == collected(cloud.polylineBufferQuery(
+      "LINESTRING (500.5 3500.5, 2000.5 2000.5, 3500.5 3000.5)", 150.25)))
+    // outside the grid the cover is empty: the plan has no scan at all
+    val empty = stored.bboxQuery(Bbox(9000, 9500, 9000, 9500))
+    assert(scansAndUnions(empty) == ((0, 0)) && empty.count() == 0)
+  }
+
+  test("a small bbox reads under 10% of the stored blocks, also after compact") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_prune").toString
+    // 256 x 256 unit grid at 4 points per block: 16384 blocks, 128 pages
+    val base = (0 until 65536).map(i => ((i % 256).toDouble, (i / 256).toDouble, (i % 7).toDouble))
+    PointCloud.write(PointCloud.importPoints(base.toDF("x", "y", "z"),
+      ImportSpec(targetPointsPerBlock = Some(4))), dir)
+    val b = Bbox(205, 214, 205, 214)
+    def check(pts: Seq[(Double, Double, Double)]): Unit = {
+      val stored = PointCloud.read(spark, dir)
+      val nBlocks = stored.blocks.count()
+      val q = stored.bboxQuery(b)
+      val read = blocksRead(q)
+      assert(read > 0 && read < nBlocks / 10, s"read $read of $nBlocks blocks")
+      assert(collected(q) == pts.filter(p => b.contains(p._1, p._2)).sorted)
+    }
+    check(base)
+    val delta = (0 until 1000).map(i => (200.0 + i % 40, 200.0 + i / 40, -1.0))
+    PointCloud.appendPoints(spark, dir, delta.toDF("x", "y", "z"))
+    PointCloud.compact(spark, dir)
+    check(base ++ delta)
+  }
 }
