@@ -216,8 +216,7 @@ object Bench {
     // benched as bare scans with their kernels never executing
     // local-iteration subset: SPARK_GRAFT_ONLY=q1,q2 benches only the
     // named queries; unset = all, which is what the driver runs
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     def timedPass(): Seq[(String, Either[String, Double])] =
       SparkEntry.queries.toSeq.filter(kv => only.forall(_.contains(kv._1)))
         .sortBy(_._1).map { case (name, fn) =>

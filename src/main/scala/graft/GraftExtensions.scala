@@ -87,8 +87,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ("graft_head_in_bbox",
       "_FUNC_(head, xq_min, xq_max, yq_min, yq_max, total_bits, tail_bits) - " +
         "true iff the block head's quadtree cell intersects the quantized bbox; " +
-        "the injected optimizer rule rewrites it into a scan-pushable " +
-        "OR-of-BETWEEN cover AND the exact residual",
+        "the injected optimizer rule rewrites it into a range predicate whose " +
+        "cover the injected planner strategy pushes to the scan, AND the exact residual",
       (args: Seq[Expression]) => graft.plans.HeadInBbox(args(0),
         longArg(args(1), "xq_min"), longArg(args(2), "xq_max"),
         longArg(args(3), "yq_min"), longArg(args(4), "yq_max"),
@@ -106,13 +106,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
     ext.injectOptimizerRule(_ => graft.plans.RewriteHeadBboxFilter)
+    ext.injectPlannerStrategy(_ => graft.plans.PushedRangeScan)
   }
 }
 
 object GraftExtensions {
-  /** Register the graft_* SQL functions AND the pruning rewrite on an
-    * already-running session (the builder-time extension hook only
-    * applies to new sessions). */
+  /** Register the graft_* SQL functions, the pruning rewrite AND the
+    * cover-pushing scan strategy on an already-running session (the
+    * builder-time extension hook only applies to new sessions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val ext = new GraftExtensions
     ext.fns.foreach { case (name, usage, builder) =>
@@ -123,5 +124,6 @@ object GraftExtensions {
         graft.plans.RewriteHeadBboxFilter))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.RewriteHeadBboxFilter
+    graft.plans.PushedRangeScan.register(spark)
   }
 }

@@ -19,6 +19,18 @@ object SparkEntry {
       EmbeddingQueries.queries ++ EventQueries.queries ++
       RelQueries.queries ++ RelQueries2.queries ++ MultimodalQueries.queries
 
+  /** The subset a `SPARK_GRAFT_ONLY` value names (comma list; None =
+    * every query). A name no registry defines is an error, so a typo
+    * cannot turn a run into one that checks nothing. */
+  def selected(only: Option[String]): Option[Set[String]] =
+    only.map { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

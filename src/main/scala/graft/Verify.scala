@@ -6,6 +6,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // local-iteration subset: SPARK_GRAFT_ONLY=q1,q2 restricts the dump
+    // (and the oracle json below) to the named queries; unset = all,
+    // which is what the driver runs
+    val only = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // parity-board override (VERDICT r17 item 1): an adversarial
     // shuffle-partition count (odd, non-divisor of the core count)
@@ -21,11 +25,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration subset: SPARK_GRAFT_ONLY=q1,q2 restricts the dump
-    // (and the oracle json below) to the named queries; unset = all,
-    // which is what the driver runs
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name)) {

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryExpression, EqualTo, Expression, GreaterThanOrEqual, LeafExpression, LessThanOrEqual, Literal, Or, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
 
 import graft.core.{Geometry, Morton, Polygon}
 
@@ -98,12 +99,44 @@ case class PointInPolygon(left: Expression, right: Expression, polygon: Polygon)
     copy(left = l, right = r)
 }
 
+/** A per-query constant as a bound parameter. The value reaches the
+  * generated class through its reference array and a field set at init
+  * time, never as a literal in the source, so two queries that differ
+  * only in constants generate the same code and share one compiled
+  * class (Spark's codegen cache is keyed on the source). Non-foldable,
+  * so the optimizer keeps it a leaf instead of folding it back into a
+  * literal; deterministic and never null, so predicates over it push
+  * through projections like any other. */
+case class QueryParam(value: Any, dataType: DataType) extends LeafExpression {
+  require(value != null && CodeGenerator.isPrimitiveType(dataType),
+    s"a query parameter is a non-null primitive, got $value: $dataType")
+  override def foldable: Boolean = false
+  override def nullable: Boolean = false
+  override def prettyName: String = "queryparam"
+  override def toString: String = s"$prettyName($value)"
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral,
+      value = JavaCode.global(QueryParam.bind(ctx, value, dataType), dataType))
+}
+
+object QueryParam {
+  /** A field of the generated class holding `value`, assigned from the
+    * reference array when the class is initialised; returns its name. */
+  def bind(ctx: CodegenContext, value: Any, dataType: DataType): String = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("param", value, CodeGenerator.boxedType(dataType))
+    ctx.addMutableState(javaType, "param", v => s"$v = $ref.${javaType}Value();",
+      forceInline = true)
+  }
+}
+
 /** Membership of a long in a set of sorted, disjoint, inclusive
-  * ranges — O(log n) binary search per row. The scan-predicate
-  * companion to the pushed OR-of-BETWEEN: past a few hundred ranges a
-  * single OR tree re-evaluates per row at O(n) and overflows codegen
-  * method limits (measured 6x regression at 2048 terms), while this
-  * expression stays flat however fine the range decomposition. */
+  * ranges — O(log n) binary search per row, constant-size generated
+  * code however fine the range decomposition (an OR tree is O(n) per
+  * row and overflows codegen method limits past ~1k terms: measured 6x
+  * slower at 2048 terms). The arrays are bound by reference, so the
+  * code does not depend on the ranges. */
 object RangeKernels {
   def containsSorted(v: Long, los: Array[Long], his: Array[Long]): Boolean = {
     var lo = 0
@@ -118,12 +151,13 @@ object RangeKernels {
   }
 }
 
-case class InSortedRanges(child: Expression, los: Array[Long], his: Array[Long])
-    extends UnaryExpression {
-  require(los.length == his.length && los.nonEmpty)
+/** Shared body of the two range-membership predicates. */
+sealed trait SortedRangeMembership extends UnaryExpression {
+  def los: Array[Long]
+  def his: Array[Long]
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "in_sorted_ranges"
+  override def toString: String = s"$prettyName($child, ${los.length} ranges)"
   override protected def nullSafeEval(v: Any): Any =
     RangeKernels.containsSorted(v.asInstanceOf[Long], los, his)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -131,7 +165,76 @@ case class InSortedRanges(child: Expression, los: Array[Long], his: Array[Long])
     val h = ctx.addReferenceObj("his", his, "long[]")
     defineCodeGen(ctx, ev, v => s"graft.functions.RangeKernels.containsSorted($v, $l, $h)")
   }
+}
+
+/** Binary-search membership (ranges may be empty: always false). */
+case class InSortedRanges(child: Expression, los: Array[Long], his: Array[Long])
+    extends SortedRangeMembership {
+  require(los.length == his.length)
+  override def prettyName: String = "in_sorted_ranges"
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** The one head predicate of the blocked stores: exact binary-search
+  * membership per row, carrying a coarse `cover` of the same ranges
+  * (sorted, disjoint, a superset) only as data. The cover never reaches
+  * generated code: the planner strategy `graft.plans.PushedRangeScan`
+  * adds it to the file scan's filters as a literal OR-of-BETWEEN, so
+  * parquet page statistics prune on it, and drops it from the post-scan
+  * filter. Planned without that strategy the predicate is still exact,
+  * only unpruned. */
+case class PushedRanges(child: Expression, los: Array[Long], his: Array[Long],
+    cover: Seq[(Long, Long)]) extends SortedRangeMembership {
+  require(los.length == his.length && los.nonEmpty && cover.nonEmpty)
+  override def prettyName: String = "pushed_ranges"
+  override def toString: String =
+    s"$prettyName($child, ${los.length} ranges, cover ${cover.length})"
+
+  /** The cover as a scan-pushable predicate over `child`: a balanced
+    * OR tree of BETWEENs (depth log2 n, so neither Catalyst's recursive
+    * converters nor parquet's filter translation overflow). */
+  def coverPredicate: Expression = {
+    def between(r: (Long, Long)): Expression =
+      if (r._1 == r._2) EqualTo(child, Literal(r._1))
+      else And(GreaterThanOrEqual(child, Literal(r._1)), LessThanOrEqual(child, Literal(r._2)))
+    def build(rs: Seq[(Long, Long)]): Expression =
+      if (rs.length == 1) between(rs.head)
+      else {
+        val (l, r) = rs.splitAt(rs.length / 2)
+        Or(build(l), build(r))
+      }
+    build(cover)
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+object PushedRanges {
+  /** Ranges pushed to the scan at most: page statistics are coarse, so
+    * a finer cover prunes little more, while Spark translates and
+    * checks every pushed term. */
+  val MaxCover = 48
+
+  /** Head in any of `ranges` (disjoint, any order, non-empty). */
+  def apply(head: Expression, ranges: Seq[(Long, Long)]): PushedRanges = {
+    val sorted = ranges.sortBy(_._1).toIndexedSeq
+    PushedRanges(head, sorted.map(_._1).toArray, sorted.map(_._2).toArray,
+      coarsen(sorted, MaxCover))
+  }
+
+  /** Merge sorted disjoint ranges down to `k` by keeping the k-1
+    * widest gaps as separators — the cover that loses the least
+    * pruning surface. */
+  private def coarsen(sorted: IndexedSeq[(Long, Long)], k: Int): IndexedSeq[(Long, Long)] = {
+    if (sorted.length <= k) return sorted
+    val cuts = (1 until sorted.length)
+      .sortBy(i => -(sorted(i)._1 - sorted(i - 1)._2))
+      .take(k - 1).sorted
+    val bounds = (0 +: cuts) :+ sorted.length
+    (0 until bounds.length - 1).map { j =>
+      (sorted(bounds(j))._1, sorted(bounds(j + 1) - 1)._2)
+    }
+  }
 }
 
 /** Column-level API over the expressions above. */
@@ -155,6 +258,15 @@ object sfc {
   /** Binary-search membership in sorted disjoint inclusive ranges. */
   def in_sorted_ranges(v: Column, los: Array[Long], his: Array[Long]): Column =
     col(InSortedRanges(expr(v), los, his))
+
+  /** Head in any of `ranges` (disjoint, any order), with the coarse
+    * cover the scan strategy pushes to parquet. */
+  def pushed_ranges(head: Column, ranges: Seq[(Long, Long)]): Column =
+    col(PushedRanges(expr(head), ranges))
+
+  /** A query constant bound as a parameter, not inlined as a literal. */
+  def param(v: Double): Column = col(QueryParam(v, DoubleType))
+  def param(v: Long): Column = col(QueryParam(v, LongType))
 
   /** Interleave three non-negative grid coordinates (<= 21 bits each). */
   def morton3_encode(x: Column, y: Column, z: Column): Column =

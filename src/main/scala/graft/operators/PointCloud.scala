@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.core.{Bbox, Circle, Geometry, Morton, MortonRange, Polygon}
 import graft.functions.sfc
+import graft.functions.sfc.param
 
 /** Import-time knobs, mirroring the reference's import JSON spec
   * (scripts/import_20m.json keys scales/offsets/ratio/srid;
@@ -398,17 +399,24 @@ object PointCloud {
 
 /** A stored point cloud + its catalog row; all queries are lazy DataFrames
   * following the reference's filter-refine plan (retrieve_data.py:103-153):
-  * driver-side Morton range decomposition -> ONE scan with a pushed
-  * sfc_head predicate (parquet page pruning through the column index)
-  * -> block explode + decode -> exact geometric predicate. No
-  * mid-query materialization, no per-point driver work (the
-  * reference's INSERT-per-point loop, retrieve_data.py:150-151, is the
+  * driver-side Morton range decomposition -> ONE scan filtered on the
+  * `pushed_ranges` head predicate, whose coarse cover the
+  * `graft.plans.PushedRangeScan` strategy (registered here) pushes to
+  * parquet for page pruning -> block explode + decode -> exact
+  * geometric predicate. Every per-query constant (bounds, centres,
+  * radii, segment endpoints, z cuts) enters the plan as a bound
+  * `QueryParam`, never a literal, so selections of one shape compile
+  * one class however their geometry varies. No mid-query
+  * materialization, no per-point driver work (the reference's
+  * INSERT-per-point loop, retrieve_data.py:150-151, is the
   * anti-pattern this replaces).
   */
 final class BlockedCloud(
     val spark: SparkSession,
     val blocks: DataFrame,
     val meta: CloudMeta) {
+
+  graft.plans.PushedRangeScan.register(spark)
 
   private def totalBits: Int = meta.headLen + meta.tailLen
 
@@ -449,7 +457,7 @@ final class BlockedCloud(
   private def candidates(b: Bbox): DataFrame =
     quantizedBbox(b).map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
       .filterNot(_.isEmpty) match {
-      case Some(hr) => explodePoints(blocks.filter(SfcPredicates.headIn(col("sfc_head"), hr.all)),
+      case Some(hr) => explodePoints(blocks.filter(sfc.pushed_ranges(col("sfc_head"), hr.all)),
         Some(SfcPredicates.containedTag(col("sfc_head"), hr)))
       case None => explodePoints(blocks.filter(lit(false)), Some(lit(false)))
     }
@@ -460,14 +468,18 @@ final class BlockedCloud(
     * points of contained blocks skip the exact test. */
   def bboxQuery(b: Bbox): DataFrame =
     xyz(candidates(b).filter(col(SfcPredicates.Contained) ||
-      (col("x") >= b.xMin && col("x") <= b.xMax && col("y") >= b.yMin && col("y") <= b.yMax)))
+      (col("x") >= param(b.xMin) && col("x") <= param(b.xMax) &&
+        col("y") >= param(b.yMin) && col("y") <= param(b.yMax))))
 
   /** 2D circle selection (z ignored — PostGIS ST_DWithin on 2D points,
     * retrieve_data.py:56-63); boundary inclusive (<= r). */
-  def circleQuery(c: Circle): DataFrame = {
-    val d2 = (col("x") - c.cx) * (col("x") - c.cx) + (col("y") - c.cy) * (col("y") - c.cy)
-    xyz(candidates(c.bbox)).filter(d2 <= lit(c.r * c.r))
-  }
+  def circleQuery(c: Circle): DataFrame =
+    xyz(candidates(c.bbox)).filter(d2From(c.cx, c.cy) <= param(c.r * c.r))
+
+  /** Squared 2D distance from (px, py), the centre bound as parameters. */
+  private def d2From(px: Double, py: Double): Column =
+    (col("x") - param(px)) * (col("x") - param(px)) +
+      (col("y") - param(py)) * (col("y") - param(py))
 
   /** Polygon (with holes) selection, even-odd rule, boundary excluded. */
   def polygonQuery(p: Polygon): DataFrame =
@@ -515,10 +527,11 @@ final class BlockedCloud(
       val dxc = bx - ax; val dyc = by - ay
       val len2 = dxc * dxc + dyc * dyc
       val t = greatest(lit(0.0), least(lit(1.0),
-        ((col("x") - ax) * dxc + (col("y") - ay) * dyc) / len2))
-      val fx = col("x") - (t * dxc + ax)
-      val fy = col("y") - (t * dyc + ay)
-      fx * fx + fy * fy <= lit(r * r)
+        ((col("x") - param(ax)) * param(dxc) + (col("y") - param(ay)) * param(dyc)) /
+          param(len2)))
+      val fx = col("x") - (t * param(dxc) + param(ax))
+      val fy = col("y") - (t * param(dyc) + param(ay))
+      fx * fx + fy * fy <= param(r * r)
     }.reduce(_ || _)
     xyz(candidates(Bbox(xMin - r, xMax + r, yMin - r, yMax + r))).filter(pred)
   }
@@ -633,8 +646,7 @@ final class BlockedCloud(
       val cand = circleQuery(Circle(px, py, r))
       if (covers || cand.count() >= k) result = cand else r *= 2
     }
-    val d2 = (col("x") - px) * (col("x") - px) + (col("y") - py) * (col("y") - py)
-    (result.orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k),
+    (result.orderBy(d2From(px, py).asc, col("x").asc, col("y").asc, col("z").asc).limit(k),
       rounds, seed)
   }
 
@@ -664,10 +676,7 @@ final class BlockedCloud(
       val covers = r >= maxCornerDist
       val tagged = queries.map { case (qid, px, py) =>
         circleQuery(Circle(px, py, r)).select(
-          lit(qid).as("qid"),
-          ((col("x") - px) * (col("x") - px) +
-            (col("y") - py) * (col("y") - py)).as("__d2"),
-          col("x"), col("y"), col("z"))
+          param(qid).as("qid"), d2From(px, py).as("__d2"), col("x"), col("y"), col("z"))
       }.reduce(_ unionAll _)
       if (covers) result = tagged
       else {
@@ -688,8 +697,8 @@ final class BlockedCloud(
   /** Height refinements (retrieve_data.py:85-101): keep z <= maxZ / z >= minZ.
     * Compose on any query result: cloud.bboxQuery(b).filter(...) — these are
     * the named forms. */
-  def withMaxZ(df: DataFrame, maxZ: Double): DataFrame = df.filter(col("z") <= maxZ)
-  def withMinZ(df: DataFrame, minZ: Double): DataFrame = df.filter(col("z") >= minZ)
+  def withMaxZ(df: DataFrame, maxZ: Double): DataFrame = df.filter(col("z") <= param(maxZ))
+  def withMinZ(df: DataFrame, minZ: Double): DataFrame = df.filter(col("z") >= param(minZ))
 
   /** Per-block occupancy histogram by quadtree cell (reference's side CSV,
     * point_processor.py:77-79). With an even tail length the head IS the

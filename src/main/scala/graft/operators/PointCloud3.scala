@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.core.{Box3, Morton, Morton3, MortonRange3}
 import graft.functions.sfc
+import graft.functions.sfc.param
 
 /** Catalog row of a 3D-keyed cloud: z participates in the key, so
   * height-selective queries prune storage like x/y — the capability
@@ -195,10 +196,24 @@ object PointCloud3 {
   }
 }
 
+/** A stored 3D cloud: the same one-scan filter–refine form as
+  * [[BlockedCloud]] (`pushed_ranges` head predicate with its cover
+  * pushed by `graft.plans.PushedRangeScan`, query constants bound as
+  * parameters), with z pruned at the scan through the octree cover. */
 final class BlockedCloud3(
     val spark: SparkSession,
     val blocks: DataFrame,
     val meta: Cloud3Meta) {
+
+  graft.plans.PushedRangeScan.register(spark)
+
+  /** xq/yq/zq inside the inclusive grid box, bounds bound as parameters. */
+  private def inGridBox(qx0: Long, qx1: Long, qy0: Long, qy1: Long): Column =
+    col("xq") >= param(qx0) && col("xq") <= param(qx1) &&
+      col("yq") >= param(qy0) && col("yq") <= param(qy1)
+
+  private def inZBand(qz0: Long, qz1: Long): Column =
+    col("zq") >= param(qz0) && col("zq") <= param(qz1)
 
   /** Explode blocks to grid points (xq, yq, zq); a `contained` per-block
     * flag rides along as the [[SfcPredicates.Contained]] column. */
@@ -226,7 +241,7 @@ final class BlockedCloud3(
     val hr = MortonRange3.decompose(box, meta.headLen + meta.tailLen, meta.tailLen,
       maxCells = 2048)
     if (hr.isEmpty) explode3(blocks.filter(lit(false)), Some(lit(false)))
-    else explode3(blocks.filter(SfcPredicates.headIn(col("sfc_head"), hr.all)),
+    else explode3(blocks.filter(sfc.pushed_ranges(col("sfc_head"), hr.all)),
       Some(SfcPredicates.containedTag(col("sfc_head"), hr)))
   }
 
@@ -244,8 +259,8 @@ final class BlockedCloud3(
     if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1) return emptyPoints
     out(candidates(Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
         qz0.toDouble, qz1.toDouble))
-      .filter(col(SfcPredicates.Contained) || (col("xq") >= qx0 && col("xq") <= qx1 &&
-        col("yq") >= qy0 && col("yq") <= qy1 && col("zq") >= qz0 && col("zq") <= qz1)))
+      .filter(col(SfcPredicates.Contained) ||
+        (inGridBox(qx0, qx1, qy0, qy1) && inZBand(qz0, qz1))))
   }
 
   /** Cylinder selection: 2D circle x height band — the B-suite circle
@@ -257,11 +272,11 @@ final class BlockedCloud3(
     val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
     val qz1 = math.floor(zMax * meta.zDenom).toLong
     if (qz0 > qz1 || r < 0) return emptyPoints
-    val d2 = (col("xq") - cx) * (col("xq") - cx) +
-      (col("yq") - cy) * (col("yq") - cy)
+    val d2 = (col("xq") - param(cx)) * (col("xq") - param(cx)) +
+      (col("yq") - param(cy)) * (col("yq") - param(cy))
     out(candidates(Box3(math.max(0, math.ceil(cx - r)), math.floor(cx + r),
         math.max(0, math.ceil(cy - r)), math.floor(cy + r), qz0.toDouble, qz1.toDouble))
-      .filter(d2 <= lit(r * r) && col("zq") >= qz0 && col("zq") <= qz1))
+      .filter(d2 <= param(r * r) && inZBand(qz0, qz1)))
   }
 
   /** Polygon-prism selection: a 2D polygon (with holes, even-odd rule,
@@ -282,7 +297,7 @@ final class BlockedCloud3(
     if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1) return emptyPoints
     out(candidates(Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
         qz0.toDouble, qz1.toDouble))
-      .filter(col(SfcPredicates.Contained) || (col("zq") >= qz0 && col("zq") <= qz1)))
+      .filter(col(SfcPredicates.Contained) || inZBand(qz0, qz1)))
       .filter(sfc.point_in_polygon(col("x"), col("y"), p))
   }
 
@@ -308,13 +323,14 @@ final class BlockedCloud3(
     var r = math.max(
       math.cbrt((k + 1) / math.max(density, 1e-18) * 3.0 / (4.0 * math.Pi)) * 1.5,
       2.0)
-    val d2 = (col("x") - px) * (col("x") - px) +
-      (col("y") - py) * (col("y") - py) + (col("z") - pz) * (col("z") - pz)
+    val d2 = (col("x") - param(px)) * (col("x") - param(px)) +
+      (col("y") - param(py)) * (col("y") - param(py)) +
+      (col("z") - param(pz)) * (col("z") - param(pz))
     var result: DataFrame = null
     while (result == null) {
       val covers = r >= maxCornerDist
       val cand = boxQuery(px - r, px + r, py - r, py + r, pz - r, pz + r)
-        .filter(d2 <= lit(r * r))
+        .filter(d2 <= param(r * r))
       if (covers || cand.count() >= k) result = cand else r *= 2
     }
     result.orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k)

@@ -42,6 +42,11 @@ private[graft] object Spread {
     * spreads at full width exactly as before. */
   private val rowsPerPartFloor = 512L
 
+  /** Row limit of a bounded "more than `n` rows?" probe: n + 1, clamped
+    * to Int.MaxValue — `Dataset.limit` takes an Int, and an unclamped
+    * `(n + 1).toInt` wraps negative for n >= Int.MaxValue. */
+  def probeLimit(n: Long): Int = if (n >= Int.MaxValue) Int.MaxValue else (n + 1).toInt
+
   def rebalanced(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batches are already split
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
@@ -57,7 +62,7 @@ private[graft] object Spread {
         if (parts >= target) df
         else {
           val cap = rowsPerPartFloor * target
-          val probed = df.limit((cap + 1).toInt).count()
+          val probed = df.limit(probeLimit(cap)).count()
           val width = if (probed > cap) target
             else ((probed + rowsPerPartFloor - 1) / rowsPerPartFloor).toInt
           if (width > parts) df.repartition(width) else df

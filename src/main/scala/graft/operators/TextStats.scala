@@ -837,7 +837,7 @@ object TextStats {
     // and Java compareTo agree — and the same left-to-right
     // non-overlapping literal replace per merge.
     if (driverVocabLimit > 0 &&
-        cur.limit((driverVocabLimit + 1).toInt).count() <= driverVocabLimit) {
+        cur.limit(Spread.probeLimit(driverVocabLimit)).count() <= driverVocabLimit) {
       val collected = cur.collect()
       freeCheckpoint(cur)
       return bpeMergeLoopGeneric(collected.map(_.getLong(0)),

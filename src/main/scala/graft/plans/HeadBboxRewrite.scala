@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, Or, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 import graft.core.{Bbox, Morton, MortonRange}
+import graft.functions.{PushedRanges, QueryParam}
 
 /** SQL-level SFC pruning as a Catalyst optimizer rewrite.
   *
@@ -17,14 +18,16 @@ import graft.core.{Bbox, Morton, MortonRange}
   * and gets correct results on any session. With [[GraftExtensions]]
   * installed, [[RewriteHeadBboxFilter]] additionally rewrites the
   * marker during optimization into
-  * `(OR-of-BETWEEN over head) AND marker[pruned]` — the same
-  * coarse-cover + exact-membership split the DataFrame path uses
-  * (PointCloud.headPredicate + the r7 giant-OR lesson): the BETWEEN
-  * ranges are scan-pushable (parquet row-group stats prune on them)
-  * while the exact cell test stays a cheap residual. The cover is
-  * budgeted (<= 256 ranges, coarse-flushed beyond — a superset), so
-  * the conjunction, not the cover alone, preserves semantics; the
-  * `pruned` flag marks rewritten markers so the rule terminates.
+  * `pushed_ranges(head) AND marker[pruned]` — the head-predicate form
+  * the DataFrame path uses (graft.functions.PushedRanges): an exact
+  * binary search per row whose coarse cover [[PushedRangeScan]] pushes
+  * to the scan (parquet page statistics prune on it), while the exact
+  * cell test stays a cheap residual. The decomposition is budgeted
+  * (<= 256 cells, coarse-flushed beyond — a superset), so the
+  * conjunction, not the ranges alone, preserves semantics; the
+  * `pruned` flag marks rewritten markers so the rule terminates. The
+  * residual binds its four bounds by reference, so bboxes that differ
+  * only in bounds share one compiled class.
   */
 case class HeadInBbox(child: Expression, xMin: Long, xMax: Long,
     yMin: Long, yMax: Long, totalBits: Int, tailBits: Int,
@@ -44,43 +47,29 @@ case class HeadInBbox(child: Expression, xMin: Long, xMax: Long,
     val cy1 = Morton.decodeY(maxKey)
     !(cx1 < xMin || cx0 > xMax || cy1 < yMin || cy0 > yMax)
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val Seq(x0, x1, y0, y1) = Seq(xMin, xMax, yMin, yMax).map(QueryParam.bind(ctx, _, LongType))
     defineCodeGen(ctx, ev, h =>
-      s"""!(graft.core.Morton.decodeX(($h << $tailBits) | ((1L << $tailBits) - 1L)) < ${xMin}L ||
-         graft.core.Morton.decodeX($h << $tailBits) > ${xMax}L ||
-         graft.core.Morton.decodeY(($h << $tailBits) | ((1L << $tailBits) - 1L)) < ${yMin}L ||
-         graft.core.Morton.decodeY($h << $tailBits) > ${yMax}L)""".linesIterator
+      s"""!(graft.core.Morton.decodeX(($h << $tailBits) | ((1L << $tailBits) - 1L)) < $x0 ||
+         graft.core.Morton.decodeX($h << $tailBits) > $x1 ||
+         graft.core.Morton.decodeY(($h << $tailBits) | ((1L << $tailBits) - 1L)) < $y0 ||
+         graft.core.Morton.decodeY($h << $tailBits) > $y1)""".linesIterator
         .map(_.trim).mkString(" "))
+  }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Rewrites un-pruned [[HeadInBbox]] markers into the scan-pushable
-  * `(balanced OR-of-BETWEEN) AND marker[pruned]` form. Registered via
+/** Rewrites un-pruned [[HeadInBbox]] markers into
+  * `pushed_ranges(head) AND marker[pruned]`. Registered via
   * `SparkSessionExtensions.injectOptimizerRule` (GraftExtensions) or
   * `spark.experimental.extraOptimizations`. */
 object RewriteHeadBboxFilter extends Rule[LogicalPlan] {
-
-  private def rangePredicate(head: Expression, ranges: Seq[(Long, Long)]): Expression = {
-    def mk(lo: Long, hi: Long): Expression =
-      if (lo == hi) EqualTo(head, Literal(lo))
-      else And(GreaterThanOrEqual(head, Literal(lo)), LessThanOrEqual(head, Literal(hi)))
-    // balanced OR tree: depth log2(n), keeps codegen happy at any budget
-    def build(rs: IndexedSeq[(Long, Long)]): Expression =
-      if (rs.length == 1) mk(rs.head._1, rs.head._2)
-      else {
-        val (l, r) = rs.splitAt(rs.length / 2)
-        Or(build(l), build(r))
-      }
-    build(ranges.toIndexedSeq)
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case e @ HeadInBbox(head, x0, x1, y0, y1, totalBits, tailBits, false) =>
       val hr = MortonRange.decompose(
         Bbox(x0.toDouble, x1.toDouble, y0.toDouble, y1.toDouble),
         totalBits, tailBits, maxCells = 256)
-      val ranges = (hr.contained ++ hr.partial).sortBy(_._1)
-      if (ranges.isEmpty) Literal(false, BooleanType)
-      else And(rangePredicate(head, ranges), e.copy(pruned = true))
+      if (hr.isEmpty) Literal(false, BooleanType)
+      else And(PushedRanges(head, hr.all), e.copy(pruned = true))
   }
 }

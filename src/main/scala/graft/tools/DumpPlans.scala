@@ -30,7 +30,10 @@ import org.apache.spark.sql.execution.SparkPlan
   * Building a query's frame may still run the bounded model-memo jobs
   * some builders train at construction time (classifier weights, BPE
   * tables, IVF indexes) — that work is fingerprint-memoized and does
-  * not touch the signed plan.
+  * not touch the signed plan. Each frame is built once before the
+  * recorded build, so every memo and every store a builder persists
+  * under /tmp exists when the board signs: the board is the same on a
+  * cold and on a warm /tmp.
   *
   * Usage: sbt 'runMain graft.tools.DumpPlans <sfDir> <outJson> [name...]'
   */
@@ -118,6 +121,9 @@ object DumpPlans {
           // frame; in-stage regressions (a lost pushdown inside
           // doc_repeated_spans' suffix-array rounds, an exchange
           // inserted into ev_user_components' edge build) now diff.
+          // unrecorded first build: persisted models and memos exist
+          // before signing (doc_kn_score_stored trains on a cold /tmp)
+          graft.SparkEntry.queries(n)(spark, sfDir)
           val stages = scala.collection.mutable.Buffer[SparkPlan]()
           graft.operators.Frames.recordStagesInto(stages)
           val df =

@@ -67,4 +67,12 @@ class QueryRunnerSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/ok_bbox").count() == 121)
     assert(Files.exists(Paths.get(s"$out/ok_circle/_SUCCESS")))
   }
+
+  test("a query subset naming an unknown query is an error, not an empty run") {
+    assert(SparkEntry.selected(None).isEmpty)
+    assert(SparkEntry.selected(Some("pc_bbox_small, pc_circle")) ==
+      Some(Set("pc_bbox_small", "pc_circle")))
+    val e = intercept[IllegalArgumentException](SparkEntry.selected(Some("pc_circle,q1_agg")))
+    assert(e.getMessage.contains("q1_agg") && !e.getMessage.contains("pc_circle"))
+  }
 }

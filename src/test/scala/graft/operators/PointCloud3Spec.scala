@@ -161,4 +161,40 @@ class PointCloud3Spec extends AnyFunSuite {
       assert(got == pts.filter(in).sorted && got.nonEmpty, name)
     }
   }
+
+  test("3D selections that differ only in geometry share one compiled class") {
+    val rng = new scala.util.Random(43)
+    val pts = (1 to 5000).map { _ =>
+      (rng.nextInt(100).toDouble, rng.nextInt(100).toDouble, rng.nextInt(3000) / 100.0)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_shape").toString
+    PointCloud3.write(
+      PointCloud3.importPoints(pts.toDF("x", "y", "z"), zDenom = 100.0, ratio = 0.5), dir)
+    val c = PointCloud3.read(spark, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
+    def tri(x0: Double, y0: Double, s: Double) = graft.core.Geometry.parseWktPolygon(
+      s"POLYGON (($x0 $y0, ${x0 + s} $y0, ${x0 + s / 2} ${y0 + s}, $x0 $y0))")
+    def d2(px: Double, py: Double, pz: Double)(p: (Double, Double, Double)) =
+      (p._1 - px) * (p._1 - px) + (p._2 - py) * (p._2 - py) + (p._3 - pz) * (p._3 - pz)
+    def inBox(x0: Double, x1: Double, y0: Double, y1: Double, z0: Double, z1: Double)(
+        p: (Double, Double, Double)) =
+      p._1 >= x0 && p._1 <= x1 && p._2 >= y0 && p._2 <= y1 && p._3 >= z0 && p._3 <= z1
+    Seq(
+      ("box", () => rows(c.boxQuery(10, 60, 20, 80, 5.005, 20.005)),
+        () => rows(c.boxQuery(30, 95, 0, 45, 12.005, 28.005)),
+        pts.filter(inBox(30, 95, 0, 45, 12.005, 28.005))),
+      ("polygon prism", () => rows(c.polygonQuery(tri(9.5, 9.5, 50), 5.005, 20.005)),
+        () => rows(c.polygonQuery(tri(40.5, 30.5, 45), 2.005, 14.005)),
+        pts.filter(p => tri(40.5, 30.5, 45).contains(p._1, p._2) && p._3 >= 2.005 && p._3 <= 14.005)),
+      ("knn", () => rows(c.knn(50.25, 50.25, 10.0, 15)), () => rows(c.knn(20.75, 70.25, 3.5, 15)),
+        pts.sortBy(p => (d2(20.75, 70.25, 3.5)(p), p._1, p._2, p._3)).take(15))
+    ).foreach { case (name, first, second, want) =>
+      assert(first().nonEmpty, name)
+      val t0 = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+      val got = second()
+      assert(org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime == t0, name)
+      assert(got == want.sorted && got.nonEmpty, name)
+    }
+  }
 }

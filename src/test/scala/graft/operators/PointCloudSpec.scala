@@ -503,4 +503,91 @@ class PointCloudSpec extends AnyFunSuite {
     PointCloud.compact(spark, dir)
     check(base ++ delta)
   }
+
+  /** Codegen compile time (ns) a thunk adds — 0 when every class it
+    * runs is already in Spark's codegen cache. */
+  private def compileNs[A](f: => A): Long = {
+    val t0 = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+    f
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime - t0
+  }
+
+  test("selections that differ only in geometry share one compiled class") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_shape").toString
+    PointCloud.write(cloud, dir)
+    val stored = PointCloud.read(spark, dir)
+    def poly(x0: Double, y0: Double, s: Double) = Geometry.parseWktPolygon(
+      s"POLYGON (($x0 $y0, ${x0 + s} $y0, ${x0 + s / 2} ${y0 + s}, $x0 $y0))")
+    def d2(px: Double, py: Double)(p: (Double, Double, Double)) =
+      (p._1 - px) * (p._1 - px) + (p._2 - py) * (p._2 - py)
+    def knnRows(px: Double, py: Double) = stored.knn(px, py, 20).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).toSeq.sorted
+    // (name, result of a first and of a second geometry, brute force of the second)
+    val shapes: Seq[(String, () => Seq[(Double, Double, Double)],
+        () => Seq[(Double, Double, Double)], Seq[(Double, Double, Double)])] = Seq(
+      ("bbox", () => collected(stored.bboxQuery(Bbox(1000, 1300, 2000, 2300))),
+        () => collected(stored.bboxQuery(Bbox(2500, 3100, 500, 900))),
+        raw.filter(p => Bbox(2500, 3100, 500, 900).contains(p._1, p._2))),
+      ("circle", () => collected(stored.circleQuery(Circle(3000.5, 3000.5, 200.3))),
+        () => collected(stored.circleQuery(Circle(1200.25, 4100.75, 350.5))),
+        raw.filter(p => Circle(1200.25, 4100.75, 350.5).contains(p._1, p._2))),
+      ("polygon", () => collected(stored.polygonQuery(poly(1000.5, 1000.5, 900))),
+        () => collected(stored.polygonQuery(poly(3000.5, 2000.5, 1400))),
+        raw.filter(p => poly(3000.5, 2000.5, 1400).contains(p._1, p._2))),
+      ("bbox + maxz", () => collected(stored.withMaxZ(stored.bboxQuery(Bbox(512, 2048, 512, 2048)), 25.0)),
+        () => collected(stored.withMaxZ(stored.bboxQuery(Bbox(3000, 4096, 1000, 2500)), 12.5)),
+        raw.filter(p => Bbox(3000, 4096, 1000, 2500).contains(p._1, p._2) && p._3 <= 12.5)),
+      ("knn", () => knnRows(3000.5, 3000.5), () => knnRows(1500.25, 700.75),
+        raw.sortBy(p => (d2(1500.25, 700.75)(p), p._1, p._2, p._3)).take(20).sorted))
+    shapes.foreach { case (name, first, second, want) =>
+      assert(first().nonEmpty, name)
+      var got = Seq.empty[(Double, Double, Double)]
+      assert(compileNs { got = second() } == 0L, name)
+      assert(got == want.sorted && got.nonEmpty, name)
+    }
+  }
+
+  test("the head cover is pushed to the scan and kept out of the row filter") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_cover").toString
+    PointCloud.write(cloud, dir)
+    val q = PointCloud.read(spark, dir).bboxQuery(Bbox(1000, 1300, 2000, 2300))
+    val plan = q.queryExecution.executedPlan
+    val scan = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scan.size == 1)
+    val pushed = scan.head.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThanOrEqual(sfc_head") || pushed.contains("EqualTo(sfc_head"),
+      pushed)
+    val rowFilters = plan.collect { case f: org.apache.spark.sql.execution.FilterExec =>
+      f.condition.toString }
+    assert(rowFilters.exists(_.contains("pushed_ranges")), rowFilters)
+    assert(rowFilters.exists(_.contains("queryparam(1000.0)")), rowFilters)
+    // no per-row BETWEEN on the head: the cover lives in PushedFilters only
+    assert(rowFilters.forall(f => "sfc_head#\\d+ (>=|<=|=) ".r.findFirstIn(f).isEmpty),
+      rowFilters)
+  }
+
+  test("a pushed_ranges filter planned without the scan strategy returns the same rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_nostrategy").toString
+    PointCloud.write(cloud, dir)
+    val ranges = graft.core.MortonRange.decompose(Bbox(1000, 1800, 2000, 2300),
+      cloud.meta.headLen + cloud.meta.tailLen, cloud.meta.tailLen, maxCells = 256).all
+    assert(ranges.length > graft.functions.PushedRanges.MaxCover)
+    def heads(s: SparkSession): (Set[Long], String) = {
+      val df = s.read.parquet(s"$dir/blocks")
+        .filter(graft.functions.sfc.pushed_ranges(col("sfc_head"), ranges)).select("sfc_head")
+      val scan = df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f }.head
+      (df.collect().map(_.getLong(0)).toSet, scan.metadata("PushedFilters"))
+    }
+    graft.plans.PushedRangeScan.register(spark)
+    val bare = spark.newSession()
+    assert(!bare.experimental.extraStrategies.contains(graft.plans.PushedRangeScan))
+    val (withStrategy, pushed) = heads(spark)
+    val (without, unpushed) = heads(bare)
+    val brute = cloud.blocks.select("sfc_head").collect().map(_.getLong(0))
+      .filter(h => ranges.exists { case (lo, hi) => h >= lo && h <= hi }).toSet
+    assert(withStrategy == brute && without == brute && brute.nonEmpty)
+    assert(pushed.contains("sfc_head") && pushed.contains("Or("), pushed)
+    assert(!unpushed.contains("Or("), unpushed)
+  }
 }

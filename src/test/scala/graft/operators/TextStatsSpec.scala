@@ -833,6 +833,18 @@ class TextStatsSpec extends AnyFunSuite {
       driverVocabLimit = 0).isEmpty)
   }
 
+  test("size dials at or past Int.MaxValue do not overflow the bounded probes") {
+    import spark.implicits._
+    assert(Spread.probeLimit(0L) == 1 && Spread.probeLimit(Int.MaxValue - 1L) == Int.MaxValue)
+    assert(Spread.probeLimit(Int.MaxValue.toLong) == Int.MaxValue)
+    assert(Spread.probeLimit(Long.MaxValue) == Int.MaxValue)
+    val d = Seq((1L, "abab abab abc cab bac"), (2L, "aaa bbb aaa")).toDF("doc_id", "text")
+    val want = TextStats.bpeTrainMerges(d, "text", rounds = 3)
+    for (limit <- Seq(Int.MaxValue.toLong, Int.MaxValue + 1L, Long.MaxValue))
+      assert(TextStats.bpeTrainMerges(d, "text", rounds = 3, driverVocabLimit = limit) == want,
+        s"driverVocabLimit $limit")
+  }
+
   test("bpeEncode emits codepoint/merge token ids in document order") {
     import spark.implicits._
     val d = Seq((1L, "abab abc!"), (2L, "")).toDF("doc_id", "text")

@@ -3,7 +3,8 @@
 # commit containing one uncompiled file zeroed the round's entire
 # correctness/bench signal). Usage: tools/precommit.sh [--smoke|--plans]
 #   default  : sbt compile + Test/compile must both succeed
-#   --smoke  : additionally runs the sf0.001 flagship entry query
+#   --smoke  : additionally runs two sf0.001 pc_* selections through
+#              Verify and checks them against their DuckDB oracle
 #   --plans  : additionally regenerates the plan-fingerprint board at
 #              sf0.01 and diffs it against the committed round board —
 #              a lost pushdown / strategy flip / new exchange fails
@@ -15,8 +16,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile
 if [[ "${1:-}" == "--smoke" ]]; then
-  SPARK_GRAFT_ONLY=q1_agg sbt -batch \
+  rm -rf /tmp/precommit_smoke
+  SPARK_GRAFT_ONLY=pc_bbox_small,pc_circle sbt -batch \
     'runMain graft.Verify /root/testdata/sf0.001 /tmp/precommit_smoke'
+  python3 tools/check_oracle.py /root/testdata/sf0.001 /tmp/precommit_smoke
 fi
 if [[ "${1:-}" == "--plans" ]]; then
   board=$(ls artifacts/PLAN_BOARD_r*.json | sort -V | tail -1)
