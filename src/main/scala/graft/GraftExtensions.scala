@@ -35,10 +35,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => MortonEncode2D(args(0), args(1))),
     ("graft_morton_x",
       "_FUNC_(m) - even-bit (x) component of a Morton key",
-      (args: Seq[Expression]) => MortonDecode2DX(args(0))),
+      (args: Seq[Expression]) => MortonDecode(args(0), 2, 0)),
     ("graft_morton_y",
       "_FUNC_(m) - odd-bit (y) component of a Morton key",
-      (args: Seq[Expression]) => MortonDecode2DY(args(0))),
+      (args: Seq[Expression]) => MortonDecode(args(0), 2, 1)),
     ("graft_minhash_signature",
       "_FUNC_(hashed_shingles, k) - k-element minhash signature of a long array",
       (args: Seq[Expression]) =>

@@ -2,13 +2,18 @@ package graft.core
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Result of the quadtree decomposition of a query bbox into block-key
-  * (sfc_head) ranges.
+/** Inclusive 3D box in quantized grid coordinates (possibly fractional
+  * bounds, e.g. a sphere's enclosing box). */
+final case class Box3(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
+    zMin: Double, zMax: Double)
+
+/** Result of the decomposition of a query box into block-key
+  * (sfc_head) ranges, each list sorted and merged.
   *
-  * @param contained head ranges whose every point is inside the bbox —
+  * @param contained head ranges whose every point is inside the box —
   *                   points from these blocks need no exact test
-  * @param partial    head ranges that straddle the bbox boundary — their
-  *                   points need tail-level (exact x/y) refinement
+  * @param partial    head ranges that straddle the box boundary — their
+  *                   points need tail-level (exact coordinate) refinement
   *
   * Mirrors the reference's (ranges, overlaps) pair
   * (pcsfc/range_search.py:45-47) generalized so an early-terminated
@@ -20,31 +25,45 @@ final case class HeadRanges(contained: Vector[(Long, Long)], partial: Vector[(Lo
   def all: Vector[(Long, Long)] = MortonRange.mergeRanges(contained ++ partial)
 }
 
-/** Driver-side quadtree descent over Morton prefixes
-  * (re-derivation of reference pcsfc/range_search.py:4-47, with its two
-  * bugs fixed: the odd-body_len loop that never reaches full depth, and
-  * the `overlaps` leak when the loop body never runs — see SURVEY.md §2.8).
+/** Planning-time descent over the Morton prefixes of a d-dimensional
+  * key, d = 2 (quadtree) or 3 (octree) — a re-derivation of reference
+  * pcsfc/range_search.py:4-47, with its two bugs fixed: the
+  * odd-body_len loop that never reaches full depth, and the `overlaps`
+  * leak when the loop body never runs (SURVEY.md §2.8).
   *
-  * A contiguous Morton key interval [p·2^r, (p+1)·2^r) always decodes to
-  * an axis-aligned rectangle (min key -> (xMin,yMin), max key ->
-  * (xMax,yMax)), for either parity of r, so we descend one bit per level:
-  * classify each cell against the bbox as contained / disjoint / partial
-  * and split partial cells until the head/tail boundary.
+  * It relies on one invariant that holds in any d: a bit-aligned key
+  * interval [p·2^r, (p+1)·2^r) decodes to an axis-aligned box whose min
+  * and max corners are the decoded min and max keys, for every r, not
+  * only multiples of d. So the walk descends one key bit per level,
+  * classifies each cell against the query box as contained / disjoint
+  * / partial, and splits partial cells down to the head/tail boundary.
   */
 object MortonRange {
 
-  /** Decompose bbox (in quantized grid coordinates, inclusive, possibly
-    * fractional e.g. a circle's enclosing box) into sfc_head ranges.
+  /** Decompose a 2D bbox (quantized grid coordinates, inclusive,
+    * possibly fractional e.g. a circle's enclosing box). */
+  def decompose(bbox: Bbox, totalBits: Int, tailBits: Int, maxCells: Int = 2048): HeadRanges =
+    decompose(Array(bbox.xMin, bbox.yMin), Array(bbox.xMax, bbox.yMax),
+      totalBits, tailBits, maxCells)
+
+  def decompose(box: Box3, totalBits: Int, tailBits: Int, maxCells: Int): HeadRanges =
+    decompose(Array(box.xMin, box.yMin, box.zMin), Array(box.xMax, box.yMax, box.zMax),
+      totalBits, tailBits, maxCells)
+
+  /** Decompose the box [lo(k), hi(k)] (inclusive, per dimension k) into
+    * sfc_head ranges of a d-way key, d = lo.length.
     *
-    * @param totalBits bit length of the full Morton key space (headBits + tailBits)
+    * @param totalBits bit length of the full key space (headBits + tailBits)
     * @param tailBits  in-block offset bits; heads are keys >> tailBits
     * @param maxCells  budget on emitted ranges: when exceeded, remaining
     *                  partial cells are flushed as coarse partial ranges
     *                  (a correct superset — exact refinement still applies)
     */
-  def decompose(bbox: Bbox, totalBits: Int, tailBits: Int, maxCells: Int = 2048): HeadRanges = {
+  private def decompose(lo: Array[Double], hi: Array[Double], totalBits: Int, tailBits: Int,
+      maxCells: Int): HeadRanges = {
+    val d = lo.length
     require(totalBits >= tailBits && tailBits >= 0, s"bad split $totalBits/$tailBits")
-    require(totalBits <= 62, s"key space too deep: $totalBits bits")
+    require(totalBits <= d * Morton.bitsPerDim(d), s"key space too deep: $totalBits bits")
     val contained = ArrayBuffer.empty[(Long, Long)]
     val partial = ArrayBuffer.empty[(Long, Long)]
 
@@ -63,17 +82,19 @@ object MortonRange {
         var c = 0
         while (c < 2) {
           val child = (p << 1) | c
-          val lo = child << rc
-          val hi = ((child + 1L) << rc) - 1L
-          val cXMin = Morton.decodeX(lo).toDouble
-          val cYMin = Morton.decodeY(lo).toDouble
-          val cXMax = Morton.decodeX(hi).toDouble
-          val cYMax = Morton.decodeY(hi).toDouble
-          val disjoint = cXMax < bbox.xMin || cXMin > bbox.xMax ||
-            cYMax < bbox.yMin || cYMin > bbox.yMax
+          val kLo = child << rc
+          val kHi = ((child + 1L) << rc) - 1L
+          var disjoint = false
+          var inside = true
+          var k = 0
+          while (k < d && !disjoint) {
+            val c0 = Morton.decode(kLo, d, k).toDouble
+            val c1 = Morton.decode(kHi, d, k).toDouble
+            disjoint = c1 < lo(k) || c0 > hi(k)
+            inside = inside && c0 >= lo(k) && c1 <= hi(k)
+            k += 1
+          }
           if (!disjoint) {
-            val inside = cXMin >= bbox.xMin && cXMax <= bbox.xMax &&
-              cYMin >= bbox.yMin && cYMax <= bbox.yMax
             if (inside) contained += headRange(child, rc)
             else next += child
           }
@@ -89,7 +110,7 @@ object MortonRange {
         frontier.clear()
       }
     }
-    // cells that reached the head/tail boundary still straddling the bbox
+    // cells that reached the head/tail boundary still straddling the box
     frontier.foreach(p => partial += ((p, p)))
     HeadRanges(mergeRanges(contained.toVector), mergeRanges(partial.toVector))
   }

@@ -27,53 +27,34 @@ case class MortonEncode2D(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-case class MortonDecode2DX(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "morton_decode2d_x"
-  override protected def nullSafeEval(m: Any): Any =
-    Morton.decodeX(m.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, m => s"graft.core.Morton.decodeX($m)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-case class MortonDecode2DY(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "morton_decode2d_y"
-  override protected def nullSafeEval(m: Any): Any =
-    Morton.decodeY(m.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, m => s"graft.core.Morton.decodeY($m)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
 /** 3D Morton interleave (x bits 0,3,6,…; y offset 1; z offset 2) —
-  * volumetric keys for z-pruned height selections (graft.core.Morton3). */
+  * volumetric keys for z-pruned height selections. */
 case class MortonEncode3D(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "morton_encode3d"
   override protected def nullSafeEval(x: Any, y: Any, z: Any): Any =
-    graft.core.Morton3.encode(x.asInstanceOf[Long], y.asInstanceOf[Long],
-      z.asInstanceOf[Long])
+    Morton.encode(x.asInstanceOf[Long], y.asInstanceOf[Long], z.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y, z) => s"graft.core.Morton3.encode($x, $y, $z)")
+    defineCodeGen(ctx, ev, (x, y, z) => s"graft.core.Morton.encode($x, $y, $z)")
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression) = copy(first = a, second = b, third = c)
 }
 
-case class MortonDecode3D(child: Expression, dim: Int) extends UnaryExpression {
-  require(dim >= 0 && dim <= 2, s"dim must be 0 (x), 1 (y) or 2 (z), got $dim")
+/** Dimension `dim` (0 = x, 1 = y, 2 = z) of a d-way Morton key,
+  * d = 2 or 3. The kernel is chosen when the plan is built, so the
+  * generated code is one static call with no branch on d. */
+case class MortonDecode(child: Expression, d: Int, dim: Int) extends UnaryExpression {
+  require((d == 2 || d == 3) && dim >= 0 && dim < d, s"no dimension $dim in a ${d}D key")
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"morton_decode3d_$dim"
-  override protected def nullSafeEval(m: Any): Any =
-    graft.core.Morton3.compact3(m.asInstanceOf[Long] >>> dim)
+  override def prettyName: String = s"morton_decode${d}d_${"xyz"(dim)}"
+  override protected def nullSafeEval(m: Any): Any = Morton.decode(m.asInstanceOf[Long], d, dim)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, m => s"graft.core.Morton3.compact3($m >>> $dim)")
+    defineCodeGen(ctx, ev, m =>
+      if (d == 2) s"graft.core.Morton.decode${"XY"(dim)}($m)"
+      else s"graft.core.Morton.compact3($m >>> $dim)")
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -245,11 +226,12 @@ object sfc {
   /** Interleave two non-negative long grid coordinates into a Morton key. */
   def morton_encode(x: Column, y: Column): Column = col(MortonEncode2D(expr(x), expr(y)))
 
-  /** Even-bit (x) component of a Morton key. */
-  def morton_x(m: Column): Column = col(MortonDecode2DX(expr(m)))
+  /** Interleave three non-negative grid coordinates (<= 21 bits each). */
+  def morton_encode(x: Column, y: Column, z: Column): Column =
+    col(MortonEncode3D(expr(x), expr(y), expr(z)))
 
-  /** Odd-bit (y) component of a Morton key. */
-  def morton_y(m: Column): Column = col(MortonDecode2DY(expr(m)))
+  /** Dimension `dim` (0 = x, 1 = y, 2 = z) of a d-way Morton key. */
+  def morton_decode(m: Column, d: Int, dim: Int): Column = col(MortonDecode(expr(m), d, dim))
 
   /** True iff (x, y) is strictly inside the polygon (even-odd rule, holes ok). */
   def point_in_polygon(x: Column, y: Column, polygon: Polygon): Column =
@@ -267,12 +249,4 @@ object sfc {
   /** A query constant bound as a parameter, not inlined as a literal. */
   def param(v: Double): Column = col(QueryParam(v, DoubleType))
   def param(v: Long): Column = col(QueryParam(v, LongType))
-
-  /** Interleave three non-negative grid coordinates (<= 21 bits each). */
-  def morton3_encode(x: Column, y: Column, z: Column): Column =
-    col(MortonEncode3D(expr(x), expr(y), expr(z)))
-
-  def morton3_x(m: Column): Column = col(MortonDecode3D(expr(m), 0))
-  def morton3_y(m: Column): Column = col(MortonDecode3D(expr(m), 1))
-  def morton3_z(m: Column): Column = col(MortonDecode3D(expr(m), 2))
 }

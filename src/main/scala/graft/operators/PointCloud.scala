@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Encoder, Encoders, Row, SparkSession}
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.core.{Bbox, Circle, Geometry, Morton, MortonRange, Polygon}
+import graft.core.{Bbox, Circle, Geometry, HeadRanges, Morton, MortonRange, Polygon}
 import graft.functions.sfc
 import graft.functions.sfc.param
 
@@ -50,10 +52,10 @@ final case class BatchLedgerRow(__batch: Long, n: Long,
     z_min: Double, z_max: Double)
 
 object PointCloud {
-  private[operators] val tuple3Enc: Encoder[(Long, Long, Double)] =
-    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
-  private[operators] val blockEnc: Encoder[PointBlock] = Encoders.product[PointBlock]
-  private val metaEnc: Encoder[CloudMeta] = Encoders.product[CloudMeta]
+  private val store = new BlockStore[(Long, Long, Double), PointBlock, CloudMeta](
+    Seq("z"), estBytesPerPoint = 8L, packSorted, _.pointCount)(
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble),
+    Encoders.product[PointBlock], Encoders.product[CloudMeta])
 
   /** Import a point cloud from a DataFrame with double columns (x, y, z).
     *
@@ -72,18 +74,10 @@ object PointCloud {
     */
   def importPoints(points: DataFrame, spec: ImportSpec): BlockedCloud = {
     val spark = points.sparkSession
-    val s = points.agg(
-      count(lit(1)), min("x"), max("x"), min("y"), max("y"), min("z"), max("z")).head()
-    require(!s.isNullAt(1), "cannot import an empty point cloud")
-    val (n, xMin, xMax, yMin, yMax, zMin, zMax) =
-      (s.getLong(0), s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
-        s.getDouble(5), s.getDouble(6))
-    // strict: round() is HALF_UP (away from zero), so a quantized -0.5
-    // would become -1 and Morton.encode would silently mask the sign
-    require((xMin - spec.offX) / spec.scaleX > -0.5 && (yMin - spec.offY) / spec.scaleY > -0.5,
-      s"negative quantized coordinates: offsets ${(spec.offX, spec.offY)} exceed data min ${(xMin, yMin)}")
-    val qxMax = math.round((xMax - spec.offX) / spec.scaleX)
-    val qyMax = math.round((yMax - spec.offY) / spec.scaleY)
+    val s = BlockStore.extents(points, col("x"), col("y"), col("z"))
+      .getOrElse(throw new IllegalArgumentException("cannot import an empty point cloud"))
+    val n = s.getLong(0)
+    val Seq(qxMax, qyMax) = gridMax(s, spec.offX, spec.scaleX, spec.offY, spec.scaleY)
     val ratio = spec.targetPointsPerBlock match {
       case Some(target) =>
         val totalBits = { val s = Morton.splitLengths(qxMax, qyMax, 1.0); s._1 + s._2 }
@@ -97,13 +91,26 @@ object PointCloud {
     val (headLen, tailLen) = Morton.splitLengths(qxMax, qyMax, ratio)
     val meta = CloudMeta(spec.name, spec.srid, n, headLen, tailLen,
       spec.scaleX, spec.scaleY, spec.scaleZ, spec.offX, spec.offY, spec.offZ,
-      xMin, xMax, yMin, yMax, zMin, zMax)
-    new BlockedCloud(spark, packKeyed(keyPoints(points, meta),
-      spec.blockPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)), meta)
+      s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
+      s.getDouble(5), s.getDouble(6))
+    new BlockedCloud(spark, store.pack(keyPoints(points, meta), spec.blockPartitions), meta)
   }
 
   private def quantize(c: Column, off: Double, scale: Double): Column =
     round((c - lit(off)) / lit(scale)).cast(LongType)
+
+  /** Quantized (x, y) maxima of a batch with stats `s` (count, then
+    * min and max of x, y, z) on the grid (off, scale), after the grid
+    * guard. Quantizes as [[quantize]] does per row: Spark's round is
+    * HALF_UP over the double's decimal form. */
+  private def gridMax(s: Row, offX: Double, scaleX: Double, offY: Double, scaleY: Double,
+      keyBits: Int = 64): Seq[Long] = {
+    def q(i: Int, off: Double, scale: Double): Long =
+      java.math.BigDecimal.valueOf((s.getDouble(i) - off) / scale)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+    BlockStore.guardGrid(2, Seq(q(1, offX, scaleX), q(2, offX, scaleX),
+      q(3, offY, scaleY), q(4, offY, scaleY)), keyBits)
+  }
 
   /** (x, y, z) points -> (sfc_head, sfc_tail, z) under `meta`'s grid
     * and key split. */
@@ -116,16 +123,6 @@ object PointCloud {
       mkey.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("sfc_tail"),
       round(col("z"), 2).as("z")) // z kept at 2 decimals (point_processor.py:47)
   }
-
-  /** Range-shuffle keyed rows on the head, sort each partition and
-    * stream-pack it into blocks — the one pack pipeline of import,
-    * append and compaction. */
-  private def packKeyed(keyed: DataFrame, nParts: Int): DataFrame =
-    keyed.repartitionByRange(nParts, col("sfc_head"))
-      .sortWithinPartitions("sfc_head", "sfc_tail")
-      .as[(Long, Long, Double)](tuple3Enc)
-      .mapPartitions(packSortedPartition _)(blockEnc)
-      .toDF()
 
   /** Entry point 1 of the reference (importer.py): import LAS file(s)
     * into the blocked-SFC layout. `path` may be one .las file or a
@@ -140,219 +137,75 @@ object PointCloud {
     importPoints(pts, spec)
   }
 
-  /** Group consecutive equal heads of a (head, tail)-sorted iterator into
-    * blocks. Streaming: holds exactly one block in memory. */
-  private[operators] def packSortedPartition(
-      it: Iterator[(Long, Long, Double)]): Iterator[PointBlock] =
-    new Iterator[PointBlock] {
-      private var cur: (Long, Long, Double) = _
-      private var has = it.hasNext
-      if (has) cur = it.next()
-      override def hasNext: Boolean = has
-      override def next(): PointBlock = {
-        val head = cur._1
-        val tails = scala.collection.mutable.ArrayBuilder.make[Long]
-        val zs = scala.collection.mutable.ArrayBuilder.make[Double]
-        var continue = true
-        while (continue) {
-          tails += cur._2
-          zs += cur._3
-          if (it.hasNext) {
-            cur = it.next()
-            continue = cur._1 == head
-          } else { has = false; continue = false }
-        }
-        PointBlock(head, tails.result(), zs.result())
-      }
+  /** 2D blocks from a head-then-tail sorted stream, one block in memory. */
+  private def packSorted(it: Iterator[(Long, Long, Double)]): Iterator[PointBlock] =
+    BlockStore.packSorted(it, (p: (Long, Long, Double)) => p._1) { (head, points) =>
+      val (tails, zs) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofDouble)
+      points.foreach { p => tails += p._2; zs += p._3 }
+      PointBlock(head, tails.result(), zs.result())
     }
 
   /** Version of the on-disk block layout. Stores cached across runs key
     * on it, so a layout change re-imports instead of serving old files. */
   private[graft] val LayoutVersion: Int = 2
 
-  /** Blocks per parquet page. The column index then holds sfc_head
-    * min/max per page of a head-sorted file, and the reader skips every
-    * page a selection's head ranges miss — the reference's B-tree range
-    * scan (db/__init__.py:118-126) at page granularity, inside one file
-    * and one row group. Pages, not row groups: each row group repeats
-    * its dictionaries (128 blocks per row group cost +5.2% bytes per
-    * point, 128 per page +0.4%). */
-  private val BlocksPerPage: Int = 128
-
-  /** The block-store writer every path lands blocks through (import,
-    * append, compaction — 2D and 3D), so each writes the paged layout.
-    * Output sizing (guide §6): the range partitioning is CPU-count-
-    * sized, so without this a small cloud lands as dozens of ~100 KB
-    * files whose per-file open cost + per-split task scheduling
-    * dominate every later scan (measured at sf0.1: a 3.2 MB store as 33
-    * files made each scan a 32-task stage). COALESCE — never
-    * repartition — so the sfc range clustering survives; the ~128 MB
-    * target keeps ceil(bytes/128 MB) files and full write parallelism
-    * at cluster scale. Coalescing to more partitions than exist changes
-    * nothing, so the plan is never run just to count them. */
-  private[operators] def blockWriter(blocks: DataFrame, pointCount: Long,
-      estBytesPerPoint: Long): DataFrameWriter[Row] = {
-    val target = 128L << 20
-    val nOut = math.max(1L, (pointCount * estBytesPerPoint + target - 1) / target)
-    blocks.coalesce(math.min(nOut, Int.MaxValue).toInt).write
-      .option("parquet.page.row.count.limit", BlocksPerPage.toLong)
-  }
-
   /** Persist blocks + metadata. */
-  def write(cloud: BlockedCloud, dir: String): Unit = {
-    blockWriter(cloud.blocks, cloud.meta.pointCount, estBytesPerPoint = 8L)
-      .mode("overwrite").parquet(s"$dir/blocks")
-    cloud.spark.createDataset(Seq(cloud.meta))(metaEnc)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  def write(cloud: BlockedCloud, dir: String): Unit =
+    store.write(cloud.spark, cloud.blocks, cloud.meta, dir)
 
-  /** Open a stored cloud. Blocks = the base import plus any streamed
-    * delta partitions ([[appendBatch]]); the catalog row composes the
-    * base meta with the per-batch ledger (count sum, extent
-    * min/max-merge), so on-disk meta is never rewritten per micro-batch
-    * and a replayed batch cannot double-count. */
+  /** Open a stored cloud: the base import plus any landed batches
+    * ([[appendBatch]]), its catalog row composed with the batch ledger
+    * (count sum, extent min/max-merge). */
   def read(spark: SparkSession, dir: String): BlockedCloud = {
-    import java.nio.file.{Files, Paths}
-    val meta0 = spark.read.parquet(s"$dir/meta").as[CloudMeta](metaEnc).head()
-    val base = spark.read.parquet(s"$dir/blocks")
-    val blocks = if (Files.exists(Paths.get(s"$dir/blocks_delta")))
-      base.unionByName(spark.read.parquet(s"$dir/blocks_delta")
-        .select("sfc_head", "sfc_tail", "z"))
-    else base
-    val meta = if (Files.exists(Paths.get(s"$dir/counts"))) {
-      val l = spark.read.parquet(s"$dir/counts").agg(
-        sum(col("n")), min(col("x_min")), max(col("x_max")),
-        min(col("y_min")), max(col("y_max")),
-        min(col("z_min")), max(col("z_max"))).head()
-      meta0.copy(pointCount = meta0.pointCount + l.getLong(0),
-        xMin = math.min(meta0.xMin, l.getDouble(1)),
-        xMax = math.max(meta0.xMax, l.getDouble(2)),
-        yMin = math.min(meta0.yMin, l.getDouble(3)),
-        yMax = math.max(meta0.yMax, l.getDouble(4)),
-        zMin = math.min(meta0.zMin, l.getDouble(5)),
-        zMax = math.max(meta0.zMax, l.getDouble(6)))
-    } else meta0
+    val (m, blocks, ledger) = store.open(spark, dir)
+    val meta = ledger.fold(m) { ledger =>
+      val l = ledger.agg(sum("n"), min("x_min"), max("x_max"), min("y_min"), max("y_max"),
+        min("z_min"), max("z_max")).head()
+      m.copy(pointCount = m.pointCount + l.getLong(0),
+        xMin = math.min(m.xMin, l.getDouble(1)), xMax = math.max(m.xMax, l.getDouble(2)),
+        yMin = math.min(m.yMin, l.getDouble(3)), yMax = math.max(m.yMax, l.getDouble(4)),
+        zMin = math.min(m.zMin, l.getDouble(5)), zMax = math.max(m.zMax, l.getDouble(6)))
+    }
     new BlockedCloud(spark, blocks, meta)
   }
 
-  /** Stats of an append batch (count, x/y/z min/max) after the grid
-    * guards: the batch must lie inside the stored grid's key space.
-    * The stored key split covers exactly [0, 2^(headLen+tailLen)) — a
-    * delta past that envelope would pack into heads the range
-    * decomposer never emits, so every spatial query would silently
-    * omit it. Reject instead (re-import, or import with headroom, to
-    * widen the grid). */
-  private def checkedDeltaStats(meta: CloudMeta, delta: DataFrame): Row = {
-    val s = delta.agg(count(lit(1)),
-      min("x"), max("x"), min("y"), max("y"), min("z"), max("z")).head()
-    if (s.getLong(0) > 0) {
-      require((s.getDouble(1) - meta.offX) / meta.scaleX > -0.5 &&
-        (s.getDouble(3) - meta.offY) / meta.scaleY > -0.5,
-        "append batch falls below the stored grid offsets")
-      val qxMaxD = math.round((s.getDouble(2) - meta.offX) / meta.scaleX)
-      val qyMaxD = math.round((s.getDouble(4) - meta.offY) / meta.scaleY)
-      require(Morton.bitLength(Morton.encode(qxMaxD, qyMaxD)) <= meta.headLen + meta.tailLen,
-        s"append batch max quantized coords ($qxMaxD, $qyMaxD) exceed the stored " +
-          s"${meta.headLen + meta.tailLen}-bit key space; queries could not see these points")
-    }
-    s
-  }
-
-  /** Exactly-once streaming ingest (the 2D mirror of
-    * [[PointCloud3.appendBatch]]): the micro-batch packs UNDER THE
-    * STORED GRID into its own `blocks_delta/__batch=<id>` partition
-    * with dynamic partition overwrite, plus a one-row
-    * `counts/__batch=<id>` ledger entry carrying the batch's count and
-    * extents — an at-least-once replay overwrites exactly its own
-    * partition and ledger row, so stream state composes to
-    * exactly-once without rewriting the base metadata. Same grid and
-    * key-space envelope guards as [[appendPoints]]. */
+  /** Exactly-once ingest of one micro-batch ([[BlockStore.landBatch]]),
+    * its ledger row carrying the batch's count and extents. It packs
+    * UNDER THE STORED GRID — an append must never re-derive the key
+    * space, or every stored key changes meaning — so a batch past the
+    * stored key space is rejected (re-import with headroom to widen
+    * it). An empty micro-batch lands nothing. */
   def appendBatch(spark: SparkSession, dir: String, delta: DataFrame,
       batchId: Long): Unit = {
-    val meta = spark.read.parquet(s"$dir/meta").as[CloudMeta](metaEnc).head()
-    val s = checkedDeltaStats(meta, delta)
-    if (s.getLong(0) == 0) return // empty micro-batch: nothing to land
-    val packed = packKeyed(keyPoints(delta, meta), spark.sessionState.conf.numShufflePartitions)
-    blockWriter(packed.withColumn("__batch", lit(batchId)), s.getLong(0), estBytesPerPoint = 8L)
-      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(s"$dir/blocks_delta")
-    spark.createDataset(Seq(BatchLedgerRow(batchId, s.getLong(0),
-        s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
-        s.getDouble(5), s.getDouble(6))))(Encoders.product[BatchLedgerRow])
-      .toDF()
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(s"$dir/counts")
+    val meta = store.readMeta(spark, dir)
+    BlockStore.extents(delta, col("x"), col("y"), col("z")).foreach { s =>
+      gridMax(s, meta.offX, meta.scaleX, meta.offY, meta.scaleY, meta.headLen + meta.tailLen)
+      store.landBatch(dir, store.pack(keyPoints(delta, meta)), s.getLong(0), batchId,
+        spark.createDataset(Seq(BatchLedgerRow(batchId, s.getLong(0),
+          s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
+          s.getDouble(5), s.getDouble(6))))(Encoders.product[BatchLedgerRow]).toDF())
+    }
   }
 
-  /** Incremental ingest: pack a delta batch into blocks UNDER THE
-    * STORED GRID (same offsets/scales/key split — an append must never
-    * re-derive the key space or every existing key changes meaning)
-    * and land the files next to the existing ones. After an append a
-    * head may span several files; every query stays CORRECT (the scan
-    * prunes on head ranges and explodes blocks independently — nothing
-    * assumes cross-file head uniqueness), what degrades is layout
-    * quality, which [[compact]] restores. This is the production
-    * lifecycle at 100 TB: cheap delta appends all day, one clustering
+  /** Incremental ingest outside a stream: [[appendBatch]] under a
+    * negative batch id below every landed one, so it never replaces a
+    * streamed batch (stream ids count up from 0). Appends fragment
+    * heads across blocks — queries stay correct, layout quality
+    * degrades until [[compact]]: cheap appends all day, one clustering
     * compaction when fragmentation warrants. */
   def appendPoints(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
-    val meta = spark.read.parquet(s"$dir/meta").as[CloudMeta](metaEnc).head()
-    val s = checkedDeltaStats(meta, delta)
-    require(s.getLong(0) > 0, "empty append batch")
-    blockWriter(packKeyed(keyPoints(delta, meta), spark.sessionState.conf.numShufflePartitions),
-        s.getLong(0), estBytesPerPoint = 8L)
-      .mode("append").parquet(s"$dir/blocks")
-    val updated = meta.copy(pointCount = meta.pointCount + s.getLong(0),
-      xMin = math.min(meta.xMin, s.getDouble(1)), xMax = math.max(meta.xMax, s.getDouble(2)),
-      yMin = math.min(meta.yMin, s.getDouble(3)), yMax = math.max(meta.yMax, s.getDouble(4)),
-      zMin = math.min(meta.zMin, s.getDouble(5)), zMax = math.max(meta.zMax, s.getDouble(6)))
-    spark.createDataset(Seq(updated))(metaEnc)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    val landed = Option(new java.io.File(s"$dir/counts").list()).toSeq.flatten
+      .collect { case f if f.startsWith("__batch=") => f.stripPrefix("__batch=").toLong }
+    appendBatch(spark, dir, delta, (0L +: landed).min - 1)
   }
 
-  /** Clustering compaction: merge fragmented blocks so every head is
-    * again exactly one block inside one range-clustered file — the
-    * post-append maintenance pass. Points stream through the same
-    * range-shuffle + in-partition sort + one-block-in-memory pack and
-    * the same paged block writer as the initial import (never a
-    * per-head collect), land in a staging
-    * directory, and swap in with a directory rename (a real deployment
-    * would delegate the swap to a table format's atomic commit). */
+  /** Clustering compaction ([[BlockStore.compact]]): every head is
+    * again exactly one block inside one range-clustered file, with
+    * streamed batches folded into the base — the post-append
+    * maintenance pass. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val cloud = read(spark, dir) // base + delta union, ledger-composed meta
-    val keyed = cloud.blocks
-      .select(col("sfc_head"), explode(arrays_zip(col("sfc_tail"), col("z"))).as("p"))
-      .select(col("sfc_head"), col("p.sfc_tail").as("sfc_tail"), col("p.z").as("z"))
-    blockWriter(packKeyed(keyed, spark.sessionState.conf.numShufflePartitions),
-        cloud.meta.pointCount, estBytesPerPoint = 8L)
-      .mode("overwrite").parquet(s"$dir/blocks_compacting")
-    // swap via rename-aside: blocks -> blocks_old, staging -> blocks,
-    // then delete blocks_old. A crash at any step leaves a recoverable
-    // state (the data exists intact under exactly one of the three
-    // names); a real deployment would delegate the swap to a table
-    // format's atomic commit. Local-fs renames; not atomic on object
-    // stores.
-    import java.nio.file.{Files, Paths}
-    def rmdir(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-    val live = Paths.get(s"$dir/blocks")
-    val old = Paths.get(s"$dir/blocks_old")
-    rmdir(old) // leftover from a previous crashed compact
-    Files.move(live, old)
-    Files.move(Paths.get(s"$dir/blocks_compacting"), live)
-    // fold streamed delta partitions + their ledger into the base:
-    // composed meta FIRST, delta/ledger deletion after — a crash
-    // between the two leaves a consistent overcount (points and counts
-    // both still carry the delta) instead of composed points under a
-    // stale base-only pointCount
-    spark.createDataset(Seq(cloud.meta))(metaEnc)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    rmdir(Paths.get(s"$dir/blocks_delta"))
-    rmdir(Paths.get(s"$dir/counts"))
-    rmdir(old)
+    val cloud = read(spark, dir)
+    store.compact(spark, dir, cloud.blocks, cloud.meta)
   }
 
   /** CSV block sink in the reference's pg-COPY shape — arrays rendered
@@ -392,7 +245,7 @@ object PointCloud {
         pgText(col("sfc_tail")).as("sfc_tail"), pgText(col("z")).as("z"))
     blocks.write.mode("append")
       .jdbc(url, s"pc_record_${cloud.meta.name}", props)
-    cloud.spark.createDataset(Seq(cloud.meta))(metaEnc).toDF()
+    cloud.metadataDf
       .write.mode("append").jdbc(url, s"pc_metadata_${cloud.meta.name}", props)
   }
 }
@@ -442,8 +295,8 @@ final class BlockedCloud(
     blk.select((col("sfc_head") +: tag :+
         explode(arrays_zip(col("sfc_tail"), col("z"))).as("p")): _*)
       .select(Seq(
-        (sfc.morton_x(key).cast("double") * meta.scaleX + meta.offX).as("x"),
-        (sfc.morton_y(key).cast("double") * meta.scaleY + meta.offY).as("y"),
+        (sfc.morton_decode(key, 2, 0).cast("double") * meta.scaleX + meta.offX).as("x"),
+        (sfc.morton_decode(key, 2, 1).cast("double") * meta.scaleY + meta.offY).as("y"),
         col("p.z").as("z")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
   }
 
@@ -454,13 +307,12 @@ final class BlockedCloud(
     * flag rather than a second scan. The 256-range budget bounds the
     * predicate at any data scale; a coarser cover only moves blocks
     * from contained to partial. */
-  private def candidates(b: Bbox): DataFrame =
-    quantizedBbox(b).map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
-      .filterNot(_.isEmpty) match {
-      case Some(hr) => explodePoints(blocks.filter(sfc.pushed_ranges(col("sfc_head"), hr.all)),
-        Some(SfcPredicates.containedTag(col("sfc_head"), hr)))
-      case None => explodePoints(blocks.filter(lit(false)), Some(lit(false)))
-    }
+  private def candidates(b: Bbox): DataFrame = {
+    val (blk, tag) = SfcPredicates.candidateBlocks(blocks, quantizedBbox(b)
+      .map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
+      .getOrElse(HeadRanges(Vector.empty, Vector.empty)))
+    explodePoints(blk, Some(tag))
+  }
 
   private def xyz(df: DataFrame): DataFrame = df.select("x", "y", "z")
 
@@ -710,8 +562,8 @@ final class BlockedCloud(
     require(meta.tailLen % 2 == 0,
       s"histogram needs an even tail length (cell decode invariant); got ${meta.tailLen}")
     blocks.select(
-      sfc.morton_x(col("sfc_head")).as("cell_x"),
-      sfc.morton_y(col("sfc_head")).as("cell_y"),
+      sfc.morton_decode(col("sfc_head"), 2, 0).as("cell_x"),
+      sfc.morton_decode(col("sfc_head"), 2, 1).as("cell_y"),
       size(col("sfc_tail")).cast(LongType).as("n_points"))
   }
 

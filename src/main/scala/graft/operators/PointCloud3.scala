@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.core.{Box3, Morton, Morton3, MortonRange3}
+import graft.core.{Box3, Morton, MortonRange}
 import graft.functions.sfc
 import graft.functions.sfc.param
 
@@ -21,185 +21,97 @@ final case class Cloud3Meta(name: String, pointCount: Long,
   * (no parallel z array — the third dimension lives in the key). */
 final case class PointBlock3(sfc_head: Long, sfc_tail: Array[Long])
 
+/** The 3D-keyed store: the 3-coordinate key and its catalog row over
+  * the lifecycle both stores share ([[BlockStore]]). */
 object PointCloud3 {
-  private val tuple2Enc: Encoder[(Long, Long)] =
-    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-  private val blockEnc: Encoder[PointBlock3] = Encoders.product[PointBlock3]
-  private val metaEnc: Encoder[Cloud3Meta] = Encoders.product[Cloud3Meta]
-
-  /** Import (x, y, z) doubles into the 3D-keyed blocked layout: one
-    * stats pass, quantize -> 3D Morton -> head/tail split -> range
-    * shuffle -> in-partition sort -> streaming pack (same 100 TB-safe
-    * shape as the 2D import; encode/decode are monotone per dimension,
-    * so bitLength(encode(maxes)) bounds the whole key space). */
-  def importPoints(points: DataFrame, name: String = "cloud3",
-      zDenom: Double = 100.0, ratio: Double = 0.5): BlockedCloud3 = {
-    val spark = points.sparkSession
-    val xq = round(col("x")).cast(LongType)
-    val yq = round(col("y")).cast(LongType)
-    val zq = round(col("z") * zDenom).cast(LongType)
-    val s = points.agg(count(lit(1)), max(xq), max(yq), max(zq),
-      min(xq), min(yq), min(zq)).head()
-    val (n, qxMax, qyMax, qzMax) =
-      (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
-    require(n > 0, "cannot import an empty point cloud")
-    require(s.getLong(4) >= 0 && s.getLong(5) >= 0 && s.getLong(6) >= 0,
-      "negative quantized coordinates")
-    Morton3.encodeChecked(qxMax, qyMax, qzMax)
-    val totalBits = Morton.bitLength(Morton3.encode(qxMax, qyMax, qzMax)).max(2)
-    val headLen = math.min(totalBits, math.max(0, (totalBits * ratio).toInt))
-    val tailLen = totalBits - headLen
-
-    val key = sfc.morton3_encode(xq, yq, zq)
-    new BlockedCloud3(spark, packKeyed(points.select(shiftright(key, tailLen).as("_1"),
-        key.bitwiseAND(lit((1L << tailLen) - 1)).as("_2"))),
-      Cloud3Meta(name, n, headLen, tailLen, zDenom, qxMax, qyMax, qzMax))
-  }
-
-  /** Range-shuffle (head, tail) rows on the head, sort each partition
-    * and stream-pack it into blocks — import, append and compaction. */
-  private def packKeyed(keyed: DataFrame): DataFrame =
-    keyed.as[(Long, Long)](tuple2Enc)
-      .repartitionByRange(keyed.sparkSession.sessionState.conf.numShufflePartitions, col("_1"))
-      .sortWithinPartitions("_1", "_2")
-      .mapPartitions(packSorted _)(blockEnc)
-      .toDF()
-
-  private def packSorted(it: Iterator[(Long, Long)]): Iterator[PointBlock3] =
-    new Iterator[PointBlock3] {
-      private var cur: (Long, Long) = _
-      private var has = it.hasNext
-      if (has) cur = it.next()
-      override def hasNext: Boolean = has
-      override def next(): PointBlock3 = {
-        val head = cur._1
-        val tails = scala.collection.mutable.ArrayBuilder.make[Long]
-        var continue = true
-        while (continue) {
-          tails += cur._2
-          if (it.hasNext) { cur = it.next(); continue = cur._1 == head }
-          else { has = false; continue = false }
-        }
-        PointBlock3(head, tails.result())
-      }
-    }
-
   // z rides inside the Morton key here, so rows are narrower than the
   // 2D store's (sfc_tail, z double) pairs — ~6 B/pt measured
-  private val estBytesPerPoint = 6L
+  private val store = new BlockStore[(Long, Long), PointBlock3, Cloud3Meta](
+    Nil, estBytesPerPoint = 6L, packSorted, _.pointCount)(
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+    Encoders.product[PointBlock3], Encoders.product[Cloud3Meta])
 
-  def write(cloud: BlockedCloud3, dir: String): Unit = {
-    PointCloud.blockWriter(cloud.blocks, cloud.meta.pointCount, estBytesPerPoint)
-      .mode("overwrite").parquet(s"$dir/blocks")
-    cloud.spark.createDataset(Seq(cloud.meta))(metaEnc)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+  /** Grid coordinates (xq, yq, zq) of (x, y, z) points: x/y on the
+    * integer grid, z at 1/zDenom. */
+  private def quantized(zDenom: Double): Seq[Column] = Seq(
+    round(col("x")).cast(LongType), round(col("y")).cast(LongType),
+    round(col("z") * zDenom).cast(LongType))
+
+  /** (x, y, z) points -> (sfc_head, sfc_tail) under a key split. */
+  private def keyPoints(points: DataFrame, zDenom: Double, tailLen: Int): DataFrame = {
+    val Seq(xq, yq, zq) = quantized(zDenom)
+    val key = sfc.morton_encode(xq, yq, zq)
+    points.select(shiftright(key, tailLen).as("sfc_head"),
+      key.bitwiseAND(lit((1L << tailLen) - 1)).as("sfc_tail"))
   }
 
-  /** Open a stored 3D cloud. Blocks = the base import plus any streamed
-    * delta partitions ([[appendBatch]]); the catalog's point count
-    * composes base + the per-batch ledger, so the on-disk meta is never
-    * rewritten per batch and a replayed batch cannot double-count. */
+  /** Import (x, y, z) doubles into the 3D-keyed blocked layout: one
+    * stats pass, quantize -> 3D Morton -> head/tail split -> the shared
+    * range shuffle + in-partition sort + streaming pack (encode/decode
+    * are monotone per dimension, so bitLength(encode(maxes)) bounds the
+    * whole key space). */
+  def importPoints(points: DataFrame, name: String = "cloud3",
+      zDenom: Double = 100.0, ratio: Double = 0.5): BlockedCloud3 = {
+    val s = BlockStore.extents(points, quantized(zDenom): _*)
+      .getOrElse(throw new IllegalArgumentException("cannot import an empty point cloud"))
+    val Seq(qxMax, qyMax, qzMax) = BlockStore.guardGrid(3, (1 to 6).map(s.getLong))
+    val totalBits = Morton.bitLength(Morton.encode(qxMax, qyMax, qzMax)).max(2)
+    val headLen = math.min(totalBits, math.max(0, (totalBits * ratio).toInt))
+    val tailLen = totalBits - headLen
+    new BlockedCloud3(points.sparkSession, store.pack(keyPoints(points, zDenom, tailLen)),
+      Cloud3Meta(name, s.getLong(0), headLen, tailLen, zDenom, qxMax, qyMax, qzMax))
+  }
+
+  /** 3D blocks from a head-then-tail sorted stream, one block in memory. */
+  private def packSorted(it: Iterator[(Long, Long)]): Iterator[PointBlock3] =
+    BlockStore.packSorted(it, (p: (Long, Long)) => p._1) { (head, points) =>
+      PointBlock3(head, points.map(_._2).toArray)
+    }
+
+  def write(cloud: BlockedCloud3, dir: String): Unit =
+    store.write(cloud.spark, cloud.blocks, cloud.meta, dir)
+
+  /** Open a stored 3D cloud: the base import plus any streamed delta
+    * partitions ([[appendBatch]]), its point count composed with the
+    * per-batch ledger. */
   def read(spark: SparkSession, dir: String): BlockedCloud3 = {
-    import java.nio.file.{Files, Paths}
-    val meta = spark.read.parquet(s"$dir/meta").as[Cloud3Meta](metaEnc).head()
-    val base = spark.read.parquet(s"$dir/blocks")
-    val hasDelta = Files.exists(Paths.get(s"$dir/blocks_delta"))
-    val blocks = if (hasDelta)
-      base.unionByName(
-        spark.read.parquet(s"$dir/blocks_delta").select("sfc_head", "sfc_tail"))
-    else base
-    val appended = if (Files.exists(Paths.get(s"$dir/counts")))
-      spark.read.parquet(s"$dir/counts").agg(sum(col("n"))).head().getLong(0)
-    else 0L
-    new BlockedCloud3(spark, blocks,
-      meta.copy(pointCount = meta.pointCount + appended))
+    val (meta, blocks, ledger) = store.open(spark, dir)
+    val appended = ledger.fold(0L)(_.agg(sum(col("n"))).head().getLong(0))
+    new BlockedCloud3(spark, blocks, meta.copy(pointCount = meta.pointCount + appended))
   }
 
-  /** Incremental ingest into a stored 3D cloud — the streaming parity
-    * of the 2D store's append lifecycle (X91), replay-safe by
-    * construction: the delta packs UNDER THE STORED key split (the key
-    * space is never re-derived) and lands in its own
-    * `blocks_delta/__batch=<id>` partition with dynamic partition
-    * overwrite, alongside a one-row `counts/__batch=<id>` ledger
-    * entry. A replayed micro-batch (at-least-once delivery after a
-    * sink failure) overwrites exactly its own partition and ledger row
-    * — never appends twice — so stream state composes to exactly-once.
-    * Queries stay correct across fragmented heads (the scan prunes
-    * head ranges; blocks explode independently). Same key-space
-    * envelope guard as the 2D append: a delta outside
-    * [0, 2^(headLen+tailLen)) would be invisible to the range
-    * decomposer, so it is rejected, not silently dropped. */
+  /** Exactly-once ingest of one micro-batch ([[BlockStore.landBatch]]),
+    * its ledger row carrying the batch's count; it packs UNDER THE
+    * STORED key split, so a batch past the stored key space is
+    * rejected. An empty micro-batch lands nothing. */
   def appendBatch(spark: SparkSession, dir: String, delta: DataFrame,
       batchId: Long): Unit = {
-    val meta = spark.read.parquet(s"$dir/meta").as[Cloud3Meta](metaEnc).head()
-    val xq = round(col("x")).cast(LongType)
-    val yq = round(col("y")).cast(LongType)
-    val zq = round(col("z") * meta.zDenom).cast(LongType)
-    val s = delta.agg(count(lit(1)), max(xq), max(yq), max(zq),
-      min(xq), min(yq), min(zq)).head()
-    if (s.getLong(0) == 0) return // empty micro-batch: nothing to land
-    require(s.getLong(4) >= 0 && s.getLong(5) >= 0 && s.getLong(6) >= 0,
-      "append batch has negative quantized coordinates")
-    val (qx, qy, qz) = (s.getLong(1), s.getLong(2), s.getLong(3))
-    require(Morton.bitLength(Morton3.encode(qx, qy, qz)) <= meta.headLen + meta.tailLen,
-      s"append batch max quantized coords ($qx, $qy, $qz) exceed the stored " +
-        s"${meta.headLen + meta.tailLen}-bit key space; queries could not see these points")
-    val key = sfc.morton3_encode(xq, yq, zq)
-    val packed = packKeyed(delta.select(shiftright(key, meta.tailLen).as("_1"),
-      key.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("_2")))
-    PointCloud.blockWriter(packed.withColumn("__batch", lit(batchId)), s.getLong(0),
-        estBytesPerPoint)
-      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(s"$dir/blocks_delta")
-    spark.createDataset(Seq((batchId, s.getLong(0))))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .toDF("__batch", "n")
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(s"$dir/counts")
+    val meta = store.readMeta(spark, dir)
+    BlockStore.extents(delta, quantized(meta.zDenom): _*).foreach { s =>
+      BlockStore.guardGrid(3, (1 to 6).map(s.getLong), meta.headLen + meta.tailLen)
+      store.landBatch(dir, store.pack(keyPoints(delta, meta.zDenom, meta.tailLen)),
+        s.getLong(0), batchId,
+        spark.createDataset(Seq((batchId, s.getLong(0))))(
+          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).toDF("__batch", "n"))
+    }
   }
 
-  /** Clustering compaction (the 3D mirror of the 2D store's compact):
-    * base + streamed delta partitions re-pack through the same range-
-    * shuffle + in-partition sort + streaming pack pipeline and the
-    * paged block writer into one clustered blocks directory; the batch
-    * ledger folds into the base metadata and the delta dirs are removed. Swap is rename-aside
-    * (blocks -> blocks_old, staging -> blocks, delete) so a crash at
-    * any step leaves the data intact under exactly one name. Run
-    * between ingest sessions (a batch replayed from a pre-compact
-    * checkpoint would re-land its delta partition — the streaming
-    * checkpoint, not this store, owns that fencing). */
+  /** Clustering compaction ([[BlockStore.compact]]): base + streamed
+    * delta partitions re-pack into one clustered blocks directory, the
+    * batch ledger folded into the base metadata. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val cloud = read(spark, dir) // union view + ledger-composed count
-    PointCloud.blockWriter(packKeyed(cloud.blocks.select(col("sfc_head").as("_1"),
-        explode(col("sfc_tail")).as("_2"))), cloud.meta.pointCount, estBytesPerPoint)
-      .mode("overwrite").parquet(s"$dir/blocks_compacting")
-    def rmdir(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-    val live = Paths.get(s"$dir/blocks")
-    val old = Paths.get(s"$dir/blocks_old")
-    rmdir(old)
-    Files.move(live, old)
-    Files.move(Paths.get(s"$dir/blocks_compacting"), live)
-    // composed meta FIRST, delta/ledger deletion after — a crash
-    // between the two leaves a consistent overcount, never composed
-    // points under a stale base-only pointCount
-    spark.createDataset(Seq(cloud.meta))(metaEnc)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    rmdir(Paths.get(s"$dir/blocks_delta"))
-    rmdir(Paths.get(s"$dir/counts"))
-    rmdir(old)
+    val cloud = read(spark, dir)
+    store.compact(spark, dir, cloud.blocks, cloud.meta)
   }
 }
 
-/** A stored 3D cloud: the same one-scan filter–refine form as
-  * [[BlockedCloud]] (`pushed_ranges` head predicate with its cover
-  * pushed by `graft.plans.PushedRangeScan`, query constants bound as
-  * parameters), with z pruned at the scan through the octree cover. */
+/** A stored 3D cloud. Its filter step is the one [[BlockedCloud]] uses
+  * — [[graft.core.MortonRange.decompose]] of the query box, here over
+  * the 3D key (so z is pruned at the scan, not post-filtered), then
+  * [[SfcPredicates.candidateBlocks]] — with query constants bound as
+  * parameters. What is 3D-specific is the explode, which decodes x, y
+  * and z from the key, and the queries: box, cylinder, polygon prism,
+  * 3D kNN and voxel counts. */
 final class BlockedCloud3(
     val spark: SparkSession,
     val blocks: DataFrame,
@@ -207,13 +119,23 @@ final class BlockedCloud3(
 
   graft.plans.PushedRangeScan.register(spark)
 
-  /** xq/yq/zq inside the inclusive grid box, bounds bound as parameters. */
-  private def inGridBox(qx0: Long, qx1: Long, qy0: Long, qy1: Long): Column =
-    col("xq") >= param(qx0) && col("xq") <= param(qx1) &&
-      col("yq") >= param(qy0) && col("yq") <= param(qy1)
+  /** The inclusive grid box of an original-coordinate box (x/y on the
+    * integer grid, z at 1/zDenom); None when it holds no grid point. */
+  private def gridBox(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
+      zMin: Double, zMax: Double): Option[Box3] = {
+    val b = Box3(math.max(0, math.ceil(xMin)), math.floor(xMax),
+      math.max(0, math.ceil(yMin)), math.floor(yMax),
+      math.max(0, math.ceil(zMin * meta.zDenom)), math.floor(zMax * meta.zDenom))
+    if (b.xMin > b.xMax || b.yMin > b.yMax || b.zMin > b.zMax) None else Some(b)
+  }
 
-  private def inZBand(qz0: Long, qz1: Long): Column =
-    col("zq") >= param(qz0) && col("zq") <= param(qz1)
+  /** xq/yq inside the grid box, bounds bound as parameters. */
+  private def inXY(b: Box3): Column =
+    col("xq") >= param(b.xMin.toLong) && col("xq") <= param(b.xMax.toLong) &&
+      col("yq") >= param(b.yMin.toLong) && col("yq") <= param(b.yMax.toLong)
+
+  private def inZBand(b: Box3): Column =
+    col("zq") >= param(b.zMin.toLong) && col("zq") <= param(b.zMax.toLong)
 
   /** Explode blocks to grid points (xq, yq, zq); a `contained` per-block
     * flag rides along as the [[SfcPredicates.Contained]] column. */
@@ -221,8 +143,8 @@ final class BlockedCloud3(
     val key = shiftleft(col("sfc_head"), meta.tailLen).bitwiseOR(col("t"))
     val tag = contained.map(_.as(SfcPredicates.Contained)).toSeq
     blk.select((explode(col("sfc_tail")).as("t") +: col("sfc_head") +: tag): _*)
-      .select(Seq(sfc.morton3_x(key).as("xq"), sfc.morton3_y(key).as("yq"),
-        sfc.morton3_z(key).as("zq")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
+      .select(Seq(sfc.morton_decode(key, 3, 0).as("xq"), sfc.morton_decode(key, 3, 1).as("yq"),
+        sfc.morton_decode(key, 3, 2).as("zq")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
   }
 
   /** Grid points -> (x, y, z) with z reconstructed as zq / zDenom — the
@@ -238,30 +160,19 @@ final class BlockedCloud3(
     * cover of `box` touches, tagged [[SfcPredicates.Contained]] when
     * their block lies wholly inside the box. */
   private def candidates(box: Box3): DataFrame = {
-    val hr = MortonRange3.decompose(box, meta.headLen + meta.tailLen, meta.tailLen,
-      maxCells = 2048)
-    if (hr.isEmpty) explode3(blocks.filter(lit(false)), Some(lit(false)))
-    else explode3(blocks.filter(sfc.pushed_ranges(col("sfc_head"), hr.all)),
-      Some(SfcPredicates.containedTag(col("sfc_head"), hr)))
+    val (blk, tag) = SfcPredicates.candidateBlocks(blocks,
+      MortonRange.decompose(box, meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048))
+    explode3(blk, Some(tag))
   }
 
   /** All points in the inclusive 3D box (original coordinates) —
     * filter-refine with z pruned AT THE SCAN via the octree ranges,
     * not post-filtered; points of contained blocks skip the exact test. */
   def boxQuery(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      zMin: Double, zMax: Double): DataFrame = {
-    val qx0 = math.max(0L, math.ceil(xMin).toLong)
-    val qx1 = math.floor(xMax).toLong
-    val qy0 = math.max(0L, math.ceil(yMin).toLong)
-    val qy1 = math.floor(yMax).toLong
-    val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
-    val qz1 = math.floor(zMax * meta.zDenom).toLong
-    if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1) return emptyPoints
-    out(candidates(Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
-        qz0.toDouble, qz1.toDouble))
-      .filter(col(SfcPredicates.Contained) ||
-        (inGridBox(qx0, qx1, qy0, qy1) && inZBand(qz0, qz1))))
-  }
+      zMin: Double, zMax: Double): DataFrame =
+    gridBox(xMin, xMax, yMin, yMax, zMin, zMax).fold(emptyPoints) { b =>
+      out(candidates(b).filter(col(SfcPredicates.Contained) || (inXY(b) && inZBand(b))))
+    }
 
   /** Cylinder selection: 2D circle x height band — the B-suite circle
     * with B10-B12's z refinement fused into ONE pruned scan (octree
@@ -269,14 +180,11 @@ final class BlockedCloud3(
     * candidates only). */
   def cylinderQuery(cx: Double, cy: Double, r: Double,
       zMin: Double, zMax: Double): DataFrame = {
-    val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
-    val qz1 = math.floor(zMax * meta.zDenom).toLong
-    if (qz0 > qz1 || r < 0) return emptyPoints
     val d2 = (col("xq") - param(cx)) * (col("xq") - param(cx)) +
       (col("yq") - param(cy)) * (col("yq") - param(cy))
-    out(candidates(Box3(math.max(0, math.ceil(cx - r)), math.floor(cx + r),
-        math.max(0, math.ceil(cy - r)), math.floor(cy + r), qz0.toDouble, qz1.toDouble))
-      .filter(d2 <= param(r * r) && inZBand(qz0, qz1)))
+    gridBox(cx - r, cx + r, cy - r, cy + r, zMin, zMax).fold(emptyPoints) { b =>
+      out(candidates(b).filter(d2 <= param(r * r) && inZBand(b)))
+    }
   }
 
   /** Polygon-prism selection: a 2D polygon (with holes, even-odd rule,
@@ -287,18 +195,11 @@ final class BlockedCloud3(
     * prism's bounding box is not necessarily inside the polygon — while
     * the z band is re-checked only on partial blocks. */
   def polygonQuery(p: graft.core.Polygon, zMin: Double, zMax: Double): DataFrame = {
-    val b = p.bbox
-    val qx0 = math.max(0L, math.ceil(b.xMin).toLong)
-    val qx1 = math.floor(b.xMax).toLong
-    val qy0 = math.max(0L, math.ceil(b.yMin).toLong)
-    val qy1 = math.floor(b.yMax).toLong
-    val qz0 = math.max(0L, math.ceil(zMin * meta.zDenom).toLong)
-    val qz1 = math.floor(zMax * meta.zDenom).toLong
-    if (qx0 > qx1 || qy0 > qy1 || qz0 > qz1) return emptyPoints
-    out(candidates(Box3(qx0.toDouble, qx1.toDouble, qy0.toDouble, qy1.toDouble,
-        qz0.toDouble, qz1.toDouble))
-      .filter(col(SfcPredicates.Contained) || inZBand(qz0, qz1)))
-      .filter(sfc.point_in_polygon(col("x"), col("y"), p))
+    val pb = p.bbox
+    gridBox(pb.xMin, pb.xMax, pb.yMin, pb.yMax, zMin, zMax).fold(emptyPoints) { b =>
+      out(candidates(b).filter(col(SfcPredicates.Contained) || inZBand(b)))
+        .filter(sfc.point_in_polygon(col("x"), col("y"), p))
+    }
   }
 
   def polygonQuery(wkt: String, zMin: Double, zMax: Double): DataFrame =

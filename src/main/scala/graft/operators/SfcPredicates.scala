@@ -1,36 +1,33 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
 
+import graft.core.HeadRanges
 import graft.functions.sfc
 
-/** Per-block predicates over decomposed SFC head ranges, shared by the
-  * 2D and 3D blocked stores.
-  *
-  * The scan predicate itself is `sfc.pushed_ranges(sfc_head, ranges)`
-  * ([[graft.functions.PushedRanges]]), one form for both sides of the
-  * scan. Per row it is an exact binary search over the sorted ranges
-  * (O(log ranges), constant-size generated code, the arrays bound by
-  * reference), so two selections that differ only in geometry compile
-  * one class. For parquet page pruning it carries a coarse cover (at
-  * most 48 ranges, merged at the widest gaps; page statistics are
-  * coarse anyway) as data. The planner strategy
-  * `graft.plans.PushedRangeScan` pushes that cover to the file scan as
-  * a literal OR-of-BETWEEN and keeps it out of the post-scan filter,
-  * so neither its literals nor its per-row cost reach generated code. */
+/** The filter step both blocked stores share: one scan of the blocks a
+  * query's head cover touches, each tagged with whether it lies wholly
+  * inside the query. The scan predicate, `sfc.pushed_ranges`
+  * ([[graft.functions.PushedRanges]]), is an exact binary search per
+  * row with constant-size generated code (two selections that differ
+  * only in geometry compile one class); its coarse cover (≤ 48 ranges)
+  * rides as data, and `graft.plans.PushedRangeScan` pushes it to the
+  * file scan for page pruning. The contained tag is one more binary
+  * search per block — never a second scan. */
 private[operators] object SfcPredicates {
 
-  /** Name of the per-block flag [[containedTag]] feeds through the
-    * explode: true when the point's block lies wholly inside the query. */
+  /** The per-block flag a store carries through its explode: the
+    * point's block lies wholly inside the query (no exact test needed). */
   val Contained = "__contained"
 
-  /** Per-block flag over a scan already filtered to contained ∪ partial:
-    * head in `contained` (the blocks whose points may skip the exact
-    * test), as one binary search per block — never a second scan. Always
-    * the same expression, also when no or every block is contained, so
-    * the flag does not change the generated code. */
-  def containedTag(c: Column, hr: graft.core.HeadRanges): Column = {
-    val merged = graft.core.MortonRange.mergeRanges(hr.contained)
-    sfc.in_sorted_ranges(c, merged.map(_._1).toArray, merged.map(_._2).toArray)
-  }
+  /** The blocks under the head cover `hr` (sorted and merged, as
+    * decomposed), read in one scan, and their contained flag — always
+    * the same expression, so it never changes the generated code. An
+    * empty cover reads nothing. */
+  def candidateBlocks(blocks: DataFrame, hr: HeadRanges): (DataFrame, Column) =
+    if (hr.isEmpty) (blocks.filter(lit(false)), lit(false))
+    else (blocks.filter(sfc.pushed_ranges(col("sfc_head"), hr.all)),
+      sfc.in_sorted_ranges(col("sfc_head"), hr.contained.map(_._1).toArray,
+        hr.contained.map(_._2).toArray))
 }

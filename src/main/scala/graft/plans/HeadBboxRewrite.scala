@@ -37,26 +37,24 @@ case class HeadInBbox(child: Expression, xMin: Long, xMax: Long,
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "head_in_bbox"
-  override protected def nullSafeEval(h: Any): Any = {
-    val head = h.asInstanceOf[Long]
-    val minKey = head << tailBits
-    val maxKey = minKey | ((1L << tailBits) - 1L)
-    val cx0 = Morton.decodeX(minKey)
-    val cx1 = Morton.decodeX(maxKey)
-    val cy0 = Morton.decodeY(minKey)
-    val cy1 = Morton.decodeY(maxKey)
-    !(cx1 < xMin || cx0 > xMax || cy1 < yMin || cy0 > yMax)
-  }
+  override protected def nullSafeEval(h: Any): Any =
+    HeadInBbox.touches(h.asInstanceOf[Long], tailBits, xMin, xMax, yMin, yMax)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val Seq(x0, x1, y0, y1) = Seq(xMin, xMax, yMin, yMax).map(QueryParam.bind(ctx, _, LongType))
     defineCodeGen(ctx, ev, h =>
-      s"""!(graft.core.Morton.decodeX(($h << $tailBits) | ((1L << $tailBits) - 1L)) < $x0 ||
-         graft.core.Morton.decodeX($h << $tailBits) > $x1 ||
-         graft.core.Morton.decodeY(($h << $tailBits) | ((1L << $tailBits) - 1L)) < $y0 ||
-         graft.core.Morton.decodeY($h << $tailBits) > $y1)""".linesIterator
-        .map(_.trim).mkString(" "))
+      s"graft.plans.HeadInBbox.touches($h, $tailBits, $x0, $x1, $y0, $y1)")
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+object HeadInBbox {
+  /** Does the quadtree cell of `head` touch the inclusive grid bbox? */
+  def touches(head: Long, tailBits: Int, x0: Long, x1: Long, y0: Long, y1: Long): Boolean = {
+    val lo = head << tailBits
+    val hi = lo | ((1L << tailBits) - 1L)
+    !(Morton.decodeX(hi) < x0 || Morton.decodeX(lo) > x1 ||
+      Morton.decodeY(hi) < y0 || Morton.decodeY(lo) > y1)
+  }
 }
 
 /** Rewrites un-pruned [[HeadInBbox]] markers into

@@ -79,8 +79,8 @@ object Scratch {
           blocks
             .select(col("sfc_head"), explode(arrays_zip(col("sfc_tail"), col("z"))).as("p"))
             .select(
-              (graft.functions.sfc.morton_x(key).cast("double") * 1.0 + 0.0).as("x"),
-              (graft.functions.sfc.morton_y(key).cast("double") * 1.0 + 0.0).as("y"),
+              (graft.functions.sfc.morton_decode(key, 2, 0).cast("double") * 1.0 + 0.0).as("x"),
+              (graft.functions.sfc.morton_decode(key, 2, 1).cast("double") * 1.0 + 0.0).as("y"),
               col("p.z").as("z"))
         }
         for (i <- 1 to 2) time(s"explodePoints #$i") { noop(pts) }

@@ -79,4 +79,62 @@ class MortonRangeSpec extends AnyFunSuite {
     assert(MortonRange.mergeRanges(Seq((5L, 7L), (0L, 2L), (3L, 4L), (10L, 12L), (11L, 15L))) ==
       Vector((0L, 7L), (10L, 15L)))
   }
+
+  private val rng3 = new scala.util.Random(7)
+
+  /** Brute-force truth on a small 3D grid: the set of keys selected by
+    * the decomposition (contained ranges directly; partial ranges with
+    * the exact box test on decoded coords) must equal the set of keys
+    * whose decoded (x, y, z) lies in the box. */
+  private def check3(box: Box3, totalBits: Int, tailBits: Int): Unit = {
+    val hr = MortonRange.decompose(box, totalBits, tailBits, maxCells = 64)
+    def inBox(k: Long): Boolean = {
+      val (x, y, z) = (Morton.decode(k, 3, 0), Morton.decode(k, 3, 1), Morton.decode(k, 3, 2))
+      x >= box.xMin && x <= box.xMax && y >= box.yMin && y <= box.yMax &&
+        z >= box.zMin && z <= box.zMax
+    }
+    val nKeys = 1L << totalBits
+    val got = (0L until nKeys).filter { k =>
+      val head = k >> tailBits
+      val inContained = hr.contained.exists { case (lo, hi) => head >= lo && head <= hi }
+      val inPartial = hr.partial.exists { case (lo, hi) => head >= lo && head <= hi }
+      inContained || (inPartial && inBox(k))
+    }.toSet
+    val want = (0L until nKeys).filter(inBox).toSet
+    assert(got == want, s"box=$box split=$totalBits/$tailBits")
+    // contained ranges must be pure: every key under them is in the box
+    hr.contained.foreach { case (lo, hi) =>
+      (lo to hi).foreach { h =>
+        (h << tailBits until ((h + 1) << tailBits)).foreach(k => assert(inBox(k)))
+      }
+    }
+  }
+
+  test("3D decomposition equals brute force on small grids") {
+    // 9 bits total = 8x8x8 grid, tail 3 -> 64 heads of 8 keys
+    check3(Box3(1, 5, 2, 6, 0, 3), 9, 3)
+    check3(Box3(0, 7, 0, 7, 0, 7), 9, 3) // full space
+    check3(Box3(3, 3, 4, 4, 5, 5), 9, 3) // single cell
+    check3(Box3(0, 7, 0, 7, 2, 2), 9, 3) // one z-slice (the height-query shape)
+    check3(Box3(6.5, 9.5, -1.0, 2.5, 1.5, 4.5), 9, 3) // fractional + out-of-range edges
+    (1 to 20).foreach { _ =>
+      def r() = rng3.nextInt(8)
+      val (a, b, c, d, e, f) = (r(), r(), r(), r(), r(), r())
+      check3(Box3(math.min(a, b), math.max(a, b), math.min(c, d), math.max(c, d),
+        math.min(e, f), math.max(e, f)), 9, 3)
+    }
+  }
+
+  test("3D z-slice selections prune: a thin z band touches a small head fraction") {
+    // 12 bits = 16x16x16, tail 0 -> heads are keys
+    val hr = MortonRange.decompose(Box3(0, 15, 0, 15, 4, 4), 12, 0, maxCells = 4096)
+    val selected = hr.all.map { case (lo, hi) => hi - lo + 1 }.sum
+    assert(selected == 256) // exactly the 16x16 keys of the z=4 slice
+    assert(selected < (1 << 12) / 4) // far below a full scan
+  }
+
+  test("the key-space cap depends on d: 62 bits in 2D, 63 in 3D") {
+    MortonRange.decompose(Box3(0, 0, 0, 0, 0, 0), 63, 60, maxCells = 16)
+    intercept[IllegalArgumentException](MortonRange.decompose(Bbox(0, 0, 0, 0), 63, 60))
+  }
 }

@@ -5,6 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class MortonSpec extends AnyFunSuite {
   private val rng = new scala.util.Random(42)
 
+  private def coord3(): Long = rng.nextLong() & ((1L << 21) - 1)
+
   /** Naive bit-loop interleave to check the magic-mask version against. */
   private def naiveEncode(x: Long, y: Long): Long = {
     var m = 0L
@@ -12,6 +14,19 @@ class MortonSpec extends AnyFunSuite {
     while (i < 31) {
       m |= ((x >> i) & 1L) << (2 * i)
       m |= ((y >> i) & 1L) << (2 * i + 1)
+      i += 1
+    }
+    m
+  }
+
+  /** Bit-by-bit 3D reference implementation for the magic-mask kernels. */
+  private def naiveEncode3(x: Long, y: Long, z: Long): Long = {
+    var m = 0L
+    var i = 0
+    while (i < 21) {
+      m |= ((x >> i) & 1L) << (3 * i)
+      m |= ((y >> i) & 1L) << (3 * i + 1)
+      m |= ((z >> i) & 1L) << (3 * i + 2)
       i += 1
     }
     m
@@ -73,5 +88,57 @@ class MortonSpec extends AnyFunSuite {
       assert(Morton.decodeX(k) >= x0 && Morton.decodeX(k) <= x1)
       assert(Morton.decodeY(k) >= y0 && Morton.decodeY(k) <= y1)
     }
+  }
+
+  test("3D known vectors") {
+    assert(Morton.encode(0, 0, 0) == 0L)
+    assert(Morton.encode(1, 0, 0) == 1L)
+    assert(Morton.encode(0, 1, 0) == 2L)
+    assert(Morton.encode(0, 0, 1) == 4L)
+    assert(Morton.encode(1, 1, 1) == 7L)
+    assert(Morton.encode(2, 0, 0) == 8L)
+    assert(Morton.encode(2, 1, 1) == 14L)
+  }
+
+  test("3D encode matches the naive bit loop and round-trips (randomized property)") {
+    (1 to 2000).foreach { _ =>
+      val (x, y, z) = (coord3(), coord3(), coord3())
+      val m = Morton.encode(x, y, z)
+      assert(m == naiveEncode3(x, y, z))
+      assert(Morton.decode(m, 3, 0) == x)
+      assert(Morton.decode(m, 3, 1) == y)
+      assert(Morton.decode(m, 3, 2) == z)
+    }
+  }
+
+  test("decode(m, 2, dim) is the 2D decodeX / decodeY") {
+    for (_ <- 1 to 500) {
+      val m = rng.nextLong() & ((1L << 62) - 1)
+      assert(Morton.decode(m, 2, 0) == Morton.decodeX(m))
+      assert(Morton.decode(m, 2, 1) == Morton.decodeY(m))
+    }
+  }
+
+  test("3D per-dimension monotonicity along each axis") {
+    (1 to 500).foreach { _ =>
+      val x = rng.nextLong() & ((1L << 21) - 2)
+      assert(Morton.encode(x + 1, 0, 0) > Morton.encode(x, 0, 0))
+      assert(Morton.encode(0, x + 1, 0) > Morton.encode(0, x, 0))
+      assert(Morton.encode(0, 0, x + 1) > Morton.encode(0, 0, x))
+    }
+  }
+
+  test("3D checked encode rejects out-of-range input") {
+    intercept[IllegalArgumentException](Morton.encodeChecked(-1, 0, 0))
+    intercept[IllegalArgumentException](Morton.encodeChecked(1L << 21, 0, 0))
+  }
+
+  test("the grid guard caps 2D at 31 and 3D at 21 bits per dimension, naming the coordinate") {
+    Morton.requireInGrid(2, "x" -> ((1L << 31) - 1))
+    Morton.requireInGrid(3, "z" -> ((1L << 21) - 1))
+    val e2 = intercept[IllegalArgumentException](Morton.encodeChecked(0, 1L << 31))
+    assert(e2.getMessage.contains("quantized y"))
+    val e3 = intercept[IllegalArgumentException](Morton.requireInGrid(3, "z max" -> (1L << 21)))
+    assert(e3.getMessage.contains("quantized z max") && e3.getMessage.contains("21-bit"))
   }
 }

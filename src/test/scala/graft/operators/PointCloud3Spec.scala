@@ -135,6 +135,26 @@ class PointCloud3Spec extends AnyFunSuite {
       multiset(rebuilt.boxQuery(5, 95, 5, 95, 1.005, 25.005)))
   }
 
+  test("a 3D append past the 21-bit grid cap is rejected, naming the coordinate") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_wide").toString
+    PointCloud3.write(PointCloud3.importPoints(
+      Seq((0.0, 0.0, 0.0), (99.0, 99.0, 29.99)).toDF("x", "y", "z")), dir)
+    // 2^21 + 1 used to be masked to x = 1 by the 3-way interleave and
+    // land inside the stored key space
+    val e = intercept[IllegalArgumentException] {
+      PointCloud3.appendBatch(spark, dir, Seq((2097153.0, 1.0, 1.0)).toDF("x", "y", "z"), 0L)
+    }
+    assert(e.getMessage.contains("quantized x"))
+    assert(PointCloud3.read(spark, dir).meta.pointCount == 2)
+  }
+
+  test("importing an empty 3D cloud fails with the empty-cloud message") {
+    val e = intercept[IllegalArgumentException] {
+      PointCloud3.importPoints(Seq.empty[(Double, Double, Double)].toDF("x", "y", "z"))
+    }
+    assert(e.getMessage.contains("cannot import an empty point cloud"))
+  }
+
   test("3D box and polygon prism read the stored cloud in one scan, never a union") {
     val rng = new scala.util.Random(41)
     val pts = (1 to 5000).map { _ =>

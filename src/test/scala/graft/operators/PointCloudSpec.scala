@@ -435,6 +435,35 @@ class PointCloudSpec extends AnyFunSuite {
     assert(after.meta == meta0)
   }
 
+  test("a quantized x past the 31-bit grid cap is rejected on import and append") {
+    import spark.implicits._
+    // 2^32 + 5 used to lose its high bits in the interleave and be
+    // stored as x = 5
+    val wide = Seq((4294967301.0, 1.0, 1.0), (0.0, 0.0, 0.0)).toDF("x", "y", "z")
+    val e = intercept[IllegalArgumentException] {
+      PointCloud.importPoints(wide, ImportSpec(ratio = 0.5))
+    }
+    assert(e.getMessage.contains("quantized x max"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_wide").toString
+    PointCloud.write(PointCloud.importPoints(
+      Seq((0.0, 0.0, 0.0), (190.0, 190.0, 1.0)).toDF("x", "y", "z"), ImportSpec(ratio = 0.5)), dir)
+    val meta0 = PointCloud.read(spark, dir).meta
+    val ea = intercept[IllegalArgumentException] {
+      PointCloud.appendPoints(spark, dir, Seq((4294967301.0, 1.0, 1.0)).toDF("x", "y", "z"))
+    }
+    assert(ea.getMessage.contains("quantized x"))
+    assert(PointCloud.read(spark, dir).meta == meta0)
+  }
+
+  test("importing an empty 2D cloud fails with the empty-cloud message") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException] {
+      PointCloud.importPoints(Seq.empty[(Double, Double, Double)].toDF("x", "y", "z"),
+        ImportSpec())
+    }
+    assert(e.getMessage.contains("cannot import an empty point cloud"))
+  }
+
   private object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   /** (FileScans, Unions) in a frame's physical plan. */
