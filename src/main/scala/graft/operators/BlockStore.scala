@@ -27,10 +27,9 @@ private[operators] final class BlockStore[P, B, M](
   /** Range-shuffle keyed points on the head, sort each partition and
     * stream-pack it into blocks — the one pack of import, append and
     * compaction. */
-  def pack(keyed: DataFrame, nParts: Option[Int] = None): DataFrame =
-    keyed.repartitionByRange(
-        nParts.getOrElse(keyed.sparkSession.sessionState.conf.numShufflePartitions),
-        col("sfc_head"))
+  def pack(keyed: DataFrame): DataFrame =
+    keyed.repartitionByRange(keyed.sparkSession.sessionState.conf.numShufflePartitions,
+      col("sfc_head"))
       .sortWithinPartitions("sfc_head", "sfc_tail")
       .as[P](pointEnc)
       .mapPartitions(packPartition)(blockEnc)

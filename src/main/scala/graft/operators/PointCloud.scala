@@ -25,8 +25,7 @@ final case class ImportSpec(
       * ratio as a hand-tuned knob per dataset (scripts/import_*_s*.json
       * sweeps); at sparse densities a fixed ratio degenerates to
       * one-point blocks, losing the layout's purpose. */
-    targetPointsPerBlock: Option[Int] = None,
-    blockPartitions: Option[Int] = None)
+    targetPointsPerBlock: Option[Int] = None)
 
 /** Dataset catalog row — the Spark form of pc_metadata_<name>
   * (reference db/__init__.py:43-52). Unlike the reference's querier,
@@ -93,7 +92,7 @@ object PointCloud {
       spec.scaleX, spec.scaleY, spec.scaleZ, spec.offX, spec.offY, spec.offZ,
       s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
       s.getDouble(5), s.getDouble(6))
-    new BlockedCloud(spark, store.pack(keyPoints(points, meta), spec.blockPartitions), meta)
+    new BlockedCloud(spark, store.pack(keyPoints(points, meta)), meta)
   }
 
   private def quantize(c: Column, off: Double, scale: Double): Column =
@@ -308,11 +307,14 @@ final class BlockedCloud(
     * predicate at any data scale; a coarser cover only moves blocks
     * from contained to partial. */
   private def candidates(b: Bbox): DataFrame = {
-    val (blk, tag) = SfcPredicates.candidateBlocks(blocks, quantizedBbox(b)
-      .map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
-      .getOrElse(HeadRanges(Vector.empty, Vector.empty)))
+    val (blk, tag) = SfcPredicates.candidateBlocks(blocks, cover(b))
     explodePoints(blk, Some(tag))
   }
+
+  /** The head cover of a bbox: empty when it holds no grid point. */
+  private def cover(b: Bbox): HeadRanges = quantizedBbox(b)
+    .map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
+    .getOrElse(HeadRanges(Vector.empty, Vector.empty))
 
   private def xyz(df: DataFrame): DataFrame = df.select("x", "y", "z")
 
@@ -391,157 +393,55 @@ final class BlockedCloud(
   def polylineBufferQuery(wkt: String, r: Double): DataFrame =
     polylineBufferQuery(Geometry.parseWktLinestring(wkt), r)
 
-  /** Coarse occupancy histogram for kNN radius seeding: per-cell point
-    * counts at a Morton prefix of at most 12 bits — <= 4096 cells
-    * however large the cloud, so the driver holds a bounded summary,
-    * never the block list. Collected once per open cloud (one pruned
-    * aggregate job), then every kNN seed is a pure driver-side lookup. */
-  private final case class KnnHist(
-      cellX: Array[Long], cellY: Array[Long], n: Array[Long],
-      sideX: Long, sideY: Long)
+  /** The exact kNN seed over this cloud's heads ([[KnnSeed]]): one
+    * aggregate job per open cloud, then driver-side lookups. */
+  private lazy val seed: KnnSeed = KnnSeed.collect(blocks, meta.headLen, meta.tailLen,
+    Array(math.round((meta.xMax - meta.offX) / meta.scaleX).max(0L),
+      math.round((meta.yMax - meta.offY) / meta.scaleY).max(0L)),
+    Array(meta.offX, meta.offY), Array(meta.scaleX, meta.scaleY))
 
-  private lazy val knnHist: KnnHist = {
-    val prefixBits = math.min(meta.headLen, 12)
-    val shift = meta.headLen - prefixBits
-    val rem = totalBits - prefixBits
-    val sideX = 1L << ((rem + 1) / 2) // even key bits (x) below the prefix
-    val sideY = 1L << (rem / 2)
-    val rows = blocks
-      .groupBy(shiftright(col("sfc_head"), shift).as("c"))
-      .agg(sum(size(col("sfc_tail"))).cast("long").as("n"))
-      .collect()
-    val (cx, cy, cn) = (new Array[Long](rows.length),
-      new Array[Long](rows.length), new Array[Long](rows.length))
-    var i = 0
-    rows.foreach { r =>
-      val key = r.getLong(0) << rem
-      cx(i) = Morton.decodeX(key) / sideX
-      cy(i) = Morton.decodeY(key) / sideY
-      cn(i) = r.getLong(1)
-      i += 1
-    }
-    KnnHist(cx, cy, cn, sideX, sideY)
-  }
-
-  /** Seed radius from the LOCAL occupancy around the query: grow a
-    * histogram-cell window (driver-side, zero jobs) until it holds
-    * >= k points, then return the query-to-farthest-window-corner
-    * distance — a circle of that radius provably contains the window,
-    * hence >= k points, so the first probe round succeeds with a scan
-    * volume near the histogram resolution. A global-density seed
-    * misjudges skewed clouds in both directions: in the dense corner
-    * it overshoots (one probe scanning almost everything), in the
-    * sparse rest it undershoots (log-many probe rounds). */
-  private def knnSeedRadius(px: Double, py: Double, k: Int): Double = {
-    val h = knnHist
-    val qx = (px - meta.offX) / meta.scaleX
-    val qy = (py - meta.offY) / meta.scaleY
-    val cellX = math.floor(qx / h.sideX).toLong
-    val cellY = math.floor(qy / h.sideY).toLong
-    val need = math.min(k.toLong, meta.pointCount)
-    val maxW = math.max(h.cellX.max - h.cellX.min,
-      h.cellY.max - h.cellY.min) + 1
-    var w = 0L
-    var count = 0L
-    var done = false
-    while (!done) {
-      count = 0L
-      var i = 0
-      while (i < h.n.length) {
-        if (math.abs(h.cellX(i) - cellX) <= w && math.abs(h.cellY(i) - cellY) <= w)
-          count += h.n(i)
-        i += 1
-      }
-      if (count >= need || w >= maxW) done = true
-      else w = math.max(1L, w * 2)
-    }
-    // window rect in original coordinates; its farthest corner bounds
-    // the k-distance from (px, py)
-    val ox0 = ((cellX - w) * h.sideX) * meta.scaleX + meta.offX
-    val ox1 = ((cellX + w + 1) * h.sideX) * meta.scaleX + meta.offX
-    val oy0 = ((cellY - w) * h.sideY) * meta.scaleY + meta.offY
-    val oy1 = ((cellY + w + 1) * h.sideY) * meta.scaleY + meta.offY
-    val dx = math.max(math.abs(px - ox0), math.abs(px - ox1))
-    val dy = math.max(math.abs(py - oy0), math.abs(py - oy1))
-    math.max(math.sqrt(dx * dx + dy * dy),
-      2 * math.max(meta.scaleX, meta.scaleY))
-  }
+  /** A radius around (px, py) whose circle holds ≥ min(k, n) points. */
+  private[operators] def knnSeedRadius(px: Double, py: Double, k: Int): Double =
+    seed.radius(Array(px, py), k)
 
   /** k nearest neighbours of (px, py) by 2D distance — the reference
     * declares this mode but never implemented it (retrieve_data.py:40-41).
-    * SFC-pruned: probe a circle seeded from the head histogram
-    * ([[knnSeedRadius]] — local occupancy, so skewed clouds neither
-    * over- nor under-shoot), expand until it holds >= k points (the
-    * true kNN set is then inside it), then exact top-k. Driver loop is
-    * O(log radius) *jobs* worst case and one job on the seeded path,
-    * never per-point work. */
-  def knn(px: Double, py: Double, k: Int): DataFrame =
-    knnWithStats(px, py, k)._1
-
-  /** [[knn]] plus (probe rounds, seed radius) — the spec pins the
-    * job-count bound on adversarially skewed clouds. */
-  private[operators] def knnWithStats(px: Double, py: Double,
-      k: Int): (DataFrame, Int, Double) = {
+    * The seed circle ([[knnSeedRadius]], from the head histogram, so
+    * skewed clouds neither over- nor under-shoot) provably holds the k
+    * nearest, so the answer is ONE pruned circle selection ranked by
+    * (d², x, y, z): one job. */
+  def knn(px: Double, py: Double, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    // a circle of radius >= distance to the farthest bbox corner covers
-    // ALL data, wherever the query point lies (incl. outside the extent)
-    val maxCornerDist = math.sqrt(
-      math.pow(math.max(math.abs(px - meta.xMin), math.abs(px - meta.xMax)), 2) +
-        math.pow(math.max(math.abs(py - meta.yMin), math.abs(py - meta.yMax)), 2))
-    val seed = math.min(knnSeedRadius(px, py, k), maxCornerDist)
-    var r = seed
-    var rounds = 0
-    var result: DataFrame = null
-    while (result == null) {
-      rounds += 1
-      val covers = r >= maxCornerDist
-      val cand = circleQuery(Circle(px, py, r))
-      if (covers || cand.count() >= k) result = cand else r *= 2
-    }
-    (result.orderBy(d2From(px, py).asc, col("x").asc, col("y").asc, col("z").asc).limit(k),
-      rounds, seed)
+    circleQuery(Circle(px, py, knnSeedRadius(px, py, k)))
+      .orderBy(d2From(px, py).asc, col("x").asc, col("y").asc, col("z").asc).limit(k)
   }
 
   /** Batch kNN: the k nearest neighbours of EVERY query point in one
     * plan — the production form of [[knn]] when a workload carries many
-    * probes. One shared radius expands until every query's circle holds
-    * >= k candidates (verified for all queries in a single aggregate
-    * job per round, not one job per query); the final ranking is a
-    * per-query window over the SFC-pruned candidate union, so the
-    * shuffle carries only candidates (~Q * k * expansion), never the
-    * cloud. Ties break on (d2, x, y, z) like [[knn]]. */
+    * probes. One scan reads the blocks under the merged covers of the
+    * queries' seed circles; a broadcast (qid, centre, r²) table matches
+    * each candidate to the circles it lies in, and a per-query window
+    * ranks them, so the shuffle carries only candidates, never the
+    * cloud. Ties break on (d², x, y, z) like [[knn]]. */
   def knnBatch(queries: Seq[(Long, Double, Double)], k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     require(queries.nonEmpty, "need at least one query point")
-    val maxCornerDist = queries.map { case (_, px, py) =>
-      math.sqrt(
-        math.pow(math.max(math.abs(px - meta.xMin), math.abs(px - meta.xMax)), 2) +
-          math.pow(math.max(math.abs(py - meta.yMin), math.abs(py - meta.yMax)), 2))
-    }.max
-    // shared radius: the largest per-query histogram seed guarantees
-    // every query's circle holds >= k points on the first probe
-    var r = math.min(
-      queries.map { case (_, px, py) => knnSeedRadius(px, py, k) }.max,
-      maxCornerDist)
-    var result: DataFrame = null
-    while (result == null) {
-      val covers = r >= maxCornerDist
-      val tagged = queries.map { case (qid, px, py) =>
-        circleQuery(Circle(px, py, r)).select(
-          param(qid).as("qid"), d2From(px, py).as("__d2"), col("x"), col("y"), col("z"))
-      }.reduce(_ unionAll _)
-      if (covers) result = tagged
-      else {
-        val counts = tagged.groupBy(col("qid")).count().collect()
-          .map(row => row.getLong(0) -> row.getLong(1)).toMap
-        if (queries.forall { case (qid, _, _) => counts.getOrElse(qid, 0L) >= k })
-          result = tagged
-        else r *= 2
-      }
+    val circles = queries.map { case (qid, px, py) =>
+      (qid, Circle(px, py, knnSeedRadius(px, py, k)))
     }
+    val merged = MortonRange.mergeRanges(circles.flatMap { case (_, c) => cover(c.bbox).all })
+    val (blk, _) = SfcPredicates.candidateBlocks(blocks, HeadRanges(Vector.empty, merged))
+    val probes = spark.createDataFrame(circles.map { case (qid, c) =>
+      (qid, c.cx, c.cy, c.r * c.r)
+    }).toDF("qid", "__qx", "__qy", "__r2")
+    val d2 = (col("x") - col("__qx")) * (col("x") - col("__qx")) +
+      (col("y") - col("__qy")) * (col("y") - col("__qy"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
       .orderBy(col("__d2").asc, col("x").asc, col("y").asc, col("z").asc)
-    result.withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
+    explodePoints(blk).crossJoin(broadcast(probes))
+      .withColumn("__d2", d2)
+      .filter(col("__d2") <= col("__r2"))
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .select(col("qid"), col("x"), col("y"), col("z"))
   }

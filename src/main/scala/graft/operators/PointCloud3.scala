@@ -205,36 +205,31 @@ final class BlockedCloud3(
   def polygonQuery(wkt: String, zMin: Double, zMax: Double): DataFrame =
     polygonQuery(graft.core.Geometry.parseWktPolygon(wkt), zMin, zMax)
 
+  /** The exact kNN seed over this cloud's heads ([[KnnSeed]]): x and y
+    * on the integer grid, z at 1/zDenom. */
+  private lazy val seed: KnnSeed = KnnSeed.collect(blocks, meta.headLen, meta.tailLen,
+    Array(meta.qxMax, meta.qyMax, meta.qzMax), Array(0.0, 0.0, 0.0),
+    Array(1.0, 1.0, 1.0 / meta.zDenom))
+
+  /** A radius around (px, py, pz) whose sphere holds ≥ min(k, n) points. */
+  private[operators] def knnSeedRadius(px: Double, py: Double, pz: Double, k: Int): Double =
+    seed.radius(Array(px, py, pz), k)
+
   /** k nearest neighbours of (px, py, pz) by TRUE 3D distance — the
     * height-aware form the 2D store's [[BlockedCloud.knn]] cannot
-    * answer. Probe an expanding sphere (via its octree-pruned bounding
-    * box) until it holds >= k points — the true kNN set is then inside
-    * it — and exact-rank the candidates. Driver loop is O(log radius)
-    * jobs, never per-point work. */
+    * answer. The seed sphere ([[knnSeedRadius]]) provably holds the k
+    * nearest, so the answer is ONE octree-pruned selection of its
+    * bounding box, refined to the sphere and ranked by (d², x, y, z):
+    * one job. */
   def knn(px: Double, py: Double, pz: Double, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val zMaxW = meta.qzMax / meta.zDenom
-    val maxCornerDist = math.sqrt(
-      math.pow(math.max(math.abs(px), math.abs(px - meta.qxMax)), 2) +
-        math.pow(math.max(math.abs(py), math.abs(py - meta.qyMax)), 2) +
-        math.pow(math.max(math.abs(pz), math.abs(pz - zMaxW)), 2))
-    val volume = math.max(
-      meta.qxMax.toDouble * meta.qyMax.toDouble * math.max(zMaxW, 1e-9), 1e-9)
-    val density = meta.pointCount / volume
-    var r = math.max(
-      math.cbrt((k + 1) / math.max(density, 1e-18) * 3.0 / (4.0 * math.Pi)) * 1.5,
-      2.0)
+    val r = knnSeedRadius(px, py, pz, k)
     val d2 = (col("x") - param(px)) * (col("x") - param(px)) +
       (col("y") - param(py)) * (col("y") - param(py)) +
       (col("z") - param(pz)) * (col("z") - param(pz))
-    var result: DataFrame = null
-    while (result == null) {
-      val covers = r >= maxCornerDist
-      val cand = boxQuery(px - r, px + r, py - r, py + r, pz - r, pz + r)
-        .filter(d2 <= param(r * r))
-      if (covers || cand.count() >= k) result = cand else r *= 2
-    }
-    result.orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k)
+    boxQuery(px - r, px + r, py - r, py + r, pz - r, pz + r)
+      .filter(d2 <= param(r * r))
+      .orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k)
   }
 
   /** 3D voxel occupancy: point count per (cellXY, cellZ) voxel — the

@@ -73,6 +73,61 @@ class PointCloud3Spec extends AnyFunSuite {
     assert(got.map(d2).toSeq == got.map(d2).toSeq.sorted)
   }
 
+  private def d2From(px: Double, py: Double, pz: Double)(p: (Double, Double, Double)): Double =
+    (p._1 - px) * (p._1 - px) + (p._2 - py) * (p._2 - py) + (p._3 - pz) * (p._3 - pz)
+
+  /** The seed sphere of `c` holds ≥ min(k, n) of `pts` by brute-force
+    * count, and `c.knn` equals brute force ranked by (d², x, y, z). */
+  private def checkKnn(c: BlockedCloud3, pts: Seq[(Double, Double, Double)],
+      px: Double, py: Double, pz: Double, k: Int): Unit = {
+    val d2 = d2From(px, py, pz) _
+    val r = c.knnSeedRadius(px, py, pz, k)
+    val held = pts.count(p => d2(p) <= r * r)
+    assert(held >= math.min(k, pts.size), s"seed ($px, $py, $pz, k = $k) radius $r holds $held")
+    val want = pts.sortBy(p => (d2(p), p._1, p._2, p._3)).take(k)
+    val got = c.knn(px, py, pz, k).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(got == want, s"knn ($px, $py, $pz, k = $k)")
+  }
+
+  test("3D knn seed sphere holds min(k, n) points and knn ≡ brute force") {
+    val rng = new scala.util.Random(37)
+    val random = (1 to 3000).map(_ =>
+      (rng.nextInt(200).toDouble, rng.nextInt(200).toDouble, rng.nextInt(5000) / 100.0))
+    val randomCloud = PointCloud3.importPoints(random.toDF("x", "y", "z"))
+    Seq((100.5, 100.5, 25.0, 1), (100.5, 100.5, 25.0, 50), (3.25, 190.75, 49.0, 120),
+      (0.0, 0.0, 0.0, 1500), (60.5, 140.5, 10.0, 2999))
+      .foreach { case (px, py, pz, k) => checkKnn(randomCloud, random, px, py, pz, k) }
+    // skewed: 99.6% of the mass in a 16 x 16 x 1 corner of a 1024² x 50 extent
+    val skewedPts = (1 to 5000).map(_ =>
+      (rng.nextInt(16).toDouble, rng.nextInt(16).toDouble, rng.nextInt(100) / 100.0)) ++
+      (1 to 20).map(_ => (900.0 + rng.nextInt(124), 900.0 + rng.nextInt(124),
+        (4000 + rng.nextInt(1000)) / 100.0))
+    val skewed = PointCloud3.importPoints(skewedPts.toDF("x", "y", "z"))
+    Seq((8.0, 8.0, 0.5, 50), (950.0, 950.0, 45.0, 50), (500.5, 500.5, 25.0, 10))
+      .foreach { case (px, py, pz, k) => checkKnn(skewed, skewedPts, px, py, pz, k) }
+    // the dense-corner seed stays near the cell scale, far below the
+    // ~1450-unit diagonal of the extent
+    assert(skewed.knnSeedRadius(8.0, 8.0, 0.5, 50) <= 200.0)
+    // query points far outside the extent, on every side
+    Seq((5000.0, -3000.0, 400.0, 7), (-50.5, 300.25, -20.0, 30), (100.0, 100.0, 1e5, 4))
+      .foreach { case (px, py, pz, k) => checkKnn(randomCloud, random, px, py, pz, k) }
+    // k > n: every point, ranked
+    val tiny = Seq((3.0, 4.0, 1.0), (10.0, 2.0, 2.5), (10.0, 2.0, 2.5), (0.0, 9.0, 0.25))
+    val tinyCloud = PointCloud3.importPoints(tiny.toDF("x", "y", "z"))
+    Seq((5.5, 5.5, 1.0, 9), (-100.0, 40.0, 3.0, 4))
+      .foreach { case (px, py, pz, k) => checkKnn(tinyCloud, tiny, px, py, pz, k) }
+    // a stored cloud with an appended delta batch
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_knn_delta").toString
+    PointCloud3.write(randomCloud, dir)
+    val delta = (1 to 400).map(_ =>
+      (150.0 + rng.nextInt(50), 10.0 + rng.nextInt(30), rng.nextInt(1000) / 100.0))
+    PointCloud3.appendBatch(spark, dir, delta.toDF("x", "y", "z"), 0L)
+    val stored = PointCloud3.read(spark, dir)
+    Seq((175.5, 25.5, 5.0, 30), (100.5, 100.5, 25.0, 500), (300.0, -40.0, 0.0, 12))
+      .foreach { case (px, py, pz, k) => checkKnn(stored, random ++ delta, px, py, pz, k) }
+  }
+
   test("empty and full boxes behave") {
     val df = Seq((1.0, 2.0, 3.0), (4.0, 5.0, 6.0)).toDF("x", "y", "z")
     val c = PointCloud3.importPoints(df, zDenom = 100.0, ratio = 0.5)

@@ -166,40 +166,110 @@ class PointCloudSpec extends AnyFunSuite {
     assert(got.map(d2).sorted == expect.map(d2).sorted)
   }
 
-  test("knn seed adapts to adversarially clustered clouds: bounded rounds, local radius") {
-    import spark.implicits._
-    // 99.9% of the mass in a 64x64 corner of an 8192^2 extent
+  /** 20 000 points in a 64 x 64 corner of an 8192² extent, 20 in the
+    * far corner — 99.9% of the mass in 0.006% of the area. */
+  private lazy val skewedPts: Seq[(Double, Double, Double)] = {
     val rng = new scala.util.Random(7)
     val dense = (1 to 20000).map(_ =>
       (rng.nextInt(64).toDouble, rng.nextInt(64).toDouble, 1.0))
     val sparse = (1 to 20).map(_ =>
       (7000.0 + rng.nextInt(1000), 7000.0 + rng.nextInt(1000), 2.0))
-    val c = PointCloud.importPoints((dense ++ sparse).toDF("x", "y", "z"),
-      ImportSpec(name = "skewed"))
+    dense ++ sparse
+  }
+
+  private lazy val skewed: BlockedCloud = {
+    import spark.implicits._
+    PointCloud.importPoints(skewedPts.toDF("x", "y", "z"), ImportSpec(name = "skewed"))
+  }
+
+  private def d2From(px: Double, py: Double)(p: (Double, Double, Double)): Double =
+    (p._1 - px) * (p._1 - px) + (p._2 - py) * (p._2 - py)
+
+  /** The seed circle of `c` holds ≥ min(k, n) of `pts` by brute-force
+    * count, and `c.knn` equals brute force ranked by (d², x, y, z). */
+  private def checkKnn(c: BlockedCloud, pts: Seq[(Double, Double, Double)],
+      px: Double, py: Double, k: Int): Unit = {
+    val r = c.knnSeedRadius(px, py, k)
+    val held = pts.count(p => d2From(px, py)(p) <= r * r)
+    assert(held >= math.min(k, pts.size), s"seed ($px, $py, k = $k) radius $r holds $held")
+    val want = pts.sortBy(p => (d2From(px, py)(p), p._1, p._2, p._3)).take(k)
+    val got = c.knn(px, py, k).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(got == want, s"knn ($px, $py, k = $k)")
+  }
+
+  test("knn seed adapts to adversarially clustered clouds: one exact seed, local radius") {
     val k = 50
-
     // query in the dense corner: a global-density seed would cover
-    // ~sqrt(k/globalDensity) ~ thousands of units; the local seed must
-    // stay near the cluster scale and resolve in one probe round
-    val (gotDense, roundsDense, seedDense) = c.knnWithStats(32.0, 32.0, k)
-    assert(gotDense.count() == k)
-    assert(roundsDense <= 2, s"dense-corner probe took $roundsDense rounds")
+    // ~sqrt(k/globalDensity) ~ thousands of units; the local seed stays
+    // near the cluster scale and its circle already holds k points
+    val seedDense = skewed.knnSeedRadius(32.0, 32.0, k)
     assert(seedDense <= 200.0, s"dense-corner seed radius $seedDense overshoots")
+    checkKnn(skewed, skewedPts, 32.0, 32.0, k)
+    // query in the sparse far region: the k-th neighbour is in the dense
+    // corner ~10^4 units away; the window grows driver-side (no jobs)
+    // until it reaches it
+    checkKnn(skewed, skewedPts, 7500.0, 7500.0, k)
+    val expectKth = skewedPts.map(d2From(32.0, 32.0)).sorted.apply(k - 1)
+    val gotD2 = skewed.knn(32.0, 32.0, k).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).map(d2From(32.0, 32.0))
+    assert(gotD2.length == k && gotD2.max <= expectKth + 1e-9)
+  }
 
-    // query in the sparse far region: k-th neighbour is ~10^3 units
-    // away; the window grows driver-side (no jobs) and the first probe
-    // must still land within a few rounds, not log2(extent/cellsize)
-    val (gotSparse, roundsSparse, _) = c.knnWithStats(7500.0, 7500.0, k)
-    assert(gotSparse.count() == k)
-    assert(roundsSparse <= 2, s"sparse-region probe took $roundsSparse rounds")
+  test("knn seed circle holds min(k, n) points and knn ≡ brute force") {
+    import spark.implicits._
+    val rng = new scala.util.Random(17)
+    val random = (1 to 3000).map(_ =>
+      (rng.nextInt(1000).toDouble, rng.nextInt(1000).toDouble, rng.nextInt(5000) / 100.0))
+    val randomCloud = PointCloud.importPoints(random.toDF("x", "y", "z"), ImportSpec(name = "r"))
+    Seq((500.5, 500.5, 1), (500.5, 500.5, 40), (3.25, 990.75, 200), (999.0, 0.0, 7))
+      .foreach { case (px, py, k) => checkKnn(randomCloud, random, px, py, k) }
+    // skewed: every corner and the empty middle
+    Seq((0.0, 0.0, 300), (4000.5, 4000.5, 25), (8191.0, 0.0, 5), (7500.25, 7900.75, 19))
+      .foreach { case (px, py, k) => checkKnn(skewed, skewedPts, px, py, k) }
+    // query points far outside the extent, on every side
+    Seq((50000.0, -20000.0, 7), (-3000.5, 9000.25, 60), (4000.0, 1e6, 3))
+      .foreach { case (px, py, k) => checkKnn(cloud, raw, px, py, k) }
+    // k > n: every point, ranked
+    val tiny = Seq((3.0, 4.0, 1.0), (10.0, 2.0, 2.0), (10.0, 2.0, 2.0), (7.0, 7.0, 0.5),
+      (0.0, 9.0, 3.0))
+    val tinyCloud = PointCloud.importPoints(tiny.toDF("x", "y", "z"), ImportSpec(name = "tiny"))
+    Seq((5.5, 5.5, 9), (-100.0, 40.0, 5), (6.0, 3.0, 1000))
+      .foreach { case (px, py, k) => checkKnn(tinyCloud, tiny, px, py, k) }
+    // a stored cloud with an appended delta, partly outside the base extent
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_knn_delta").toString
+    PointCloud.write(randomCloud, dir)
+    val delta = (1 to 400).map(_ =>
+      (900.0 + rng.nextInt(120), 20.0 + rng.nextInt(50), rng.nextInt(5000) / 100.0))
+    PointCloud.appendPoints(spark, dir, delta.toDF("x", "y", "z"))
+    val stored = PointCloud.read(spark, dir)
+    Seq((960.5, 45.5, 30), (1015.0, 60.0, 450), (500.5, 500.5, 64), (1500.0, -300.0, 12))
+      .foreach { case (px, py, k) => checkKnn(stored, random ++ delta, px, py, k) }
+  }
 
-    // correctness on the skewed cloud (dense-corner case)
-    def d2(p: (Double, Double, Double)) =
-      (p._1 - 32.0) * (p._1 - 32.0) + (p._2 - 32.0) * (p._2 - 32.0)
-    val expectKth = (dense ++ sparse).map(d2).sorted.apply(k - 1)
-    val gotD2 = gotDense.collect()
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).map(d2)
-    assert(gotD2.max <= expectKth + 1e-9)
+  test("batch knn ≡ brute force per query, outside and repeated query points included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_knn_batch").toString
+    PointCloud.write(cloud, dir)
+    val stored = PointCloud.read(spark, dir)
+    val queries = Seq((1L, 3000.5, 3000.5), (2L, 1000.25, 5000.75), (3L, 7000.5, 500.5),
+      (4L, 50000.0, -20000.0), (5L, 3000.5, 3000.5))
+    val k = 40
+    val got = stored.knnBatch(queries, k).collect().map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2),
+      r.getDouble(3)))).groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
+    queries.foreach { case (qid, px, py) =>
+      val want = raw.sortBy(p => (d2From(px, py)(p), p._1, p._2, p._3)).take(k).sorted
+      assert(got(qid) == want, s"query $qid")
+    }
+  }
+
+  test("pc_knn_batch executes one FileScan and no Union") {
+    val df = PointCloudQueries.queries("pc_knn_batch")(spark, sfDir)
+    assert(df.collect().length == 150)
+    val executed = df.queryExecution.executedPlan
+    assert(plans.collect(executed) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size == 1, executed)
+    assert(plans.collect(executed) {
+      case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty, executed)
   }
 
   test("histogram ≡ naive cell group-by") {
