@@ -1,88 +1,21 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Window-drift calibration (VERDICT r16 item 1): container co-tenant
-  * pressure measurably shifted WHOLE-round benches (~1.2–1.3× on
-  * identical binaries between the r15 and r16 windows), confounding
-  * every cross-round per-query comparison. This makes the confound
-  * measurable forever: a fixed probe set — 8 long-stable queries with
-  * their r15 CLEAN-window min-fold values pinned, plus two pure-JVM
-  * CPU spin probes (single-thread and all-cores, anchored in the r17
-  * window) — rides along with every bench run, and the emitted
-  * `calibration` object records each probe's ratio to its anchor and
-  * the median query-probe ratio. A bench whose median calibration
-  * ratio is ~1.0 is directly comparable to r15-era maps; one at ~1.25
-  * must be read through that correction.
+/** Host-drift calibration: three pure-JVM spin probes (single-thread
+  * ALU, all-cores ALU, memory bandwidth) run alongside every bench, so
+  * co-tenant pressure on the host is measured rather than guessed. The
+  * spin probes are all that the `calibration` object carries: each
+  * probe's seconds and its ratio to the r21 anchor below. No query
+  * result enters it, so no query's code is frozen by it.
   *
-  * DO NOT edit the probe queries or re-anchor the references without
-  * recording a new epoch here — the anchors are only meaningful while
-  * the probe queries' code stays untouched.
-  *
-  * Anchor epochs: r15 (clean-window min-fold, the original pin), r18
-  * (VERDICT r17 item 2 — anchors re-pinned to the r17 min-fold so
-  * drift does not compound as rounds accumulate; the r15 column stays
-  * for continuity), and r21 (VERDICT r20 item 6 — `mm_image_dims` had
-  * drifted to 4x its r15 anchor once its family was spread around it,
-  * making the probe median unreadable; additionally the r21 store-
-  * layout and spread-floor changes legitimately moved the pc_* and
-  * mm_image_dims probes' cost, so the OLD columns no longer describe
-  * current code for those three). The r21 anchors are the per-query
-  * min over this round's four full-suite runs on current code
-  * (bench_r21_before + 3 end-of-round folds; every fold carried
-  * 1.38-1.55x co-tenant mt pressure, so ratios in a genuinely clean
-  * window may read slightly below 1.0 — interpret against the spin
-  * probes, the r18 spinMem note's discipline). The emitted object
-  * carries a ratio per epoch; `median_query_ratio_r21` is the number
-  * new rounds should read. */
+  * The anchors were taken on a local[32] host; a ratio is only
+  * comparable between runs with the same CPU count. */
 object Calibration {
-  /** (query, r15 clean-window min-fold sec, r17 min-fold sec, r21
-    * min-fold sec — all at sf0.1 local[32]) — from
-    * BENCH_LOCAL_r15_full.json / BENCH_LOCAL_r17_full.json /
-    * artifacts/bench_r21_after_minfold.json; chosen to span cost
-    * classes (TPC-H scan+agg, LAS scan overhead, SFC index query,
-    * text kernel scan, window shuffle, JPEG decode, lang-ID codegen
-    * kernel, suffix-automaton-free edit-distance banding). */
-  val probeQueries: Seq[(String, Double, Double, Double)] = Seq(
-    ("rel_q1_pricing", 0.3476, 0.4054, 0.4327),
-    ("pc_metadata", 0.0274, 0.0259, 0.0314),
-    ("pc_bbox_small", 0.0991, 0.1201, 0.1288),
-    ("doc_fingerprint", 0.4189, 0.4566, 0.4870),
-    ("ev_sessionize", 0.3198, 0.3990, 0.4612),
-    ("mm_image_dims", 0.2136, 0.2982, 0.3190),
-    ("doc_lang_id", 0.1232, 0.1461, 0.1568),
-    ("doc_edit_banded", 3.2454, 3.7042, 4.2253))
-
-  /** r17-window anchors for the spin probes (seconds; min of 2,
-    * min-folded over the r17 calibration runs). NOTE: the query-probe
-    * ratios are meaningful on FULL-suite runs only — their r15
-    * anchors come from a full-suite min-fold, and an 8-query subset
-    * run measures ~2x those anchors from JIT/codegen coldness alone
-    * (measured r17: subset median 2.2-2.3 vs full-suite median 1.217,
-    * which matched the overall 261-query median 1.225 exactly). The
-    * spin probes are protocol-independent. */
-  val spinStRef = 1.13
-  val spinMtRef = 0.68
-
-  /** r21-epoch spin anchors: the min across this round's clean-window
-    * runs (the sf10 video re-measurement runs, spin probes 0.97-0.99
-    * vs the r17 refs) — same host, current JVM. */
+  /** r21 anchors (seconds, min-of-2, min across that round's
+    * clean-window runs). */
   val spinStRefR21 = 1.099
   val spinMtRefR21 = 0.669
   val spinMemRefR21 = 0.288
-
-  /** r18-epoch anchor for the MEMORY-BANDWIDTH probe (seconds,
-    * min-of-2, measured in the r18 window). Added because r18's
-    * window exposed a blind spot: kernel-heavy query probes read
-    * 1.33-1.42 while the cache-resident xorshift spins read ~1.05 —
-    * sustained per-core/memory pressure is invisible to pure-ALU
-    * probes. This one streams 2 GB through a 256 MB array (far past
-    * L3), so frequency scaling and bandwidth co-tenancy land on it.
-    * NOTE the epoch: anchored in a window whose KERNEL probes were
-    * degraded (min of 0.329/0.362/0.333 across three runs); if the
-    * memory axis was equally degraded, clean-window ratios will read
-    * below 1.0 — interpret against the query-probe median, not
-    * alone. */
-  val spinMemRef = 0.329
 
   private def spin(n: Long, seed: Long): Long = {
     var x = seed; var s = 0L; var i = 0L
@@ -145,34 +78,13 @@ object Calibration {
     math.min(once(), once())
   }
 
-  /** The JSON calibration object, from the bench's own min-fold
-    * per-query results (no extra query executions). */
-  def jsonFrom(results: Map[String, Double]): String = {
+  /** The JSON calibration object: the three spin probes, each with
+    * its ratio to the r21 anchor. */
+  def json(): String = {
     val st = spinSingle()
     val mt = spinMulti()
     val mem = spinMem()
-    val present = probeQueries.filter { case (q, _, _, _) => results.contains(q) }
-    val rows = present.map { case (q, r15, r17, r21) =>
-      val sec = results(q)
-      f""""$q":{"sec":$sec%.4f,"r15_sec":$r15%.4f,"ratio":${sec / r15}%.3f,""" +
-        f""""r17_sec":$r17%.4f,"ratio_r17":${sec / r17}%.3f,""" +
-        f""""r21_sec":$r21%.4f,"ratio_r21":${sec / r21}%.3f}"""
-    }
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) -1.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val median = medianOf(present.map { case (q, r15, _, _) => results(q) / r15 })
-    val medianR17 = medianOf(present.map { case (q, _, r17, _) => results(q) / r17 })
-    val medianR21 = medianOf(present.map { case (q, _, _, r21) => results(q) / r21 })
-    f"""{"probes":{${rows.mkString(",")}},"median_query_ratio":$median%.3f,""" +
-      f""""median_query_ratio_r17":$medianR17%.3f,""" +
-      f""""median_query_ratio_r21":$medianR21%.3f,""" +
-      f""""spin_st_sec":$st%.3f,"spin_st_ratio":${st / spinStRef}%.3f,""" +
-      f""""spin_mt_sec":$mt%.3f,"spin_mt_ratio":${mt / spinMtRef}%.3f,""" +
-      f""""spin_mem_sec":$mem%.3f,"spin_mem_ratio":${mem / spinMemRef}%.3f,""" +
+    f"""{"spin_st_sec":$st%.3f,"spin_mt_sec":$mt%.3f,"spin_mem_sec":$mem%.3f,""" +
       f""""spin_st_ratio_r21":${st / spinStRefR21}%.3f,""" +
       f""""spin_mt_ratio_r21":${mt / spinMtRefR21}%.3f,""" +
       f""""spin_mem_ratio_r21":${mem / spinMemRefR21}%.3f}"""
@@ -251,7 +163,7 @@ object Bench {
     val errs = errors.map { case (k, m) => s"\"" + k + "\":" + jstr(m) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val cal = Calibration.jsonFrom(results.toMap)
+    val cal = Calibration.json()
     System.err.println(s"[bench] calibration: $cal")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"calibration":$cal,"sf":"$sfDir"}"""

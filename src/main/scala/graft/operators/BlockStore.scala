@@ -123,7 +123,7 @@ private[operators] final class BlockStore[P, B, M](
   }
 }
 
-private[operators] object BlockStore {
+private[graft] object BlockStore {
 
   /** Blocks per parquet page. The column index then holds sfc_head
     * min/max per page of a head-sorted file, and the reader skips every

@@ -142,22 +142,9 @@ object Dedup {
   }
 
   /** Exact Jaccard verification of candidate pairs against the true
-    * shingle sets (array_intersect/array_union on the two docs only). */
-  def verifyJaccard(pairs: DataFrame, shingled: DataFrame, idCol: String,
-      threshold: Double): DataFrame = {
-    val sa = shingled.select(col(idCol).as("id_a"), col("shingles").as("__sh_a"))
-    val sb = shingled.select(col(idCol).as("id_b"), col("shingles").as("__sh_b"))
-    pairs.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double") /
-          size(array_union(col("__sh_a"), col("__sh_b"))).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** [[verifyJaccard]] for SORTED hash arrays ([[hashedShingles]]
-    * output): one merge pass per pair instead of hash-table set ops,
-    * |A∪B| derived as |A| + |B| - |A∩B|. */
+    * shingle sets, for SORTED hash arrays ([[hashedShingles]] output):
+    * one merge pass per pair instead of hash-table set ops, |A∪B|
+    * derived as |A| + |B| - |A∩B|. */
   private def verifyJaccardSorted(pairs: DataFrame, shingled: DataFrame,
       idCol: String, threshold: Double): DataFrame = {
     val sa = shingled.select(col(idCol).as("id_a"), col("shingles").as("__sh_a"))

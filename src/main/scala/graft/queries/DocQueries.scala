@@ -1379,11 +1379,6 @@ object DocQueries {
     * groups mirror the text verbatim (exact-dedup prey), odd groups
     * append a 3-word suffix (word-shingle Jaccard ~0.93+ — near-dedup
     * prey, above the 0.8 threshold, far above the corpus's next pair). */
-  /** [[warcCrawl]] opened to the stage profiler
-    * ([[graft.tools.ProfileWarc]]) — not query API. */
-  private[graft] def warcCrawlForProfile(s: SparkSession, d: String): DataFrame =
-    warcCrawl(s, d)
-
   private def warcCrawl(s: SparkSession, d: String,
       wrapHtml: Boolean = false): DataFrame = {
     import s.implicits._

@@ -2,6 +2,8 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,17 +47,21 @@ object PointCloudQueries {
     * session, so values are kept behind a `SoftReference` (else the
     * value chain would pin the weak key forever — the WeakHashMap
     * self-reference pitfall). One entry per (root, source dir),
-    * replaced when the cache path changes. */
+    * replaced when the cache path changes.
+    *
+    * A completed build removes the source dir's stores under every
+    * other key, so a re-keyed import leaves one store on disk, not
+    * one per key it ever had. */
   private val openClouds =
     new java.util.WeakHashMap[SparkSession,
       java.util.HashMap[String, (String, java.lang.ref.SoftReference[AnyRef])]]()
 
-  private def cached[C <: AnyRef](spark: SparkSession, root: String, dir: String,
+  private[graft] def cached[C <: AnyRef](spark: SparkSession, root: String, dir: String,
       importArgs: String)(build: String => Unit)(open: String => C): C = synchronized {
     val fp = DatasetFingerprint.of(s"$dir/lineitem.parquet")
     val args = Integer.toHexString(importArgs.hashCode)
-    val cacheDir = s"$root/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${fp}_${args}_" +
-      s"v${PointCloud.LayoutVersion}"
+    val source = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val cacheDir = s"$root/${source}_${fp}_${args}_v${PointCloud.LayoutVersion}"
     var m = openClouds.get(spark)
     if (m == null) {
       m = new java.util.HashMap[String, (String, java.lang.ref.SoftReference[AnyRef])]()
@@ -66,10 +72,28 @@ object PointCloudQueries {
       val open = cur._2.get()
       if (open != null) return open.asInstanceOf[C]
     }
-    if (!Files.exists(Paths.get(s"$cacheDir/meta/_SUCCESS"))) build(cacheDir)
+    if (!Files.exists(Paths.get(s"$cacheDir/meta/_SUCCESS"))) {
+      build(cacheDir)
+      if (Files.exists(Paths.get(s"$cacheDir/meta/_SUCCESS"))) dropStale(root, source, cacheDir)
+    }
     val c = open(cacheDir)
     m.put(s"$root|$dir", (cacheDir, new java.lang.ref.SoftReference[AnyRef](c)))
     c
+  }
+
+  /** Remove `source`'s stores under every key but `keep`. Neither the
+    * fingerprint nor the argument hash holds an underscore, so the name
+    * pattern never matches a store of another source dir whose name
+    * extends this one's. */
+  private def dropStale(root: String, source: String, keep: String): Unit = {
+    val key = (java.util.regex.Pattern.quote(source) + "_[^_]+_[^_]+_v[0-9]+").r
+    val kept = Paths.get(keep).getFileName.toString
+    val ls = Files.list(Paths.get(root))
+    try ls.iterator().asScala.toList.filter { p =>
+      val name = p.getFileName.toString
+      key.matches(name) && name != kept
+    }.foreach(graft.operators.BlockStore.rmdir)
+    finally ls.close()
   }
 
   // head 12 / tail 14 on the 8192 grid: 4096 quadtree cells of 128x128

@@ -139,6 +139,31 @@ object Las {
 
   private val Pf3RecordLen = 34 // point format 3
 
+  /** The 227-byte LAS 1.2 header of a point-format-3 file with no
+    * VLRs. The point count field is unsigned 32-bit, so `n` up to
+    * 2^32 − 1 is legal; `n.toInt` stores its low 32 bits. */
+  private[graft] def header12(n: Long, scale: Double, xMin: Double, xMax: Double,
+      yMin: Double, yMax: Double, zMin: Double, zMax: Double): Array[Byte] = {
+    require(n <= 0xFFFFFFFFL, s"LAS 1.2 caps point count at 2^32 - 1; got $n")
+    val header = ByteBuffer.allocate(227).order(ByteOrder.LITTLE_ENDIAN)
+    header.put("LASF".getBytes)
+    header.putShort(4, 0) // file source id
+    header.put(24, 1.toByte).put(25, 2.toByte) // v1.2
+    header.putShort(94, 227.toShort) // header size
+    header.putInt(96, 227) // offset to point data
+    header.putInt(100, 0) // no VLRs
+    header.put(104, 3.toByte) // point format 3
+    header.putShort(105, Pf3RecordLen.toShort)
+    header.putInt(107, n.toInt)
+    header.putInt(111, n.toInt) // returns[0]
+    header.putDouble(131, scale).putDouble(139, scale).putDouble(147, scale)
+    header.putDouble(155, 0.0).putDouble(163, 0.0).putDouble(171, 0.0)
+    header.putDouble(179, xMax).putDouble(187, xMin)
+    header.putDouble(195, yMax).putDouble(203, yMin)
+    header.putDouble(211, zMax).putDouble(219, zMin)
+    header.array()
+  }
+
   /** LAS export sink (S10): stream a (x, y, z) result to one .las file
     * with the reference exporter's fixed header (point format 3,
     * version 1.2, scales [0.1, 0.1, 0.1], offsets [0, 0, 0] —
@@ -190,33 +215,17 @@ object Las {
     }.collect().sortBy(_._1)
 
     val n = stats.map(_._2).sum
-    require(n <= Int.MaxValue, s"LAS 1.2 caps point count at 2^32; got $n")
     val (xMin, xMax, yMin, yMax, zMin, zMax) =
       if (n == 0) (0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
       else (stats.map(_._3).min, stats.map(_._4).max,
         stats.map(_._5).min, stats.map(_._6).max,
         stats.map(_._7).min, stats.map(_._8).max)
 
-    val header = ByteBuffer.allocate(227).order(ByteOrder.LITTLE_ENDIAN)
-    header.put("LASF".getBytes)
-    header.putShort(4, 0) // file source id
-    header.put(24, 1.toByte).put(25, 2.toByte) // v1.2
-    header.putShort(94, 227.toShort) // header size
-    header.putInt(96, 227) // offset to point data
-    header.putInt(100, 0) // no VLRs
-    header.put(104, 3.toByte) // point format 3
-    header.putShort(105, recordLen.toShort)
-    header.putInt(107, n.toInt)
-    header.putInt(111, n.toInt) // returns[0]
-    header.putDouble(131, scale).putDouble(139, scale).putDouble(147, scale)
-    header.putDouble(155, 0.0).putDouble(163, 0.0).putDouble(171, 0.0)
-    header.putDouble(179, xMax).putDouble(187, xMin)
-    header.putDouble(195, yMax).putDouble(203, yMin)
-    header.putDouble(211, zMax).putDouble(219, zMin)
+    val header = header12(n, scale, xMin, xMax, yMin, yMax, zMin, zMax)
 
     val out = new FileOutputStream(path)
     try {
-      out.write(header.array())
+      out.write(header)
       val dst = out.getChannel
       stats.foreach { case (pid, cnt, _, _, _, _, _, _) =>
         val chunk = Paths.get(f"$chunkPrefix/part-$pid%05d.bin")

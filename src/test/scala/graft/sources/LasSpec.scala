@@ -153,6 +153,17 @@ class LasSpec extends AnyFunSuite {
     }
   }
 
+  test("a LAS 1.2 header round-trips a point count above 2^31") {
+    // the count field is unsigned 32-bit: 2^31 .. 2^32 - 1 is legal
+    val n = 3000000000L
+    val path = java.nio.file.Files.createTempFile("graft_las_count", ".las")
+    try {
+      java.nio.file.Files.write(path, Las.header12(n, 0.1, 0, 1, 0, 1, 0, 1))
+      assert(Las.readHeader(path.toString).pointCount == n)
+    } finally java.nio.file.Files.delete(path)
+    intercept[IllegalArgumentException](Las.header12(1L << 32, 0.1, 0, 1, 0, 1, 0, 1))
+  }
+
   test("readHeader rejects a LAZ compressed-format bit") {
     val path = "/tmp/graft_laz_probe.las"
     val buf = java.nio.ByteBuffer.allocate(227).order(java.nio.ByteOrder.LITTLE_ENDIAN)

@@ -3,10 +3,11 @@
 # commit containing one uncompiled file zeroed the round's entire
 # correctness/bench signal). Usage: tools/precommit.sh [--smoke|--plans]
 #   default  : sbt compile + Test/compile must both succeed
-#   --smoke  : additionally runs seven sf0.001 pc_* queries through
-#              Verify and checks them against their DuckDB oracle: two
-#              selections and the single and batch kNN over the 2D
-#              store, two selections and the kNN over the 3D store
+#   --smoke  : additionally runs nine sf0.001 pc_* queries through
+#              Verify and checks them against their DuckDB oracle: a
+#              bbox, a circle, a polygon with a hole, a polyline buffer
+#              and the single and batch kNN over the 2D store, two
+#              selections and the kNN over the 3D store
 #   --plans  : additionally regenerates the plan-fingerprint board at
 #              sf0.01 and diffs it against the committed round board —
 #              a lost pushdown / strategy flip / new exchange fails
@@ -19,7 +20,7 @@ cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile
 if [[ "${1:-}" == "--smoke" ]]; then
   rm -rf /tmp/precommit_smoke
-  SPARK_GRAFT_ONLY=pc_bbox_small,pc_circle,pc_knn,pc_knn_batch,pc_bbox3d,pc_poly_3d,pc_knn_3d sbt -batch \
+  SPARK_GRAFT_ONLY=pc_bbox_small,pc_circle,pc_poly_hole,pc_polyline_buffer,pc_knn,pc_knn_batch,pc_bbox3d,pc_poly_3d,pc_knn_3d sbt -batch \
     'runMain graft.Verify /root/testdata/sf0.001 /tmp/precommit_smoke'
   python3 tools/check_oracle.py /root/testdata/sf0.001 /tmp/precommit_smoke
 fi
