@@ -74,8 +74,8 @@ object ExportRunner {
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val df = spark.read.parquet(args(0))
-    graft.sources.Las.writePoints(df, args(1))
-    println(f"=== exported ${df.count()} points to ${args(1)}, ${(System.nanoTime() - t0) / 1e9}%.2fs ===")
+    val n = graft.sources.Las.writePoints(df, args(1))
+    println(f"=== exported $n points to ${args(1)}, ${(System.nanoTime() - t0) / 1e9}%.2fs ===")
     spark.stop()
   }
 }

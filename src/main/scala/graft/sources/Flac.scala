@@ -778,7 +778,7 @@ object Flac {
     * parallel (each partition's samples must be contiguous in idx —
     * use a range partitioner upstream or let this repartitionByRange),
     * the driver splices side files and builds the seektable from
-    * O(frames) stats, exactly the [[Laz.writePoints]] shape. */
+    * O(frames) stats, the shape of the LAS/LAZ sink (`Las.sink`). */
   def writeSamples(df: DataFrame, path: String, sampleRate: Int = 16000,
       blockSize: Int = 4096): Unit = {
     import org.apache.spark.sql.functions.col

@@ -1,12 +1,11 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, FileOutputStream, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** LAZ (LASzip-compressed LAS) source/sink — closes the format
   * boundary the reference crosses transparently via laspy+lazrs
@@ -23,11 +22,10 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   *
   * Why this maps well onto Spark: LAZ chunks reset every model, so a
   * chunk is an independently decodable unit and the chunk table is a
-  * ready-made split index. The reader assigns chunk runs to tasks
-  * (seek + decode, no driver materialization); the writer encodes
-  * chunks per partition in parallel and the driver splices headers and
-  * builds the global chunk table from per-partition (count, size)
-  * stats — O(chunks) driver memory, never point data. Because interior
+  * ready-made split index. [[Las]] owns that container — header,
+  * laszip VLR, chunk table, the parallel scan that assigns chunk runs
+  * to tasks and the sink that encodes chunks per partition and splices
+  * them — and this object supplies the codecs it runs. Because interior
   * partitions may end with a short chunk, the writer uses the spec's
   * variable-size chunking (VLR chunk_size = 0xFFFFFFFF; the chunk
   * table carries per-chunk point counts), which keeps the file
@@ -48,13 +46,10 @@ object Laz {
   private val ItemGpstime11 = 7
   private val ItemRgb12 = 8
   private val ItemWavepacket13 = 9
-  private val VlrUserId = "laszip encoded"
-  private val VlrRecordId = 22204
-  private val VariableChunkSize = 0xFFFFFFFFL
 
   /** LAZ item lists for LAS point formats 0–3 (type, size, version —
     * all version-2 codecs). Record length = sum of sizes. */
-  private val FormatItems: Map[Int, Seq[(Int, Int, Int)]] = Map(
+  private[sources] val FormatItems: Map[Int, Seq[(Int, Int, Int)]] = Map(
     0 -> Seq((ItemPoint10, 20, 2)),
     1 -> Seq((ItemPoint10, 20, 2), (ItemGpstime11, 8, 2)),
     2 -> Seq((ItemPoint10, 20, 2), (ItemRgb12, 6, 2)),
@@ -68,7 +63,7 @@ object Laz {
   /** The same item lists with version-1 codecs — what pre-2013
     * pointwise (compressor 1) files declare. Waveform formats are
     * post-chunking (LAS 1.3), so the v1 table stays 0-3. */
-  private val FormatItemsV1: Map[Int, Seq[(Int, Int, Int)]] =
+  private[sources] val FormatItemsV1: Map[Int, Seq[(Int, Int, Int)]] =
     FormatItems.collect { case (f, is) if f <= 3 =>
       f -> is.map { case (t, sz, _) => (t, sz, 1) }
     }
@@ -806,204 +801,24 @@ object Laz {
   private[sources] def decodeChunk(bytes: Array[Byte], offset: Int, count: Int): Array[Point10] =
     decodeChunkFull(0, bytes, offset, count).map(_.core)
 
-  // ---------------------------------------------------------------- container
+  // ------------------------------------------------------------ entry points
+  // The container (header, laszip VLR, chunk table, sink, scan) is
+  // Las's; these pick the pointwise codecs for it.
 
   final case class LazInfo(
       header: Las.LasHeader,
       compressor: Int,
-      chunkSize: Long, // VariableChunkSize for per-chunk counts in the table
+      chunkSize: Long, // 0xFFFFFFFF for per-chunk counts in the table
       pointDataStart: Long, // after the 8-byte chunk-table-offset field
       chunkTableOffset: Long,
       items: Seq[(Int, Int, Int)]) // (type, size, version)
 
   /** Parse header + laszip VLR of a .laz file (driver side, O(KB)). */
-  def readInfo(path: String): LazInfo = {
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      val headBytes = new Array[Byte](375)
-      val avail = math.min(raf.length(), 375L).toInt
-      require(avail >= 227, s"$path: truncated LAS header ($avail bytes)")
-      raf.readFully(headBytes, 0, avail)
-      val bb = ByteBuffer.wrap(headBytes).order(ByteOrder.LITTLE_ENDIAN)
-      require(bb.get(0) == 'L' && bb.get(1) == 'A' && bb.get(2) == 'S' && bb.get(3) == 'F',
-        s"$path: not a LAS/LAZ file")
-      val versionMinor = bb.get(25) & 0xFF
-      val rawFormat = bb.get(104) & 0xFF
-      require((rawFormat & 0x80) != 0, s"$path: not compressed — use Las.readPoints")
-      val headerSize = bb.getShort(94) & 0xFFFF
-      val offsetToPoints = bb.getInt(96) & 0xFFFFFFFFL
-      val nVlrs = bb.getInt(100)
-      val legacyCount = bb.getInt(107) & 0xFFFFFFFFL
-      val count =
-        if (versionMinor >= 4 && avail >= 255) {
-          val c64 = bb.getLong(247)
-          if (c64 > 0) c64 else legacyCount
-        } else legacyCount
-      val header = Las.LasHeader(
-        versionMajor = bb.get(24) & 0xFF, versionMinor = versionMinor,
-        pointFormat = rawFormat & 0x7F, recordLen = bb.getShort(105) & 0xFFFF,
-        offsetToPoints = offsetToPoints, pointCount = count,
-        scaleX = bb.getDouble(131), scaleY = bb.getDouble(139), scaleZ = bb.getDouble(147),
-        offX = bb.getDouble(155), offY = bb.getDouble(163), offZ = bb.getDouble(171),
-        xMax = bb.getDouble(179), xMin = bb.getDouble(187),
-        yMax = bb.getDouble(195), yMin = bb.getDouble(203),
-        zMax = bb.getDouble(211), zMin = bb.getDouble(219))
+  def readInfo(path: String): LazInfo = Las.lazInfo(path)
 
-      // walk VLRs for the laszip record
-      var vlrPos = headerSize.toLong
-      var payload: Array[Byte] = null
-      var remaining = nVlrs
-      while (remaining > 0 && payload == null) {
-        raf.seek(vlrPos)
-        val vh = new Array[Byte](54)
-        raf.readFully(vh)
-        val vb = ByteBuffer.wrap(vh).order(ByteOrder.LITTLE_ENDIAN)
-        val userId = new String(vh, 2, 16, "US-ASCII").takeWhile(_ != 0)
-        val recordId = vb.getShort(18) & 0xFFFF
-        val len = vb.getShort(20) & 0xFFFF
-        if (userId == VlrUserId && recordId == VlrRecordId) {
-          payload = new Array[Byte](len)
-          raf.readFully(payload)
-        } else vlrPos += 54L + len
-        if (payload == null) remaining -= 1
-      }
-      require(payload != null, s"$path: laszip VLR (user '$VlrUserId', record $VlrRecordId) not found")
-      // hostile-length guard: the item table must FIT the VLR payload
-      // the length field promised — reject, don't read past it
-      require(payload.length >= 34,
-        s"$path: laszip VLR payload ${payload.length} bytes, header needs 34")
-      val pb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-      val compressor = pb.getShort(0) & 0xFFFF
-      val coder = pb.getShort(2) & 0xFFFF
-      require(coder == 0, s"$path: unsupported entropy coder $coder")
-      require(compressor == 1 || compressor == 2 || compressor == 3,
-        s"$path: unsupported compressor $compressor " +
-          "(pointwise=1, pointwise-chunked=2, layered-chunked=3)")
-      val chunkSize = pb.getInt(12) & 0xFFFFFFFFL
-      val numItems = pb.getShort(32) & 0xFFFF
-      require(34 + 6 * numItems <= payload.length,
-        s"$path: laszip VLR declares $numItems items but payload is " +
-          s"${payload.length} bytes")
-      val items = (0 until numItems).map { i =>
-        val o = 34 + 6 * i
-        ((pb.getShort(o) & 0xFFFF, pb.getShort(o + 2) & 0xFFFF, pb.getShort(o + 4) & 0xFFFF))
-      }
-      require(items.map(_._2).sum == header.recordLen,
-        s"$path: item sizes ${items} disagree with record length ${header.recordLen}")
-      if (compressor == 1 || compressor == 2) {
-        // point formats 0-3, optionally with ONE trailing BYTE item
-        // (the LAZ "extra bytes" payload); item versions must match
-        // the compressor generation
-        val wantVer = if (compressor == 1) 1 else 2
-        val table = if (compressor == 1) FormatItemsV1 else FormatItems
-        val (fmtItems, extraItems) = items.span(_._1 != ItemByte)
-        require(table.valuesIterator.contains(fmtItems) &&
-          extraItems.forall { case (t, sz, v) => t == ItemByte && v == wantVer && sz > 0 } &&
-          extraItems.length <= 1,
-          s"$path: unsupported LAZ item set ${items} — point formats " +
-            s"${table.keys.toSeq.sorted.mkString("/")} " +
-            s"(POINT10/GPSTIME11/RGB12${if (wantVer == 2) "/WAVEPACKET13" else ""}) " +
-            s"plus at most one BYTE v$wantVer item")
-      }
-      else
-        require(Laz14.FormatItems.valuesIterator.contains(items),
-          s"$path: unsupported layered LAZ item set ${items} — point " +
-            "formats 6-8 (POINT14/RGB14/RGBNIR14, all v3) only")
-
-      if (compressor == 1) {
-        // pointwise files are ONE arithmetic stream: no chunk-table
-        // offset field, points start straight at offsetToPoints
-        LazInfo(header, compressor, 0L, offsetToPoints, -1L, items)
-      } else {
-        raf.seek(offsetToPoints)
-        val tblBytes = new Array[Byte](8)
-        raf.readFully(tblBytes)
-        val chunkTableOffset = ByteBuffer.wrap(tblBytes).order(ByteOrder.LITTLE_ENDIAN).getLong
-        require(chunkTableOffset > 0 && chunkTableOffset < raf.length(),
-          s"$path: chunk table offset $chunkTableOffset out of range (streamed-out tables unsupported)")
-        LazInfo(header, compressor, chunkSize, offsetToPoints + 8, chunkTableOffset, items)
-      }
-    } finally raf.close()
-  }
-
-  /** Decode the chunk table → per-chunk (fileOffset, pointCount,
-    * byteSize). Fixed-size chunking derives counts from chunk_size;
-    * variable chunking reads them from the table (interleaved
-    * count,size correctors per the spec). */
-  def readChunkDescriptors(path: String, info: LazInfo): Array[(Long, Int, Int)] = {
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      if (info.compressor == 1) {
-        // pointwise: the whole file is one stream = one pseudo-chunk
-        val count = info.header.pointCount
-        if (count == 0) return Array.empty
-        require(count <= Int.MaxValue, s"$path: implausible point count $count")
-        val size = raf.length() - info.pointDataStart
-        require(size > 0 && size <= Int.MaxValue,
-          s"$path: pointwise stream size $size out of range")
-        // plausibility floor of 1/8 bit per coded point: a header
-        // claiming billions of points over a few bytes is hostile, and
-        // the count sizes decode-side allocations
-        require(count <= 64L * size + 64,
-          s"$path: $count points implausible for $size coded bytes")
-        return Array((info.pointDataStart, count.toInt, size.toInt))
-      }
-      raf.seek(info.chunkTableOffset)
-      val headBytes = new Array[Byte](8)
-      raf.readFully(headBytes)
-      val hb = ByteBuffer.wrap(headBytes).order(ByteOrder.LITTLE_ENDIAN)
-      val version = hb.getInt(0)
-      require(version == 0, s"$path: chunk table version $version")
-      val nChunks = hb.getInt(4)
-      // hostile-count guard: the descriptor array is nChunks-sized, so
-      // a negative or absurd count must die HERE, not as a negative-
-      // array-size crash or a multi-GB allocation
-      require(nChunks >= 0 && nChunks <= (1 << 26),
-        s"$path: implausible chunk count $nChunks")
-      if (nChunks == 0) return Array.empty
-      val bodyLen = raf.length() - info.chunkTableOffset - 8
-      // the coded table is ~bytes-per-chunk small; a malformed offset
-      // must not trigger a multi-GB allocation
-      require(bodyLen >= 0 && bodyLen <= (1L << 28),
-        s"$path: implausible chunk table size $bodyLen")
-      val body = new Array[Byte](bodyLen.toInt)
-      raf.readFully(body)
-      val dec = new ArithmeticDecoder(body, 0, body.length).init()
-      val ic = new IntegerCompressor(32, 2).initModels()
-      val variable = info.chunkSize == VariableChunkSize
-      val out = new Array[(Long, Int, Int)](nChunks)
-      var off = info.pointDataStart
-      var prevCount = 0
-      var prevSize = 0
-      var remaining = info.header.pointCount
-      var i = 0
-      while (i < nChunks) {
-        val count =
-          if (variable) { prevCount = ic.decompress(dec, prevCount, 0); prevCount }
-          else math.min(info.chunkSize, remaining).toInt
-        val size = { prevSize = ic.decompress(dec, prevSize, 1); prevSize }
-        // decoded table entries are untrusted: counts must stay within
-        // the header's point total, chunk bytes must tile the region
-        // BEFORE the table, and a count the coded bytes cannot
-        // plausibly hold (floor: 1/8 bit per point) sizes decode-side
-        // allocations — reject each loudly instead of misreading
-        require(count >= 0 && count <= remaining,
-          s"$path: chunk $i count $count exceeds remaining $remaining points")
-        require(size >= 0 && off + size <= info.chunkTableOffset,
-          s"$path: chunk $i ($size bytes at $off) overruns the chunk table " +
-            s"at ${info.chunkTableOffset}")
-        require(count <= 64L * size + 64,
-          s"$path: chunk $i claims $count points in $size coded bytes")
-        out(i) = (off, count, size)
-        off += size
-        remaining -= count
-        i += 1
-      }
-      require(remaining == 0,
-        s"$path: chunk table covers ${info.header.pointCount - remaining} of ${info.header.pointCount} points")
-      out
-    } finally raf.close()
-  }
+  /** The chunk table → per-chunk (fileOffset, pointCount, byteSize). */
+  def readChunkDescriptors(path: String, info: LazInfo): Array[(Long, Int, Int)] =
+    Las.lazChunks(path, info)
 
   /** Distributed full scan: DataFrame[x, y, z] in world coordinates,
     * plus an `extra_bytes` binary column when the file carries a BYTE
@@ -1033,230 +848,100 @@ object Laz {
     // IEEE bits) so downstream checks and oracles never touch floats
     val waveFields =
       if (!wave) Array.empty[StructField]
-      else Array("wp_index", "wp_offset", "wp_size", "wp_ret", "wp_xt", "wp_yt", "wp_zt")
-        .map(StructField(_, org.apache.spark.sql.types.LongType))
+      else WaveColumns.toArray.map(StructField(_, LongType))
     val schema = StructType(Las.pointSchema.fields ++ waveFields ++
       (if (extraLen == 0) Array.empty[StructField]
        else Array(StructField("extra_bytes", BinaryType))))
-    if (chunks.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    val groups = chunks.grouped(math.max(1, chunksPerTask)).toArray
-    val rdd = spark.sparkContext
-      .parallelize(groups.toIndexedSeq, groups.length)
-      .flatMap { group =>
-        val raf = new RandomAccessFile(path, "r")
-        val rows = try {
-          group.iterator.flatMap { case (off, count, size) =>
-            val bytes = new Array[Byte](size)
-            raf.seek(off)
-            raf.readFully(bytes)
-            if (v1) LazV1.decodeStream(format, bytes, 0, count, extraLen)
-            else decodeChunkFull(format, bytes, 0, count, extraLen)
-          }.map { fp =>
-            val p = fp.core
-            val x = p.x * h.scaleX + h.offX
-            val y = p.y * h.scaleY + h.offY
-            val z = p.z * h.scaleZ + h.offZ
-            val base: Seq[Any] = Seq(x, y, z)
-            val wv: Seq[Any] = if (!wave) Nil else {
-              val w = if (fp.wave == null) Wavepacket(0, 0L, 0, 0, 0, 0, 0) else fp.wave
-              Seq(w.index.toLong, w.offset, w.size & 0xFFFFFFFFL,
-                w.retPoint & 0xFFFFFFFFL, w.xt & 0xFFFFFFFFL,
-                w.yt & 0xFFFFFFFFL, w.zt & 0xFFFFFFFFL)
-            }
-            val xb: Seq[Any] = if (extraLen == 0) Nil else Seq(fp.extra)
-            Row.fromSeq(base ++ wv ++ xb)
-          }.toArray
-        } finally raf.close()
-        rows
+    Las.scan(spark, path, schema, chunks.toSeq, chunksPerTask) { (bytes, count) =>
+      val points =
+        if (v1) LazV1.decodeStream(format, bytes, 0, count, extraLen)
+        else decodeChunkFull(format, bytes, 0, count, extraLen)
+      points.iterator.map { fp =>
+        val p = fp.core
+        val x = p.x * h.scaleX + h.offX
+        val y = p.y * h.scaleY + h.offY
+        val z = p.z * h.scaleZ + h.offZ
+        val base: Seq[Any] = Seq(x, y, z)
+        val wv: Seq[Any] = if (!wave) Nil else {
+          val w = if (fp.wave == null) Wavepacket(0, 0L, 0, 0, 0, 0, 0) else fp.wave
+          Seq(w.index.toLong, w.offset, w.size & 0xFFFFFFFFL,
+            w.retPoint & 0xFFFFFFFFL, w.xt & 0xFFFFFFFFL,
+            w.yt & 0xFFFFFFFFL, w.zt & 0xFFFFFFFFL)
+        }
+        val xb: Seq[Any] = if (extraLen == 0) Nil else Seq(fp.extra)
+        Row.fromSeq(base ++ wv ++ xb)
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
 
-  /** LAZ export sink: the Las.writePoints shape (executor-parallel
-    * encode, driver splices O(partitions) side files) plus the chunk
-    * table. Writes point format 0 (POINT10 only — the x/y/z payload
-    * this engine round-trips), optionally followed by a BYTE v2 item
-    * when `extraBytes > 0` (the fixed-width `extra_bytes` binary
-    * column, carried opaquely), variable-size chunking so partition
-    * tails stay legal, scale/offset like the reference exporter
-    * (exporter.py:78-80). */
+  private val WaveColumns =
+    Seq("wp_index", "wp_offset", "wp_size", "wp_ret", "wp_xt", "wp_yt", "wp_zt")
+
+  /** Points of formats 0–5 for the sink: POINT10 carries the grid x, y,
+    * z (its attributes stay zero), then the wavepacket descriptor and
+    * the fixed-width extra bytes come from the sink's row, in that
+    * order after x, y, z. `v1` encodes one compressor-1 stream instead
+    * of compressor-2 chunks. */
+  private final class PointEncoder(format: Int, extraBytes: Int, chunkPoints: Int, v1: Boolean)
+      extends Las.ChunkEncoder[FullPoint](chunkPoints) {
+    private val extraAt = 3 + (if (hasWave(format)) WaveColumns.length else 0)
+    def point(x: Int, y: Int, z: Int, r: InternalRow): FullPoint = {
+      val wave = if (!hasWave(format)) null else Wavepacket(
+        (r.getLong(3) & 0xFF).toInt, r.getLong(4), r.getLong(5).toInt,
+        r.getLong(6).toInt, r.getLong(7).toInt, r.getLong(8).toInt,
+        r.getLong(9).toInt)
+      val extra = if (extraBytes == 0) null else {
+        val a = r.getBinary(extraAt)
+        require(a.length == extraBytes,
+          s"extra_bytes row length ${a.length} != declared $extraBytes")
+        a
+      }
+      FullPoint(Point10(x, y, z, 0, 0, 0, 0, 0, 0), extra = extra, wave = wave)
+    }
+    def encode(points: Array[FullPoint]): Array[Byte] =
+      if (v1) LazV1.encodeStream(format, points, extraBytes)
+      else encodeChunkFull(format, points, extraBytes)
+  }
+
+  /** The sink's extra columns for `format` and `extraBytes`, checked
+    * against the frame: the header's point-record-length field (offset
+    * 105) is a u16 holding recordLen(format) + extraBytes, so a width
+    * that pushes the SUM past 0xFFFF is rejected up front. */
+  private def sinkColumns(df: DataFrame, format: Int, extraBytes: Int): Seq[Column] = {
+    require(extraBytes >= 0 && extraBytes <= 0xFFFF - recordLen(format),
+      s"bad extra-bytes width $extraBytes: format $format records are " +
+        s"${recordLen(format)} bytes and the header length field is u16 " +
+        s"(max extra ${0xFFFF - recordLen(format)})")
+    require(extraBytes == 0 || df.columns.contains("extra_bytes"),
+      s"extraBytes=$extraBytes declared but no `extra_bytes` binary column present")
+    val waveCols = if (hasWave(format)) WaveColumns else Nil
+    require(waveCols.forall(df.columns.contains),
+      s"point format $format needs wavepacket columns ${waveCols.mkString(", ")}")
+    waveCols.map(c => col(c).cast(LongType)) ++
+      (if (extraBytes == 0) Nil else Seq(col("extra_bytes")))
+  }
+
+  /** LAZ export sink: point format 0 by default (POINT10 only — the
+    * x/y/z payload this engine round-trips; formats 4/5 take the wp_*
+    * columns and get a LAS 1.3 header), optionally followed by a BYTE
+    * v2 item when `extraBytes > 0` (the fixed-width `extra_bytes`
+    * binary column, carried opaquely). Chunks are variable-size, so
+    * partition tails stay legal; scale/offset like the reference
+    * exporter (exporter.py:78-80). */
   def writePoints(df: DataFrame, path: String, scale: Double = 0.1,
       chunkPoints: Int = 50000, pointFormat: Int = 0, extraBytes: Int = 0): Unit = {
     require(FormatItems.contains(pointFormat), s"unsupported point format $pointFormat")
-    // the header's point-record-length field (offset 105) is a u16
-    // holding recordLen(pointFormat)+extraBytes; a width that pushes
-    // the SUM past 0xFFFF would wrap in toShort and write a header
-    // that readInfo later rejects on the item-size-sum check
-    require(extraBytes >= 0 && extraBytes <= 0xFFFF - recordLen(pointFormat),
-      s"bad extra-bytes width $extraBytes: format $pointFormat records are " +
-        s"${recordLen(pointFormat)} bytes and the header length field is u16 " +
-        s"(max extra ${0xFFFF - recordLen(pointFormat)})")
-    require(extraBytes == 0 || df.columns.contains("extra_bytes"),
-      s"extraBytes=$extraBytes declared but no `extra_bytes` binary column present")
-    val chunkDir = Paths.get(path + ".chunks")
-    Files.createDirectories(chunkDir)
-    val chunkPrefix = chunkDir.toString
-    val waveCols =
-      if (!hasWave(pointFormat)) Seq.empty
-      else Seq("wp_index", "wp_offset", "wp_size", "wp_ret", "wp_xt", "wp_yt", "wp_zt")
-    require(waveCols.forall(df.columns.contains),
-      s"point format $pointFormat needs wavepacket columns ${waveCols.mkString(", ")}")
-    val cols = Seq("x", "y", "z") ++ waveCols ++
-      (if (extraBytes == 0) Nil else Seq("extra_bytes"))
-    val wantWave = hasWave(pointFormat)
-    val xbIdx = 3 + waveCols.length
-    val xLen = extraBytes
-    // per partition: (pid, [(count, bytes)], xMin..zMax)
-    val stats = df.select(cols.head, cols.tail: _*).rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var xMin = Double.MaxValue; var xMax = Double.MinValue
-        var yMin = Double.MaxValue; var yMax = Double.MinValue
-        var zMin = Double.MaxValue; var zMax = Double.MinValue
-        val chunkStats = Array.newBuilder[(Int, Int)]
-        val out = new BufferedOutputStream(
-          new FileOutputStream(f"$chunkPrefix/part-$pid%05d.bin"), 1 << 20)
-        try {
-          val buf = new Array[FullPoint](chunkPoints)
-          var n = 0
-          def flush(): Unit = if (n > 0) {
-            val bytes = encodeChunkFull(pointFormat,
-              if (n == chunkPoints) buf else buf.take(n), xLen)
-            out.write(bytes)
-            chunkStats += ((n, bytes.length))
-            n = 0
-          }
-          it.foreach { r =>
-            val (x, y, z) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
-            xMin = math.min(xMin, x); xMax = math.max(xMax, x)
-            yMin = math.min(yMin, y); yMax = math.max(yMax, y)
-            zMin = math.min(zMin, z); zMax = math.max(zMax, z)
-            val wave = if (!wantWave) null else Wavepacket(
-              (r.getLong(3) & 0xFF).toInt, r.getLong(4), r.getLong(5).toInt,
-              r.getLong(6).toInt, r.getLong(7).toInt, r.getLong(8).toInt,
-              r.getLong(9).toInt)
-            val extra = if (xLen == 0) null else {
-              val a = r.getAs[Array[Byte]](xbIdx)
-              require(a != null && a.length == xLen,
-                s"extra_bytes row length ${if (a == null) -1 else a.length} != declared $xLen")
-              a
-            }
-            buf(n) = FullPoint(Point10(math.round(x / scale).toInt,
-              math.round(y / scale).toInt, math.round(z / scale).toInt, 0, 0, 0, 0, 0, 0),
-              extra = extra, wave = wave)
-            n += 1
-            if (n == chunkPoints) flush()
-          }
-          flush()
-        } finally out.close()
-        Iterator.single((pid, chunkStats.result(), xMin, xMax, yMin, yMax, zMin, zMax))
-      }
-    }.collect().sortBy(_._1)
-
-    val chunkMeta = stats.flatMap(_._2) // (count, size) in file order
-    val n = chunkMeta.map(_._1.toLong).sum
-    require(n <= Int.MaxValue, s"LAS 1.2 caps point count at 2^32; got $n")
-    val (xMin, xMax, yMin, yMax, zMin, zMax) =
-      if (n == 0) (0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-      else (stats.map(_._3).min, stats.map(_._4).max,
-        stats.map(_._5).min, stats.map(_._6).max,
-        stats.map(_._7).min, stats.map(_._8).max)
-
+    val columns = sinkColumns(df, pointFormat, extraBytes)
     val items = FormatItems(pointFormat) ++
       (if (extraBytes > 0) Seq((ItemByte, extraBytes, 2)) else Nil)
-    val vlrPayloadLen = 34 + 6 * items.size
-    // waveform formats require a LAS 1.3 header (235 bytes: the 1.2
-    // layout + the u64 waveform-EVLR start, written 0 — this sink
-    // emits point records with wavepacket DESCRIPTORS; waveform
+    // waveform formats require a LAS 1.3 header (the u64 waveform-EVLR
+    // start stays 0: this sink writes wavepacket DESCRIPTORS; waveform
     // payload storage is the caller's concern)
-    val headerLen = if (hasWave(pointFormat)) 235 else 227
-    val offsetToPoints = headerLen + 54 + vlrPayloadLen
-
-    val header = ByteBuffer.allocate(headerLen).order(ByteOrder.LITTLE_ENDIAN)
-    header.put("LASF".getBytes)
-    header.put(24, 1.toByte)
-    header.put(25, (if (hasWave(pointFormat)) 3 else 2).toByte)
-    header.putShort(94, headerLen.toShort)
-    header.putInt(96, offsetToPoints)
-    header.putInt(100, 1) // one VLR (laszip)
-    header.put(104, (0x80 | pointFormat).toByte) // compressed format
-    header.putShort(105, (recordLen(pointFormat) + extraBytes).toShort)
-    header.putInt(107, n.toInt)
-    header.putInt(111, n.toInt) // returns[0]
-    header.putDouble(131, scale).putDouble(139, scale).putDouble(147, scale)
-    header.putDouble(155, 0.0).putDouble(163, 0.0).putDouble(171, 0.0)
-    header.putDouble(179, xMax).putDouble(187, xMin)
-    header.putDouble(195, yMax).putDouble(203, yMin)
-    header.putDouble(211, zMax).putDouble(219, zMin)
-
-    val vlr = ByteBuffer.allocate(54 + vlrPayloadLen).order(ByteOrder.LITTLE_ENDIAN)
-    vlr.position(2)
-    vlr.put(VlrUserId.getBytes("US-ASCII")) // 14 chars, zero-padded to 16
-    vlr.putShort(18, VlrRecordId.toShort)
-    vlr.putShort(20, vlrPayloadLen.toShort)
-    vlr.position(22)
-    vlr.put("graft laszip writer".getBytes("US-ASCII"))
-    vlr.position(54)
-    vlr.putShort(2.toShort) // compressor: pointwise chunked
-    vlr.putShort(0.toShort) // coder: arithmetic
-    vlr.put(2.toByte).put(2.toByte).putShort(0.toShort) // version 2.2 r0
-    vlr.putInt(0) // options
-    vlr.putInt(VariableChunkSize.toInt) // variable-size chunking
-    vlr.putLong(0L) // number of special EVLRs
-    vlr.putLong(-1L) // offset to special EVLRs
-    vlr.putShort(items.size.toShort)
-    items.foreach { case (tpe, size, ver) =>
-      vlr.putShort(tpe.toShort).putShort(size.toShort).putShort(ver.toShort)
-    }
-
-    val out = new FileOutputStream(path)
-    try {
-      out.write(header.array())
-      out.write(vlr.array())
-      val tblOffsetField = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      tblOffsetField.putLong(0L) // patched after the table lands
-      out.write(tblOffsetField.array())
-      val dst = out.getChannel
-      stats.foreach { case (pid, cs, _, _, _, _, _, _) =>
-        val chunk = Paths.get(f"$chunkPrefix/part-$pid%05d.bin")
-        val src = FileChannel.open(chunk)
-        try {
-          val len = src.size()
-          require(len == cs.map(_._2.toLong).sum,
-            s"$chunk: $len bytes, expected ${cs.map(_._2.toLong).sum}")
-          var pos = 0L
-          while (pos < len) pos += dst.transferFrom(src, dst.position() + pos, len - pos)
-          dst.position(dst.position() + len)
-        } finally src.close()
-        Files.delete(chunk)
-      }
-      val tableOffset = dst.position()
-      val tblHead = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      tblHead.putInt(0).putInt(chunkMeta.length)
-      out.write(tblHead.array())
-      if (chunkMeta.nonEmpty) {
-        val enc = new ArithmeticEncoder
-        val ic = new IntegerCompressor(32, 2).initModels()
-        var prevCount = 0
-        var prevSize = 0
-        chunkMeta.foreach { case (count, size) =>
-          ic.compress(enc, prevCount, count, 0); prevCount = count
-          ic.compress(enc, prevSize, size, 1); prevSize = size
-        }
-        enc.done()
-        out.write(enc.result())
-      }
-      out.flush()
-      val raf = new RandomAccessFile(path, "rw")
-      try {
-        raf.seek(offsetToPoints.toLong)
-        val patch = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-        patch.putLong(tableOffset)
-        raf.write(patch.array())
-      } finally raf.close()
-    } finally out.close()
-    Files.delete(chunkDir)
+    val layout = Las.Layout(if (hasWave(pointFormat)) 3 else 2, pointFormat,
+      recordLen(pointFormat) + extraBytes,
+      Las.laszipVlr(2, (2, 2), Las.VariableChunkSize, items), chunkTable = true)
+    Las.sink(df, path, scale, layout, columns,
+      new PointEncoder(pointFormat, extraBytes, chunkPoints, v1 = false))
   }
 
   /** Legacy compressor-1 (pointwise, pre-2013) export sink: ONE
@@ -1268,111 +953,14 @@ object Laz {
     * buffers the stream, exactly as the format demands. */
   def writePointsV1(df: DataFrame, path: String, scale: Double = 0.1,
       pointFormat: Int = 0, extraBytes: Int = 0): Unit = {
-    require(FormatItems.contains(pointFormat), s"unsupported point format $pointFormat")
-    require(extraBytes >= 0 && extraBytes <= 0xFFFF - recordLen(pointFormat),
-      s"bad extra-bytes width $extraBytes for format $pointFormat")
-    require(extraBytes == 0 || df.columns.contains("extra_bytes"),
-      s"extraBytes=$extraBytes declared but no `extra_bytes` binary column present")
-    val sideDir = Paths.get(path + ".v1side")
-    Files.createDirectories(sideDir)
-    val sidePath = s"$sideDir/stream.bin"
-    val cols = if (extraBytes == 0) Seq("x", "y", "z") else Seq("x", "y", "z", "extra_bytes")
-    val xLen = extraBytes
-    val stats = df.select(cols.head, cols.tail: _*).coalesce(1).rdd
-      .mapPartitions { it =>
-        val buf = scala.collection.mutable.ArrayBuffer.empty[FullPoint]
-        var xMin = Double.MaxValue; var xMax = Double.MinValue
-        var yMin = Double.MaxValue; var yMax = Double.MinValue
-        var zMin = Double.MaxValue; var zMax = Double.MinValue
-        it.foreach { r =>
-          val (x, y, z) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
-          xMin = math.min(xMin, x); xMax = math.max(xMax, x)
-          yMin = math.min(yMin, y); yMax = math.max(yMax, y)
-          zMin = math.min(zMin, z); zMax = math.max(zMax, z)
-          val extra = if (xLen == 0) null else {
-            val a = r.getAs[Array[Byte]](3)
-            require(a != null && a.length == xLen,
-              s"extra_bytes row length ${if (a == null) -1 else a.length} != declared $xLen")
-            a
-          }
-          buf += FullPoint(Point10(math.round(x / scale).toInt,
-            math.round(y / scale).toInt, math.round(z / scale).toInt,
-            0, 0, 0, 0, 0, 0), extra = extra)
-        }
-        if (buf.isEmpty) Iterator.empty
-        else {
-          val bytes = LazV1.encodeStream(pointFormat, buf.toArray, xLen)
-          Files.write(Paths.get(sidePath), bytes)
-          Iterator.single((buf.length, xMin, xMax, yMin, yMax, zMin, zMax))
-        }
-      }.collect()
-
-    val n = stats.map(_._1.toLong).sum
-    require(n <= Int.MaxValue, s"LAS 1.2 caps point count at 2^32; got $n")
-    val (xMin, xMax, yMin, yMax, zMin, zMax) =
-      if (n == 0) (0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-      else (stats.map(_._2).min, stats.map(_._3).max,
-        stats.map(_._4).min, stats.map(_._5).max,
-        stats.map(_._6).min, stats.map(_._7).max)
-
+    require(FormatItemsV1.contains(pointFormat), s"unsupported point format $pointFormat")
+    val columns = sinkColumns(df, pointFormat, extraBytes)
     val items = FormatItemsV1(pointFormat) ++
       (if (extraBytes > 0) Seq((ItemByte, extraBytes, 1)) else Nil)
-    val vlrPayloadLen = 34 + 6 * items.size
-    val offsetToPoints = 227 + 54 + vlrPayloadLen
-
-    val header = ByteBuffer.allocate(227).order(ByteOrder.LITTLE_ENDIAN)
-    header.put("LASF".getBytes)
-    header.put(24, 1.toByte).put(25, 2.toByte) // v1.2
-    header.putShort(94, 227.toShort)
-    header.putInt(96, offsetToPoints)
-    header.putInt(100, 1) // one VLR (laszip)
-    header.put(104, (0x80 | pointFormat).toByte)
-    header.putShort(105, (recordLen(pointFormat) + extraBytes).toShort)
-    header.putInt(107, n.toInt)
-    header.putInt(111, n.toInt) // returns[0]
-    header.putDouble(131, scale).putDouble(139, scale).putDouble(147, scale)
-    header.putDouble(155, 0.0).putDouble(163, 0.0).putDouble(171, 0.0)
-    header.putDouble(179, xMax).putDouble(187, xMin)
-    header.putDouble(195, yMax).putDouble(203, yMin)
-    header.putDouble(211, zMax).putDouble(219, zMin)
-
-    val vlr = ByteBuffer.allocate(54 + vlrPayloadLen).order(ByteOrder.LITTLE_ENDIAN)
-    vlr.position(2)
-    vlr.put(VlrUserId.getBytes("US-ASCII"))
-    vlr.putShort(18, VlrRecordId.toShort)
-    vlr.putShort(20, vlrPayloadLen.toShort)
-    vlr.position(22)
-    vlr.put("graft laszip writer".getBytes("US-ASCII"))
-    vlr.position(54)
-    vlr.putShort(1.toShort) // compressor: pointwise
-    vlr.putShort(0.toShort) // coder: arithmetic
-    vlr.put(1.toByte).put(0.toByte).putShort(0.toShort) // version 1.0 r0
-    vlr.putInt(0) // options
-    vlr.putInt(0) // chunk size (meaningless for pointwise)
-    vlr.putLong(0L) // number of special EVLRs
-    vlr.putLong(-1L) // offset to special EVLRs
-    vlr.putShort(items.size.toShort)
-    items.foreach { case (tpe, size, ver) =>
-      vlr.putShort(tpe.toShort).putShort(size.toShort).putShort(ver.toShort)
-    }
-
-    val out = new FileOutputStream(path)
-    try {
-      out.write(header.array())
-      out.write(vlr.array())
-      if (n > 0) {
-        val dst = out.getChannel
-        val src = FileChannel.open(Paths.get(sidePath))
-        try {
-          val len = src.size()
-          var pos = 0L
-          while (pos < len) pos += dst.transferFrom(src, dst.position() + pos, len - pos)
-          dst.position(dst.position() + len)
-        } finally src.close()
-      }
-      out.flush()
-    } finally out.close()
-    if (Files.exists(Paths.get(sidePath))) Files.delete(Paths.get(sidePath))
-    Files.delete(sideDir)
+    // chunk size 0: meaningless for pointwise
+    val layout = Las.Layout(2, pointFormat, recordLen(pointFormat) + extraBytes,
+      Las.laszipVlr(1, (1, 0), 0L, items))
+    Las.sink(df.coalesce(1), path, scale, layout, columns,
+      new PointEncoder(pointFormat, extraBytes, Int.MaxValue, v1 = true))
   }
 }

@@ -1,11 +1,10 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, FileOutputStream, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 import Laz.{StreamingMedian5, NumberReturnMap, NumberReturnLevel, GpsTime11Codec, Rgb12Codec}
@@ -494,7 +493,9 @@ object Laz14 {
     out
   }
 
-  // ------------------------------------------------------------ container
+  // ------------------------------------------------------------ entry points
+  // The container (header, laszip VLR, chunk table, sink, scan) is
+  // Las's; these pick the layered codec for it.
 
   private val pointSchema = StructType(Seq(
     StructField("x", DoubleType), StructField("y", DoubleType),
@@ -544,48 +545,58 @@ object Laz14 {
     val format = FormatItems.collectFirst { case (f, is) if is == info.items => f }.get
     val chunks = Laz.readChunkDescriptors(path, info)
     val cols = pointSchema.filter(f => columns.contains(f.name))
-    val schema = StructType(cols)
-    if (chunks.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val h = info.header
     val want = maskFor(columns)
     val fieldIdx = cols.map(f => pointSchema.fieldIndex(f.name)).toArray
-    val groups = chunks.grouped(math.max(1, chunksPerTask)).toArray
-    val rdd = spark.sparkContext
-      .parallelize(groups.toIndexedSeq, groups.length)
-      .flatMap { group =>
-        val raf = new RandomAccessFile(path, "r")
-        val rows = try {
-          group.iterator.flatMap { case (off, count, size) =>
-            val bytes = new Array[Byte](size)
-            raf.seek(off)
-            raf.readFully(bytes)
-            decodeChunk14(format, bytes, 0, count, want)
-          }.map { p =>
-            val w = p.waveOrZero
-            val full = Array[Any](
-              p.x * h.scaleX + h.offX, p.y * h.scaleY + h.offY,
-              p.z * h.scaleZ + h.offZ, p.intensity, p.returnNumber,
-              p.numberOfReturns, p.channel, p.cls, p.scanAngle.toShort.toInt,
-              p.user, p.psid, java.lang.Double.longBitsToDouble(p.gpsBits),
-              p.flags & 15, (p.flags >>> 6) & 1, (p.flags >>> 7) & 1,
-              p.r, p.g, p.b, p.nir,
-              w.index.toLong, w.offset, w.size & 0xFFFFFFFFL,
-              w.retPoint & 0xFFFFFFFFL, w.xt & 0xFFFFFFFFL,
-              w.yt & 0xFFFFFFFFL, w.zt & 0xFFFFFFFFL)
-            Row.fromSeq(fieldIdx.map(i => full(i)).toIndexedSeq)
-          }.toArray
-        } finally raf.close()
-        rows
+    Las.scan(spark, path, StructType(cols), chunks.toSeq, chunksPerTask) { (bytes, count) =>
+      decodeChunk14(format, bytes, 0, count, want).iterator.map { p =>
+        val w = p.waveOrZero
+        val full = Array[Any](
+          p.x * h.scaleX + h.offX, p.y * h.scaleY + h.offY,
+          p.z * h.scaleZ + h.offZ, p.intensity, p.returnNumber,
+          p.numberOfReturns, p.channel, p.cls, p.scanAngle.toShort.toInt,
+          p.user, p.psid, java.lang.Double.longBitsToDouble(p.gpsBits),
+          p.flags & 15, (p.flags >>> 6) & 1, (p.flags >>> 7) & 1,
+          p.r, p.g, p.b, p.nir,
+          w.index.toLong, w.offset, w.size & 0xFFFFFFFFL,
+          w.retPoint & 0xFFFFFFFFL, w.xt & 0xFFFFFFFFL,
+          w.yt & 0xFFFFFFFFL, w.zt & 0xFFFFFFFFL)
+        Row.fromSeq(fieldIdx.map(i => full(i)).toIndexedSeq)
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
 
-  /** Layered-LAZ export sink, the [[Laz.writePoints]] shape (executor-
-    * parallel chunk encode, driver splices O(partitions) side files +
-    * the chunk table) with a LAS 1.4 header (375 bytes, u64 point
-    * count, legacy counts zeroed per spec for formats >= 6) and
-    * variable-size chunking so partition tails stay legal.
+  /** Points for the sink, from the row [[writePoints14]] selects. */
+  private final class PointEncoder14(format: Int, chunkPoints: Int)
+      extends Las.ChunkEncoder[Point14](chunkPoints) {
+    def point(x: Int, y: Int, z: Int, row: InternalRow): Point14 = {
+      val rn = row.getInt(4) & 15
+      val nr = row.getInt(5) & 15
+      val ch = row.getInt(6) & 3
+      // full flags byte per LAS 1.4 pf6+: classification flags (0-3),
+      // scanner channel (4-5), scan direction (6), edge of flight line (7)
+      val flagsByte = (row.getInt(16) & 15) | (ch << 4) |
+        ((row.getInt(17) & 1) << 6) | ((row.getInt(18) & 1) << 7)
+      val wv = if (!hasWave14(format)) null else Laz.Wavepacket(
+        (row.getLong(19) & 0xFF).toInt, row.getLong(20),
+        row.getLong(21).toInt, row.getLong(22).toInt,
+        row.getLong(23).toInt, row.getLong(24).toInt,
+        row.getLong(25).toInt)
+      Point14(x, y, z, row.getInt(3) & 0xFFFF,
+        (nr << 4) | rn, flagsByte, row.getInt(7) & 0xFF,
+        row.getInt(9) & 0xFF, row.getInt(8) & 0xFFFF,
+        row.getInt(10) & 0xFFFF,
+        java.lang.Double.doubleToRawLongBits(row.getDouble(11)),
+        row.getInt(12) & 0xFFFF, row.getInt(13) & 0xFFFF,
+        row.getInt(14) & 0xFFFF, row.getInt(15) & 0xFFFF, wv)
+    }
+    def encode(points: Array[Point14]): Array[Byte] = encodeChunk14(format, points)
+  }
+
+  /** Layered-LAZ export sink: [[Las]]'s sink with a LAS 1.4 header
+    * (375 bytes, u64 point count, legacy counts zeroed per spec for
+    * formats >= 6) and variable-size chunking so partition tails stay
+    * legal.
     *
     * Expected columns: x, y, z (world doubles) and any of the
     * attribute columns of [[readPoints14]]'s schema — absent ones
@@ -593,7 +604,6 @@ object Laz14 {
   def writePoints14(df: DataFrame, path: String, scale: Double = 0.1,
       chunkPoints: Int = 50000, pointFormat: Int = 6): Unit = {
     require(FormatItems.contains(pointFormat), s"unsupported point format $pointFormat")
-    import org.apache.spark.sql.functions.{col, lit}
     val present = df.columns.toSet
     def opt(name: String, default: Int) =
       if (present(name)) col(name).cast("int") else lit(default)
@@ -601,8 +611,7 @@ object Laz14 {
       if (present("gps_time")) col("gps_time").cast("double") else lit(0.0)
     def optLong(name: String) =
       if (present(name)) col(name).cast("long") else lit(0L)
-    val prepared = df.select(
-      col("x").cast("double"), col("y").cast("double"), col("z").cast("double"),
+    val columns = Seq(
       opt("intensity", 0), opt("return_number", 1), opt("number_of_returns", 1),
       opt("scanner_channel", 0), opt("classification", 0), opt("scan_angle", 0),
       opt("user_data", 0), opt("point_source", 0), gpsCol,
@@ -611,160 +620,9 @@ object Laz14 {
       opt("edge_of_flight", 0),
       optLong("wp_index"), optLong("wp_offset"), optLong("wp_size"),
       optLong("wp_ret"), optLong("wp_xt"), optLong("wp_yt"), optLong("wp_zt"))
-
-    val chunkDir = Paths.get(path + ".chunks")
-    Files.createDirectories(chunkDir)
-    val chunkPrefix = chunkDir.toString
-    val fmt = pointFormat
-    val stats = prepared.rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var xMin = Double.MaxValue; var xMax = Double.MinValue
-        var yMin = Double.MaxValue; var yMax = Double.MinValue
-        var zMin = Double.MaxValue; var zMax = Double.MinValue
-        val chunkStats = Array.newBuilder[(Int, Int)]
-        val out = new BufferedOutputStream(
-          new FileOutputStream(f"$chunkPrefix/part-$pid%05d.bin"), 1 << 20)
-        try {
-          val buf = new Array[Point14](chunkPoints)
-          var n = 0
-          def flush(): Unit = if (n > 0) {
-            val bytes = encodeChunk14(fmt, if (n == chunkPoints) buf else buf.take(n))
-            out.write(bytes)
-            chunkStats += ((n, bytes.length))
-            n = 0
-          }
-          it.foreach { row =>
-            val (x, y, z) = (row.getDouble(0), row.getDouble(1), row.getDouble(2))
-            xMin = math.min(xMin, x); xMax = math.max(xMax, x)
-            yMin = math.min(yMin, y); yMax = math.max(yMax, y)
-            zMin = math.min(zMin, z); zMax = math.max(zMax, z)
-            val rn = row.getInt(4) & 15
-            val nr = row.getInt(5) & 15
-            val ch = row.getInt(6) & 3
-            // full flags byte per LAS 1.4 pf6+: classification flags
-            // (0-3), scanner channel (4-5), scan direction (6), edge
-            // of flight line (7)
-            val flagsByte = (row.getInt(16) & 15) | (ch << 4) |
-              ((row.getInt(17) & 1) << 6) | ((row.getInt(18) & 1) << 7)
-            val wv = if (!hasWave14(fmt)) null else Laz.Wavepacket(
-              (row.getLong(19) & 0xFF).toInt, row.getLong(20),
-              row.getLong(21).toInt, row.getLong(22).toInt,
-              row.getLong(23).toInt, row.getLong(24).toInt,
-              row.getLong(25).toInt)
-            buf(n) = Point14(
-              math.round(x / scale).toInt, math.round(y / scale).toInt,
-              math.round(z / scale).toInt, row.getInt(3) & 0xFFFF,
-              (nr << 4) | rn, flagsByte, row.getInt(7) & 0xFF,
-              row.getInt(9) & 0xFF, row.getInt(8) & 0xFFFF,
-              row.getInt(10) & 0xFFFF,
-              java.lang.Double.doubleToRawLongBits(row.getDouble(11)),
-              row.getInt(12) & 0xFFFF, row.getInt(13) & 0xFFFF,
-              row.getInt(14) & 0xFFFF, row.getInt(15) & 0xFFFF, wv)
-            n += 1
-            if (n == chunkPoints) flush()
-          }
-          flush()
-        } finally out.close()
-        Iterator.single((pid, chunkStats.result(), xMin, xMax, yMin, yMax, zMin, zMax))
-      }
-    }.collect().sortBy(_._1)
-
-    val chunkMeta = stats.flatMap(_._2)
-    val n = chunkMeta.map(_._1.toLong).sum
-    val (xMin, xMax, yMin, yMax, zMin, zMax) =
-      if (n == 0) (0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-      else (stats.map(_._3).min, stats.map(_._4).max,
-        stats.map(_._5).min, stats.map(_._6).max,
-        stats.map(_._7).min, stats.map(_._8).max)
-
-    val items = FormatItems(pointFormat)
-    val vlrPayloadLen = 34 + 6 * items.size
-    val headerSize = 375
-    val offsetToPoints = headerSize + 54 + vlrPayloadLen
-
-    val header = ByteBuffer.allocate(headerSize).order(ByteOrder.LITTLE_ENDIAN)
-    header.put("LASF".getBytes)
-    header.put(24, 1.toByte).put(25, 4.toByte) // v1.4
-    header.putShort(94, headerSize.toShort)
-    header.putInt(96, offsetToPoints)
-    header.putInt(100, 1) // one VLR (laszip)
-    header.put(104, (0x80 | pointFormat).toByte)
-    header.putShort(105, recordLen(pointFormat).toShort)
-    // legacy counts stay 0 for point formats >= 6 (LAS 1.4 spec)
-    header.putDouble(131, scale).putDouble(139, scale).putDouble(147, scale)
-    header.putDouble(155, 0.0).putDouble(163, 0.0).putDouble(171, 0.0)
-    header.putDouble(179, xMax).putDouble(187, xMin)
-    header.putDouble(195, yMax).putDouble(203, yMin)
-    header.putDouble(211, zMax).putDouble(219, zMin)
-    header.putLong(247, n) // u64 point count
-
-    val vlr = ByteBuffer.allocate(54 + vlrPayloadLen).order(ByteOrder.LITTLE_ENDIAN)
-    vlr.position(2)
-    vlr.put("laszip encoded".getBytes("US-ASCII"))
-    vlr.putShort(18, 22204.toShort)
-    vlr.putShort(20, vlrPayloadLen.toShort)
-    vlr.position(22)
-    vlr.put("graft laszip writer".getBytes("US-ASCII"))
-    vlr.position(54)
-    vlr.putShort(3.toShort) // compressor: layered chunked
-    vlr.putShort(0.toShort) // coder: arithmetic
-    vlr.put(3.toByte).put(4.toByte).putShort(0.toShort) // version 3.4 r0
-    vlr.putInt(0) // options
-    vlr.putInt(0xFFFFFFFF) // variable-size chunking
-    vlr.putLong(0L)
-    vlr.putLong(-1L)
-    vlr.putShort(items.size.toShort)
-    items.foreach { case (tpe, size, ver) =>
-      vlr.putShort(tpe.toShort).putShort(size.toShort).putShort(ver.toShort)
-    }
-
-    val out = new FileOutputStream(path)
-    try {
-      out.write(header.array())
-      out.write(vlr.array())
-      val tblOffsetField = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      tblOffsetField.putLong(0L)
-      out.write(tblOffsetField.array())
-      val dst = out.getChannel
-      stats.foreach { case (pid, cs, _, _, _, _, _, _) =>
-        val chunk = Paths.get(f"$chunkPrefix/part-$pid%05d.bin")
-        val src = FileChannel.open(chunk)
-        try {
-          val len = src.size()
-          require(len == cs.map(_._2.toLong).sum,
-            s"$chunk: $len bytes, expected ${cs.map(_._2.toLong).sum}")
-          var pos = 0L
-          while (pos < len) pos += dst.transferFrom(src, dst.position() + pos, len - pos)
-          dst.position(dst.position() + len)
-        } finally src.close()
-        Files.delete(chunk)
-      }
-      val tableOffset = dst.position()
-      val tblHead = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      tblHead.putInt(0).putInt(chunkMeta.length)
-      out.write(tblHead.array())
-      if (chunkMeta.nonEmpty) {
-        val enc = new ArithmeticEncoder
-        val ic = new IntegerCompressor(32, 2).initModels()
-        var prevCount = 0
-        var prevSize = 0
-        chunkMeta.foreach { case (count, size) =>
-          ic.compress(enc, prevCount, count, 0); prevCount = count
-          ic.compress(enc, prevSize, size, 1); prevSize = size
-        }
-        enc.done()
-        out.write(enc.result())
-      }
-      out.flush()
-      val raf = new RandomAccessFile(path, "rw")
-      try {
-        raf.seek(offsetToPoints.toLong)
-        val patch = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-        patch.putLong(tableOffset)
-        raf.write(patch.array())
-      } finally raf.close()
-    } finally out.close()
-    Files.delete(chunkDir)
+    val layout = Las.Layout(4, pointFormat, recordLen(pointFormat),
+      Las.laszipVlr(3, (3, 4), Las.VariableChunkSize, FormatItems(pointFormat)),
+      chunkTable = true)
+    Las.sink(df, path, scale, layout, columns, new PointEncoder14(pointFormat, chunkPoints))
   }
 }

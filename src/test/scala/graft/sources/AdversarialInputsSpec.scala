@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * die as a loud clean rejection — never a negative-array crash, a
   * multi-GB allocation, a hang, or a silent misread. Mirrors the
   * Mp4Codec hostile-length treatment. */
-class AdversarialInputsSpec extends AnyFunSuite {
+class AdversarialInputsSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -37,7 +37,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
   }
 
   test("LAZ: negative and absurd chunk counts are rejected, not allocated") {
-    val path = "/tmp/graft_adv_count.laz"
+    val path = tmp("adv_count.laz")
     val info = writeSmallLaz(path)
     for (bad <- Seq(-5, Int.MaxValue)) {
       patch(path, info.chunkTableOffset + 4, leInt(bad))
@@ -48,7 +48,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
   }
 
   test("LAZ: chunk-table offset outside the file is rejected at open") {
-    val path = "/tmp/graft_adv_off.laz"
+    val path = tmp("adv_off.laz")
     val info = writeSmallLaz(path)
     val fileLen = Files.size(Paths.get(path))
     patch(path, info.pointDataStart - 8,
@@ -59,7 +59,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
 
   test("LAZ: lying chunk counts (more entries than the table holds) die " +
       "in the per-entry guards") {
-    val path = "/tmp/graft_adv_extra.laz"
+    val path = tmp("adv_extra.laz")
     val info = writeSmallLaz(path)
     // claim 50 chunks where the coded table holds 5: the decoder walks
     // into garbage and the count/size/tiling requires must catch it
@@ -70,7 +70,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
   }
 
   test("LAZ: hostile VLR item count cannot read past the payload") {
-    val path = "/tmp/graft_adv_vlr.laz"
+    val path = tmp("adv_vlr.laz")
     writeSmallLaz(path)
     val all = Files.readAllBytes(Paths.get(path))
     val sig = "laszip encoded".getBytes("US-ASCII")
@@ -113,7 +113,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
 
   test("FLAC: hostile seekpoint offsets cannot define a task read span") {
     import spark.implicits._
-    val path = "/tmp/graft_adv_seek.flac"
+    val path = tmp("adv_seek.flac")
     val pcm = (0 until 8192).map(i => (i.toLong, (math.sin(i * 0.05) * 8000).toInt))
     Flac.writeSamples(pcm.toDF("idx", "value"), path, blockSize = 1024)
     // first seekpoint entry starts at 46; its 8-byte offset at 54
@@ -125,11 +125,11 @@ class AdversarialInputsSpec extends AnyFunSuite {
 
   test("LAZ: single-byte corruption anywhere terminates quickly — throw " +
       "or garbage, never hang or OOM") {
-    val path = "/tmp/graft_adv_fuzz.laz"
+    val path = tmp("adv_fuzz.laz")
     writeSmallLaz(path)
     val good = Files.readAllBytes(Paths.get(path))
     val rnd = new scala.util.Random(47)
-    val evilPath = "/tmp/graft_adv_fuzz_mut.laz"
+    val evilPath = tmp("adv_fuzz_mut.laz")
     (0 until 60).foreach { _ =>
       val evil = good.clone()
       evil(rnd.nextInt(evil.length)) = rnd.nextInt(256).toByte
@@ -179,7 +179,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
 
   test("FLAC: spec-valid placeholder seekpoints are skipped, not hostile") {
     import spark.implicits._
-    val path = "/tmp/graft_adv_placeholder.flac"
+    val path = tmp("adv_placeholder.flac")
     val pcm = (0 until 4096).map(i => (i.toLong, (math.sin(i * 0.05) * 8000).toInt))
     Flac.writeSamples(pcm.toDF("idx", "value"), path, blockSize = 1024)
     val before = Flac.readSamples(spark, path).count()
@@ -197,7 +197,7 @@ class AdversarialInputsSpec extends AnyFunSuite {
   test("LAS: truncated point region and hostile record length are " +
       "rejected up front, not mid-scan") {
     import spark.implicits._
-    val path = "/tmp/graft_adv.las"
+    val path = tmp("adv.las")
     val pts = (0 until 300).map(i => (i * 0.1, i * 0.2, i * 0.3))
     Las.writePoints(pts.toDF("x", "y", "z"), path)
     val full = Files.readAllBytes(Paths.get(path))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class LasSpec extends AnyFunSuite {
+class LasSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -17,7 +17,7 @@ class LasSpec extends AnyFunSuite {
   test("write -> header -> read roundtrip on the 0.1 grid") {
     val pts = Seq((1.5, 2.0, 0.3), (100.2, 0.0, -5.1), (8191.0, 4000.4, 25.3))
     val df = pts.toDF("x", "y", "z")
-    val path = "/tmp/graft_las_test.las"
+    val path = tmp("las_test.las")
     Las.writePoints(df, path)
 
     val h = Las.readHeader(path)
@@ -40,7 +40,7 @@ class LasSpec extends AnyFunSuite {
   test("chunked read covers every record exactly once") {
     val n = 1000
     val df = (0 until n).map(i => (i.toDouble, (i * 2).toDouble, 1.0)).toDF("x", "y", "z")
-    val path = "/tmp/graft_las_chunks.las"
+    val path = tmp("las_chunks.las")
     Las.writePoints(df, path)
     val got = Las.readPoints(spark, path, recordsPerChunk = 37)
     assert(got.count() == n)
@@ -51,7 +51,7 @@ class LasSpec extends AnyFunSuite {
     val n = 10000
     val df = (0 until n).map(i => (i.toDouble, (n - i).toDouble, (i % 7).toDouble))
       .toDF("x", "y", "z").repartition(8)
-    val path = "/tmp/graft_las_multi.las"
+    val path = tmp("las_multi.las")
     Las.writePoints(df, path)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".chunks")),
       "chunk dir must be cleaned up")
@@ -66,7 +66,7 @@ class LasSpec extends AnyFunSuite {
   }
 
   test("empty result writes a header-only las file") {
-    val path = "/tmp/graft_las_empty.las"
+    val path = tmp("las_empty.las")
     Las.writePoints(Seq.empty[(Double, Double, Double)].toDF("x", "y", "z"), path)
     val h = Las.readHeader(path)
     assert(h.pointCount == 0 && h.xMin == 0.0 && h.xMax == 0.0)
@@ -74,14 +74,14 @@ class LasSpec extends AnyFunSuite {
   }
 
   test("readDir unions all files") {
-    val d = java.nio.file.Files.createTempDirectory("graft_las_dir").toString
+    val d = tmpSubdir("las_dir")
     Las.writePoints(Seq((1.0, 1.0, 1.0)).toDF("x", "y", "z"), s"$d/a.las")
     Las.writePoints(Seq((2.0, 2.0, 2.0), (3.0, 3.0, 3.0)).toDF("x", "y", "z"), s"$d/b.las")
     assert(Las.readDir(spark, d).count() == 3)
   }
 
   test("mixed .las/.laz directories dispatch per file (laspy semantics)") {
-    val d = java.nio.file.Files.createTempDirectory("graft_mixed_dir").toString
+    val d = tmpSubdir("mixed_dir")
     Las.writePoints(Seq((1.0, 10.0, -2.0)).toDF("x", "y", "z"), s"$d/a.las")
     Laz.writePoints(Seq((5.0, 2.0, 7.0), (3.0, 4.0, 1.0)).toDF("x", "y", "z"), s"$d/b.laz")
     val pts = Las.readDir(spark, d)
@@ -95,7 +95,7 @@ class LasSpec extends AnyFunSuite {
   }
 
   test("dirMetadata folds counts and bboxes across files") {
-    val d = java.nio.file.Files.createTempDirectory("graft_las_meta").toString
+    val d = tmpSubdir("las_meta")
     Las.writePoints(Seq((1.0, 10.0, -2.0)).toDF("x", "y", "z"), s"$d/a.las")
     Las.writePoints(Seq((5.0, 2.0, 7.0), (3.0, 4.0, 1.0)).toDF("x", "y", "z"), s"$d/b.las")
     val m = Las.dirMetadata(d)
@@ -109,7 +109,7 @@ class LasSpec extends AnyFunSuite {
     import graft.operators.{ImportSpec, PointCloud}
     import graft.core.Bbox
     val pts = (0 until 100).map(i => ((i % 10).toDouble, (i / 10).toDouble, 1.0))
-    val path = "/tmp/graft_las_import.las"
+    val path = tmp("las_import.las")
     Las.writePoints(pts.toDF("x", "y", "z"), path)
     val cloud = PointCloud.importLas(spark, path, ImportSpec(name = "las_e2e"))
     assert(cloud.meta.pointCount == 100)
@@ -138,7 +138,7 @@ class LasSpec extends AnyFunSuite {
       body.putInt(i * recordLen + 4, math.round((y + 10.0) / 0.001).toInt)
       body.putInt(i * recordLen + 8, math.round((z - 0.5) / 0.001).toInt)
     }
-    val path = "/tmp/graft_las14_pf6.las"
+    val path = tmp("las14_pf6.las")
     val out = new java.io.FileOutputStream(path)
     try { out.write(header.array()); out.write(body.array()) } finally out.close()
 
@@ -156,16 +156,33 @@ class LasSpec extends AnyFunSuite {
   test("a LAS 1.2 header round-trips a point count above 2^31") {
     // the count field is unsigned 32-bit: 2^31 .. 2^32 - 1 is legal
     val n = 3000000000L
-    val path = java.nio.file.Files.createTempFile("graft_las_count", ".las")
-    try {
-      java.nio.file.Files.write(path, Las.header12(n, 0.1, 0, 1, 0, 1, 0, 1))
-      assert(Las.readHeader(path.toString).pointCount == n)
-    } finally java.nio.file.Files.delete(path)
-    intercept[IllegalArgumentException](Las.header12(1L << 32, 0.1, 0, 1, 0, 1, 0, 1))
+    def header(n: Long) = Las.writeHeader(2, 3, 34, n, 0, 227, 0.1, Las.Extent(0, 1, 0, 1, 0, 1))
+    val path = java.nio.file.Paths.get(tmp("las_count.las"))
+    java.nio.file.Files.write(path, header(n))
+    assert(Las.readHeader(path.toString).pointCount == n)
+    intercept[IllegalArgumentException](header(1L << 32))
+  }
+
+  test("a coordinate past the int32 grid is rejected, not wrapped") {
+    // at scale 0.1, x = 3e8 is 3e9 grid steps: past Int.MaxValue
+    val path = tmp("las_wrap.las")
+    val e = intercept[Exception](Las.writePoints(Seq((3e8, 1.0, 1.0)).toDF("x", "y", "z"), path))
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae }
+    assert(cause.exists(_.getMessage.contains("x = 3.0E8")), e)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".chunks")))
+  }
+
+  test("writePoints returns the number of points it wrote") {
+    val df = (0 until 1000).map(i => (i.toDouble, 1.0, 2.0)).toDF("x", "y", "z").repartition(3)
+    val path = tmp("las_count_ret.las")
+    assert(Las.writePoints(df, path) == 1000)
+    assert(Las.readHeader(path).pointCount == 1000)
   }
 
   test("readHeader rejects a LAZ compressed-format bit") {
-    val path = "/tmp/graft_laz_probe.las"
+    val path = tmp("laz_probe.las")
     val buf = java.nio.ByteBuffer.allocate(227).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.put("LASF".getBytes)
     buf.put(24, 1.toByte).put(25, 2.toByte)
@@ -176,7 +193,7 @@ class LasSpec extends AnyFunSuite {
   }
 
   test("readHeader rejects non-LAS bytes") {
-    val p = "/tmp/graft_not_las.las"
+    val p = tmp("not_las.las")
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       Array.fill[Byte](300)(7))
     intercept[IllegalArgumentException](Las.readHeader(p))

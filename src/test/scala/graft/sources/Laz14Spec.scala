@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * chunk-level roundtrips under adversarial channel/return/GPS
   * sequences, layer framing, codec-level projection (selective
   * decode), and distributed file roundtrips. */
-class Laz14Spec extends AnyFunSuite {
+class Laz14Spec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -139,7 +139,7 @@ class Laz14Spec extends AnyFunSuite {
     }.toDF("x", "y", "z", "intensity", "return_number", "number_of_returns",
       "scanner_channel", "classification", "scan_angle", "user_data",
       "point_source", "gps_time", "r", "g", "b", "nir").repartition(3)
-    val path = "/tmp/graft_laz14_pf8.laz"
+    val path = tmp("laz14_pf8.laz")
     Laz14.writePoints14(df, path, chunkPoints = 1000, pointFormat = 8)
 
     val info = Laz.readInfo(path)
@@ -181,7 +181,7 @@ class Laz14Spec extends AnyFunSuite {
       (i * 0.5, i * 0.2, 1.0, i % 4, i % 16, i % 2, (i / 3) % 2)
     }.toDF("x", "y", "z", "scanner_channel", "classification_flags",
       "scan_direction", "edge_of_flight").repartition(2)
-    val path = "/tmp/graft_laz14_flags.laz"
+    val path = tmp("laz14_flags.laz")
     Laz14.writePoints14(df, path, chunkPoints = 700, pointFormat = 6)
     val got = Laz14.readPoints14(spark, path)
       .select(round(col("x") * 10).cast("long"), col("scanner_channel"),
@@ -196,7 +196,7 @@ class Laz14Spec extends AnyFunSuite {
 
   test("pf6 defaults: absent attribute columns write as zeros/ones") {
     val df = Seq((1.0, 2.0, 3.0), (4.0, 5.0, 6.0)).toDF("x", "y", "z")
-    val path = "/tmp/graft_laz14_pf6.laz"
+    val path = tmp("laz14_pf6.laz")
     Laz14.writePoints14(df, path, pointFormat = 6)
     val back = Laz14.readPoints14(spark, path).collect()
     assert(back.length == 2)

@@ -13,7 +13,7 @@ import scala.util.Random
   * other LASzip implementations is by-construction from the public
   * spec; no second implementation exists in this sandbox to test
   * against (see ArithmeticCodec scaladoc). */
-class LazSpec extends AnyFunSuite {
+class LazSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -221,7 +221,7 @@ class LazSpec extends AnyFunSuite {
     val n = 5000
     val df = (0 until n).map(i => (i * 0.7, i * 0.3, (i % 50) * 2.0))
       .toDF("x", "y", "z").repartition(3)
-    val path = "/tmp/graft_laz_pf3.laz"
+    val path = tmp("laz_pf3.laz")
     Laz.writePoints(df, path, chunkPoints = 1000, pointFormat = 3)
     val info = Laz.readInfo(path)
     assert(info.header.pointFormat == 3 && info.header.recordLen == 34)
@@ -255,7 +255,7 @@ class LazSpec extends AnyFunSuite {
       (i * 0.7, i * 0.3, (i % 50) * 2.0,
         Array[Byte]((i % 256).toByte, (i % 7).toByte, 42))
     }.toDF("x", "y", "z", "extra_bytes").repartition(3)
-    val path = "/tmp/graft_laz_extra.laz"
+    val path = tmp("laz_extra.laz")
     Laz.writePoints(df, path, chunkPoints = 1000, extraBytes = 3)
     val info = Laz.readInfo(path)
     assert(info.header.pointFormat == 0 && info.header.recordLen == 23)
@@ -271,13 +271,13 @@ class LazSpec extends AnyFunSuite {
     assert(got == exp)
     // declared width is enforced, not silently padded
     val bad = Seq((1.0, 2.0, 3.0, Array[Byte](1))).toDF("x", "y", "z", "extra_bytes")
-    val e = intercept[Exception](Laz.writePoints(bad, "/tmp/graft_laz_bad.laz", extraBytes = 3))
+    val e = intercept[Exception](Laz.writePoints(bad, tmp("laz_bad.laz"), extraBytes = 3))
     assert(e.getMessage.contains("extra_bytes") || e.getCause != null)
   }
 
   test("file write -> info -> read roundtrip on the 0.1 grid") {
     val pts = Seq((1.5, 2.0, 0.3), (100.2, 0.0, -5.1), (8191.0, 4000.4, 25.3))
-    val path = "/tmp/graft_laz_test.laz"
+    val path = tmp("laz_test.laz")
     Laz.writePoints(pts.toDF("x", "y", "z"), path)
 
     val info = Laz.readInfo(path)
@@ -301,7 +301,7 @@ class LazSpec extends AnyFunSuite {
     val n = 20000
     val df = (0 until n).map(i => (i * 0.5, (n - i) * 0.3, (i % 97) * 1.1))
       .toDF("x", "y", "z").repartition(7)
-    val path = "/tmp/graft_laz_chunks.laz"
+    val path = tmp("laz_chunks.laz")
     Laz.writePoints(df, path, chunkPoints = 1000)
 
     val info = Laz.readInfo(path)
@@ -324,21 +324,38 @@ class LazSpec extends AnyFunSuite {
     val pts = Seq.fill(5000)((rnd.nextDouble() * 8192, rnd.nextDouble() * 8192,
       rnd.nextDouble() * 100 - 50))
     val df = pts.toDF("x", "y", "z").repartition(3)
-    Las.writePoints(df, "/tmp/graft_agree.las")
-    Laz.writePoints(df, "/tmp/graft_agree.laz")
+    Las.writePoints(df, tmp("agree.las"))
+    Laz.writePoints(df, tmp("agree.laz"))
     def grid(d: org.apache.spark.sql.DataFrame) =
       d.select(round(col("x") * 10).cast("long"), round(col("y") * 10).cast("long"),
         round(col("z") * 10).cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(identity).view.mapValues(_.length).toMap
-    assert(grid(Laz.readPoints(spark, "/tmp/graft_agree.laz")) ==
-      grid(Las.readPoints(spark, "/tmp/graft_agree.las")))
+    assert(grid(Laz.readPoints(spark, tmp("agree.laz"))) ==
+      grid(Las.readPoints(spark, tmp("agree.las"))))
+  }
+
+  test("a compressed LAS 1.2 header round-trips a point count above 2^31") {
+    // the count field is unsigned 32-bit: 2^31 .. 2^32 - 1 is legal
+    val n = 3000000000L
+    val vlr = Las.laszipVlr(2, (2, 2), Las.VariableChunkSize, Seq((6, 20, 2)))
+    val offset = 227 + vlr.length
+    val header = Las.writeHeader(2, 0x80, 20, n, 1, offset, 0.1, Las.Extent(0, 1, 0, 1, 0, 1))
+    // the chunk-table offset field, pointing at an empty table right after it
+    val table = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putLong(0, offset + 8L)
+    val path = tmp("laz_count.laz")
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), header ++ vlr ++ table.array())
+    val info = Laz.readInfo(path)
+    assert(info.header.pointCount == n && info.compressor == 2)
+    intercept[IllegalArgumentException](
+      Las.writeHeader(2, 0x80, 20, 1L << 32, 1, offset, 0.1, Las.Extent(0, 1, 0, 1, 0, 1)))
   }
 
   test("empty frame writes a readable zero-chunk file") {
     val df = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Las.pointSchema)
-    val path = "/tmp/graft_laz_empty.laz"
+    val path = tmp("laz_empty.laz")
     Laz.writePoints(df, path)
     assert(Laz.readInfo(path).header.pointCount == 0)
     assert(Laz.readPoints(spark, path).count() == 0)
@@ -346,10 +363,10 @@ class LazSpec extends AnyFunSuite {
 
   test("uncompressed LAS is rejected with a pointer to Las") {
     val df = Seq((1.0, 2.0, 3.0)).toDF("x", "y", "z")
-    Las.writePoints(df, "/tmp/graft_not_laz.las")
-    val e = intercept[IllegalArgumentException](Laz.readInfo("/tmp/graft_not_laz.las"))
+    Las.writePoints(df, tmp("not_laz.las"))
+    val e = intercept[IllegalArgumentException](Laz.readInfo(tmp("not_laz.las")))
     assert(e.getMessage.contains("not compressed"))
-    val e2 = intercept[IllegalArgumentException](Las.readHeader("/tmp/graft_laz_test.laz"))
+    val e2 = intercept[IllegalArgumentException](Las.readHeader(tmp("laz_test.laz")))
     assert(e2.getMessage.contains("LAZ"))
   }
 }

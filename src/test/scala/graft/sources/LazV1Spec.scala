@@ -14,7 +14,7 @@ import graft.sources.Laz.{FullPoint, Point10}
   * stream, item versions 1). Same validation boundary as every codec
   * here — roundtrip + structure conformance, no second in-sandbox
   * implementation. */
-class LazV1Spec extends AnyFunSuite {
+class LazV1Spec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -115,7 +115,7 @@ class LazV1Spec extends AnyFunSuite {
     val src = Seq.tabulate(5000) { i =>
       (rnd.nextInt(100000) / 10.0, rnd.nextInt(100000) / 10.0, rnd.nextInt(5000) / 10.0)
     }.toDF("x", "y", "z")
-    val path = "/tmp/graft_v1_container_test.laz"
+    val path = tmp("v1_container_test.laz")
     Laz.writePointsV1(src, path)
     val info = Laz.readInfo(path)
     assert(info.compressor == 1 && info.chunkTableOffset == -1L)
@@ -135,7 +135,7 @@ class LazV1Spec extends AnyFunSuite {
       (i / 10.0, (i * 3 % 997) / 10.0, (i % 47) / 10.0,
         Array[Byte]((i % 251).toByte, (i % 7).toByte))
     }.toDF("x", "y", "z", "extra_bytes")
-    val path = "/tmp/graft_v1_extra_test.laz"
+    val path = tmp("v1_extra_test.laz")
     Laz.writePointsV1(src, path, extraBytes = 2)
     val back = Laz.readPoints(spark, path)
       .select(round(col("x") * 10).cast("long").as("x10"), col("extra_bytes"))

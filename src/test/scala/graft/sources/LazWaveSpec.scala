@@ -11,7 +11,7 @@ import graft.sources.Laz.{FullPoint, Point10, Wavepacket}
 /** Waveform point formats 4/5: the WAVEPACKET13 item codec and the
   * LAS 1.3 container plumbing. Same in-sandbox validation boundary as
   * every codec here: roundtrip + structure conformance. */
-class LazWaveSpec extends AnyFunSuite {
+class LazWaveSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -120,7 +120,7 @@ class LazWaveSpec extends AnyFunSuite {
         (i % 65536).toLong, ((i * 3) % 65536).toLong, ((i * 7) % 65536).toLong)
     }.toDF("x", "y", "z", "wp_index", "wp_offset", "wp_size",
       "wp_ret", "wp_xt", "wp_yt", "wp_zt")
-    val path = "/tmp/graft_wave14_container_test.laz"
+    val path = tmp("wave14_container_test.laz")
     Laz14.writePoints14(src, path, chunkPoints = 600, pointFormat = 9)
     val info = Laz.readInfo(path)
     assert(info.compressor == 3 && info.header.pointFormat == 9)
@@ -138,7 +138,7 @@ class LazWaveSpec extends AnyFunSuite {
   }
 
   test("readDir unions a mixed directory where one file carries wavepacket columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixdir").toString
+    val dir = tmpSubdir("mixdir")
     val plain = Seq.tabulate(500)(i => (i / 10.0, (i * 3 % 97) / 10.0, (i % 11) / 10.0))
       .toDF("x", "y", "z")
     Laz.writePoints(plain, s"$dir/a_plain.laz")
@@ -166,7 +166,7 @@ class LazWaveSpec extends AnyFunSuite {
         java.lang.Float.floatToIntBits(-1.0f) & 0xFFFFFFFFL)
     }.toDF("x", "y", "z", "wp_index", "wp_offset", "wp_size",
       "wp_ret", "wp_xt", "wp_yt", "wp_zt")
-    val path = "/tmp/graft_wave_container_test.laz"
+    val path = tmp("wave_container_test.laz")
     Laz.writePoints(src, path, chunkPoints = 700, pointFormat = 5)
     val info = Laz.readInfo(path)
     assert(info.header.versionMinor == 3 && info.header.pointFormat == 5)
