@@ -107,13 +107,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => graft.plans.RewriteHeadBboxFilter)
     ext.injectPlannerStrategy(_ => graft.plans.PushedRangeScan)
+    ext.injectPlannerStrategy(_ => graft.plans.PreparedSelectionScan)
   }
 }
 
 object GraftExtensions {
-  /** Register the graft_* SQL functions, the pruning rewrite AND the
-    * cover-pushing scan strategy on an already-running session (the
-    * builder-time extension hook only applies to new sessions). */
+  /** Register the graft_* SQL functions, the pruning rewrite, the
+    * cover-pushing scan strategy AND the prepared-selection strategy on
+    * an already-running session (the builder-time extension hook only
+    * applies to new sessions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val ext = new GraftExtensions
     ext.fns.foreach { case (name, usage, builder) =>
@@ -125,5 +127,6 @@ object GraftExtensions {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.RewriteHeadBboxFilter
     graft.plans.PushedRangeScan.register(spark)
+    graft.plans.PreparedSelectionScan.register(spark)
   }
 }

@@ -87,8 +87,11 @@ case class PointInPolygon(left: Expression, right: Expression, polygon: Polygon)
   * class (Spark's codegen cache is keyed on the source). Non-foldable,
   * so the optimizer keeps it a leaf instead of folding it back into a
   * literal; deterministic and never null, so predicates over it push
-  * through projections like any other. */
-case class QueryParam(value: Any, dataType: DataType) extends LeafExpression {
+  * through projections like any other. A parameter of a prepared
+  * selection carries its `slot`, the index of its value among the
+  * selection's bound values (`graft.operators.Bindings`); -1 is a
+  * parameter no template rebinds. */
+case class QueryParam(value: Any, dataType: DataType, slot: Int = -1) extends LeafExpression {
   require(value != null && CodeGenerator.isPrimitiveType(dataType),
     s"a query parameter is a non-null primitive, got $value: $dataType")
   override def foldable: Boolean = false

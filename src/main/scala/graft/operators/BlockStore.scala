@@ -57,20 +57,25 @@ private[operators] final class BlockStore[P, B, M](
     writeMeta(spark, meta, dir)
   }
 
+  /** The catalog row, read under its encoder's schema: no footer job
+    * infers it. */
   def readMeta(spark: SparkSession, dir: String): M =
-    spark.read.parquet(s"$dir/meta").as[M](metaEnc).head()
+    spark.read.schema(metaEnc.schema).parquet(s"$dir/meta").as[M](metaEnc).head()
 
   private def writeMeta(spark: SparkSession, meta: M, dir: String): Unit =
     spark.createDataset(Seq(meta))(metaEnc).write.mode("overwrite").parquet(s"$dir/meta")
 
   /** The stored catalog row, the base ∪ delta blocks, and the ledger
     * if batches landed — the caller composes the two, so meta is never
-    * rewritten per batch and a replay cannot double-count. */
+    * rewritten per batch and a replay cannot double-count. Blocks are
+    * read under the block encoder's schema, so opening runs no schema
+    * inference job; the delta's `__batch` still comes from its paths. */
   def open(spark: SparkSession, dir: String): (M, DataFrame, Option[DataFrame]) = {
-    val base = spark.read.parquet(s"$dir/blocks")
+    val read = spark.read.schema(blockEnc.schema)
+    val base = read.parquet(s"$dir/blocks")
     val blocks =
       if (Files.exists(Paths.get(s"$dir/blocks_delta")))
-        base.unionByName(spark.read.parquet(s"$dir/blocks_delta").select(blockCols.map(col): _*))
+        base.unionByName(read.parquet(s"$dir/blocks_delta").select(blockCols.map(col): _*))
       else base
     val ledger =
       if (Files.exists(Paths.get(s"$dir/counts"))) Some(spark.read.parquet(s"$dir/counts"))

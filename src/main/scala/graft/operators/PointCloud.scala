@@ -258,17 +258,22 @@ object PointCloud {
   * geometric predicate. Every per-query constant (bounds, centres,
   * radii, segment endpoints, z cuts) enters the plan as a bound
   * `QueryParam`, never a literal, so selections of one shape compile
-  * one class however their geometry varies. No mid-query
-  * materialization, no per-point driver work (the reference's
-  * INSERT-per-point loop, retrieve_data.py:150-151, is the
-  * anti-pattern this replaces).
+  * one class however their geometry varies. Each selection is a
+  * prepared one ([[SelectionTemplates]]): the plan of its [[Shape]] is
+  * analyzed and optimized once per opened cloud, and every query binds
+  * its own values into a copy of it. No mid-query materialization, no
+  * per-point driver work (the reference's INSERT-per-point loop,
+  * retrieve_data.py:150-151, is the anti-pattern this replaces).
   */
 final class BlockedCloud(
     val spark: SparkSession,
     val blocks: DataFrame,
     val meta: CloudMeta) {
 
-  graft.plans.PushedRangeScan.register(spark)
+  private val templates = new SelectionTemplates(spark)
+
+  /** The shapes this cloud holds a selection template for. */
+  private[operators] def templateShapes: Set[Shape] = templates.shapes
 
   private def totalBits: Int = meta.headLen + meta.tailLen
 
@@ -299,19 +304,19 @@ final class BlockedCloud(
         col("p.z").as("z")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
   }
 
-  /** Filter step: the points of every block the bbox's Morton cover
-    * touches, read by ONE scan and tagged [[SfcPredicates.Contained]]
-    * when their block lies wholly inside the bbox — the reference's
-    * two-tier refinement (retrieve_data.py:128-145) as a per-block
-    * flag rather than a second scan. The 256-range budget bounds the
-    * predicate at any data scale; a coarser cover only moves blocks
-    * from contained to partial. */
-  private def candidates(b: Bbox): DataFrame = {
-    val (blk, tag) = SfcPredicates.candidateBlocks(blocks, cover(b))
+  /** Filter step: the points of every block of the head cover `hr`,
+    * read by ONE scan and tagged [[SfcPredicates.Contained]] when their
+    * block lies wholly inside the query bbox — the reference's two-tier
+    * refinement (retrieve_data.py:128-145) as a per-block flag rather
+    * than a second scan. */
+  private def candidates(hr: HeadRanges): DataFrame = {
+    val (blk, tag) = SfcPredicates.candidateBlocks(blocks, hr)
     explodePoints(blk, Some(tag))
   }
 
-  /** The head cover of a bbox: empty when it holds no grid point. */
+  /** The head cover of a bbox: empty when it holds no grid point. The
+    * 256-range budget bounds the predicate at any data scale; a coarser
+    * cover only moves blocks from contained to partial. */
   private def cover(b: Bbox): HeadRanges = quantizedBbox(b)
     .map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
     .getOrElse(HeadRanges(Vector.empty, Vector.empty))
@@ -320,24 +325,32 @@ final class BlockedCloud(
 
   /** All points with x in [xMin, xMax] and y in [yMin, yMax] (inclusive);
     * points of contained blocks skip the exact test. */
-  def bboxQuery(b: Bbox): DataFrame =
-    xyz(candidates(b).filter(col(SfcPredicates.Contained) ||
-      (col("x") >= param(b.xMin) && col("x") <= param(b.xMax) &&
-        col("y") >= param(b.yMin) && col("y") <= param(b.yMax))))
+  def bboxQuery(b: Bbox): DataFrame = {
+    val p = new Bindings(cover(b))
+    val exact = col(SfcPredicates.Contained) ||
+      (col("x") >= p(b.xMin) && col("x") <= p(b.xMax) &&
+        col("y") >= p(b.yMin) && col("y") <= p(b.yMax))
+    templates.select(Shape.of("bbox", p.cover), p)(xyz(candidates(p.cover).filter(exact)))
+  }
 
   /** 2D circle selection (z ignored — PostGIS ST_DWithin on 2D points,
     * retrieve_data.py:56-63); boundary inclusive (<= r). */
-  def circleQuery(c: Circle): DataFrame =
-    xyz(candidates(c.bbox)).filter(d2From(c.cx, c.cy) <= param(c.r * c.r))
+  def circleQuery(c: Circle): DataFrame = {
+    val p = new Bindings(cover(c.bbox))
+    val exact = d2From(p(c.cx), p(c.cy)) <= p(c.r * c.r)
+    templates.select(Shape.of("circle", p.cover), p)(xyz(candidates(p.cover)).filter(exact))
+  }
 
-  /** Squared 2D distance from (px, py), the centre bound as parameters. */
-  private def d2From(px: Double, py: Double): Column =
-    (col("x") - param(px)) * (col("x") - param(px)) +
-      (col("y") - param(py)) * (col("y") - param(py))
+  /** Squared 2D distance from the bound centre (px, py). */
+  private def d2From(px: Column, py: Column): Column =
+    (col("x") - px) * (col("x") - px) + (col("y") - py) * (col("y") - py)
 
   /** Polygon (with holes) selection, even-odd rule, boundary excluded. */
-  def polygonQuery(p: Polygon): DataFrame =
-    xyz(candidates(p.bbox)).filter(sfc.point_in_polygon(col("x"), col("y"), p))
+  def polygonQuery(poly: Polygon): DataFrame = {
+    val p = new Bindings(cover(poly.bbox))
+    val exact = p.inPolygon(col("x"), col("y"), poly)
+    templates.select(Shape.of("polygon", p.cover), p)(xyz(candidates(p.cover)).filter(exact))
+  }
 
   def polygonQuery(wkt: String): DataFrame =
     polygonQuery(Geometry.parseWktPolygon(wkt))
@@ -377,17 +390,19 @@ final class BlockedCloud(
     // parameter to [0,1], measure to the clamped foot. The expression
     // tree mirrors PointCloudQueries' oracle SQL token-for-token so
     // both engines round identically (all-double IEEE arithmetic).
-    val pred = segs.map { case (ax, ay, bx, by) =>
-      val dxc = bx - ax; val dyc = by - ay
-      val len2 = dxc * dxc + dyc * dyc
+    val p = new Bindings(cover(Bbox(xMin - r, xMax + r, yMin - r, yMax + r)))
+    val r2 = p(r * r)
+    val exact = segs.map { case (ax, ay, bx, by) =>
+      val (dx, dy) = (bx - ax, by - ay)
+      val (pax, pay, dxc, dyc, len2) = (p(ax), p(ay), p(dx), p(dy), p(dx * dx + dy * dy))
       val t = greatest(lit(0.0), least(lit(1.0),
-        ((col("x") - param(ax)) * param(dxc) + (col("y") - param(ay)) * param(dyc)) /
-          param(len2)))
-      val fx = col("x") - (t * param(dxc) + param(ax))
-      val fy = col("y") - (t * param(dyc) + param(ay))
-      fx * fx + fy * fy <= param(r * r)
+        ((col("x") - pax) * dxc + (col("y") - pay) * dyc) / len2))
+      val fx = col("x") - (t * dxc + pax)
+      val fy = col("y") - (t * dyc + pay)
+      fx * fx + fy * fy <= r2
     }.reduce(_ || _)
-    xyz(candidates(Bbox(xMin - r, xMax + r, yMin - r, yMax + r))).filter(pred)
+    templates.select(Shape.of("polyline", p.cover, segs.length), p)(
+      xyz(candidates(p.cover)).filter(exact))
   }
 
   def polylineBufferQuery(wkt: String, r: Double): DataFrame =
@@ -412,8 +427,12 @@ final class BlockedCloud(
     * (d², x, y, z): one job. */
   def knn(px: Double, py: Double, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    circleQuery(Circle(px, py, knnSeedRadius(px, py, k)))
-      .orderBy(d2From(px, py).asc, col("x").asc, col("y").asc, col("z").asc).limit(k)
+    val r = knnSeedRadius(px, py, k)
+    val p = new Bindings(cover(Circle(px, py, r).bbox))
+    val d2 = d2From(p(px), p(py))
+    val within = d2 <= p(r * r)
+    templates.select(Shape.of("knn", p.cover, k), p)(xyz(candidates(p.cover)).filter(within)
+      .orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k))
   }
 
   /** Batch kNN: the k nearest neighbours of EVERY query point in one

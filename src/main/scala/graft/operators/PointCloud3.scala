@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.core.{Box3, Morton, MortonRange}
+import graft.core.{Box3, HeadRanges, Morton, MortonRange}
 import graft.functions.sfc
-import graft.functions.sfc.param
 
 /** Catalog row of a 3D-keyed cloud: z participates in the key, so
   * height-selective queries prune storage like x/y — the capability
@@ -109,15 +108,19 @@ object PointCloud3 {
   * — [[graft.core.MortonRange.decompose]] of the query box, here over
   * the 3D key (so z is pruned at the scan, not post-filtered), then
   * [[SfcPredicates.candidateBlocks]] — with query constants bound as
-  * parameters. What is 3D-specific is the explode, which decodes x, y
-  * and z from the key, and the queries: box, cylinder, polygon prism,
-  * 3D kNN and voxel counts. */
+  * parameters into one prepared template per [[Shape]]
+  * ([[SelectionTemplates]]). What is 3D-specific is the explode, which
+  * decodes x, y and z from the key, and the queries: box, cylinder,
+  * polygon prism, 3D kNN and voxel counts. */
 final class BlockedCloud3(
     val spark: SparkSession,
     val blocks: DataFrame,
     val meta: Cloud3Meta) {
 
-  graft.plans.PushedRangeScan.register(spark)
+  private val templates = new SelectionTemplates(spark)
+
+  /** The shapes this cloud holds a selection template for. */
+  private[operators] def templateShapes: Set[Shape] = templates.shapes
 
   /** The inclusive grid box of an original-coordinate box (x/y on the
     * integer grid, z at 1/zDenom); None when it holds no grid point. */
@@ -129,13 +132,18 @@ final class BlockedCloud3(
     if (b.xMin > b.xMax || b.yMin > b.yMax || b.zMin > b.zMax) None else Some(b)
   }
 
-  /** xq/yq inside the grid box, bounds bound as parameters. */
-  private def inXY(b: Box3): Column =
-    col("xq") >= param(b.xMin.toLong) && col("xq") <= param(b.xMax.toLong) &&
-      col("yq") >= param(b.yMin.toLong) && col("yq") <= param(b.yMax.toLong)
+  /** The octree cover of a grid box: empty when there is no box. */
+  private def cover(box: Option[Box3]): HeadRanges =
+    box.fold(HeadRanges(Vector.empty, Vector.empty))(
+      MortonRange.decompose(_, meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048))
 
-  private def inZBand(b: Box3): Column =
-    col("zq") >= param(b.zMin.toLong) && col("zq") <= param(b.zMax.toLong)
+  /** xq/yq inside the grid box, bounds bound as parameters. */
+  private def inXY(p: Bindings, b: Box3): Column =
+    col("xq") >= p(b.xMin.toLong) && col("xq") <= p(b.xMax.toLong) &&
+      col("yq") >= p(b.yMin.toLong) && col("yq") <= p(b.yMax.toLong)
+
+  private def inZBand(p: Bindings, b: Box3): Column =
+    col("zq") >= p(b.zMin.toLong) && col("zq") <= p(b.zMax.toLong)
 
   /** Explode blocks to grid points (xq, yq, zq); a `contained` per-block
     * flag rides along as the [[SfcPredicates.Contained]] column. */
@@ -156,23 +164,26 @@ final class BlockedCloud3(
 
   private def emptyPoints: DataFrame = out(explode3(blocks.filter(lit(false))))
 
-  /** Filter step, one scan: the grid points of every block the octree
-    * cover of `box` touches, tagged [[SfcPredicates.Contained]] when
-    * their block lies wholly inside the box. */
-  private def candidates(box: Box3): DataFrame = {
-    val (blk, tag) = SfcPredicates.candidateBlocks(blocks,
-      MortonRange.decompose(box, meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048))
-    explode3(blk, Some(tag))
-  }
+  /** Filter step, one scan: the grid points of every block of the
+    * octree cover `hr`, tagged [[SfcPredicates.Contained]] when their
+    * block lies wholly inside the query box, then refined by `exact` —
+    * no points when the query box holds no grid point (`exact` None). */
+  private def refined(hr: HeadRanges, exact: Option[Column]): DataFrame =
+    exact.fold(emptyPoints) { e =>
+      val (blk, tag) = SfcPredicates.candidateBlocks(blocks, hr)
+      out(explode3(blk, Some(tag)).filter(e))
+    }
 
   /** All points in the inclusive 3D box (original coordinates) —
     * filter-refine with z pruned AT THE SCAN via the octree ranges,
     * not post-filtered; points of contained blocks skip the exact test. */
   def boxQuery(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      zMin: Double, zMax: Double): DataFrame =
-    gridBox(xMin, xMax, yMin, yMax, zMin, zMax).fold(emptyPoints) { b =>
-      out(candidates(b).filter(col(SfcPredicates.Contained) || (inXY(b) && inZBand(b))))
-    }
+      zMin: Double, zMax: Double): DataFrame = {
+    val box = gridBox(xMin, xMax, yMin, yMax, zMin, zMax)
+    val p = new Bindings(cover(box))
+    val exact = box.map(b => col(SfcPredicates.Contained) || (inXY(p, b) && inZBand(p, b)))
+    templates.select(Shape.of("box", p.cover), p)(refined(p.cover, exact))
+  }
 
   /** Cylinder selection: 2D circle x height band — the B-suite circle
     * with B10-B12's z refinement fused into ONE pruned scan (octree
@@ -180,11 +191,14 @@ final class BlockedCloud3(
     * candidates only). */
   def cylinderQuery(cx: Double, cy: Double, r: Double,
       zMin: Double, zMax: Double): DataFrame = {
-    val d2 = (col("xq") - param(cx)) * (col("xq") - param(cx)) +
-      (col("yq") - param(cy)) * (col("yq") - param(cy))
-    gridBox(cx - r, cx + r, cy - r, cy + r, zMin, zMax).fold(emptyPoints) { b =>
-      out(candidates(b).filter(d2 <= param(r * r) && inZBand(b)))
+    val box = gridBox(cx - r, cx + r, cy - r, cy + r, zMin, zMax)
+    val p = new Bindings(cover(box))
+    val exact = box.map { b =>
+      val (qx, qy) = (p(cx), p(cy))
+      (col("xq") - qx) * (col("xq") - qx) + (col("yq") - qy) * (col("yq") - qy) <=
+        p(r * r) && inZBand(p, b)
     }
+    templates.select(Shape.of("cylinder", p.cover), p)(refined(p.cover, exact))
   }
 
   /** Polygon-prism selection: a 2D polygon (with holes, even-odd rule,
@@ -194,12 +208,13 @@ final class BlockedCloud3(
     * polygon (codegen) runs on every candidate — a block inside the
     * prism's bounding box is not necessarily inside the polygon — while
     * the z band is re-checked only on partial blocks. */
-  def polygonQuery(p: graft.core.Polygon, zMin: Double, zMax: Double): DataFrame = {
-    val pb = p.bbox
-    gridBox(pb.xMin, pb.xMax, pb.yMin, pb.yMax, zMin, zMax).fold(emptyPoints) { b =>
-      out(candidates(b).filter(col(SfcPredicates.Contained) || inZBand(b)))
-        .filter(sfc.point_in_polygon(col("x"), col("y"), p))
-    }
+  def polygonQuery(poly: graft.core.Polygon, zMin: Double, zMax: Double): DataFrame = {
+    val pb = poly.bbox
+    val box = gridBox(pb.xMin, pb.xMax, pb.yMin, pb.yMax, zMin, zMax)
+    val p = new Bindings(cover(box))
+    val exact = box.map(b => col(SfcPredicates.Contained) || inZBand(p, b))
+    val inPolygon = p.inPolygon(col("x"), col("y"), poly)
+    templates.select(Shape.of("polygon", p.cover), p)(refined(p.cover, exact).filter(inPolygon))
   }
 
   def polygonQuery(wkt: String, zMin: Double, zMax: Double): DataFrame =
@@ -224,12 +239,15 @@ final class BlockedCloud3(
   def knn(px: Double, py: Double, pz: Double, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val r = knnSeedRadius(px, py, pz, k)
-    val d2 = (col("x") - param(px)) * (col("x") - param(px)) +
-      (col("y") - param(py)) * (col("y") - param(py)) +
-      (col("z") - param(pz)) * (col("z") - param(pz))
-    boxQuery(px - r, px + r, py - r, py + r, pz - r, pz + r)
-      .filter(d2 <= param(r * r))
-      .orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k)
+    val box = gridBox(px - r, px + r, py - r, py + r, pz - r, pz + r)
+    val p = new Bindings(cover(box))
+    val inBox = box.map(b => col(SfcPredicates.Contained) || (inXY(p, b) && inZBand(p, b)))
+    val (qx, qy, qz) = (p(px), p(py), p(pz))
+    val d2 = (col("x") - qx) * (col("x") - qx) + (col("y") - qy) * (col("y") - qy) +
+      (col("z") - qz) * (col("z") - qz)
+    val within = d2 <= p(r * r)
+    templates.select(Shape.of("knn", p.cover, k), p)(refined(p.cover, inBox).filter(within)
+      .orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k))
   }
 
   /** 3D voxel occupancy: point count per (cellXY, cellZ) voxel — the

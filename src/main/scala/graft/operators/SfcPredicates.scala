@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core.HeadRanges
-import graft.functions.sfc
+import graft.functions.{sfc, InSortedRanges, PushedRanges}
 
 /** The filter step both blocked stores share: one scan of the blocks a
   * query's head cover touches, each tagged with whether it lies wholly
@@ -28,6 +29,15 @@ private[operators] object SfcPredicates {
   def candidateBlocks(blocks: DataFrame, hr: HeadRanges): (DataFrame, Column) =
     if (hr.isEmpty) (blocks.filter(lit(false)), lit(false))
     else (blocks.filter(sfc.pushed_ranges(col("sfc_head"), hr.all)),
-      sfc.in_sorted_ranges(col("sfc_head"), hr.contained.map(_._1).toArray,
-        hr.contained.map(_._2).toArray))
+      sfc.in_sorted_ranges(col("sfc_head"), los(hr), his(hr)))
+
+  /** The scan predicate and contained tag of a plan built by
+    * [[candidateBlocks]], rebuilt for the non-empty cover `hr`. */
+  def rebind(hr: HeadRanges): PartialFunction[Expression, Expression] = {
+    case p: PushedRanges => PushedRanges(p.child, hr.all)
+    case t: InSortedRanges => InSortedRanges(t.child, los(hr), his(hr))
+  }
+
+  private def los(hr: HeadRanges): Array[Long] = hr.contained.map(_._1).toArray
+  private def his(hr: HeadRanges): Array[Long] = hr.contained.map(_._2).toArray
 }

@@ -24,10 +24,11 @@ import graft.functions.PushedRanges
   * cover conjuncts from the post-scan `FilterExec`. The marker that
   * remains implies the cover, so the dropped terms were redundant.
   *
-  * Registered idempotently by [[register]] when a blocked cloud is
-  * built, and by `graft.GraftExtensions`. A marker planned without the
-  * strategy returns the same rows; it only reads every page. */
-object PushedRangeScan extends SparkStrategy with PredicateHelper {
+  * Registered idempotently by [[SessionStrategy.register]] when a
+  * blocked cloud is built, and by `graft.GraftExtensions`. A marker
+  * planned without the strategy returns the same rows; it only reads
+  * every page. */
+object PushedRangeScan extends SessionStrategy with PredicateHelper {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case ScanOperation(_, _, filters, LogicalRelation(_: HadoopFsRelation, _, _, _, _))
@@ -49,9 +50,12 @@ object PushedRangeScan extends SparkStrategy with PredicateHelper {
       })
     case _ => Nil
   }
+}
 
+/** A planner strategy a blocked cloud adds to its own session. */
+trait SessionStrategy extends SparkStrategy {
   /** Add this strategy to `spark`'s planner once. */
-  def register(spark: SparkSession): Unit = synchronized {
+  def register(spark: SparkSession): Unit = spark.experimental.synchronized {
     if (!spark.experimental.extraStrategies.contains(this))
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
   }

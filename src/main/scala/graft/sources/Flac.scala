@@ -782,91 +782,91 @@ object Flac {
   def writeSamples(df: DataFrame, path: String, sampleRate: Int = 16000,
       blockSize: Int = 4096): Unit = {
     import org.apache.spark.sql.functions.col
-    val chunkDir = Paths.get(path + ".chunks")
-    Files.createDirectories(chunkDir)
+    val chunkDir = Files.createDirectories(Paths.get(path + ".chunks"))
     val prefix = chunkDir.toString
     val bs = blockSize
     val rate = sampleRate
-    // frame-align partitions: bucket = idx / blockSize, ranged so each
-    // partition holds whole consecutive frames
-    val prepared = df.select((col("idx").cast("long") / bs).cast("long").as("frame"),
-        col("idx").cast("long").as("idx"), col("value").cast("int").as("value"))
-      .repartitionByRange(col("frame"))
-      .sortWithinPartitions("idx")
-    val stats = prepared.rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val out = new BufferedOutputStream(
-          new FileOutputStream(f"$prefix/part-$pid%05d.bin"), 1 << 20)
-        val frameStats = Array.newBuilder[(Long, Int, Int)] // (firstIdx, n, bytes)
-        try {
-          val buf = new Array[Int](bs)
-          var n = 0
-          var firstIdx = -1L
-          var expect = -1L
-          def flush(): Unit = if (n > 0) {
-            val fb = encodeFrame(firstIdx / bs, Array(java.util.Arrays.copyOf(buf, n)),
-              rate, n)
-            out.write(fb)
-            frameStats += ((firstIdx, n, fb.length))
-            n = 0
-          }
-          it.foreach { r =>
-            val idx = r.getLong(1)
-            require(expect < 0 || idx == expect,
-              s"sample idx gap at $idx (expected $expect) — frame must be contiguous")
-            expect = idx + 1
-            if (n == 0) firstIdx = idx
-            buf(n) = r.getInt(2)
-            n += 1
-            if (n == bs || (idx + 1) % bs == 0) flush()
-          }
-          flush()
-        } finally out.close()
-        Iterator.single((pid, frameStats.result()))
-      }
-    }.collect().sortBy(_._1)
-
-    val frameMeta = stats.flatMap(_._2)
-    require(frameMeta.zip(frameMeta.drop(1)).forall { case ((a, an, _), (b, _, _)) =>
-      a + an == b }, "partitions produced non-contiguous frames")
-    val totalSamples = frameMeta.map(_._2.toLong).sum
-    var off = 0L
-    val seeks = frameMeta.map { case (first, n, sz) =>
-      val s = (first, off, n); off += sz; s
-    }
-
-    val bw = new BitWriter
-    bw.writeBits(32, 0x664C6143L)
-    bw.writeBits(1, 0); bw.writeBits(7, 0); bw.writeBits(24, 34)
-    bw.writeBits(16, bs); bw.writeBits(16, bs)
-    bw.writeBits(24, 0); bw.writeBits(24, 0)
-    bw.writeBits(20, rate); bw.writeBits(3, 0); bw.writeBits(5, 15)
-    bw.writeBits(36, totalSamples)
-    (0 until 16).foreach(_ => bw.writeBits(8, 0))
-    bw.writeBits(1, 1); bw.writeBits(7, 3); bw.writeBits(24, 18 * seeks.length)
-    seeks.foreach { case (sample, o, n) =>
-      bw.writeBits(32, sample >>> 32); bw.writeBits(32, sample & 0xFFFFFFFFL)
-      bw.writeBits(32, o >>> 32); bw.writeBits(32, o & 0xFFFFFFFFL)
-      bw.writeBits(16, n)
-    }
-    val fos = new FileOutputStream(path)
     try {
-      fos.write(bw.result())
-      val dst = fos.getChannel
-      stats.foreach { case (pid, _) =>
-        val part = Paths.get(f"$prefix/part-$pid%05d.bin")
-        val src = java.nio.channels.FileChannel.open(part)
-        try {
-          val len = src.size()
-          var pos = 0L
-          while (pos < len) pos += dst.transferFrom(src, dst.position() + pos, len - pos)
-          dst.position(dst.position() + len)
-        } finally src.close()
-        Files.delete(part)
+      // frame-align partitions: bucket = idx / blockSize, ranged so each
+      // partition holds whole consecutive frames
+      val prepared = df.select((col("idx").cast("long") / bs).cast("long").as("frame"),
+          col("idx").cast("long").as("idx"), col("value").cast("int").as("value"))
+        .repartitionByRange(col("frame"))
+        .sortWithinPartitions("idx")
+      val stats = prepared.rdd.mapPartitionsWithIndex { (pid, it) =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val out = new BufferedOutputStream(
+            new FileOutputStream(f"$prefix/part-$pid%05d.bin"), 1 << 20)
+          val frameStats = Array.newBuilder[(Long, Int, Int)] // (firstIdx, n, bytes)
+          try {
+            val buf = new Array[Int](bs)
+            var n = 0
+            var firstIdx = -1L
+            var expect = -1L
+            def flush(): Unit = if (n > 0) {
+              val fb = encodeFrame(firstIdx / bs, Array(java.util.Arrays.copyOf(buf, n)),
+                rate, n)
+              out.write(fb)
+              frameStats += ((firstIdx, n, fb.length))
+              n = 0
+            }
+            it.foreach { r =>
+              val idx = r.getLong(1)
+              require(expect < 0 || idx == expect,
+                s"sample idx gap at $idx (expected $expect) — frame must be contiguous")
+              expect = idx + 1
+              if (n == 0) firstIdx = idx
+              buf(n) = r.getInt(2)
+              n += 1
+              if (n == bs || (idx + 1) % bs == 0) flush()
+            }
+            flush()
+          } finally out.close()
+          Iterator.single((pid, frameStats.result()))
+        }
+      }.collect().sortBy(_._1)
+
+      val frameMeta = stats.flatMap(_._2)
+      require(frameMeta.zip(frameMeta.drop(1)).forall { case ((a, an, _), (b, _, _)) =>
+        a + an == b }, "partitions produced non-contiguous frames")
+      val totalSamples = frameMeta.map(_._2.toLong).sum
+      var off = 0L
+      val seeks = frameMeta.map { case (first, n, sz) =>
+        val s = (first, off, n); off += sz; s
       }
-    } finally fos.close()
-    Files.delete(chunkDir)
+
+      val bw = new BitWriter
+      bw.writeBits(32, 0x664C6143L)
+      bw.writeBits(1, 0); bw.writeBits(7, 0); bw.writeBits(24, 34)
+      bw.writeBits(16, bs); bw.writeBits(16, bs)
+      bw.writeBits(24, 0); bw.writeBits(24, 0)
+      bw.writeBits(20, rate); bw.writeBits(3, 0); bw.writeBits(5, 15)
+      bw.writeBits(36, totalSamples)
+      (0 until 16).foreach(_ => bw.writeBits(8, 0))
+      bw.writeBits(1, 1); bw.writeBits(7, 3); bw.writeBits(24, 18 * seeks.length)
+      seeks.foreach { case (sample, o, n) =>
+        bw.writeBits(32, sample >>> 32); bw.writeBits(32, sample & 0xFFFFFFFFL)
+        bw.writeBits(32, o >>> 32); bw.writeBits(32, o & 0xFFFFFFFFL)
+        bw.writeBits(16, n)
+      }
+      val fos = new FileOutputStream(path)
+      try {
+        fos.write(bw.result())
+        val dst = fos.getChannel
+        stats.foreach { case (pid, _) =>
+          val part = Paths.get(f"$prefix/part-$pid%05d.bin")
+          val src = java.nio.channels.FileChannel.open(part)
+          try {
+            val len = src.size()
+            var pos = 0L
+            while (pos < len) pos += dst.transferFrom(src, dst.position() + pos, len - pos)
+            dst.position(dst.position() + len)
+          } finally src.close()
+          Files.delete(part)
+        }
+      } finally fos.close()
+    } finally Las.removeTree(chunkDir) // also after a failed job
   }
 
   private val sampleSchema = StructType(Seq(

@@ -9,6 +9,7 @@ import java.util.Comparator
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
@@ -447,54 +448,73 @@ object Las {
   private[sources] final case class Layout(minor: Int, pointFormat: Int, recordLen: Int,
       vlr: Array[Byte] = Array.emptyByteArray, chunkTable: Boolean = false)
 
+  /** One partition's side file: (points, bytes) per chunk and the
+    * extent of its points. */
+  private final case class Part(chunks: Array[(Int, Int)], extent: Extent)
+
+  /** The sink's task: quantize one partition's rows and encode them
+    * chunk by chunk into `side/part-<partition>.bin`; None when the
+    * partition is empty. A named class, not a closure, so submitting the
+    * job costs no closure cleaning (which re-reads class files). */
+  private final class EncodeTask[P](side: String, path: String, scale: Double,
+      enc: ChunkEncoder[P]) extends ((TaskContext, Iterator[InternalRow]) => Option[Part])
+      with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Option[Part] =
+      if (!rows.hasNext) None
+      else {
+        var xMin = Double.MaxValue; var xMax = Double.MinValue
+        var yMin = Double.MaxValue; var yMax = Double.MinValue
+        var zMin = Double.MaxValue; var zMax = Double.MinValue
+        val chunks = Array.newBuilder[(Int, Int)]
+        val buf = ArrayBuffer.empty[P]
+        val out = new BufferedOutputStream(
+          new FileOutputStream(f"$side/part-${ctx.partitionId()}%05d.bin"), 1 << 20)
+        def flush(): Unit = if (buf.nonEmpty) {
+          val bytes = enc.encode(buf.toArray(enc.tag))
+          out.write(bytes)
+          chunks += ((buf.length, bytes.length))
+          buf.clear()
+        }
+        try {
+          rows.foreach { r =>
+            require(!r.anyNull, s"a null among the columns written to $path")
+            val (x, y, z) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
+            xMin = math.min(xMin, x); xMax = math.max(xMax, x)
+            yMin = math.min(yMin, y); yMax = math.max(yMax, y)
+            zMin = math.min(zMin, z); zMax = math.max(zMax, z)
+            buf += enc.point(grid(x, scale, "x"), grid(y, scale, "y"), grid(z, scale, "z"), r)
+            if (buf.length == enc.chunkPoints) flush()
+          }
+          flush()
+        } finally out.close()
+        Some(Part(chunks.result(), Extent(xMin, xMax, yMin, yMax, zMin, zMax)))
+      }
+  }
+
   /** The one sink. Each partition quantizes its points, tracks their
-    * extent, and encodes them chunk by chunk into its own side file,
-    * returning only (points, bytes) per chunk and the extent. The driver
-    * folds those, writes header + VLR, splices the side files in
-    * partition order with zero-copy channel transfers and, for chunked
-    * LAZ, appends the chunk table and patches its offset. Point records
-    * never pass through the driver, so driver memory stays
-    * O(partitions + chunks). Returns the number of points written. */
+    * extent, and encodes them chunk by chunk into its own side file
+    * ([[EncodeTask]]), returning only (points, bytes) per chunk and the
+    * extent, all in one job. The driver folds those, writes header +
+    * VLR, splices the side files in partition order with zero-copy
+    * channel transfers and, for chunked LAZ, appends the chunk table and
+    * patches its offset. Point records never pass through the driver,
+    * so driver memory stays O(partitions + chunks). Returns the number
+    * of points written. */
   private[sources] def sink[P](df: DataFrame, path: String, scale: Double, layout: Layout,
       columns: Seq[Column], enc: ChunkEncoder[P]): Long = {
     val sideDir = Files.createDirectories(Paths.get(path + ".chunks"))
     val side = sideDir.toString
     val cols = Seq("x", "y", "z").map(c => col(c).cast(DoubleType)) ++ columns
     try {
-      val parts = df.select(cols: _*).queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          var xMin = Double.MaxValue; var xMax = Double.MinValue
-          var yMin = Double.MaxValue; var yMax = Double.MinValue
-          var zMin = Double.MaxValue; var zMax = Double.MinValue
-          val chunks = Array.newBuilder[(Int, Int)]
-          val buf = ArrayBuffer.empty[P]
-          val out = new BufferedOutputStream(new FileOutputStream(f"$side/part-$pid%05d.bin"), 1 << 20)
-          def flush(): Unit = if (buf.nonEmpty) {
-            val bytes = enc.encode(buf.toArray(enc.tag))
-            out.write(bytes)
-            chunks += ((buf.length, bytes.length))
-            buf.clear()
-          }
-          try {
-            rows.foreach { r =>
-              require(!r.anyNull, s"a null among the columns written to $path")
-              val (x, y, z) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
-              xMin = math.min(xMin, x); xMax = math.max(xMax, x)
-              yMin = math.min(yMin, y); yMax = math.max(yMax, y)
-              zMin = math.min(zMin, z); zMax = math.max(zMax, z)
-              buf += enc.point(grid(x, scale, "x"), grid(y, scale, "y"), grid(z, scale, "z"), r)
-              if (buf.length == enc.chunkPoints) flush()
-            }
-            flush()
-          } finally out.close()
-          Iterator.single((pid, chunks.result(), Extent(xMin, xMax, yMin, yMax, zMin, zMax)))
-        }
-      }.collect().sortBy(_._1)
+      val rows = df.select(cols: _*).queryExecution.toRdd
+      val results = new Array[Option[Part]](rows.getNumPartitions)
+      df.sparkSession.sparkContext.runJob(rows, new EncodeTask(side, path, scale, enc),
+        results.indices, (pid: Int, part: Option[Part]) => results(pid) = part)
+      val parts = results.indices.toArray.flatMap(pid => results(pid).map(pid -> _))
 
-      val chunks = parts.flatMap(_._2)
+      val chunks = parts.flatMap(_._2.chunks)
       val n = chunks.map(_._1.toLong).sum
-      val box = if (n == 0) Extent(0, 0, 0, 0, 0, 0) else parts.map(_._3).reduce(_ union _)
+      val box = if (n == 0) Extent(0, 0, 0, 0, 0, 0) else parts.map(_._2.extent).reduce(_ union _)
       val compressed = layout.vlr.nonEmpty
       val offsetToPoints = headerSize(layout.minor) + layout.vlr.length
       val out = new FileOutputStream(path)
@@ -504,12 +524,12 @@ object Las {
         out.write(layout.vlr)
         if (layout.chunkTable) out.write(new Array[Byte](8)) // patched once the table lands
         val dst = out.getChannel
-        parts.foreach { case (pid, cs, _) =>
+        parts.foreach { case (pid, written) =>
           val part = Paths.get(f"$side/part-$pid%05d.bin")
           val src = FileChannel.open(part)
           try {
             val len = src.size()
-            val want = cs.map(_._2.toLong).sum
+            val want = written.chunks.map(_._2.toLong).sum
             require(len == want, s"$part: $len bytes, expected $want")
             var pos = 0L
             while (pos < len) pos += dst.transferFrom(src, dst.position() + pos, len - pos)
@@ -531,7 +551,7 @@ object Las {
   /** Best-effort removal of a side-file directory: after a failed job
     * its cancelled tasks may still be writing, and the job's own error
     * is the one to report. */
-  private def removeTree(dir: Path): Unit =
+  private[sources] def removeTree(dir: Path): Unit =
     try {
       val tree = Files.walk(dir)
       try tree.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))

@@ -196,6 +196,20 @@ class FlacSpec extends AnyFunSuite {
     (0 until n).foreach(i => assert(chans(0)(i) == got(i.toLong)))
   }
 
+  test("a failed distributed write leaves no side files behind") {
+    val dir = java.nio.file.Files.createTempDirectory("flac_fail")
+    try {
+      // samples 100..199 are missing: the frame holding the gap fails its task
+      val df = ((0 until 100) ++ (200 until 300)).map(i => (i.toLong, i))
+        .toDF("idx", "value")
+      val path = dir.resolve("gap.flac").toString
+      val e = intercept[Exception](Flac.writeSamples(df, path, blockSize = 1024))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("sample idx gap")), e)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".chunks")))
+    } finally graft.operators.BlockStore.rmdir(dir)
+  }
+
   /** Subframe type byte of the first frame's first subframe: sync(2) +
     * hdr fields + one-byte utf8 idx + bs(2) + crc8(1) = 8 bytes in. */
   private def firstSubframeType(bytes: Array[Byte]): Int = {

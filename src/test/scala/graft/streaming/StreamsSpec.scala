@@ -4,9 +4,17 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamsSpec extends AnyFunSuite {
+class StreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  /** Every index and sink directory the suite writes, removed after it. */
+  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft_streams").toString
+
+  override def afterAll(): Unit =
+    try graft.operators.BlockStore.rmdir(java.nio.file.Paths.get(tmp))
+    finally super.afterAll()
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -509,7 +517,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("idempotent batch writer: replaying a batch never duplicates rows") {
     import spark.implicits._
-    val path = s"/tmp/graft_idem_${System.nanoTime()}"
+    val path = s"$tmp/graft_idem_${System.nanoTime()}"
     val w = Streams.idempotentBatchWriter(path)
     w(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
     w(Seq((3L, "c")).toDF("id", "v"), 1L)
@@ -522,8 +530,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming near-dup against the persisted index is replay-idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = s"/tmp/graft_stream_idx_${System.nanoTime()}"
-    val out = s"/tmp/graft_stream_idx_out_${System.nanoTime()}"
+    val idx = s"$tmp/graft_stream_idx_${System.nanoTime()}"
+    val out = s"$tmp/graft_stream_idx_out_${System.nanoTime()}"
     val corpus = Seq(
       (100L, "the quick brown fox jumps over the lazy dog again and again and again"),
       (101L, "an entirely different document about spark structured streaming state"))
@@ -563,8 +571,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming image dedup against the persisted dHash index is replay-idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = s"/tmp/graft_img_idx_${System.nanoTime()}"
-    val out = s"/tmp/graft_img_idx_out_${System.nanoTime()}"
+    val idx = s"$tmp/graft_img_idx_${System.nanoTime()}"
+    val out = s"$tmp/graft_img_idx_out_${System.nanoTime()}"
     val (w, h) = (32, 24)
     def base(x: Int, y: Int) = (x * 3 + y * 11) % 200
     def png(f: (Int, Int) => Int) =
@@ -609,8 +617,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming video dedup against the persisted signature index is replay-idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = s"/tmp/graft_vid_idx_${System.nanoTime()}"
-    val out = s"/tmp/graft_vid_idx_out_${System.nanoTime()}"
+    val idx = s"$tmp/graft_vid_idx_${System.nanoTime()}"
+    val out = s"$tmp/graft_vid_idx_out_${System.nanoTime()}"
     // 72x64 block-aligned MJPEG (the VideoNearDupSpec fixture): three
     // scenes with distinct gradients, brightness jumps of 70 between
     // scenes guarantee cuts, +1 within-scene wiggle
@@ -665,8 +673,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming audio dedup against the persisted fp index is replay-idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = s"/tmp/graft_aud_idx_${System.nanoTime()}"
-    val out = s"/tmp/graft_aud_idx_out_${System.nanoTime()}"
+    val idx = s"$tmp/graft_aud_idx_${System.nanoTime()}"
+    val out = s"$tmp/graft_aud_idx_out_${System.nanoTime()}"
     def rec(seed: Int, n: Int): Array[Int] =
       Array.tabulate(n)(k => ((seed * 23 + k * 11) % 4096) - 2048)
     val a = rec(7, 1500); val b = rec(19, 1100)
@@ -710,8 +718,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming crawl -> media extraction -> perceptual index dedup end to end") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = s"/tmp/graft_crawl_idx_${System.nanoTime()}"
-    val out = s"/tmp/graft_crawl_out_${System.nanoTime()}"
+    val idx = s"$tmp/graft_crawl_idx_${System.nanoTime()}"
+    val out = s"$tmp/graft_crawl_out_${System.nanoTime()}"
     val (w, h) = (32, 24)
     def base(x: Int, y: Int) = (x * 3 + y * 11) % 200
     def png(f: (Int, Int) => Int) =
@@ -767,8 +775,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming privacy scrub: detect -> strip -> self-check -> normalize -> index dedup") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = s"/tmp/graft_scrub_idx_${System.nanoTime()}"
-    val out = s"/tmp/graft_scrub_out_${System.nanoTime()}"
+    val idx = s"$tmp/graft_scrub_idx_${System.nanoTime()}"
+    val out = s"$tmp/graft_scrub_out_${System.nanoTime()}"
     val (w, h) = (32, 24)
     // block-constant content so the DC-only JPEG leg decodes exactly
     // to the same pixels as the GIF/PNG legs -> one dhash for all
