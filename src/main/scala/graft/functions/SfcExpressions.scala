@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{And, BinaryExpression, EqualTo, Expression, GreaterThanOrEqual, LeafExpression, LessThanOrEqual, Literal, Or, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
@@ -40,6 +41,58 @@ case class MortonEncode3D(first: Expression, second: Expression, third: Expressi
     defineCodeGen(ctx, ev, (x, y, z) => s"graft.core.Morton.encode($x, $y, $z)")
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression) = copy(first = a, second = b, third = c)
+}
+
+/** Spark's `round(v, d)` for a double, without its decimal detour on
+  * the common path. Spark rounds `BigDecimal.valueOf(v)` (the digits of
+  * `Double.toString`) HALF_UP to d places and converts back: one string
+  * rendering per call, three per keyed point. Here, for |v·10^d| < 2^31:
+  *  - d = 0 is exact with `floor` and a fraction test: every k + 0.5
+  *    below 2^52 is a double, so v's shortest decimal lies on the same
+  *    side of it as v;
+  *  - d = 2 takes the same test unless the fraction of v·100 lies
+  *    within 1e-6 of .5. The decimal and the product differ by less than
+  *    two ulps of 2^31 (< 5e-7), so outside that window they round
+  *    alike, and m/100.0 is exactly BigDecimal's `doubleValue` of m/100.
+  * Everything else takes Spark's own BigDecimal path. NaN and ±Inf pass
+  * through, and a result of zero is +0.0, as a BigDecimal has no -0. */
+object RoundKernels {
+  private val Limit = 2147483648.0 // 2^31
+
+  def halfUp(v: Double, d: Int): Double = {
+    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) return v
+    val a = if (d == 0) math.abs(v) else math.abs(v) * 100.0
+    if (a < Limit) {
+      val r = math.floor(a)
+      val f = a - r
+      if (d == 0 || math.abs(f - 0.5) > 1e-6) {
+        val m = if (f >= 0.5) r + 1.0 else r
+        if (m == 0.0) return 0.0
+        val q = if (d == 0) m else m / 100.0
+        return if (v < 0) -q else q
+      }
+    }
+    java.math.BigDecimal.valueOf(v).setScale(d, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+}
+
+/** `round(child, scale)` of a double column, scale 0 or 2, bit for bit
+  * as Spark's [[org.apache.spark.sql.catalyst.expressions.Round]]
+  * evaluates it ([[RoundKernels.halfUp]]) — the keying kernel of both
+  * point stores' import. */
+case class RoundHalfUp(child: Expression, scale: Int) extends UnaryExpression {
+  require(scale == 0 || scale == 2, s"round_half_up takes scale 0 or 2, got $scale")
+  override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"round_half_up takes a double, got ${child.dataType}")
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "round_half_up"
+  override protected def nullSafeEval(v: Any): Any =
+    RoundKernels.halfUp(v.asInstanceOf[Double], scale)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"graft.functions.RoundKernels.halfUp($v, $scale)")
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** Dimension `dim` (0 = x, 1 = y, 2 = z) of a d-way Morton key,
@@ -232,6 +285,10 @@ object sfc {
   /** Interleave three non-negative grid coordinates (<= 21 bits each). */
   def morton_encode(x: Column, y: Column, z: Column): Column =
     col(MortonEncode3D(expr(x), expr(y), expr(z)))
+
+  /** Spark's `round(v, scale)` of a column as a double, scale 0 or 2. */
+  def round_half_up(v: Column, scale: Int = 0): Column =
+    col(RoundHalfUp(expr(v.cast(DoubleType)), scale))
 
   /** Dimension `dim` (0 = x, 1 = y, 2 = z) of a d-way Morton key. */
   def morton_decode(m: Column, d: Int, dim: Int): Column = col(MortonDecode(expr(m), d, dim))

@@ -19,36 +19,45 @@ private[operators] final class BlockStore[P, B, M](
     valueCols: Seq[String],
     estBytesPerPoint: Long,
     packPartition: Iterator[P] => Iterator[B],
-    pointCount: M => Long)(
+    pointCount: M => Long,
+    tailLen: M => Int)(
     implicit pointEnc: Encoder[P], blockEnc: Encoder[B], metaEnc: Encoder[M]) {
 
   private val blockCols = Seq("sfc_head", "sfc_tail") ++ valueCols
 
   /** Range-shuffle keyed points on the head, sort each partition and
     * stream-pack it into blocks — the one pack of import, append and
-    * compaction. */
-  def pack(keyed: DataFrame): DataFrame =
+    * compaction, one task per range partition. The sort key is the
+    * whole Morton key, head << tailLen | tail: one non-negative long
+    * (at most 63 bits) ordered as (head, tail), so the sort takes its
+    * radix path instead of comparing rows, whose heads tie ~50 points
+    * deep. */
+  def pack(keyed: DataFrame, meta: M): DataFrame =
     keyed.repartitionByRange(keyed.sparkSession.sessionState.conf.numShufflePartitions,
       col("sfc_head"))
-      .sortWithinPartitions("sfc_head", "sfc_tail")
+      .sortWithinPartitions(shiftleft(col("sfc_head"), tailLen(meta)).bitwiseOR(col("sfc_tail")))
       .as[P](pointEnc)
       .mapPartitions(packPartition)(blockEnc)
       .toDF()
 
   /** The writer every path lands blocks through, so each writes the
-    * paged layout. Output sizing: the range partitioning is
-    * CPU-count-sized, so without this a small cloud lands as dozens of
-    * ~100 KB files whose per-file open cost + per-split task scheduling
-    * dominate every later scan (measured at sf0.1: a 3.2 MB store as 33
-    * files made each scan a 32-task stage). COALESCE — never
-    * repartition — so the sfc range clustering survives; the ~128 MB
-    * target keeps ceil(bytes/128 MB) files and full write parallelism
-    * at cluster scale. Coalescing to more partitions than exist changes
-    * nothing, so the plan is never run just to count them. */
+    * paged layout. Output sizing: the pack's range partitioning is
+    * CPU-count-sized, so written as it stands a small cloud lands as
+    * dozens of ~100 KB files whose per-file open cost + per-split task
+    * scheduling dominate every later scan (measured at sf0.1: a 3.2 MB
+    * store as 33 files made each scan a 32-task stage). So the packed
+    * blocks — about store-size bytes — move to ceil(bytes / 128 MB)
+    * partitions by a range shuffle on the head, each sorted on it, and
+    * every file stays one head-clustered range. The shuffle is wide, so
+    * the sort and pack above it keep one task per range partition; a
+    * coalesce would be narrow and run them in the writer's few tasks
+    * (one below ~16M points). One output partition needs no range
+    * sample, so below that the move is one plain exchange. */
   private def writer(blocks: DataFrame, points: Long): DataFrameWriter[Row] = {
     val target = 128L << 20
     val nOut = math.max(1L, (points * estBytesPerPoint + target - 1) / target)
-    blocks.coalesce(math.min(nOut, Int.MaxValue).toInt).write
+    blocks.repartitionByRange(math.min(nOut, Int.MaxValue).toInt, col("sfc_head"))
+      .sortWithinPartitions("sfc_head").write
       .option("parquet.page.row.count.limit", BlockStore.BlocksPerPage.toLong)
   }
 
@@ -112,7 +121,7 @@ private[operators] final class BlockStore[P, B, M](
     val keyed = blocks
       .select(col("sfc_head"), explode(arrays_zip(arrays.map(col): _*)).as("p"))
       .select(col("sfc_head") +: arrays.map(c => col(s"p.$c").as(c)): _*)
-    writer(pack(keyed), pointCount(composed))
+    writer(pack(keyed, composed), pointCount(composed))
       .mode("overwrite").parquet(s"$dir/blocks_compacting")
     val live = Paths.get(s"$dir/blocks")
     val old = Paths.get(s"$dir/blocks_old")

@@ -52,7 +52,7 @@ final case class BatchLedgerRow(__batch: Long, n: Long,
 
 object PointCloud {
   private val store = new BlockStore[(Long, Long, Double), PointBlock, CloudMeta](
-    Seq("z"), estBytesPerPoint = 8L, packSorted, _.pointCount)(
+    Seq("z"), estBytesPerPoint = 8L, packSorted, _.pointCount, _.tailLen)(
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble),
     Encoders.product[PointBlock], Encoders.product[CloudMeta])
 
@@ -67,7 +67,9 @@ object PointCloud {
     * the 100 TB-safe form (SURVEY §2.5 A1).
     *
     * Divergence from the reference: Python round() is banker's rounding;
-    * Spark round() is HALF_UP. Identical on any grid where coordinates
+    * quantizing here is HALF_UP, Spark's round() bit for bit through the
+    * keying kernel [[graft.functions.RoundKernels.halfUp]] (no
+    * BigDecimal per point). Identical on any grid where coordinates
     * don't land exactly on .5 after scaling (all fixtures use integer
     * grids).
     */
@@ -92,11 +94,11 @@ object PointCloud {
       spec.scaleX, spec.scaleY, spec.scaleZ, spec.offX, spec.offY, spec.offZ,
       s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
       s.getDouble(5), s.getDouble(6))
-    new BlockedCloud(spark, store.pack(keyPoints(points, meta)), meta)
+    new BlockedCloud(spark, store.pack(keyPoints(points, meta), meta), meta)
   }
 
   private def quantize(c: Column, off: Double, scale: Double): Column =
-    round((c - lit(off)) / lit(scale)).cast(LongType)
+    sfc.round_half_up((c - lit(off)) / lit(scale)).cast(LongType)
 
   /** Quantized (x, y) maxima of a batch with stats `s` (count, then
     * min and max of x, y, z) on the grid (off, scale), after the grid
@@ -120,7 +122,7 @@ object PointCloud {
     points.select(
       shiftright(mkey, meta.tailLen).as("sfc_head"),
       mkey.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("sfc_tail"),
-      round(col("z"), 2).as("z")) // z kept at 2 decimals (point_processor.py:47)
+      sfc.round_half_up(col("z"), 2).as("z")) // z kept at 2 decimals (point_processor.py:47)
   }
 
   /** Entry point 1 of the reference (importer.py): import LAS file(s)
@@ -144,9 +146,10 @@ object PointCloud {
       PointBlock(head, tails.result(), zs.result())
     }
 
-  /** Version of the on-disk block layout. Stores cached across runs key
-    * on it, so a layout change re-imports instead of serving old files. */
-  private[graft] val LayoutVersion: Int = 2
+  /** Version of the on-disk block layout and of the import that writes
+    * it. Stores cached across runs key on it, so a layout, keying or
+    * writer change re-imports instead of serving old files. */
+  private[graft] val LayoutVersion: Int = 3
 
   /** Persist blocks + metadata. */
   def write(cloud: BlockedCloud, dir: String): Unit =
@@ -179,7 +182,7 @@ object PointCloud {
     val meta = store.readMeta(spark, dir)
     BlockStore.extents(delta, col("x"), col("y"), col("z")).foreach { s =>
       gridMax(s, meta.offX, meta.scaleX, meta.offY, meta.scaleY, meta.headLen + meta.tailLen)
-      store.landBatch(dir, store.pack(keyPoints(delta, meta)), s.getLong(0), batchId,
+      store.landBatch(dir, store.pack(keyPoints(delta, meta), meta), s.getLong(0), batchId,
         spark.createDataset(Seq(BatchLedgerRow(batchId, s.getLong(0),
           s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
           s.getDouble(5), s.getDouble(6))))(Encoders.product[BatchLedgerRow]).toDF())

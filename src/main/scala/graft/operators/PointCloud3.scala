@@ -26,15 +26,15 @@ object PointCloud3 {
   // z rides inside the Morton key here, so rows are narrower than the
   // 2D store's (sfc_tail, z double) pairs — ~6 B/pt measured
   private val store = new BlockStore[(Long, Long), PointBlock3, Cloud3Meta](
-    Nil, estBytesPerPoint = 6L, packSorted, _.pointCount)(
+    Nil, estBytesPerPoint = 6L, packSorted, _.pointCount, _.tailLen)(
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
     Encoders.product[PointBlock3], Encoders.product[Cloud3Meta])
 
   /** Grid coordinates (xq, yq, zq) of (x, y, z) points: x/y on the
     * integer grid, z at 1/zDenom. */
   private def quantized(zDenom: Double): Seq[Column] = Seq(
-    round(col("x")).cast(LongType), round(col("y")).cast(LongType),
-    round(col("z") * zDenom).cast(LongType))
+    sfc.round_half_up(col("x")).cast(LongType), sfc.round_half_up(col("y")).cast(LongType),
+    sfc.round_half_up(col("z") * zDenom).cast(LongType))
 
   /** (x, y, z) points -> (sfc_head, sfc_tail) under a key split. */
   private def keyPoints(points: DataFrame, zDenom: Double, tailLen: Int): DataFrame = {
@@ -57,8 +57,9 @@ object PointCloud3 {
     val totalBits = Morton.bitLength(Morton.encode(qxMax, qyMax, qzMax)).max(2)
     val headLen = math.min(totalBits, math.max(0, (totalBits * ratio).toInt))
     val tailLen = totalBits - headLen
-    new BlockedCloud3(points.sparkSession, store.pack(keyPoints(points, zDenom, tailLen)),
-      Cloud3Meta(name, s.getLong(0), headLen, tailLen, zDenom, qxMax, qyMax, qzMax))
+    val meta = Cloud3Meta(name, s.getLong(0), headLen, tailLen, zDenom, qxMax, qyMax, qzMax)
+    new BlockedCloud3(points.sparkSession, store.pack(keyPoints(points, zDenom, tailLen), meta),
+      meta)
   }
 
   /** 3D blocks from a head-then-tail sorted stream, one block in memory. */
@@ -88,7 +89,7 @@ object PointCloud3 {
     val meta = store.readMeta(spark, dir)
     BlockStore.extents(delta, quantized(meta.zDenom): _*).foreach { s =>
       BlockStore.guardGrid(3, (1 to 6).map(s.getLong), meta.headLen + meta.tailLen)
-      store.landBatch(dir, store.pack(keyPoints(delta, meta.zDenom, meta.tailLen)),
+      store.landBatch(dir, store.pack(keyPoints(delta, meta.zDenom, meta.tailLen), meta),
         s.getLong(0), batchId,
         spark.createDataset(Seq((batchId, s.getLong(0))))(
           Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).toDF("__batch", "n"))

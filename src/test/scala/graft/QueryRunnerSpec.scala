@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Bbox, Circle}
 import graft.operators.{ImportSpec, PointCloud}
+import graft.sources.TempDir
 
-class QueryRunnerSpec extends AnyFunSuite {
+class QueryRunnerSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -53,7 +54,7 @@ class QueryRunnerSpec extends AnyFunSuite {
 
   test("run attempts every query and returns the failure count") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_qr_run")
+    val base = Paths.get(tmpSubdir("graft_qr_run"))
     PointCloud.write(cloud, base.resolve("qr").toString)
     val specFile = base.resolve("spec.json")
     Files.writeString(specFile, """{"queries": {

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PointCloud3Spec extends AnyFunSuite {
+import graft.sources.TempDir
+
+class PointCloud3Spec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -118,7 +120,7 @@ class PointCloud3Spec extends AnyFunSuite {
     Seq((5.5, 5.5, 1.0, 9), (-100.0, 40.0, 3.0, 4))
       .foreach { case (px, py, pz, k) => checkKnn(tinyCloud, tiny, px, py, pz, k) }
     // a stored cloud with an appended delta batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_knn_delta").toString
+    val dir = tmpSubdir("graft_pc3_knn_delta")
     PointCloud3.write(randomCloud, dir)
     val delta = (1 to 400).map(_ =>
       (150.0 + rng.nextInt(50), 10.0 + rng.nextInt(30), rng.nextInt(1000) / 100.0))
@@ -137,7 +139,7 @@ class PointCloud3Spec extends AnyFunSuite {
   }
 
   test("streamed 3D appends are exactly-once and equal a batch rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_stream").toString
+    val dir = tmpSubdir("graft_pc3_stream")
     val rng = new scala.util.Random(23)
     def cloudPts(n: Int) = (1 to n).map { _ =>
       (rng.nextInt(100).toDouble, rng.nextInt(100).toDouble,
@@ -191,7 +193,7 @@ class PointCloud3Spec extends AnyFunSuite {
   }
 
   test("a 3D append past the 21-bit grid cap is rejected, naming the coordinate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_wide").toString
+    val dir = tmpSubdir("graft_pc3_wide")
     PointCloud3.write(PointCloud3.importPoints(
       Seq((0.0, 0.0, 0.0), (99.0, 99.0, 29.99)).toDF("x", "y", "z")), dir)
     // 2^21 + 1 used to be masked to x = 1 by the 3-way interleave and
@@ -201,6 +203,16 @@ class PointCloud3Spec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("quantized x"))
     assert(PointCloud3.read(spark, dir).meta.pointCount == 2)
+  }
+
+  test("3D import sorts and packs in one task per range partition, on one long key") {
+    val rng = new scala.util.Random(61)
+    val pts = (1 to 5000).map { _ =>
+      (rng.nextInt(100).toDouble, rng.nextInt(100).toDouble, rng.nextInt(3000) / 100.0)
+    }
+    val c = PointCloud3.importPoints(pts.toDF("x", "y", "z"))
+    val dir = tmpSubdir("graft_pc3_pack")
+    PackStage.assertParallelPack(spark, c.blocks, c.meta.pointCount, dir)(PointCloud3.write(c, dir))
   }
 
   test("importing an empty 3D cloud fails with the empty-cloud message") {
@@ -215,7 +227,7 @@ class PointCloud3Spec extends AnyFunSuite {
     val pts = (1 to 5000).map { _ =>
       (rng.nextInt(100).toDouble, rng.nextInt(100).toDouble, rng.nextInt(3000) / 100.0)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_plan").toString
+    val dir = tmpSubdir("graft_pc3_plan")
     PointCloud3.write(
       PointCloud3.importPoints(pts.toDF("x", "y", "z"), zDenom = 100.0, ratio = 0.5), dir)
     val c = PointCloud3.read(spark, dir)
@@ -242,7 +254,7 @@ class PointCloud3Spec extends AnyFunSuite {
     val pts = (1 to 5000).map { _ =>
       (rng.nextInt(100).toDouble, rng.nextInt(100).toDouble, rng.nextInt(3000) / 100.0)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc3_shape").toString
+    val dir = tmpSubdir("graft_pc3_shape")
     PointCloud3.write(
       PointCloud3.importPoints(pts.toDF("x", "y", "z"), zDenom = 100.0, ratio = 0.5), dir)
     val c = PointCloud3.read(spark, dir)

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Bbox, Circle, Geometry}
 import graft.queries.PointCloudQueries
+import graft.sources.TempDir
 
-class PointCloudSpec extends AnyFunSuite {
+class PointCloudSpec extends AnyFunSuite with TempDir {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -31,7 +32,7 @@ class PointCloudSpec extends AnyFunSuite {
       .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))).toSeq.sorted
 
   test("csv block sink renders pg-COPY array literals") {
-    val dir = "/tmp/graft_csv_sink"
+    val dir = tmp("csv_sink")
     PointCloud.writeCsv(cloud, dir)
     val back = spark.read.option("header", "true").csv(dir)
     assert(back.columns.toSeq == Seq("sfc_head", "sfc_tail", "z"))
@@ -237,7 +238,7 @@ class PointCloudSpec extends AnyFunSuite {
     Seq((5.5, 5.5, 9), (-100.0, 40.0, 5), (6.0, 3.0, 1000))
       .foreach { case (px, py, k) => checkKnn(tinyCloud, tiny, px, py, k) }
     // a stored cloud with an appended delta, partly outside the base extent
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_knn_delta").toString
+    val dir = tmpSubdir("graft_pc_knn_delta")
     PointCloud.write(randomCloud, dir)
     val delta = (1 to 400).map(_ =>
       (900.0 + rng.nextInt(120), 20.0 + rng.nextInt(50), rng.nextInt(5000) / 100.0))
@@ -248,7 +249,7 @@ class PointCloudSpec extends AnyFunSuite {
   }
 
   test("batch knn ≡ brute force per query, outside and repeated query points included") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_knn_batch").toString
+    val dir = tmpSubdir("graft_pc_knn_batch")
     PointCloud.write(cloud, dir)
     val stored = PointCloud.read(spark, dir)
     val queries = Seq((1L, 3000.5, 3000.5), (2L, 1000.25, 5000.75), (3L, 7000.5, 500.5),
@@ -291,8 +292,20 @@ class PointCloudSpec extends AnyFunSuite {
     }
   }
 
+  test("import sorts and packs in one task per range partition, on one long key") {
+    val dir = tmpSubdir("graft_pc_pack")
+    PackStage.assertParallelPack(spark, cloud.blocks, cloud.meta.pointCount, dir)(
+      PointCloud.write(cloud, dir))
+  }
+
+  test("a NaN coordinate fails the import with NumberFormatException") {
+    import spark.implicits._
+    val nan = Seq((0.0, 0.0, 0.0), (Double.NaN, 1.0, 1.0)).toDF("x", "y", "z")
+    intercept[NumberFormatException](PointCloud.importPoints(nan, ImportSpec(ratio = 0.5)))
+  }
+
   test("write/read roundtrip preserves query results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_test").toString
+    val dir = tmpSubdir("graft_pc_test")
     PointCloud.write(cloud, dir)
     val re = PointCloud.read(spark, dir)
     val b = Bbox(1000, 1050, 2000, 2050)
@@ -302,7 +315,7 @@ class PointCloudSpec extends AnyFunSuite {
 
   test("append keeps queries correct; compact restores the unique-head layout") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_appc").toString
+    val dir = tmpSubdir("graft_pc_appc")
     val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
     val delta = (0 until 100).map(i => ((i % 10) * 10.0 + 5.0, (i / 10) * 10.0 + 5.0, -i.toDouble))
     val spec = ImportSpec(ratio = 0.5)
@@ -330,7 +343,7 @@ class PointCloudSpec extends AnyFunSuite {
   test("compact crash window (meta written, delta not yet deleted) stays consistent") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_pc_crash").toString
+    val dir = tmpSubdir("graft_pc_crash")
     val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
     val delta = (0 until 100).map(i => ((i % 10) * 10.0 + 5.0, (i / 10) * 10.0 + 5.0, -i.toDouble))
     PointCloud.write(PointCloud.importPoints(base.toDF("x", "y", "z"), ImportSpec(ratio = 0.5)), dir)
@@ -350,7 +363,7 @@ class PointCloudSpec extends AnyFunSuite {
         else Files.copy(p, t)
       } finally s.close()
     }
-    val snap = Files.createTempDirectory("graft_pc_crash_snap").toString
+    val snap = tmpSubdir("graft_pc_crash_snap")
     copyTree(s"$dir/blocks_delta", s"$snap/blocks_delta")
     copyTree(s"$dir/counts", s"$snap/counts")
     PointCloud.compact(spark, dir)
@@ -376,7 +389,7 @@ class PointCloudSpec extends AnyFunSuite {
 
   test("streamed 2D appends are exactly-once and equal a batch rebuild") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_stream").toString
+    val dir = tmpSubdir("graft_pc_stream")
     val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
     val d1 = (0 until 90).map(i => ((i % 10) * 10.0 + 5.0, (i / 10) * 10.0 + 5.0, -i.toDouble))
     val d2 = (0 until 60).map(i => ((i % 12) * 15.0 + 2.0, (i / 12) * 15.0 + 2.0, i * 2.0))
@@ -487,7 +500,7 @@ class PointCloudSpec extends AnyFunSuite {
 
   test("append beyond the stored key-space envelope is rejected") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_appx").toString
+    val dir = tmpSubdir("graft_pc_appx")
     val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
     PointCloud.write(
       PointCloud.importPoints(base.toDF("x", "y", "z"), ImportSpec(ratio = 0.5)), dir)
@@ -514,7 +527,7 @@ class PointCloudSpec extends AnyFunSuite {
       PointCloud.importPoints(wide, ImportSpec(ratio = 0.5))
     }
     assert(e.getMessage.contains("quantized x max"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_wide").toString
+    val dir = tmpSubdir("graft_pc_wide")
     PointCloud.write(PointCloud.importPoints(
       Seq((0.0, 0.0, 0.0), (190.0, 190.0, 1.0)).toDF("x", "y", "z"), ImportSpec(ratio = 0.5)), dir)
     val meta0 = PointCloud.read(spark, dir).meta
@@ -553,7 +566,7 @@ class PointCloudSpec extends AnyFunSuite {
   }
 
   test("every 2D selection reads the store in one scan, never a union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_plan").toString
+    val dir = tmpSubdir("graft_pc_plan")
     PointCloud.write(cloud, dir)
     val stored = PointCloud.read(spark, dir)
     val b = Bbox(1000, 1300, 2000, 2300)
@@ -582,7 +595,7 @@ class PointCloudSpec extends AnyFunSuite {
 
   test("a small bbox reads under 10% of the stored blocks, also after compact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_prune").toString
+    val dir = tmpSubdir("graft_pc_prune")
     // 256 x 256 unit grid at 4 points per block: 16384 blocks, 128 pages
     val base = (0 until 65536).map(i => ((i % 256).toDouble, (i / 256).toDouble, (i % 7).toDouble))
     PointCloud.write(PointCloud.importPoints(base.toDF("x", "y", "z"),
@@ -612,7 +625,7 @@ class PointCloudSpec extends AnyFunSuite {
   }
 
   test("selections that differ only in geometry share one compiled class") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_shape").toString
+    val dir = tmpSubdir("graft_pc_shape")
     PointCloud.write(cloud, dir)
     val stored = PointCloud.read(spark, dir)
     def poly(x0: Double, y0: Double, s: Double) = Geometry.parseWktPolygon(
@@ -647,7 +660,7 @@ class PointCloudSpec extends AnyFunSuite {
   }
 
   test("the head cover is pushed to the scan and kept out of the row filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_cover").toString
+    val dir = tmpSubdir("graft_pc_cover")
     PointCloud.write(cloud, dir)
     val q = PointCloud.read(spark, dir).bboxQuery(Bbox(1000, 1300, 2000, 2300))
     val plan = q.queryExecution.executedPlan
@@ -666,7 +679,7 @@ class PointCloudSpec extends AnyFunSuite {
   }
 
   test("a pushed_ranges filter planned without the scan strategy returns the same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_nostrategy").toString
+    val dir = tmpSubdir("graft_pc_nostrategy")
     PointCloud.write(cloud, dir)
     val ranges = graft.core.MortonRange.decompose(Bbox(1000, 1800, 2000, 2300),
       cloud.meta.headLen + cloud.meta.tailLen, cloud.meta.tailLen, maxCells = 256).all

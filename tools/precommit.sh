@@ -3,15 +3,18 @@
 # commit containing one uncompiled file zeroed the round's entire
 # correctness/bench signal). Usage: tools/precommit.sh [--smoke|--plans]
 #   default  : sbt compile + Test/compile must both succeed
-#   --smoke  : additionally runs twenty sf0.001 pc_* queries through
-#              Verify and checks them against their DuckDB oracle: over
-#              the 2D store a bbox, an empty bbox, a bbox with maxz and
-#              one with minz, a circle, polygons with one and two holes,
-#              a polyline buffer and the single and batch kNN (so every
-#              prepared-selection shape has an oracle row), two
+#   --smoke  : additionally runs twenty-two sf0.001 pc_* queries
+#              through Verify and checks them against their DuckDB
+#              oracle: over the 2D store the catalog row, a bbox, a large
+#              bbox that reads many blocks, an empty bbox, a bbox with
+#              maxz and one with minz, a circle, polygons with one and
+#              two holes, a polyline buffer and the single and batch kNN
+#              (so every prepared-selection shape has an oracle row), two
 #              selections and the kNN over the 3D store, and the seven
 #              LAS/LAZ sink -> scan roundtrips (LAS, LAZ pf0, pointwise
-#              v1, extra bytes, pf5 wave, layered pf8 and pf9 wave)
+#              v1, extra bytes, pf5 wave, layered pf8 and pf9 wave). The
+#              stores are imported by the code under test whenever
+#              PointCloud.LayoutVersion moves.
 #   --plans  : additionally regenerates the plan-fingerprint board at
 #              sf0.01 and diffs it against the committed round board —
 #              a lost pushdown / strategy flip / new exchange fails
@@ -24,7 +27,7 @@ cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile
 if [[ "${1:-}" == "--smoke" ]]; then
   rm -rf /tmp/precommit_smoke
-  SPARK_GRAFT_ONLY=pc_bbox_small,pc_bbox_empty,pc_bbox_maxz,pc_bbox_minz,pc_poly_2holes,pc_circle,pc_poly_hole,pc_polyline_buffer,pc_knn,pc_knn_batch,pc_bbox3d,pc_poly_3d,pc_knn_3d,pc_las_roundtrip,pc_laz_roundtrip,pc_laz_v1_roundtrip,pc_laz_extra,pc_laz_wave_roundtrip,pc_laz14_roundtrip,pc_laz14_wave_roundtrip sbt -batch \
+  SPARK_GRAFT_ONLY=pc_metadata,pc_bbox_small,pc_bbox_large,pc_bbox_empty,pc_bbox_maxz,pc_bbox_minz,pc_poly_2holes,pc_circle,pc_poly_hole,pc_polyline_buffer,pc_knn,pc_knn_batch,pc_bbox3d,pc_poly_3d,pc_knn_3d,pc_las_roundtrip,pc_laz_roundtrip,pc_laz_v1_roundtrip,pc_laz_extra,pc_laz_wave_roundtrip,pc_laz14_roundtrip,pc_laz14_wave_roundtrip sbt -batch \
     'runMain graft.Verify /root/testdata/sf0.001 /tmp/precommit_smoke'
   python3 tools/check_oracle.py /root/testdata/sf0.001 /tmp/precommit_smoke
 fi
