@@ -59,7 +59,7 @@ object MortonRange {
     *                  partial cells are flushed as coarse partial ranges
     *                  (a correct superset — exact refinement still applies)
     */
-  private def decompose(lo: Array[Double], hi: Array[Double], totalBits: Int, tailBits: Int,
+  def decompose(lo: Array[Double], hi: Array[Double], totalBits: Int, tailBits: Int,
       maxCells: Int): HeadRanges = {
     val d = lo.length
     require(totalBits >= tailBits && tailBits >= 0, s"bad split $totalBits/$tailBits")

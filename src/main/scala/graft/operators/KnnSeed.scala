@@ -57,16 +57,16 @@ private[operators] final class KnnSeed private (
 
 private[operators] object KnnSeed {
 
-  /** The seed of a store whose blocks are keyed by a d-way Morton key,
-    * d = off.length, whose grid coordinates reach `gridMax` — one
-    * pruned aggregate job. The prefix is the longest (at most the head)
-    * whose cells over [0, gridMax] number ≤ 4096, so a dimension whose
-    * range is narrower than the others' does not waste prefix bits.
-    * `gridMax` only sizes the cells: a wrong value coarsens or refines
-    * the seed, never breaks its bound. */
-  def collect(blocks: DataFrame, headLen: Int, tailLen: Int, gridMax: Array[Long],
-      off: Array[Double], scale: Array[Double]): KnnSeed = {
-    val d = off.length
+  /** The seed of a store whose blocks are keyed by a d-way Morton key
+    * over the grid `axes`, d = axes.length — one pruned aggregate job.
+    * The prefix is the longest (at most the head) whose cells over
+    * [0, max] per axis number ≤ 4096, so a dimension whose range is
+    * narrower than the others' does not waste prefix bits. `max` only
+    * sizes the cells: a wrong value coarsens or refines the seed, never
+    * breaks its bound. */
+  def collect(blocks: DataFrame, headLen: Int, tailLen: Int, axes: Seq[GridAxis]): KnnSeed = {
+    val d = axes.length
+    val gridMax = axes.map(_.max)
     // dimension i holds the key bits i, i + d, … below bit `rem`
     def sides(rem: Int) = Array.tabulate(d)(i => 1L << ((rem - i + d - 1) / d))
     def nCells(rem: Int) =
@@ -78,7 +78,7 @@ private[operators] object KnnSeed {
       .groupBy(shiftright(col("sfc_head"), rem - tailLen).as("c"))
       .agg(sum(size(col("sfc_tail"))).cast("long"))
       .collect()
-    new KnnSeed(off, scale, side,
+    new KnnSeed(axes.map(_.off).toArray, axes.map(_.scale).toArray, side,
       rows.map(r => Array.tabulate(d)(i => Morton.decode(r.getLong(0) << rem, d, i) / side(i))),
       rows.map(_.getLong(1)))
   }

@@ -252,107 +252,75 @@ object PointCloud {
   }
 }
 
-/** A stored point cloud + its catalog row; all queries are lazy DataFrames
-  * following the reference's filter-refine plan (retrieve_data.py:103-153):
-  * driver-side Morton range decomposition -> ONE scan filtered on the
-  * `pushed_ranges` head predicate, whose coarse cover the
-  * `graft.plans.PushedRangeScan` strategy (registered here) pushes to
-  * parquet for page pruning -> block explode + decode -> exact
-  * geometric predicate. Every per-query constant (bounds, centres,
-  * radii, segment endpoints, z cuts) enters the plan as a bound
-  * `QueryParam`, never a literal, so selections of one shape compile
-  * one class however their geometry varies. Each selection is a
-  * prepared one ([[SelectionTemplates]]): the plan of its [[Shape]] is
-  * analyzed and optimized once per opened cloud, and every query binds
-  * its own values into a copy of it. No mid-query materialization, no
-  * per-point driver work (the reference's INSERT-per-point loop,
-  * retrieve_data.py:150-151, is the anti-pattern this replaces).
-  */
+/** A stored point cloud + its catalog row; all queries are lazy
+  * DataFrames. Its selections run through the [[SelectionCore]] both
+  * blocked clouds share, on the (x, y) grid with a cover budget of 256
+  * ranges; every per-query constant (bounds, centres, radii, segment
+  * endpoints, z cuts) enters the plan as a bound `QueryParam`, never a
+  * literal. What is 2D-only lives here: the explode, which decodes x
+  * and y from the key and carries z from its array, the exact
+  * predicates, the batch kNN and the grid operators. No per-point
+  * driver work (the reference's INSERT-per-point loop,
+  * retrieve_data.py:150-151, is the anti-pattern this replaces). */
 final class BlockedCloud(
     val spark: SparkSession,
     val blocks: DataFrame,
     val meta: CloudMeta) {
+  import SelectionCore.{dist2, Contained}
 
-  private val templates = new SelectionTemplates(spark)
+  private val core = {
+    def axis(off: Double, scale: Double, max: Double) =
+      GridAxis(off, scale, math.round((max - off) / scale).max(0L), v => (v - off) / scale)
+    new SelectionCore(spark, blocks, meta.headLen, meta.tailLen,
+      Seq(axis(meta.offX, meta.scaleX, meta.xMax), axis(meta.offY, meta.scaleY, meta.yMax)),
+      budget = 256, (blk, tag) => explodePoints(blk, Some(tag)))
+  }
 
   /** The shapes this cloud holds a selection template for. */
-  private[operators] def templateShapes: Set[Shape] = templates.shapes
-
-  private def totalBits: Int = meta.headLen + meta.tailLen
-
-  /** Translate an original-coordinate bbox to the quantized grid such
-    * that grid coord q in [qMin..qMax] implies q*scale+off in [min..max]. */
-  private def quantizedBbox(b: Bbox): Option[Bbox] = {
-    val qxMin = math.max(0L, math.ceil((b.xMin - meta.offX) / meta.scaleX).toLong)
-    val qxMax = math.floor((b.xMax - meta.offX) / meta.scaleX).toLong
-    val qyMin = math.max(0L, math.ceil((b.yMin - meta.offY) / meta.scaleY).toLong)
-    val qyMax = math.floor((b.yMax - meta.offY) / meta.scaleY).toLong
-    if (qxMin > qxMax || qyMin > qyMax) None
-    else Some(Bbox(qxMin.toDouble, qxMax.toDouble, qyMin.toDouble, qyMax.toDouble))
-  }
+  private[operators] def templateShapes: Set[Shape] = core.shapes
 
   /** Unpack blocks to reconstructed points (x, y, z) — the reference's
     * explode-decode loop (retrieve_data.py:127-145) as a lazy plan:
     * arrays_zip → explode → native decode expressions, all inside
     * whole-stage codegen. A `contained` per-block flag rides along to
-    * every point of the block as the [[SfcPredicates.Contained]] column. */
+    * every point of the block as the [[SelectionCore.Contained]] column. */
   private def explodePoints(blk: DataFrame, contained: Option[Column] = None): DataFrame = {
     val key = shiftleft(col("sfc_head"), meta.tailLen).bitwiseOR(col("p.sfc_tail"))
-    val tag = contained.map(_.as(SfcPredicates.Contained)).toSeq
+    val tag = contained.map(_.as(Contained)).toSeq
     blk.select((col("sfc_head") +: tag :+
         explode(arrays_zip(col("sfc_tail"), col("z"))).as("p")): _*)
       .select(Seq(
         (sfc.morton_decode(key, 2, 0).cast("double") * meta.scaleX + meta.offX).as("x"),
         (sfc.morton_decode(key, 2, 1).cast("double") * meta.scaleY + meta.offY).as("y"),
-        col("p.z").as("z")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
+        col("p.z").as("z")) ++ tag.map(_ => col(Contained)): _*)
   }
 
-  /** Filter step: the points of every block of the head cover `hr`,
-    * read by ONE scan and tagged [[SfcPredicates.Contained]] when their
-    * block lies wholly inside the query bbox — the reference's two-tier
-    * refinement (retrieve_data.py:128-145) as a per-block flag rather
-    * than a second scan. */
-  private def candidates(hr: HeadRanges): DataFrame = {
-    val (blk, tag) = SfcPredicates.candidateBlocks(blocks, hr)
-    explodePoints(blk, Some(tag))
-  }
-
-  /** The head cover of a bbox: empty when it holds no grid point. The
-    * 256-range budget bounds the predicate at any data scale; a coarser
-    * cover only moves blocks from contained to partial. */
-  private def cover(b: Bbox): HeadRanges = quantizedBbox(b)
-    .map(MortonRange.decompose(_, totalBits, meta.tailLen, maxCells = 256))
-    .getOrElse(HeadRanges(Vector.empty, Vector.empty))
+  /** The (min, max) bounds of a bbox, per dimension. */
+  private def bounds(b: Bbox): Seq[(Double, Double)] = Seq(b.xMin -> b.xMax, b.yMin -> b.yMax)
 
   private def xyz(df: DataFrame): DataFrame = df.select("x", "y", "z")
 
   /** All points with x in [xMin, xMax] and y in [yMin, yMax] (inclusive);
     * points of contained blocks skip the exact test. */
-  def bboxQuery(b: Bbox): DataFrame = {
-    val p = new Bindings(cover(b))
-    val exact = col(SfcPredicates.Contained) ||
+  def bboxQuery(b: Bbox): DataFrame = core.select("bbox", bounds(b)) { (p, _) =>
+    val exact = col(Contained) ||
       (col("x") >= p(b.xMin) && col("x") <= p(b.xMax) &&
         col("y") >= p(b.yMin) && col("y") <= p(b.yMax))
-    templates.select(Shape.of("bbox", p.cover), p)(xyz(candidates(p.cover).filter(exact)))
+    cand => xyz(cand.filter(exact))
   }
 
   /** 2D circle selection (z ignored — PostGIS ST_DWithin on 2D points,
     * retrieve_data.py:56-63); boundary inclusive (<= r). */
-  def circleQuery(c: Circle): DataFrame = {
-    val p = new Bindings(cover(c.bbox))
-    val exact = d2From(p(c.cx), p(c.cy)) <= p(c.r * c.r)
-    templates.select(Shape.of("circle", p.cover), p)(xyz(candidates(p.cover)).filter(exact))
+  def circleQuery(c: Circle): DataFrame = core.select("circle", bounds(c.bbox)) { (p, _) =>
+    val exact = dist2(Seq("x", "y"), Seq(p(c.cx), p(c.cy))) <= p(c.r * c.r)
+    cand => xyz(cand).filter(exact)
   }
 
-  /** Squared 2D distance from the bound centre (px, py). */
-  private def d2From(px: Column, py: Column): Column =
-    (col("x") - px) * (col("x") - px) + (col("y") - py) * (col("y") - py)
-
   /** Polygon (with holes) selection, even-odd rule, boundary excluded. */
-  def polygonQuery(poly: Polygon): DataFrame = {
-    val p = new Bindings(cover(poly.bbox))
-    val exact = p.inPolygon(col("x"), col("y"), poly)
-    templates.select(Shape.of("polygon", p.cover), p)(xyz(candidates(p.cover)).filter(exact))
+  def polygonQuery(poly: Polygon): DataFrame = core.select("polygon", bounds(poly.bbox)) {
+    (p, _) =>
+      val exact = p.inPolygon(col("x"), col("y"), poly)
+      cand => xyz(cand).filter(exact)
   }
 
   def polygonQuery(wkt: String): DataFrame =
@@ -377,66 +345,45 @@ final class BlockedCloud(
     require(line.length >= 4 && line.length % 2 == 0,
       "polyline needs >= 2 (x, y) points, packed [x0,y0,x1,y1,...]")
     require(r >= 0, s"negative buffer radius $r")
-    var xMin = line(0); var xMax = line(0)
-    var yMin = line(1); var yMax = line(1)
-    var i = 2
-    while (i < line.length) {
-      xMin = math.min(xMin, line(i)); xMax = math.max(xMax, line(i))
-      yMin = math.min(yMin, line(i + 1)); yMax = math.max(yMax, line(i + 1))
-      i += 2
-    }
-    val segs = (0 until line.length / 2 - 1).map { s =>
-      (line(2 * s), line(2 * s + 1), line(2 * s + 2), line(2 * s + 3))
-    }.filter { case (ax, ay, bx, by) => ax != bx || ay != by }
+    val (xs, ys) = line.grouped(2).map(v => (v(0), v(1))).toArray.unzip
+    val segs = xs.indices.tail.map(i => (xs(i - 1), ys(i - 1), xs(i), ys(i)))
+      .filter { case (ax, ay, bx, by) => ax != bx || ay != by }
     require(segs.nonEmpty, "polyline has no non-degenerate segment")
+    val grown = Seq(xs, ys).map(v => (v.min - r, v.max + r))
     // point-to-segment distance^2: project onto the segment, clamp the
     // parameter to [0,1], measure to the clamped foot. The expression
     // tree mirrors PointCloudQueries' oracle SQL token-for-token so
     // both engines round identically (all-double IEEE arithmetic).
-    val p = new Bindings(cover(Bbox(xMin - r, xMax + r, yMin - r, yMax + r)))
-    val r2 = p(r * r)
-    val exact = segs.map { case (ax, ay, bx, by) =>
-      val (dx, dy) = (bx - ax, by - ay)
-      val (pax, pay, dxc, dyc, len2) = (p(ax), p(ay), p(dx), p(dy), p(dx * dx + dy * dy))
-      val t = greatest(lit(0.0), least(lit(1.0),
-        ((col("x") - pax) * dxc + (col("y") - pay) * dyc) / len2))
-      val fx = col("x") - (t * dxc + pax)
-      val fy = col("y") - (t * dyc + pay)
-      fx * fx + fy * fy <= r2
-    }.reduce(_ || _)
-    templates.select(Shape.of("polyline", p.cover, segs.length), p)(
-      xyz(candidates(p.cover)).filter(exact))
+    core.select("polyline", grown, segs.length) { (p, _) =>
+      val r2 = p(r * r)
+      val exact = segs.map { case (ax, ay, bx, by) =>
+        val (dx, dy) = (bx - ax, by - ay)
+        val (pax, pay, dxc, dyc, len2) = (p(ax), p(ay), p(dx), p(dy), p(dx * dx + dy * dy))
+        val t = greatest(lit(0.0), least(lit(1.0),
+          ((col("x") - pax) * dxc + (col("y") - pay) * dyc) / len2))
+        val fx = col("x") - (t * dxc + pax)
+        val fy = col("y") - (t * dyc + pay)
+        fx * fx + fy * fy <= r2
+      }.reduce(_ || _)
+      cand => xyz(cand).filter(exact)
+    }
   }
 
   def polylineBufferQuery(wkt: String, r: Double): DataFrame =
     polylineBufferQuery(Geometry.parseWktLinestring(wkt), r)
 
-  /** The exact kNN seed over this cloud's heads ([[KnnSeed]]): one
-    * aggregate job per open cloud, then driver-side lookups. */
-  private lazy val seed: KnnSeed = KnnSeed.collect(blocks, meta.headLen, meta.tailLen,
-    Array(math.round((meta.xMax - meta.offX) / meta.scaleX).max(0L),
-      math.round((meta.yMax - meta.offY) / meta.scaleY).max(0L)),
-    Array(meta.offX, meta.offY), Array(meta.scaleX, meta.scaleY))
-
   /** A radius around (px, py) whose circle holds ≥ min(k, n) points. */
   private[operators] def knnSeedRadius(px: Double, py: Double, k: Int): Double =
-    seed.radius(Array(px, py), k)
+    core.seedRadius(Seq(px, py), k)
 
   /** k nearest neighbours of (px, py) by 2D distance — the reference
     * declares this mode but never implemented it (retrieve_data.py:40-41).
     * The seed circle ([[knnSeedRadius]], from the head histogram, so
     * skewed clouds neither over- nor under-shoot) provably holds the k
     * nearest, so the answer is ONE pruned circle selection ranked by
-    * (d², x, y, z): one job. */
-  def knn(px: Double, py: Double, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    val r = knnSeedRadius(px, py, k)
-    val p = new Bindings(cover(Circle(px, py, r).bbox))
-    val d2 = d2From(p(px), p(py))
-    val within = d2 <= p(r * r)
-    templates.select(Shape.of("knn", p.cover, k), p)(xyz(candidates(p.cover)).filter(within)
-      .orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k))
-  }
+    * (d², x, y, z): one job ([[SelectionCore.knn]]). */
+  def knn(px: Double, py: Double, k: Int): DataFrame =
+    core.knn(Seq(px, py), k)((_, _) => xyz)
 
   /** Batch kNN: the k nearest neighbours of EVERY query point in one
     * plan — the production form of [[knn]] when a workload carries many
@@ -451,17 +398,17 @@ final class BlockedCloud(
     val circles = queries.map { case (qid, px, py) =>
       (qid, Circle(px, py, knnSeedRadius(px, py, k)))
     }
-    val merged = MortonRange.mergeRanges(circles.flatMap { case (_, c) => cover(c.bbox).all })
-    val (blk, _) = SfcPredicates.candidateBlocks(blocks, HeadRanges(Vector.empty, merged))
+    val merged = MortonRange.mergeRanges(circles.flatMap { case (_, c) =>
+      core.cover(core.gridBox(bounds(c.bbox))).all
+    })
+    val (blk, _) = core.candidateBlocks(HeadRanges(Vector.empty, merged))
     val probes = spark.createDataFrame(circles.map { case (qid, c) =>
       (qid, c.cx, c.cy, c.r * c.r)
     }).toDF("qid", "__qx", "__qy", "__r2")
-    val d2 = (col("x") - col("__qx")) * (col("x") - col("__qx")) +
-      (col("y") - col("__qy")) * (col("y") - col("__qy"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
       .orderBy(col("__d2").asc, col("x").asc, col("y").asc, col("z").asc)
     explodePoints(blk).crossJoin(broadcast(probes))
-      .withColumn("__d2", d2)
+      .withColumn("__d2", dist2(Seq("x", "y"), Seq(col("__qx"), col("__qy"))))
       .filter(col("__d2") <= col("__r2"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)

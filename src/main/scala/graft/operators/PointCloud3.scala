@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.core.{Box3, HeadRanges, Morton, MortonRange}
+import graft.core.Morton
 import graft.functions.sfc
 
 /** Catalog row of a 3D-keyed cloud: z participates in the key, so
@@ -105,55 +105,42 @@ object PointCloud3 {
   }
 }
 
-/** A stored 3D cloud. Its filter step is the one [[BlockedCloud]] uses
-  * — [[graft.core.MortonRange.decompose]] of the query box, here over
-  * the 3D key (so z is pruned at the scan, not post-filtered), then
-  * [[SfcPredicates.candidateBlocks]] — with query constants bound as
-  * parameters into one prepared template per [[Shape]]
-  * ([[SelectionTemplates]]). What is 3D-specific is the explode, which
-  * decodes x, y and z from the key, and the queries: box, cylinder,
-  * polygon prism, 3D kNN and voxel counts. */
+/** A stored 3D cloud. Its selections run through the [[SelectionCore]]
+  * both blocked clouds share, over the 3D key with a cover budget of
+  * 2048 ranges, so z is pruned at the scan, not post-filtered. What is
+  * 3D-only lives here: the explode, which decodes x, y and z from the
+  * key, the exact predicates over grid coordinates (box, cylinder,
+  * polygon prism and the kNN's in-box test) and voxel counts. */
 final class BlockedCloud3(
     val spark: SparkSession,
     val blocks: DataFrame,
     val meta: Cloud3Meta) {
+  import SelectionCore.{dist2, Contained}
 
-  private val templates = new SelectionTemplates(spark)
+  // x and y on the integer grid, z at 1/zDenom
+  private val core = new SelectionCore(spark, blocks, meta.headLen, meta.tailLen, Seq(
+      GridAxis(0.0, 1.0, meta.qxMax, v => v), GridAxis(0.0, 1.0, meta.qyMax, v => v),
+      GridAxis(0.0, 1.0 / meta.zDenom, meta.qzMax, v => v * meta.zDenom)),
+    budget = 2048, (blk, tag) => explode3(blk, Some(tag)))
 
   /** The shapes this cloud holds a selection template for. */
-  private[operators] def templateShapes: Set[Shape] = templates.shapes
+  private[operators] def templateShapes: Set[Shape] = core.shapes
 
-  /** The inclusive grid box of an original-coordinate box (x/y on the
-    * integer grid, z at 1/zDenom); None when it holds no grid point. */
-  private def gridBox(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      zMin: Double, zMax: Double): Option[Box3] = {
-    val b = Box3(math.max(0, math.ceil(xMin)), math.floor(xMax),
-      math.max(0, math.ceil(yMin)), math.floor(yMax),
-      math.max(0, math.ceil(zMin * meta.zDenom)), math.floor(zMax * meta.zDenom))
-    if (b.xMin > b.xMax || b.yMin > b.yMax || b.zMin > b.zMax) None else Some(b)
-  }
-
-  /** The octree cover of a grid box: empty when there is no box. */
-  private def cover(box: Option[Box3]): HeadRanges =
-    box.fold(HeadRanges(Vector.empty, Vector.empty))(
-      MortonRange.decompose(_, meta.headLen + meta.tailLen, meta.tailLen, maxCells = 2048))
-
-  /** xq/yq inside the grid box, bounds bound as parameters. */
-  private def inXY(p: Bindings, b: Box3): Column =
-    col("xq") >= p(b.xMin.toLong) && col("xq") <= p(b.xMax.toLong) &&
-      col("yq") >= p(b.yMin.toLong) && col("yq") <= p(b.yMax.toLong)
-
-  private def inZBand(p: Bindings, b: Box3): Column =
-    col("zq") >= p(b.zMin.toLong) && col("zq") <= p(b.zMax.toLong)
+  /** The grid coordinates of `dims` (0 = xq, 1 = yq, 2 = zq) inside the
+    * grid box, bounds bound as parameters. */
+  private def inGrid(p: Bindings, b: GridBox, dims: Int*): Column = dims.map { i =>
+    val q = col(Seq("xq", "yq", "zq")(i))
+    q >= p(b.lo(i)) && q <= p(b.hi(i))
+  }.reduce(_ && _)
 
   /** Explode blocks to grid points (xq, yq, zq); a `contained` per-block
-    * flag rides along as the [[SfcPredicates.Contained]] column. */
+    * flag rides along as the [[SelectionCore.Contained]] column. */
   private def explode3(blk: DataFrame, contained: Option[Column] = None): DataFrame = {
     val key = shiftleft(col("sfc_head"), meta.tailLen).bitwiseOR(col("t"))
-    val tag = contained.map(_.as(SfcPredicates.Contained)).toSeq
+    val tag = contained.map(_.as(Contained)).toSeq
     blk.select((explode(col("sfc_tail")).as("t") +: col("sfc_head") +: tag): _*)
       .select(Seq(sfc.morton_decode(key, 3, 0).as("xq"), sfc.morton_decode(key, 3, 1).as("yq"),
-        sfc.morton_decode(key, 3, 2).as("zq")) ++ tag.map(_ => col(SfcPredicates.Contained)): _*)
+        sfc.morton_decode(key, 3, 2).as("zq")) ++ tag.map(_ => col(Contained)): _*)
   }
 
   /** Grid points -> (x, y, z) with z reconstructed as zq / zDenom — the
@@ -163,44 +150,26 @@ final class BlockedCloud3(
     col("xq").cast("double").as("x"), col("yq").cast("double").as("y"),
     (col("zq").cast("double") / meta.zDenom).as("z"))
 
-  private def emptyPoints: DataFrame = out(explode3(blocks.filter(lit(false))))
-
-  /** Filter step, one scan: the grid points of every block of the
-    * octree cover `hr`, tagged [[SfcPredicates.Contained]] when their
-    * block lies wholly inside the query box, then refined by `exact` —
-    * no points when the query box holds no grid point (`exact` None). */
-  private def refined(hr: HeadRanges, exact: Option[Column]): DataFrame =
-    exact.fold(emptyPoints) { e =>
-      val (blk, tag) = SfcPredicates.candidateBlocks(blocks, hr)
-      out(explode3(blk, Some(tag)).filter(e))
-    }
-
   /** All points in the inclusive 3D box (original coordinates) —
     * filter-refine with z pruned AT THE SCAN via the octree ranges,
     * not post-filtered; points of contained blocks skip the exact test. */
   def boxQuery(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-      zMin: Double, zMax: Double): DataFrame = {
-    val box = gridBox(xMin, xMax, yMin, yMax, zMin, zMax)
-    val p = new Bindings(cover(box))
-    val exact = box.map(b => col(SfcPredicates.Contained) || (inXY(p, b) && inZBand(p, b)))
-    templates.select(Shape.of("box", p.cover), p)(refined(p.cover, exact))
-  }
+      zMin: Double, zMax: Double): DataFrame =
+    core.select("box", Seq(xMin -> xMax, yMin -> yMax, zMin -> zMax)) { (p, b) =>
+      val exact = col(Contained) || inGrid(p, b, 0, 1, 2)
+      cand => out(cand.filter(exact))
+    }
 
   /** Cylinder selection: 2D circle x height band — the B-suite circle
     * with B10-B12's z refinement fused into ONE pruned scan (octree
     * ranges bound x, y AND z; the exact predicate then runs on the
     * candidates only). */
   def cylinderQuery(cx: Double, cy: Double, r: Double,
-      zMin: Double, zMax: Double): DataFrame = {
-    val box = gridBox(cx - r, cx + r, cy - r, cy + r, zMin, zMax)
-    val p = new Bindings(cover(box))
-    val exact = box.map { b =>
-      val (qx, qy) = (p(cx), p(cy))
-      (col("xq") - qx) * (col("xq") - qx) + (col("yq") - qy) * (col("yq") - qy) <=
-        p(r * r) && inZBand(p, b)
+      zMin: Double, zMax: Double): DataFrame =
+    core.select("cylinder", Seq((cx - r, cx + r), (cy - r, cy + r), (zMin, zMax))) { (p, b) =>
+      val exact = dist2(Seq("xq", "yq"), Seq(p(cx), p(cy))) <= p(r * r) && inGrid(p, b, 2)
+      cand => out(cand.filter(exact))
     }
-    templates.select(Shape.of("cylinder", p.cover), p)(refined(p.cover, exact))
-  }
 
   /** Polygon-prism selection: a 2D polygon (with holes, even-odd rule,
     * boundary excluded — same convention as the 2D store) crossed with
@@ -211,45 +180,32 @@ final class BlockedCloud3(
     * the z band is re-checked only on partial blocks. */
   def polygonQuery(poly: graft.core.Polygon, zMin: Double, zMax: Double): DataFrame = {
     val pb = poly.bbox
-    val box = gridBox(pb.xMin, pb.xMax, pb.yMin, pb.yMax, zMin, zMax)
-    val p = new Bindings(cover(box))
-    val exact = box.map(b => col(SfcPredicates.Contained) || inZBand(p, b))
-    val inPolygon = p.inPolygon(col("x"), col("y"), poly)
-    templates.select(Shape.of("polygon", p.cover), p)(refined(p.cover, exact).filter(inPolygon))
+    core.select("polygon", Seq(pb.xMin -> pb.xMax, pb.yMin -> pb.yMax, zMin -> zMax)) {
+      (p, b) =>
+        val exact = col(Contained) || inGrid(p, b, 2)
+        val inPolygon = p.inPolygon(col("x"), col("y"), poly)
+        cand => out(cand.filter(exact)).filter(inPolygon)
+    }
   }
 
   def polygonQuery(wkt: String, zMin: Double, zMax: Double): DataFrame =
     polygonQuery(graft.core.Geometry.parseWktPolygon(wkt), zMin, zMax)
 
-  /** The exact kNN seed over this cloud's heads ([[KnnSeed]]): x and y
-    * on the integer grid, z at 1/zDenom. */
-  private lazy val seed: KnnSeed = KnnSeed.collect(blocks, meta.headLen, meta.tailLen,
-    Array(meta.qxMax, meta.qyMax, meta.qzMax), Array(0.0, 0.0, 0.0),
-    Array(1.0, 1.0, 1.0 / meta.zDenom))
-
   /** A radius around (px, py, pz) whose sphere holds ≥ min(k, n) points. */
   private[operators] def knnSeedRadius(px: Double, py: Double, pz: Double, k: Int): Double =
-    seed.radius(Array(px, py, pz), k)
+    core.seedRadius(Seq(px, py, pz), k)
 
   /** k nearest neighbours of (px, py, pz) by TRUE 3D distance — the
     * height-aware form the 2D store's [[BlockedCloud.knn]] cannot
     * answer. The seed sphere ([[knnSeedRadius]]) provably holds the k
     * nearest, so the answer is ONE octree-pruned selection of its
     * bounding box, refined to the sphere and ranked by (d², x, y, z):
-    * one job. */
-  def knn(px: Double, py: Double, pz: Double, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    val r = knnSeedRadius(px, py, pz, k)
-    val box = gridBox(px - r, px + r, py - r, py + r, pz - r, pz + r)
-    val p = new Bindings(cover(box))
-    val inBox = box.map(b => col(SfcPredicates.Contained) || (inXY(p, b) && inZBand(p, b)))
-    val (qx, qy, qz) = (p(px), p(py), p(pz))
-    val d2 = (col("x") - qx) * (col("x") - qx) + (col("y") - qy) * (col("y") - qy) +
-      (col("z") - qz) * (col("z") - qz)
-    val within = d2 <= p(r * r)
-    templates.select(Shape.of("knn", p.cover, k), p)(refined(p.cover, inBox).filter(within)
-      .orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k))
-  }
+    * one job ([[SelectionCore.knn]]). */
+  def knn(px: Double, py: Double, pz: Double, k: Int): DataFrame =
+    core.knn(Seq(px, py, pz), k) { (p, b) =>
+      val inBox = col(Contained) || inGrid(p, b, 0, 1, 2)
+      cand => out(cand.filter(inBox))
+    }
 
   /** 3D voxel occupancy: point count per (cellXY, cellZ) voxel — the
     * volumetric raster; one narrow decode + one partially-aggregated

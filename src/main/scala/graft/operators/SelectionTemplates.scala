@@ -17,15 +17,10 @@ import graft.plans.{PreparedSelection, PreparedSelectionScan, PushedRangeScan}
   * is empty. Selections of one shape differ only in [[Bindings]]. */
 private[operators] final case class Shape(method: String, size: Int, empty: Boolean)
 
-private[operators] object Shape {
-  def of(method: String, cover: HeadRanges, size: Int = 0): Shape =
-    Shape(method, size, cover.isEmpty)
-}
-
 /** The values one selection binds into its shape's template: each query
   * constant its Column code draws through [[apply]], in slot order, its
   * head cover (the scan predicate and contained tag of
-  * [[SfcPredicates.candidateBlocks]]) and the polygon of its exact test.
+  * [[SelectionCore.candidateBlocks]]) and the polygon of its exact test.
   * Every constant is drawn before the selection is planned, never only
   * while its template is being built: a slot drawn there is past the
   * end of the next query's values. */
@@ -56,7 +51,7 @@ private[operators] final class Bindings(val cover: HeadRanges) {
       case p: PointInPolygon if polygon.nonEmpty => p.copy(polygon = polygon.get)
     }
     template.transformAllExpressions(
-      if (cover.isEmpty) own else SfcPredicates.rebind(cover).orElse(own))
+      if (cover.isEmpty) own else SelectionCore.rebind(cover).orElse(own))
   }
 }
 

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Morton
+import graft.sources.TempDir
 
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -81,7 +82,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // the whole filter away — itself proof the marker evaluates), the
     // plan carries the range cover INSIDE PushedFilters plus the pruned
     // residual marker
-    val dir = "/tmp/graft_headbbox_spec"
+    val dir = tmp("heads")
     (0L until 16L).toDF("sfc_head").write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("heads_f")
     val fileDf = spark.sql(sql.replace("heads_t", "heads_f"))

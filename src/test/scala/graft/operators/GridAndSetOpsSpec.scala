@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TempDir
+
 /** Round-6 surface: voxel-grid aggregation / deterministic thinning on
   * the blocked cloud, overlap-coefficient scoring, and the new
   * query-module shapes (funnel, retention, set ops) via invariants on
   * the sf0.001 test tables. */
-class GridAndSetOpsSpec extends AnyFunSuite {
+class GridAndSetOpsSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -211,7 +213,7 @@ class GridAndSetOpsSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val delta = docs.filter(col("doc_id") % 10 === 0)
-    val dir = s"/tmp/graft_ndidx_${System.nanoTime()}"
+    val dir = tmpSubdir("ndidx")
     Dedup.writeNearDupIndex(corpus, "doc_id", "text", dir,
       shingleLen = 3, wordShingles = true, numHashes = 64)
     val incr = Dedup.nearDupsAgainstIndex(spark, dir, delta, "doc_id", "text",

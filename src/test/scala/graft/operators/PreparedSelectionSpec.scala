@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,8 +11,10 @@ import graft.plans.PreparedSelection
 
 /** Prepared selections: two queries of one shape on one opened cloud
   * share one template, and each still returns exactly its own points
-  * and reports scan metrics of its own. */
-class PreparedSelectionSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * and reports scan metrics of its own. A selection whose cover is
+  * empty reads no file at all. */
+class PreparedSelectionSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -97,6 +100,10 @@ class PreparedSelectionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def poly(wkt: String): Polygon = Geometry.parseWktPolygon(wkt)
 
+  /** The file scans of a run plan. */
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+
   /** Rows the scans and the explodes of a run plan produced. */
   private def metrics(df: DataFrame): (Long, Long) = {
     val plan = df.queryExecution.executedPlan
@@ -145,8 +152,13 @@ class PreparedSelectionSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows(first)
       assert(rows(second) == want.sorted, shape)
       assert(second.queryExecution.analyzed.isInstanceOf[PreparedSelection], shape)
+      // an empty cover plans no scan; every other selection reads the store
+      assert(Seq(first, second).forall(scans(_).isEmpty == shape.empty), shape)
     }
     assert(cases.forall(k => k._1.empty || k._4.nonEmpty))
+    // a bbox between grid points holds none, so its cover is empty too
+    val between = c.bboxQuery(Bbox(100.2, 100.8, 0, 9000))
+    assert(rows(between).isEmpty && scans(between).isEmpty)
     // a z bound is a filter over the selection, which keeps its shape's template
     val zbCases = Seq(
       (c.withMaxZ(c.bboxQuery(zb2), 12.5),
@@ -195,8 +207,13 @@ class PreparedSelectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     cases.foreach { case (shape, first, second, want) =>
       rows(first)
       assert(rows(second) == want.sorted, shape)
+      assert(Seq(first, second).forall(scans(_).isEmpty == shape.empty), shape)
     }
     assert(cases.forall(k => k._1.empty || k._4.nonEmpty))
+    // a box past the key space is not inverted, yet its cover is empty
+    // too, and it plans no scan either
+    val past = c.boxQuery(10, 60, 20, 80, 100, 200)
+    assert(rows(past).isEmpty && scans(past).isEmpty)
     assert(c.templateShapes == cases.map(_._1).toSet)
   }
 

@@ -3,14 +3,15 @@
 # commit containing one uncompiled file zeroed the round's entire
 # correctness/bench signal). Usage: tools/precommit.sh [--smoke|--plans]
 #   default  : sbt compile + Test/compile must both succeed
-#   --smoke  : additionally runs twenty-two sf0.001 pc_* queries
+#   --smoke  : additionally runs twenty-four sf0.001 pc_* queries
 #              through Verify and checks them against their DuckDB
 #              oracle: over the 2D store the catalog row, a bbox, a large
 #              bbox that reads many blocks, an empty bbox, a bbox with
 #              maxz and one with minz, a circle, polygons with one and
 #              two holes, a polyline buffer and the single and batch kNN
-#              (so every prepared-selection shape has an oracle row), two
-#              selections and the kNN over the 3D store, and the seven
+#              (so every prepared-selection shape has an oracle row), the
+#              box, z slice, cylinder, polygon prism and kNN over the 3D
+#              store (every 3D prepared-selection shape), and the seven
 #              LAS/LAZ sink -> scan roundtrips (LAS, LAZ pf0, pointwise
 #              v1, extra bytes, pf5 wave, layered pf8 and pf9 wave). The
 #              stores are imported by the code under test whenever
@@ -27,7 +28,7 @@ cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile
 if [[ "${1:-}" == "--smoke" ]]; then
   rm -rf /tmp/precommit_smoke
-  SPARK_GRAFT_ONLY=pc_metadata,pc_bbox_small,pc_bbox_large,pc_bbox_empty,pc_bbox_maxz,pc_bbox_minz,pc_poly_2holes,pc_circle,pc_poly_hole,pc_polyline_buffer,pc_knn,pc_knn_batch,pc_bbox3d,pc_poly_3d,pc_knn_3d,pc_las_roundtrip,pc_laz_roundtrip,pc_laz_v1_roundtrip,pc_laz_extra,pc_laz_wave_roundtrip,pc_laz14_roundtrip,pc_laz14_wave_roundtrip sbt -batch \
+  SPARK_GRAFT_ONLY=pc_metadata,pc_bbox_small,pc_bbox_large,pc_bbox_empty,pc_bbox_maxz,pc_bbox_minz,pc_poly_2holes,pc_circle,pc_poly_hole,pc_polyline_buffer,pc_knn,pc_knn_batch,pc_bbox3d,pc_zslice,pc_cylinder,pc_poly_3d,pc_knn_3d,pc_las_roundtrip,pc_laz_roundtrip,pc_laz_v1_roundtrip,pc_laz_extra,pc_laz_wave_roundtrip,pc_laz14_roundtrip,pc_laz14_wave_roundtrip sbt -batch \
     'runMain graft.Verify /root/testdata/sf0.001 /tmp/precommit_smoke'
   python3 tools/check_oracle.py /root/testdata/sf0.001 /tmp/precommit_smoke
 fi
