@@ -2,11 +2,6 @@ package graft.core
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Inclusive 3D box in quantized grid coordinates (possibly fractional
-  * bounds, e.g. a sphere's enclosing box). */
-final case class Box3(xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-    zMin: Double, zMax: Double)
-
 /** Result of the decomposition of a query box into block-key
   * (sfc_head) ranges, each list sorted and merged.
   *
@@ -44,10 +39,6 @@ object MortonRange {
     * possibly fractional e.g. a circle's enclosing box). */
   def decompose(bbox: Bbox, totalBits: Int, tailBits: Int, maxCells: Int = 2048): HeadRanges =
     decompose(Array(bbox.xMin, bbox.yMin), Array(bbox.xMax, bbox.yMax),
-      totalBits, tailBits, maxCells)
-
-  def decompose(box: Box3, totalBits: Int, tailBits: Int, maxCells: Int): HeadRanges =
-    decompose(Array(box.xMin, box.yMin, box.zMin), Array(box.xMax, box.yMax, box.zMax),
       totalBits, tailBits, maxCells)
 
   /** Decompose the box [lo(k), hi(k)] (inclusive, per dimension k) into

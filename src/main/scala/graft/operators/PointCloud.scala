@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuilder
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -37,92 +37,61 @@ final case class CloudMeta(
     scaleX: Double, scaleY: Double, scaleZ: Double,
     offX: Double, offY: Double, offZ: Double,
     xMin: Double, xMax: Double, yMin: Double, yMax: Double,
-    zMin: Double, zMax: Double)
+    zMin: Double, zMax: Double) extends StoreMeta[CloudMeta] {
+  private[operators] def axes: Seq[KeyAxis] = PointCloud.axes(offX, scaleX, offY, scaleY)
+
+  /** Count sum, extent min/max-merge. */
+  private[operators] def absorb(b: Extents): CloudMeta = copy(pointCount = pointCount + b.n,
+    xMin = math.min(xMin, b.x_min), xMax = math.max(xMax, b.x_max),
+    yMin = math.min(yMin, b.y_min), yMax = math.max(yMax, b.y_max),
+    zMin = math.min(zMin, b.z_min), zMax = math.max(zMax, b.z_max))
+}
 
 /** One Morton-head block: parallel arrays sfc_tail(i) <-> z(i), sorted by
   * tail — the Spark form of pc_record_<name> (db/__init__.py:53-57),
   * with 64-bit heads (the reference's pg INT can overflow, SURVEY §1.3). */
 final case class PointBlock(sfc_head: Long, sfc_tail: Array[Long], z: Array[Double])
 
-/** One streamed micro-batch's ledger entry (count + extents) — written
-  * idempotently per `__batch` partition by [[PointCloud.appendBatch]]. */
-final case class BatchLedgerRow(__batch: Long, n: Long,
-    x_min: Double, x_max: Double, y_min: Double, y_max: Double,
-    z_min: Double, z_max: Double)
-
+/** The 2D-keyed cloud over the one point store ([[BlockStore]]): its key
+  * is (x, y) on the (off, scale) grid of the [[ImportSpec]], each point
+  * carries z at 2 decimals (point_processor.py:47), and its head/tail
+  * split is the reference's even-head ratio or, with
+  * `targetPointsPerBlock`, the density rule. What is 2D-only lives here:
+  * the catalog row, LAS import, appends outside a stream and the CSV
+  * and JDBC sinks.
+  *
+  * Divergence from the reference: Python round() is banker's rounding;
+  * quantizing here is HALF_UP, Spark's round() bit for bit through the
+  * keying kernel [[graft.functions.RoundKernels.halfUp]] (no BigDecimal
+  * per point). Identical on any grid where coordinates don't land
+  * exactly on .5 after scaling (all fixtures use integer grids). */
 object PointCloud {
   private val store = new BlockStore[(Long, Long, Double), PointBlock, CloudMeta](
-    Seq("z"), estBytesPerPoint = 8L, packSorted, _.pointCount, _.tailLen)(
+    Seq(sfc.round_half_up(col("z"), 2).as("z")), estBytesPerPoint = 8L, packSorted)(
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble),
     Encoders.product[PointBlock], Encoders.product[CloudMeta])
 
-  /** Import a point cloud from a DataFrame with double columns (x, y, z).
-    *
-    * Spark-first re-expression of the reference's import pipeline
-    * (pipeline/import_data.py:25-56 + pcsfc/point_processor.py:41-81):
-    * one stats pass, then quantize -> Morton encode -> head/tail split ->
-    * range-shuffle on head -> in-partition sort -> streaming block pack.
-    * The pack is a mapPartitions grouper over sorted input, NOT
-    * collect_list, so a block never materializes more than one group —
-    * the 100 TB-safe form (SURVEY §2.5 A1).
-    *
-    * Divergence from the reference: Python round() is banker's rounding;
-    * quantizing here is HALF_UP, Spark's round() bit for bit through the
-    * keying kernel [[graft.functions.RoundKernels.halfUp]] (no
-    * BigDecimal per point). Identical on any grid where coordinates
-    * don't land exactly on .5 after scaling (all fixtures use integer
-    * grids).
-    */
+  private[operators] def axes(offX: Double, scaleX: Double, offY: Double,
+      scaleY: Double): Seq[KeyAxis] = Seq(KeyAxis(0, offX, scaleX), KeyAxis(1, offY, scaleY))
+
+  /** Import a point cloud from a DataFrame with double columns (x, y, z)
+    * through the store's one pipeline ([[BlockStore.importPoints]]). */
   def importPoints(points: DataFrame, spec: ImportSpec): BlockedCloud = {
-    val spark = points.sparkSession
-    val s = BlockStore.extents(points, col("x"), col("y"), col("z"))
-      .getOrElse(throw new IllegalArgumentException("cannot import an empty point cloud"))
-    val n = s.getLong(0)
-    val Seq(qxMax, qyMax) = gridMax(s, spec.offX, spec.scaleX, spec.offY, spec.scaleY)
-    val ratio = spec.targetPointsPerBlock match {
-      case Some(target) =>
+    val (meta, blocks) = store.importPoints(points,
+        axes(spec.offX, spec.scaleX, spec.offY, spec.scaleY)) { (e, q) =>
+      val Seq(qxMax, qyMax) = q
+      val ratio = spec.targetPointsPerBlock.fold(spec.ratio) { target =>
         val totalBits = { val s = Morton.splitLengths(qxMax, qyMax, 1.0); s._1 + s._2 }
         // even head length with ~n/2^h points per head closest to target
-        val ideal = math.log(math.max(n.toDouble / target, 1.0)) / math.log(2.0)
-        val headLen = math.max(2, math.min(totalBits - 2,
-          2 * math.round(ideal / 2).toInt))
-        headLen.toDouble / totalBits
-      case None => spec.ratio
+        val ideal = math.log(math.max(e.n.toDouble / target, 1.0)) / math.log(2.0)
+        math.max(2, math.min(totalBits - 2, 2 * math.round(ideal / 2).toInt)).toDouble / totalBits
+      }
+      val (headLen, tailLen) = Morton.splitLengths(qxMax, qyMax, ratio)
+      CloudMeta(spec.name, spec.srid, e.n, headLen, tailLen,
+        spec.scaleX, spec.scaleY, spec.scaleZ, spec.offX, spec.offY, spec.offZ,
+        e.x_min, e.x_max, e.y_min, e.y_max, e.z_min, e.z_max)
     }
-    val (headLen, tailLen) = Morton.splitLengths(qxMax, qyMax, ratio)
-    val meta = CloudMeta(spec.name, spec.srid, n, headLen, tailLen,
-      spec.scaleX, spec.scaleY, spec.scaleZ, spec.offX, spec.offY, spec.offZ,
-      s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
-      s.getDouble(5), s.getDouble(6))
-    new BlockedCloud(spark, store.pack(keyPoints(points, meta), meta), meta)
-  }
-
-  private def quantize(c: Column, off: Double, scale: Double): Column =
-    sfc.round_half_up((c - lit(off)) / lit(scale)).cast(LongType)
-
-  /** Quantized (x, y) maxima of a batch with stats `s` (count, then
-    * min and max of x, y, z) on the grid (off, scale), after the grid
-    * guard. Quantizes as [[quantize]] does per row: Spark's round is
-    * HALF_UP over the double's decimal form. */
-  private def gridMax(s: Row, offX: Double, scaleX: Double, offY: Double, scaleY: Double,
-      keyBits: Int = 64): Seq[Long] = {
-    def q(i: Int, off: Double, scale: Double): Long =
-      java.math.BigDecimal.valueOf((s.getDouble(i) - off) / scale)
-        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-    BlockStore.guardGrid(2, Seq(q(1, offX, scaleX), q(2, offX, scaleX),
-      q(3, offY, scaleY), q(4, offY, scaleY)), keyBits)
-  }
-
-  /** (x, y, z) points -> (sfc_head, sfc_tail, z) under `meta`'s grid
-    * and key split. */
-  private def keyPoints(points: DataFrame, meta: CloudMeta): DataFrame = {
-    val mkey = sfc.morton_encode(
-      quantize(col("x"), meta.offX, meta.scaleX),
-      quantize(col("y"), meta.offY, meta.scaleY))
-    points.select(
-      shiftright(mkey, meta.tailLen).as("sfc_head"),
-      mkey.bitwiseAND(lit((1L << meta.tailLen) - 1)).as("sfc_tail"),
-      sfc.round_half_up(col("z"), 2).as("z")) // z kept at 2 decimals (point_processor.py:47)
+    new BlockedCloud(points.sparkSession, blocks, meta)
   }
 
   /** Entry point 1 of the reference (importer.py): import LAS file(s)
@@ -146,48 +115,22 @@ object PointCloud {
       PointBlock(head, tails.result(), zs.result())
     }
 
-  /** Version of the on-disk block layout and of the import that writes
-    * it. Stores cached across runs key on it, so a layout, keying or
-    * writer change re-imports instead of serving old files. */
-  private[graft] val LayoutVersion: Int = 3
+  /** Version of the on-disk layout of both clouds and of the import that
+    * writes it. Stores cached across runs key on it, so a layout, keying,
+    * ledger or writer change re-imports instead of serving old files. */
+  private[graft] val LayoutVersion: Int = 4
 
-  /** Persist blocks + metadata. */
-  def write(cloud: BlockedCloud, dir: String): Unit =
-    store.write(cloud.spark, cloud.blocks, cloud.meta, dir)
+  def write(cloud: BlockedCloud, dir: String): Unit = store.write(cloud.blocks, cloud.meta, dir)
 
-  /** Open a stored cloud: the base import plus any landed batches
-    * ([[appendBatch]]), its catalog row composed with the batch ledger
-    * (count sum, extent min/max-merge). */
   def read(spark: SparkSession, dir: String): BlockedCloud = {
-    val (m, blocks, ledger) = store.open(spark, dir)
-    val meta = ledger.fold(m) { ledger =>
-      val l = ledger.agg(sum("n"), min("x_min"), max("x_max"), min("y_min"), max("y_max"),
-        min("z_min"), max("z_max")).head()
-      m.copy(pointCount = m.pointCount + l.getLong(0),
-        xMin = math.min(m.xMin, l.getDouble(1)), xMax = math.max(m.xMax, l.getDouble(2)),
-        yMin = math.min(m.yMin, l.getDouble(3)), yMax = math.max(m.yMax, l.getDouble(4)),
-        zMin = math.min(m.zMin, l.getDouble(5)), zMax = math.max(m.zMax, l.getDouble(6)))
-    }
+    val (meta, blocks) = store.open(spark, dir)
     new BlockedCloud(spark, blocks, meta)
   }
 
-  /** Exactly-once ingest of one micro-batch ([[BlockStore.landBatch]]),
-    * its ledger row carrying the batch's count and extents. It packs
-    * UNDER THE STORED GRID — an append must never re-derive the key
-    * space, or every stored key changes meaning — so a batch past the
-    * stored key space is rejected (re-import with headroom to widen
-    * it). An empty micro-batch lands nothing. */
-  def appendBatch(spark: SparkSession, dir: String, delta: DataFrame,
-      batchId: Long): Unit = {
-    val meta = store.readMeta(spark, dir)
-    BlockStore.extents(delta, col("x"), col("y"), col("z")).foreach { s =>
-      gridMax(s, meta.offX, meta.scaleX, meta.offY, meta.scaleY, meta.headLen + meta.tailLen)
-      store.landBatch(dir, store.pack(keyPoints(delta, meta), meta), s.getLong(0), batchId,
-        spark.createDataset(Seq(BatchLedgerRow(batchId, s.getLong(0),
-          s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4),
-          s.getDouble(5), s.getDouble(6))))(Encoders.product[BatchLedgerRow]).toDF())
-    }
-  }
+  /** Exactly-once ingest of one micro-batch ([[BlockStore.appendBatch]]);
+    * `Streams.cloudIngest` lands each micro-batch through it. */
+  def appendBatch(spark: SparkSession, dir: String, delta: DataFrame, batchId: Long): Unit =
+    store.appendBatch(spark, dir, delta, batchId)
 
   /** Incremental ingest outside a stream: [[appendBatch]] under a
     * negative batch id below every landed one, so it never replaces a
@@ -201,14 +144,7 @@ object PointCloud {
     appendBatch(spark, dir, delta, (0L +: landed).min - 1)
   }
 
-  /** Clustering compaction ([[BlockStore.compact]]): every head is
-    * again exactly one block inside one range-clustered file, with
-    * streamed batches folded into the base — the post-append
-    * maintenance pass. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val cloud = read(spark, dir)
-    store.compact(spark, dir, cloud.blocks, cloud.meta)
-  }
+  def compact(spark: SparkSession, dir: String): Unit = store.compact(spark, dir)
 
   /** CSV block sink in the reference's pg-COPY shape — arrays rendered
     * as `{a,b,c}` (point_processor.py:83-87). Distributed write (one
@@ -268,13 +204,10 @@ final class BlockedCloud(
     val meta: CloudMeta) {
   import SelectionCore.{dist2, Contained}
 
-  private val core = {
-    def axis(off: Double, scale: Double, max: Double) =
-      GridAxis(off, scale, math.round((max - off) / scale).max(0L), v => (v - off) / scale)
-    new SelectionCore(spark, blocks, meta.headLen, meta.tailLen,
-      Seq(axis(meta.offX, meta.scaleX, meta.xMax), axis(meta.offY, meta.scaleY, meta.yMax)),
-      budget = 256, (blk, tag) => explodePoints(blk, Some(tag)))
-  }
+  private val core = new SelectionCore(spark, blocks, meta.headLen, meta.tailLen,
+    meta.axes.zip(Seq(meta.xMax, meta.yMax)).map { case (a, max) =>
+      a.gridAxis(math.round(a.quantize(max)).max(0L))
+    }, budget = 256, (blk, tag) => explodePoints(blk, Some(tag)))
 
   /** The shapes this cloud holds a selection template for. */
   private[operators] def templateShapes: Set[Shape] = core.shapes

@@ -14,52 +14,43 @@ import graft.functions.sfc
   * integer grid (the test fixtures' form). */
 final case class Cloud3Meta(name: String, pointCount: Long,
     headLen: Int, tailLen: Int, zDenom: Double,
-    qxMax: Long, qyMax: Long, qzMax: Long)
+    qxMax: Long, qyMax: Long, qzMax: Long) extends StoreMeta[Cloud3Meta] {
+  private[operators] def axes: Seq[KeyAxis] = PointCloud3.axes(zDenom)
+
+  /** Count sum; the grid maxima stay the import's. */
+  private[operators] def absorb(b: Extents): Cloud3Meta = copy(pointCount = pointCount + b.n)
+}
 
 /** One 3D Morton-head block: tails sorted, z reconstructed from the key
   * (no parallel z array — the third dimension lives in the key). */
 final case class PointBlock3(sfc_head: Long, sfc_tail: Array[Long])
 
-/** The 3D-keyed store: the 3-coordinate key and its catalog row over
-  * the lifecycle both stores share ([[BlockStore]]). */
+/** The 3D-keyed cloud over the one point store ([[BlockStore]]): its key
+  * is (x, y, z · zDenom), no value rides beside it, and its head/tail
+  * split is `ratio` of the key's bits. */
 object PointCloud3 {
   // z rides inside the Morton key here, so rows are narrower than the
   // 2D store's (sfc_tail, z double) pairs — ~6 B/pt measured
   private val store = new BlockStore[(Long, Long), PointBlock3, Cloud3Meta](
-    Nil, estBytesPerPoint = 6L, packSorted, _.pointCount, _.tailLen)(
+    Nil, estBytesPerPoint = 6L, packSorted)(
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
     Encoders.product[PointBlock3], Encoders.product[Cloud3Meta])
 
-  /** Grid coordinates (xq, yq, zq) of (x, y, z) points: x/y on the
-    * integer grid, z at 1/zDenom. */
-  private def quantized(zDenom: Double): Seq[Column] = Seq(
-    sfc.round_half_up(col("x")).cast(LongType), sfc.round_half_up(col("y")).cast(LongType),
-    sfc.round_half_up(col("z") * zDenom).cast(LongType))
+  /** x and y on the integer grid, z at 1/zDenom. */
+  private[operators] def axes(zDenom: Double): Seq[KeyAxis] =
+    Seq(KeyAxis(0), KeyAxis(1), KeyAxis(2, perUnit = zDenom))
 
-  /** (x, y, z) points -> (sfc_head, sfc_tail) under a key split. */
-  private def keyPoints(points: DataFrame, zDenom: Double, tailLen: Int): DataFrame = {
-    val Seq(xq, yq, zq) = quantized(zDenom)
-    val key = sfc.morton_encode(xq, yq, zq)
-    points.select(shiftright(key, tailLen).as("sfc_head"),
-      key.bitwiseAND(lit((1L << tailLen) - 1)).as("sfc_tail"))
-  }
-
-  /** Import (x, y, z) doubles into the 3D-keyed blocked layout: one
-    * stats pass, quantize -> 3D Morton -> head/tail split -> the shared
-    * range shuffle + in-partition sort + streaming pack (encode/decode
-    * are monotone per dimension, so bitLength(encode(maxes)) bounds the
-    * whole key space). */
+  /** Import (x, y, z) doubles through the store's one pipeline
+    * ([[BlockStore.importPoints]]). */
   def importPoints(points: DataFrame, name: String = "cloud3",
       zDenom: Double = 100.0, ratio: Double = 0.5): BlockedCloud3 = {
-    val s = BlockStore.extents(points, quantized(zDenom): _*)
-      .getOrElse(throw new IllegalArgumentException("cannot import an empty point cloud"))
-    val Seq(qxMax, qyMax, qzMax) = BlockStore.guardGrid(3, (1 to 6).map(s.getLong))
-    val totalBits = Morton.bitLength(Morton.encode(qxMax, qyMax, qzMax)).max(2)
-    val headLen = math.min(totalBits, math.max(0, (totalBits * ratio).toInt))
-    val tailLen = totalBits - headLen
-    val meta = Cloud3Meta(name, s.getLong(0), headLen, tailLen, zDenom, qxMax, qyMax, qzMax)
-    new BlockedCloud3(points.sparkSession, store.pack(keyPoints(points, zDenom, tailLen), meta),
-      meta)
+    val (meta, blocks) = store.importPoints(points, axes(zDenom)) { (e, q) =>
+      val Seq(qx, qy, qz) = q
+      val totalBits = Morton.bitLength(Morton.encode(qx, qy, qz)).max(2)
+      val headLen = math.min(totalBits, math.max(0, (totalBits * ratio).toInt))
+      Cloud3Meta(name, e.n, headLen, totalBits - headLen, zDenom, qx, qy, qz)
+    }
+    new BlockedCloud3(points.sparkSession, blocks, meta)
   }
 
   /** 3D blocks from a head-then-tail sorted stream, one block in memory. */
@@ -68,41 +59,17 @@ object PointCloud3 {
       PointBlock3(head, points.map(_._2).toArray)
     }
 
-  def write(cloud: BlockedCloud3, dir: String): Unit =
-    store.write(cloud.spark, cloud.blocks, cloud.meta, dir)
+  def write(cloud: BlockedCloud3, dir: String): Unit = store.write(cloud.blocks, cloud.meta, dir)
 
-  /** Open a stored 3D cloud: the base import plus any streamed delta
-    * partitions ([[appendBatch]]), its point count composed with the
-    * per-batch ledger. */
   def read(spark: SparkSession, dir: String): BlockedCloud3 = {
-    val (meta, blocks, ledger) = store.open(spark, dir)
-    val appended = ledger.fold(0L)(_.agg(sum(col("n"))).head().getLong(0))
-    new BlockedCloud3(spark, blocks, meta.copy(pointCount = meta.pointCount + appended))
+    val (meta, blocks) = store.open(spark, dir)
+    new BlockedCloud3(spark, blocks, meta)
   }
 
-  /** Exactly-once ingest of one micro-batch ([[BlockStore.landBatch]]),
-    * its ledger row carrying the batch's count; it packs UNDER THE
-    * STORED key split, so a batch past the stored key space is
-    * rejected. An empty micro-batch lands nothing. */
-  def appendBatch(spark: SparkSession, dir: String, delta: DataFrame,
-      batchId: Long): Unit = {
-    val meta = store.readMeta(spark, dir)
-    BlockStore.extents(delta, quantized(meta.zDenom): _*).foreach { s =>
-      BlockStore.guardGrid(3, (1 to 6).map(s.getLong), meta.headLen + meta.tailLen)
-      store.landBatch(dir, store.pack(keyPoints(delta, meta.zDenom, meta.tailLen), meta),
-        s.getLong(0), batchId,
-        spark.createDataset(Seq((batchId, s.getLong(0))))(
-          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).toDF("__batch", "n"))
-    }
-  }
+  def appendBatch(spark: SparkSession, dir: String, delta: DataFrame, batchId: Long): Unit =
+    store.appendBatch(spark, dir, delta, batchId)
 
-  /** Clustering compaction ([[BlockStore.compact]]): base + streamed
-    * delta partitions re-pack into one clustered blocks directory, the
-    * batch ledger folded into the base metadata. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val cloud = read(spark, dir)
-    store.compact(spark, dir, cloud.blocks, cloud.meta)
-  }
+  def compact(spark: SparkSession, dir: String): Unit = store.compact(spark, dir)
 }
 
 /** A stored 3D cloud. Its selections run through the [[SelectionCore]]
@@ -118,9 +85,8 @@ final class BlockedCloud3(
   import SelectionCore.{dist2, Contained}
 
   // x and y on the integer grid, z at 1/zDenom
-  private val core = new SelectionCore(spark, blocks, meta.headLen, meta.tailLen, Seq(
-      GridAxis(0.0, 1.0, meta.qxMax, v => v), GridAxis(0.0, 1.0, meta.qyMax, v => v),
-      GridAxis(0.0, 1.0 / meta.zDenom, meta.qzMax, v => v * meta.zDenom)),
+  private val core = new SelectionCore(spark, blocks, meta.headLen, meta.tailLen,
+    meta.axes.zip(Seq(meta.qxMax, meta.qyMax, meta.qzMax)).map { case (a, m) => a.gridAxis(m) },
     budget = 2048, (blk, tag) => explode3(blk, Some(tag)))
 
   /** The shapes this cloud holds a selection template for. */

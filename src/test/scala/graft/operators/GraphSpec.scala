@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class GraphSpec extends AnyFunSuite {
+import graft.sources.TempDir
+
+class GraphSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -343,12 +345,12 @@ class GraphSpec extends AnyFunSuite {
       s"lpa ${m(lpFast)} != ${m(lpLoop)} / $repFast != $repLoop")
   }
 
-  // LAST in this suite: setCheckpointDir is irreversible on the shared
-  // session, and it flips every later graph-op truncation in this JVM
-  // from localCheckpoint to reliable checkpoint (correct, just slower)
+  // LAST in this suite: setCheckpointDir flips every later graph-op
+  // truncation on the shared session from localCheckpoint to reliable
+  // checkpoint (correct, just slower) until afterAll unsets it
   test("a configured checkpoint dir upgrades round truncation to reliable " +
       "checkpoints with identical results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tmpSubdir("ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     val edges = (0L until 12L).map(i => (i, i + 1L)).toDF("a", "b")
     val got = Graph.connectedComponents(edges, "a", "b")
@@ -358,4 +360,8 @@ class GraphSpec extends AnyFunSuite {
       new java.io.File(dir).listFiles.nonEmpty,
       "reliable checkpoint files were actually written")
   }
+
+  // unset before the directory goes, or later checkpoints recreate it
+  override def afterAll(): Unit =
+    try org.apache.spark.CheckpointDir.clear(spark.sparkContext) finally super.afterAll()
 }

@@ -176,7 +176,7 @@ class GridAndSetOpsSpec extends AnyFunSuite with TempDir {
 
   test("stored IVF index: partition-pruned probes, same answer as inline IVF") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dir = s"/tmp/graft_ivf_spec_${System.nanoTime()}"
+    val dir = tmpSubdir("ivf_spec")
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", dir, nLists = 16)
     val q = emb.filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0).toArray

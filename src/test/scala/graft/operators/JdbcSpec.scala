@@ -6,6 +6,8 @@ import java.util.Properties
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TempDir
+
 /** Exercises the S6/S7 JDBC storage path (PointCloud.writeJdbc) against
   * embedded Apache Derby — the one JDBC engine shipped with Spark, so
   * the partition-parallel writer, table creation, type mapping and the
@@ -13,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * PostgreSQL array mapping (arraysAsText = false) shares everything
   * but the three-column projection and still needs a live PostgreSQL;
   * see the reference schema at db/__init__.py:41-58. */
-class JdbcSpec extends AnyFunSuite {
+class JdbcSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,8 +25,7 @@ class JdbcSpec extends AnyFunSuite {
 
   test("writeJdbc stores pc_record/pc_metadata tables an independent client can read back") {
     import spark.implicits._
-    val dbDir = java.nio.file.Files.createTempDirectory("graft_derby").toString
-    val url = s"jdbc:derby:$dbDir/pcdb;create=true"
+    val url = s"jdbc:derby:${tmp("pcdb")};create=true"
 
     val pts = (0 until 2000).map { i =>
       ((i % 50).toDouble, (i / 50).toDouble, (i % 7).toDouble)
@@ -81,4 +82,11 @@ class JdbcSpec extends AnyFunSuite {
       assert(rs.getInt(1) == 2, "append mode accumulates catalog rows")
     } finally conn2.close()
   }
+
+  // Derby holds the database open until it is shut down; a shutdown
+  // reports itself as an SQLException
+  override def afterAll(): Unit =
+    try intercept[java.sql.SQLException](DriverManager.getConnection(
+      s"jdbc:derby:${tmp("pcdb")};shutdown=true"))
+    finally super.afterAll()
 }

@@ -298,11 +298,33 @@ class PointCloudSpec extends AnyFunSuite with TempDir {
       PointCloud.write(cloud, dir))
   }
 
-  test("a NaN coordinate fails the import with NumberFormatException") {
-    import spark.implicits._
-    val nan = Seq((0.0, 0.0, 0.0), (Double.NaN, 1.0, 1.0)).toDF("x", "y", "z")
-    intercept[NumberFormatException](PointCloud.importPoints(nan, ImportSpec(ratio = 0.5)))
-  }
+  /** The calls of one cloud's store, so each store guard below runs on
+    * both clouds; `prefix` names a cloud's tests. `load` imports points
+    * and `save` imports and writes them. */
+  private case class Store(prefix: String, load: DataFrame => Any,
+      save: (DataFrame, String) => Unit, read: String => (StoreMeta[_], DataFrame),
+      ingest: String => (DataFrame, Long) => Unit, append: (String, DataFrame) => Unit,
+      compact: String => Unit)
+
+  private val stores = Seq(
+    Store("", PointCloud.importPoints(_, ImportSpec(ratio = 0.5)),
+      (points, dir) =>
+        PointCloud.write(PointCloud.importPoints(points, ImportSpec(ratio = 0.5)), dir),
+      { dir => val c = PointCloud.read(spark, dir); (c.meta, c.blocks) },
+      graft.streaming.Streams.cloudIngest(spark, _), PointCloud.appendPoints(spark, _, _),
+      PointCloud.compact(spark, _)),
+    Store("3D: ", PointCloud3.importPoints(_),
+      (points, dir) => PointCloud3.write(PointCloud3.importPoints(points), dir),
+      { dir => val c = PointCloud3.read(spark, dir); (c.meta, c.blocks) },
+      graft.streaming.Streams.cloud3Ingest(spark, _), PointCloud3.appendBatch(spark, _, _, 0L),
+      PointCloud3.compact(spark, _)))
+
+  for (store <- stores)
+    test(s"${store.prefix}a NaN coordinate fails the import with NumberFormatException") {
+      import spark.implicits._
+      val nan = Seq((0.0, 0.0, 0.0), (Double.NaN, 1.0, 1.0)).toDF("x", "y", "z")
+      intercept[NumberFormatException](store.load(nan))
+    }
 
   test("write/read roundtrip preserves query results") {
     val dir = tmpSubdir("graft_pc_test")
@@ -340,52 +362,53 @@ class PointCloudSpec extends AnyFunSuite with TempDir {
     assert(compacted.meta.pointCount == 500)
   }
 
-  test("compact crash window (meta written, delta not yet deleted) stays consistent") {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    val dir = tmpSubdir("graft_pc_crash")
-    val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
-    val delta = (0 until 100).map(i => ((i % 10) * 10.0 + 5.0, (i / 10) * 10.0 + 5.0, -i.toDouble))
-    PointCloud.write(PointCloud.importPoints(base.toDF("x", "y", "z"), ImportSpec(ratio = 0.5)), dir)
-    // streamed ingest is the path that creates the blocks_delta +
-    // counts ledger dirs compact later folds in
-    graft.streaming.Streams.cloudIngest(spark, dir)(delta.toDF("x", "y", "z"), 0L)
+  for (store <- stores)
+    test(s"${store.prefix}compact crash window (meta written, delta not yet deleted) stays " +
+        "consistent") {
+      import spark.implicits._
+      import java.nio.file.{Files, Paths}
+      val dir = tmpSubdir("graft_pc_crash")
+      val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
+      // z >= 0: the 3D store keys z on a non-negative grid
+      val delta =
+        (0 until 100).map(i => ((i % 10) * 10.0 + 5.0, (i / 10) * 10.0 + 5.0, i.toDouble))
+      store.save(base.toDF("x", "y", "z"), dir)
+      // streamed ingest is the path that creates the blocks_delta +
+      // counts ledger dirs compact later folds in
+      store.ingest(dir)(delta.toDF("x", "y", "z"), 0L)
 
-    // snapshot the delta + ledger dirs, run a full compact, then put
-    // them back: that reconstructs exactly the state a crash between
-    // compact's meta write and its delta/ledger deletion leaves behind
-    def copyTree(from: String, to: String): Unit = {
-      val src = Paths.get(from)
-      val s = Files.walk(src)
-      try s.forEach { p =>
-        val t = Paths.get(to).resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Files.copy(p, t)
-      } finally s.close()
+      // snapshot the delta + ledger dirs, run a full compact, then put
+      // them back: that reconstructs exactly the state a crash between
+      // compact's meta write and its delta/ledger deletion leaves behind
+      def copyTree(from: String, to: String): Unit = {
+        val src = Paths.get(from)
+        val s = Files.walk(src)
+        try s.forEach { p =>
+          val t = Paths.get(to).resolve(src.relativize(p))
+          if (Files.isDirectory(p)) Files.createDirectories(t)
+          else Files.copy(p, t)
+        } finally s.close()
+      }
+      val snap = tmpSubdir("graft_pc_crash_snap")
+      copyTree(s"$dir/blocks_delta", s"$snap/blocks_delta")
+      copyTree(s"$dir/counts", s"$snap/counts")
+      store.compact(dir)
+      copyTree(s"$snap/blocks_delta", s"$dir/blocks_delta")
+      copyTree(s"$snap/counts", s"$dir/counts")
+
+      // invariant under the crash state: composed meta pointCount still
+      // equals the physical point multiset it announces (base + 2x delta
+      // — a consistent overcount, never points the meta doesn't know of)
+      val (crashed, crashedBlocks) = store.read(dir)
+      val physical = crashedBlocks.select(explode(col("sfc_tail"))).count()
+      assert(crashed.pointCount == physical, s"meta=${crashed.pointCount} physical=$physical")
+      assert(crashed.pointCount == 600L)
+
+      // a re-run of compact from the crash state converges to the clean one
+      store.compact(dir)
+      val (re, reBlocks) = store.read(dir)
+      assert(re.pointCount == reBlocks.select(explode(col("sfc_tail"))).count())
     }
-    val snap = tmpSubdir("graft_pc_crash_snap")
-    copyTree(s"$dir/blocks_delta", s"$snap/blocks_delta")
-    copyTree(s"$dir/counts", s"$snap/counts")
-    PointCloud.compact(spark, dir)
-    copyTree(s"$snap/blocks_delta", s"$dir/blocks_delta")
-    copyTree(s"$snap/counts", s"$dir/counts")
-
-    // invariant under the crash state: composed meta pointCount still
-    // equals the physical point multiset it announces (base + 2x delta
-    // — a consistent overcount, never points the meta doesn't know of)
-    val crashed = PointCloud.read(spark, dir)
-    val physical = crashed.blocks
-      .select(explode(col("sfc_tail"))).count()
-    assert(crashed.meta.pointCount == physical,
-      s"meta=${crashed.meta.pointCount} physical=$physical")
-    assert(crashed.meta.pointCount == 600L)
-
-    // a re-run of compact from the crash state converges to the clean one
-    PointCloud.compact(spark, dir)
-    val re = PointCloud.read(spark, dir)
-    assert(re.meta.pointCount ==
-      re.blocks.select(explode(col("sfc_tail"))).count())
-  }
 
   test("streamed 2D appends are exactly-once and equal a batch rebuild") {
     import spark.implicits._
@@ -498,25 +521,25 @@ class PointCloudSpec extends AnyFunSuite with TempDir {
     assert(ground.size == 36 - 5, "exactly the plain remains ground")
   }
 
-  test("append beyond the stored key-space envelope is rejected") {
-    import spark.implicits._
-    val dir = tmpSubdir("graft_pc_appx")
-    val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
-    PointCloud.write(
-      PointCloud.importPoints(base.toDF("x", "y", "z"), ImportSpec(ratio = 0.5)), dir)
-    val meta0 = PointCloud.read(spark, dir).meta
-    // base maxes are (190, 190) -> 8 bits/dim -> 16-bit keys; (300, 300)
-    // needs 9 bits/dim, outside the coverable head space — before the
-    // guard this appended fine but every bbox query silently omitted it
-    val bad = Seq((300.0, 300.0, 1.0)).toDF("x", "y", "z")
-    val e = intercept[IllegalArgumentException] {
-      PointCloud.appendPoints(spark, dir, bad)
+  // base maxes are (190, 190) -> 8 bits/dim -> 16-bit 2D keys; (300,
+  // 300) needs 9 bits/dim, outside the coverable head space — before
+  // the guard this appended fine but every bbox query silently omitted
+  // it. In 3D, z up to 399.00 takes the key to 48 bits; x = 65536 is
+  // the first to need more.
+  for ((store, bad) <- stores.zip(Seq((300.0, 300.0, 1.0), (65536.0, 1.0, 1.0))))
+    test(s"${store.prefix}append beyond the stored key-space envelope is rejected") {
+      import spark.implicits._
+      val dir = tmpSubdir("graft_pc_appx")
+      val base = (0 until 400).map(i => ((i % 20) * 10.0, (i / 20) * 10.0, i.toDouble))
+      store.save(base.toDF("x", "y", "z"), dir)
+      val meta0 = store.read(dir)._1
+      val e = intercept[IllegalArgumentException] {
+        store.append(dir, Seq(bad).toDF("x", "y", "z"))
+      }
+      assert(e.getMessage.contains("key space"))
+      // the rejected append must not have touched the store
+      assert(store.read(dir)._1 == meta0)
     }
-    assert(e.getMessage.contains("key space"))
-    // the rejected append must not have touched the store
-    val after = PointCloud.read(spark, dir)
-    assert(after.meta == meta0)
-  }
 
   test("a quantized x past the 31-bit grid cap is rejected on import and append") {
     import spark.implicits._

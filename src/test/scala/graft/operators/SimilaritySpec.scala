@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SimilaritySpec extends AnyFunSuite {
+import graft.sources.TempDir
+
+class SimilaritySpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -192,7 +194,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("appendToIvfIndex: stored centroids assign the delta; probes find it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = tmpSubdir("ivf_app")
     val base = emb((0L, e1, 0), (1L, e2, 0), (2L, e12, 0), (3L, ne1, 0),
       (4L, Array(0.9f, 0.1f, 0f, 0f), 0), (5L, Array(0.1f, 0.9f, 0f, 0f), 0))
     Similarity.writeIvfIndex(base, "vec_id", "embedding", dir, nLists = 2)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** FLAC-subset codec validation: bit I/O, CRCs against published
   * check values, subframe/frame/stream roundtrips under adversarial
   * signals, seektable framing, and the distributed file reader. */
-class FlacSpec extends AnyFunSuite {
+class FlacSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -177,7 +177,7 @@ class FlacSpec extends AnyFunSuite {
     val n = 50000
     val df = (0 until n).map(i => (i.toLong, ((i * 37) % 32768) - 16384))
       .toDF("idx", "value").repartition(5) // deliberately scrambled
-    val path = "/tmp/graft_flac_dist.flac"
+    val path = tmp("dist.flac")
     Flac.writeSamples(df, path, blockSize = 1024)
     val info = Flac.parseInfo({
       val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)); b

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source/sink format coverage beyond parquet + LAS: ORC, JSON lines,
   * and CSV round-trip the documents table losslessly (CSV via explicit
   * schema on read — it carries no types of its own). */
-class FormatsSpec extends AnyFunSuite {
+class FormatsSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,19 +24,19 @@ class FormatsSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
 
   test("orc round-trip is lossless") {
-    val p = s"/tmp/graft_fmt_orc_${System.nanoTime()}"
+    val p = tmp("orc")
     docs.write.mode("overwrite").orc(p)
     assert(canon(spark.read.orc(p)) == canon(docs))
   }
 
   test("json-lines round-trip is lossless under the original schema") {
-    val p = s"/tmp/graft_fmt_json_${System.nanoTime()}"
+    val p = tmp("json")
     docs.write.mode("overwrite").json(p)
     assert(canon(spark.read.schema(docs.schema).json(p)) == canon(docs))
   }
 
   test("csv round-trip is lossless with quoting + explicit schema") {
-    val p = s"/tmp/graft_fmt_csv_${System.nanoTime()}"
+    val p = tmp("csv")
     docs.write.mode("overwrite")
       .option("header", "true").option("quoteAll", "true").option("escape", "\"")
       .csv(p)

@@ -3,10 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TempDir
+
 /** Pins the scale-up generator BENCH_SF1.md depends on: replicas must
   * preserve referential integrity (every fact key resolves), multiply
   * row counts exactly, and perturb content rather than clone it. */
-class GenScaleSpec extends AnyFunSuite {
+class GenScaleSpec extends AnyFunSuite with TempDir {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -17,7 +19,7 @@ class GenScaleSpec extends AnyFunSuite {
 
   test("2x scale-up: exact row counts, resolvable keys, perturbed content") {
     val src = "/root/testdata/sf0.001"
-    val dst = java.nio.file.Files.createTempDirectory("graft_genscale").toString
+    val dst = tmpSubdir("genscale")
     GenScale.main(Array(src, dst, "2"))
 
     def n(dir: String, t: String): Long =
