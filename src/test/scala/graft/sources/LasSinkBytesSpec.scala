@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
 
 import scala.util.Random
 
@@ -60,9 +59,7 @@ class LasSinkBytesSpec extends AnyFunSuite with TempDir {
     })
   private def empty = frame(StructType(doubles("x", "y", "z")), Nil)
 
-  private def sha256(path: String): String =
-    MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(Paths.get(path)))
-      .map(b => f"$b%02x").mkString
+  private def sha256(path: String): String = BytePins.sha256(Files.readAllBytes(Paths.get(path)))
 
   private val cases: Seq[(String, String => Unit, String)] = Seq(
     ("las_pf3", p => Las.writePoints(points, p),

@@ -2,6 +2,8 @@ package graft.sources
 
 import scala.util.Random
 
+import graft.sources.BytePins.sha256
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,11 +62,17 @@ class Laz14Spec extends AnyFunSuite with TempDir {
     }
   }
 
+  private val chunkPins = Map(
+    6 -> "c6baf017fea7924ffe30d6725518417bc975d03903a8cb9396156d0a49122550",
+    7 -> "83fa1901a80f7f4714da67940d167eafa36b48d1817004f3a0f92342bd49f503",
+    8 -> "c85104e1523b1bbc32fd826e69035577d364dcfcc0a2aefd5b597c4c71d9bdc2")
+
   for (format <- Seq(6, 7, 8))
     test(s"point format $format layered chunk roundtrips with every attribute varying") {
       val rnd = new Random(23 + format)
       val pts = randomPoints14(rnd, 40000, format)
       val bytes = Laz14.encodeChunk14(format, pts)
+      assert(sha256(bytes) == chunkPins(format))
       val raw = pts.length * (if (format == 6) 30 else if (format == 7) 36 else 38)
       assert(bytes.length < raw * 3 / 4,
         s"compression ratio sanity: ${bytes.length} vs raw $raw")
@@ -87,6 +95,7 @@ class Laz14Spec extends AnyFunSuite with TempDir {
       p.copy(flags = (p.flags & 0xCF) | ((i % 4) << 4))
     }
     val bytes = Laz14.encodeChunk14(6, pts)
+    assert(sha256(bytes) == "b49ae19e55c95a1984b0df6eef255ad0a3489b43aa9734157e313df4073b7b59")
     val back = Laz14.decodeChunk14(6, bytes, 0, pts.length)
     pts.indices.foreach(i => assert(back(i) == pts(i), s"point $i"))
   }

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
+import graft.sources.BytePins.sha256
+
 /** LASzip codec validation. Every layer roundtrips against itself —
   * entropy coder, integer corrector, POINT10 chunk, whole file —
   * with adversarial inputs (carry-forcing streams, Int.MinValue
@@ -85,6 +87,7 @@ class LazSpec extends AnyFunSuite with TempDir {
     stream.indices.foreach(i => eic.compress(enc, preds(i), stream(i), i % 3))
     enc.done()
     val bytes = enc.result()
+    assert(sha256(bytes) == "1843db9896f7fc0da32b3c55596c52964b9d179391b1e96bb1f3dd53ea69391f")
     val dec = new ArithmeticDecoder(bytes, 0, bytes.length).init()
     val dic = new IntegerCompressor(32, 3).initModels()
     stream.indices.foreach { i =>
@@ -100,6 +103,7 @@ class LazSpec extends AnyFunSuite with TempDir {
     var prev = 0
     vals.foreach { v => eic.compress(enc, prev, v, 0); prev = v }
     enc.done()
+    assert(sha256(enc.result()) == "4c4a3c7201109b4ae94ece2066dd3a681c0541a61d6c39a386233c507bcb44c5")
     val dec = new ArithmeticDecoder(enc.result(), 0, enc.byteCount).init()
     val dic = new IntegerCompressor(16, 1).initModels()
     prev = 0
@@ -132,6 +136,7 @@ class LazSpec extends AnyFunSuite with TempDir {
     val rnd = new Random(11)
     val pts = randomPoints(rnd, 60000)
     val bytes = Laz.encodeChunk(pts)
+    assert(sha256(bytes) == "2c2a6b1b31e76ecff7f426b64f1d2464bef0ba4b018fc2ef8e643c0642223a77")
     assert(bytes.length < pts.length * 20 / 2,
       s"compression ratio sanity: ${bytes.length} vs raw ${pts.length * 20}")
     val back = Laz.decodeChunk(bytes, 0, pts.length)
@@ -176,6 +181,7 @@ class LazSpec extends AnyFunSuite with TempDir {
     val times = seq.result()
     val pts = times.map(g => Laz.FullPoint(Laz.Point10(0, 0, 0, 0, 0, 0, 0, 0, 0), gps = g))
     val bytes = Laz.encodeChunkFull(1, pts)
+    assert(sha256(bytes) == "d78acdd542599ed46d0ec63ff56882e227bd4723dfde7cda876fbe2fa4a548e7")
     val back = Laz.decodeChunkFull(1, bytes, 0, pts.length)
     times.indices.foreach { j =>
       assert(back(j).gps == times(j), s"gps $j: ${back(j).gps} vs ${times(j)}")
@@ -197,6 +203,7 @@ class LazSpec extends AnyFunSuite with TempDir {
       Laz.FullPoint(Laz.Point10(0, 0, 0, 0, 0, 0, 0, 0, 0), r = r, g = g, b = b)
     }
     val bytes = Laz.encodeChunkFull(2, pts)
+    assert(sha256(bytes) == "c22fb4b8e4b676e4569685fd17f1b3db8742bdd17873a7245f03d4e50b6ad11f")
     val back = Laz.decodeChunkFull(2, bytes, 0, pts.length)
     pts.indices.foreach { j =>
       assert((back(j).r, back(j).g, back(j).b) == (pts(j).r, pts(j).g, pts(j).b), s"rgb $j")
@@ -213,6 +220,7 @@ class LazSpec extends AnyFunSuite with TempDir {
         g = rnd.nextInt(65536), b = rnd.nextInt(65536))
     }
     val bytes = Laz.encodeChunkFull(3, pts)
+    assert(sha256(bytes) == "cd9037ee71f158b7f6bfb3915f83361f2269ad119c14bffc7f58d2a9416535ff")
     val back = Laz.decodeChunkFull(3, bytes, 0, pts.length)
     pts.indices.foreach(j => assert(back(j) == pts(j), s"point $j"))
   }
@@ -242,6 +250,7 @@ class LazSpec extends AnyFunSuite with TempDir {
         (i / 100).toByte)) // slow ramp
     }
     val bytes = Laz.encodeChunkFull(0, pts, extraLen = 4)
+    assert(sha256(bytes) == "6c82b6d802f9c226a5091ab7117fbae5955ac8d036e4b1e021bd1c11d886132c")
     val back = Laz.decodeChunkFull(0, bytes, 0, pts.length, extraLen = 4)
     pts.indices.foreach { j =>
       assert(back(j).core == pts(j).core, s"core $j")

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
+import graft.sources.BytePins.sha256
 import graft.sources.Laz.{FullPoint, Point10}
 
 /** Compressor-1 (pre-2013 pointwise LASzip) validation: v1 item
@@ -68,9 +69,19 @@ class LazV1Spec extends AnyFunSuite with TempDir {
   }
 
   test("v1 stream roundtrips every point format, with and without extra bytes") {
+    val pins = Map(
+      (0, 0) -> "75f51e11981719baff00d74ec6b21a98dade2abbaac6fd8e91935a028e97b68f",
+      (0, 3) -> "d832f6ae8285114a3c19421eb01767c54637e8c9f333c4c246474544108aceb5",
+      (1, 0) -> "012faf41a90ddef512ff7b98c23f4ff9c5ecaa51d3f846c16cc056951c289f0d",
+      (1, 3) -> "7438d376ac48437fa6e9c6dfd75d21c64edc37e88846ce06440b96c38b15757a",
+      (2, 0) -> "2a8f60975c8a5fd8f7717493997f2a3cbdd5f5f597db3cc9cf80f9b51da046d1",
+      (2, 3) -> "12b468a68172ecb798e17ec239579ddd88e320316e706d5d403d63fe674abb04",
+      (3, 0) -> "3bb5c7751c4d218d69e73ba8b705f684efd1287369ad623db259cdde29fd9603",
+      (3, 3) -> "ccd41b3ba2bd37b7169ea968597161bb3cec15dec537fb2a26c53a3aa5b1425d")
     for (fmt <- 0 to 3; extraLen <- Seq(0, 3)) {
       val pts = walkPoints(new Random(fmt * 10 + extraLen), 4000, fmt, extraLen)
       val bytes = LazV1.encodeStream(fmt, pts, extraLen)
+      assert(sha256(bytes) == pins((fmt, extraLen)), s"pf$fmt extra $extraLen")
       val back = LazV1.decodeStream(fmt, bytes, 0, pts.length, extraLen)
       assertSame(pts, back)
     }
@@ -105,6 +116,7 @@ class LazV1Spec extends AnyFunSuite with TempDir {
     seq.drop(1).foreach(c.compress(enc, _))
     enc.done()
     val bytes = enc.result()
+    assert(sha256(bytes) == "23462c03e264d3e793e76e48d430d25ed43a08798bf79bf20c816bb39d99c43f")
     val dec = new ArithmeticDecoder(bytes, 0, bytes.length).init()
     val d = new LazV1.GpsTime11V1Codec(seq(0))
     seq.drop(1).foreach(v => assert(d.decompress(dec) == v))

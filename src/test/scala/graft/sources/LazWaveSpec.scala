@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
+import graft.sources.BytePins.sha256
 import graft.sources.Laz.{FullPoint, Point10, Wavepacket}
 
 /** Waveform point formats 4/5: the WAVEPACKET13 item codec and the
@@ -56,9 +57,13 @@ class LazWaveSpec extends AnyFunSuite with TempDir {
   }
 
   test("pf4 and pf5 chunks roundtrip with adversarial wavepacket sequences") {
+    val pins = Map(
+      4 -> "0a5ba3e4074bd3ab32fba38517c74eaa932de3db9303fe58a7870915af72e644",
+      5 -> "dee14fd145118d40642d938cd39f5584469f85fdba2ecde6212e14a23071156b")
     for (fmt <- Seq(4, 5)) {
       val pts = wavePoints(new Random(fmt), 4000, fmt)
       val bytes = Laz.encodeChunkFull(fmt, pts)
+      assert(sha256(bytes) == pins(fmt), s"pf$fmt")
       val back = Laz.decodeChunkFull(fmt, bytes, 0, pts.length)
       pts.indices.foreach { i =>
         assert(back(i).core == pts(i).core, s"core at $i")
@@ -72,6 +77,9 @@ class LazWaveSpec extends AnyFunSuite with TempDir {
 
   test("layered pf9 and pf10 chunks roundtrip the wavepacket layer") {
     import graft.sources.Laz14.Point14
+    val pins = Map(
+      9 -> "7b70c11b9e5cdf9b2c99303e9178b95773836f9bf5093f2cec36792522af9942",
+      10 -> "fd2cd466e711bf0b854233be749d5e77752045292baec0cd378f682b777762f3")
     for (fmt <- Seq(9, 10)) {
       val rnd = new Random(fmt * 3)
       var off = 8192L
@@ -96,6 +104,7 @@ class LazWaveSpec extends AnyFunSuite with TempDir {
             java.lang.Float.floatToIntBits(i.toFloat), i, -i, i * 7))
       }
       val bytes = Laz14.encodeChunk14(fmt, pts)
+      assert(sha256(bytes) == pins(fmt), s"pf$fmt")
       val back = Laz14.decodeChunk14(fmt, bytes, 0, pts.length)
       pts.indices.foreach { i =>
         assert(back(i) == pts(i), s"pf$fmt point $i")
