@@ -15,11 +15,15 @@ package graft.sources
   * model distribution — bit-identical output to the table-accelerated
   * form, which is a lookup shortcut only.
   *
+  * The range encoder and decoder are two classes, being two algorithms;
+  * [[Coder]] puts either behind one interface, so every item codec above
+  * them is one routine that both directions run.
+  *
   * In-sandbox validation is encoder→decoder roundtrip (model-level,
-  * corrector-level, point-level, and whole-file; see LazSpec) — there
-  * is no independent LASzip binary in this environment, so
-  * cross-implementation interop is asserted against the spec text, not
-  * a second implementation.
+  * corrector-level, point-level, and whole-file; see LazSpec) plus
+  * SHA-256 pins of the coded bytes — there is no independent LASzip
+  * binary in this environment, so cross-implementation interop is
+  * asserted against the spec text, not a second implementation.
   */
 private[sources] object Ac {
   final val MinLength = 0x01000000L // renormalize below this interval width
@@ -78,6 +82,15 @@ private[sources] final class ArithmeticModel(val symbols: Int) {
     val maxCycle = (symbols + 6) << 3
     if (updateCycle > maxCycle) updateCycle = maxCycle
     symbolsUntilUpdate = updateCycle
+  }
+}
+
+private[sources] object ArithmeticModel {
+  /** `models(i)`, created on first use — the per-previous-value byte
+    * models of the LAZ codecs. */
+  def at(models: Array[ArithmeticModel], i: Int, symbols: Int): ArithmeticModel = {
+    if (models(i) == null) models(i) = new ArithmeticModel(symbols).init()
+    models(i)
   }
 }
 
@@ -179,11 +192,11 @@ private[sources] final class ArithmeticEncoder {
     if (m.symbolsUntilUpdate == 0) m.update()
   }
 
-  /** Raw (model-free) bits; >19 bits split low-short-first like the
+  /** Raw (model-free) bits; >19 bits split low-16-bits-first like the
     * published coder so both ends agree on the interval walk. */
   def writeBits(bits: Int, value: Long): Unit = {
     if (bits > 19) {
-      writeShort(value & 0xFFFFL)
+      writeBits(16, value & 0xFFFFL)
       writeBits(bits - 16, value >>> 16)
     } else {
       val initBase = base
@@ -192,14 +205,6 @@ private[sources] final class ArithmeticEncoder {
       if (initBase > base) propagateCarry()
       if (length < MinLength) renorm()
     }
-  }
-
-  def writeShort(value: Long): Unit = {
-    val initBase = base
-    length = length >>> 16
-    base = (base + value * length) & M32
-    if (initBase > base) propagateCarry()
-    if (length < MinLength) renorm()
   }
 
   /** Terminate: widen to a decodable fixed point and flush (the
@@ -220,6 +225,10 @@ private[sources] final class ArithmeticEncoder {
 
   def result(): Array[Byte] = java.util.Arrays.copyOf(buf, pos)
   def byteCount: Int = pos
+
+  /** Nothing coded yet: every coding step narrows `length` below its
+    * start value or emits a byte. */
+  def isEmpty: Boolean = pos == 0 && length == MaxLength
 }
 
 /** Range decoder over a byte slice. Reads past `end` return 0 — the
@@ -290,7 +299,7 @@ private[sources] final class ArithmeticDecoder(bytes: Array[Byte], start: Int, e
 
   def readBits(bits: Int): Long = {
     if (bits > 19) {
-      val low = readShort()
+      val low = readBits(16)
       val high = readBits(bits - 16)
       (high << 16) | low
     } else {
@@ -301,18 +310,30 @@ private[sources] final class ArithmeticDecoder(bytes: Array[Byte], start: Int, e
       sym
     }
   }
+}
 
-  def readShort(): Long = {
-    length = length >>> 16
-    val sym = value / length
-    value -= length * sym
-    if (length < MinLength) renorm()
-    sym
-  }
+/** Either direction of the range coder behind one interface, so each
+  * LAZ item codec is one routine that encoding and decoding both run:
+  * `symbol`, `bit` and `bits` code a value and return it — encoding
+  * writes the value given, decoding ignores it and returns what it
+  * reads. Work only the encoder needs (choosing a symbol from the
+  * value) is guarded by `encoding`. */
+private[sources] final class Coder private (enc: ArithmeticEncoder, dec: ArithmeticDecoder) {
+  val encoding: Boolean = enc != null
 
-  /** Next unread offset — chunk framing comes from the chunk table,
-    * not from here, but specs assert consumption stays in-slice. */
-  def position: Int = p
+  def symbol(m: ArithmeticModel, s: Int): Int =
+    if (encoding) { enc.encodeSymbol(m, s); s } else dec.decodeSymbol(m)
+
+  def bit(m: ArithmeticBitModel, b: Int): Int =
+    if (encoding) { enc.encodeBit(m, b); b } else dec.decodeBit(m)
+
+  def bits(n: Int, v: Long): Long =
+    if (encoding) { enc.writeBits(n, v); v } else dec.readBits(n)
+}
+
+private[sources] object Coder {
+  def apply(enc: ArithmeticEncoder): Coder = new Coder(enc, null)
+  def apply(dec: ArithmeticDecoder): Coder = new Coder(null, dec)
 }
 
 /** The LASzip k-bit integer corrector: a corrector `c = real - pred`
@@ -348,64 +369,47 @@ private[sources] final class IntegerCompressor(bits: Int, contexts: Int) {
     this
   }
 
-  def compress(enc: ArithmeticEncoder, pred: Int, real: Int, context: Int): Unit = {
-    var corr = real - pred
-    if (corrRange != 0) {
-      if (corr < corrMin) corr += corrRange.toInt
-      else if (corr > corrMax) corr -= corrRange.toInt
-    }
-    writeCorrector(enc, corr, mBits(context))
-  }
-
-  def decompress(dec: ArithmeticDecoder, pred: Int, context: Int): Int = {
-    var real = pred + readCorrector(dec, mBits(context))
-    if (corrRange != 0) {
-      if (real < 0) real += corrRange.toInt
-      else if (real >= corrRange) real -= corrRange.toInt
-    }
-    real
-  }
-
-  private def writeCorrector(enc: ArithmeticEncoder, c: Int, mB: ArithmeticModel): Unit = {
-    // tightest interval [-(2^k - 1), 2^k] containing c; k==32 happens
-    // only for c == Int.MinValue, which the k symbol alone encodes
-    var k = 0
-    var c1: Long = if (c <= 0) -c.toLong else c.toLong - 1
-    while (c1 != 0) { c1 >>>= 1; k += 1 }
-    lastKVal = k
-    enc.encodeSymbol(mB, k)
-    if (k != 0) {
-      if (k < 32) {
-        // fold into [0, 2^k - 1]: negatives up by 2^k - 1, positives down by 1
-        var cc = if (c < 0) c + ((1 << k) - 1) else c - 1
-        if (k <= BitsHigh) enc.encodeSymbol(mCorrector(k), cc)
-        else {
-          val k1 = k - BitsHigh
-          val low = cc & ((1 << k1) - 1)
-          cc = cc >>> k1
-          enc.encodeSymbol(mCorrector(k), cc)
-          enc.writeBits(k1, low.toLong)
-        }
+  /** Code `real` against `pred` in `context` and return it, like
+    * [[Coder]]: encoding folds the corrector `real - pred` into the
+    * `bits`-wide range, decoding wraps the prediction plus corrector
+    * back into it; the k-bit scheme between is one routine. */
+  def code(c: Coder, pred: Int, real: Int, context: Int): Int =
+    if (c.encoding) {
+      var corr = real - pred
+      if (corrRange != 0) {
+        if (corr < corrMin) corr += corrRange.toInt
+        else if (corr > corrMax) corr -= corrRange.toInt
       }
-    } else enc.encodeBit(mCorrector0, c)
-  }
+      corrector(c, corr, mBits(context))
+      real
+    } else {
+      var v = pred + corrector(c, 0, mBits(context))
+      if (corrRange != 0) {
+        if (v < 0) v += corrRange.toInt
+        else if (v >= corrRange) v -= corrRange.toInt
+      }
+      v
+    }
 
-  private def readCorrector(dec: ArithmeticDecoder, mB: ArithmeticModel): Int = {
-    val k = dec.decodeSymbol(mB)
+  private def corrector(c: Coder, corr: Int, mB: ArithmeticModel): Int = {
+    // tightest interval [-(2^k - 1), 2^k] containing corr; k == 32 only
+    // for corr == Int.MinValue, which the k symbol alone codes
+    val k = c.symbol(mB, if (!c.encoding) 0
+      else 64 - java.lang.Long.numberOfLeadingZeros(if (corr <= 0) -corr.toLong else corr.toLong - 1))
     lastKVal = k
-    if (k != 0) {
-      if (k < 32) {
-        var c =
-          if (k <= BitsHigh) dec.decodeSymbol(mCorrector(k))
-          else {
-            val k1 = k - BitsHigh
-            val high = dec.decodeSymbol(mCorrector(k))
-            ((high.toLong << k1) | dec.readBits(k1)).toInt
-          }
-        if (c >= (1 << (k - 1))) c += 1
-        else c -= (1 << k) - 1
-        c
-      } else corrMin
-    } else dec.decodeBit(mCorrector0)
+    if (k == 0) c.bit(mCorrector0, corr)
+    else if (k == 32) corrMin
+    else {
+      // fold into [0, 2^k - 1]: negatives up by 2^k - 1, positives down by 1
+      val folded = if (corr < 0) corr + ((1 << k) - 1) else corr - 1
+      val f =
+        if (k <= BitsHigh) c.symbol(mCorrector(k), folded)
+        else { // model-coded high bits, raw low k1 bits
+          val k1 = k - BitsHigh
+          val high = c.symbol(mCorrector(k), folded >>> k1)
+          ((high.toLong << k1) | c.bits(k1, folded & ((1 << k1) - 1))).toInt
+        }
+      if (f >= (1 << (k - 1))) f + 1 else f - ((1 << k) - 1)
+    }
   }
 }

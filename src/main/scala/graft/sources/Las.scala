@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * public header (one parser, one writer), the laszip VLR, the LAZ chunk
   * table, the partition-parallel sink and the parallel byte-range scan.
   * [[Laz]] (point formats 0–5), [[Laz14]] (layered 6–10) and `LazV1`
-  * (pointwise) hold only point codecs and pick them for these two paths.
+  * (pointwise) hold only point codecs, each one routine that encoding
+  * and decoding both run, and pick them for these two paths.
   *
   * Reader design for scale: the header is parsed on the driver; point
   * records are a fixed stride (or LAZ chunks listed by the chunk table),
@@ -264,12 +265,13 @@ object Las {
     if (chunks.isEmpty) head.array()
     else {
       val enc = new ArithmeticEncoder
+      val c = Coder(enc)
       val ic = new IntegerCompressor(32, 2).initModels()
       var prevCount = 0
       var prevSize = 0
       chunks.foreach { case (count, size) =>
-        ic.compress(enc, prevCount, count, 0); prevCount = count
-        ic.compress(enc, prevSize, size, 1); prevSize = size
+        prevCount = ic.code(c, prevCount, count, 0)
+        prevSize = ic.code(c, prevSize, size, 1)
       }
       enc.done()
       head.array() ++ enc.result()
@@ -318,7 +320,7 @@ object Las {
         s"$path: implausible chunk table size $bodyLen")
       val body = new Array[Byte](bodyLen.toInt)
       raf.readFully(body)
-      val dec = new ArithmeticDecoder(body, 0, body.length).init()
+      val dec = Coder(new ArithmeticDecoder(body, 0, body.length).init())
       val ic = new IntegerCompressor(32, 2).initModels()
       val variable = info.chunkSize == VariableChunkSize
       val out = new Array[(Long, Int, Int)](nChunks)
@@ -329,9 +331,9 @@ object Las {
       var i = 0
       while (i < nChunks) {
         val count =
-          if (variable) { prevCount = ic.decompress(dec, prevCount, 0); prevCount }
+          if (variable) { prevCount = ic.code(dec, prevCount, 0, 0); prevCount }
           else math.min(info.chunkSize, remaining).toInt
-        val size = { prevSize = ic.decompress(dec, prevSize, 1); prevSize }
+        val size = { prevSize = ic.code(dec, prevSize, 0, 1); prevSize }
         // decoded table entries are untrusted: counts must stay within
         // the header's point total, chunk bytes must tile the region
         // BEFORE the table, and a count the coded bytes cannot
@@ -626,7 +628,7 @@ object Las {
     * y_max instead of the max coords). */
   def dirMetadata(dir: String): LasHeader = {
     val hs = lasFiles(dir).map { f =>
-      if (f.toLowerCase.endsWith(".laz")) Laz.readInfo(f).header else readHeader(f)
+      if (f.toLowerCase.endsWith(".laz")) lazInfo(f).header else readHeader(f)
     }
     hs.reduce { (a, b) =>
       a.copy(pointCount = a.pointCount + b.pointCount,

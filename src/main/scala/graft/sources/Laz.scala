@@ -19,6 +19,8 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
   * No code from any LASzip implementation is used — see the
   * ArithmeticCodec scaladoc for the validation boundary (roundtrip
   * in-sandbox; no second implementation exists in this environment).
+  * Each item codec is one `code` routine that encoding and decoding
+  * both run through a [[Coder]].
   *
   * Why this maps well onto Spark: LAZ chunks reset every model, so a
   * chunk is an independently decodable unit and the chunk table is a
@@ -31,12 +33,13 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
   * table carries per-chunk point counts), which keeps the file
   * well-formed without a final single-threaded re-chunk pass.
   *
-  * Supported: point formats 0–3 (POINT10/GPSTIME11/RGB12, all v2),
-  * optionally with one trailing BYTE v2 item ("extra bytes" — read
-  * and written as an opaque `extra_bytes` binary column; the LAS
-  * extra-bytes descriptor VLR that names the attributes is not
-  * interpreted); compressor 2 (pointwise chunked), fixed or variable
-  * chunk size.
+  * Supported: point formats 0–3 (POINT10/GPSTIME11/RGB12, all v2)
+  * and the waveform formats 4–5 (plus WAVEPACKET13), optionally with
+  * one trailing BYTE v2 item ("extra bytes" — read and written as an
+  * opaque `extra_bytes` binary column; the LAS extra-bytes descriptor
+  * VLR that names the attributes is not interpreted); compressor 2
+  * (pointwise chunked), fixed or variable chunk size, and compressor
+  * 1 through the version-1 codecs of [[LazV1]] in the same framing.
   */
 object Laz {
 
@@ -135,11 +138,33 @@ object Laz {
     }
   }
 
+  /** The item codecs of the pointwise streams, v1 and v2 alike: `code`
+    * codes one point's item through a [[Coder]] and, like the coder,
+    * returns the value given when encoding and the value read when
+    * decoding. */
+  private[sources] trait Point10Item { def code(c: Coder, p: Point10): Point10 }
+  private[sources] trait GpsItem { def code(c: Coder, bits: Long): Long }
+  private[sources] trait BytesItem { def code(c: Coder, cur: Array[Byte]): Array[Byte] }
+  /** RGB12 keeps the coded colour as its last value, read back by `r`, `g`, `b`. */
+  private[sources] trait RgbItem {
+    def code(c: Coder, r: Int, g: Int, b: Int): Unit
+    def r: Int
+    def g: Int
+    def b: Int
+  }
+
+  /** Encoder side: POINT10's changed-attributes mask against the last
+    * values (bits 32 flags, 16 intensity, 8 class, 4 angle, 2 user, 1 psid). */
+  private[sources] def changedMask(p: Point10, flags: Int, intensity: Int, cls: Int,
+      scanAngle: Int, user: Int, psid: Int): Int =
+    (if (flags != p.flags) 32 else 0) | (if (intensity != p.intensity) 16 else 0) |
+      (if (cls != p.cls) 8 else 0) | (if (scanAngle != p.scanAngle) 4 else 0) |
+      (if (user != p.user) 2 else 0) | (if (psid != p.psid) 1 else 0)
+
   /** POINT10 version-2 item codec. One instance per chunk (every
     * model resets at chunk boundaries — that independence is what the
-    * distributed reader exploits). Symmetric compress/decompress so a
-    * roundtrip exercises every model the spec defines. */
-  private final class Point10Codec(first: Point10) {
+    * distributed reader exploits). */
+  private final class Point10Codec(first: Point10) extends Point10Item {
     private val mChanged = new ArithmeticModel(64).init()
     private val icIntensity = new IntegerCompressor(16, 4).initModels()
     private val mScanAngleRank =
@@ -159,7 +184,6 @@ object Laz {
 
     private var lx = first.x
     private var ly = first.y
-    private var lz = first.z
     private var lFlags = first.flags
     private var lCls = first.cls
     private var lScanAngle = first.scanAngle
@@ -168,102 +192,39 @@ object Laz {
     // the spec inits the carried intensity to 0 (prediction goes via
     // lastIntensity[context], not the previous record)
 
-    private def byteModel(arr: Array[ArithmeticModel], idx: Int): ArithmeticModel = {
-      if (arr(idx) == null) arr(idx) = new ArithmeticModel(256).init()
-      arr(idx)
-    }
-
-    def compress(enc: ArithmeticEncoder, p: Point10): Unit = {
-      val r = p.flags & 7
-      val n = (p.flags >>> 3) & 7
+    def code(c: Coder, p: Point10): Point10 = {
+      val changed = c.symbol(mChanged, if (!c.encoding) 0
+        else changedMask(p, lFlags, lastIntensity(NumberReturnMap((p.flags >>> 3) & 7)(p.flags & 7)),
+          lCls, lScanAngle, lUser, lPsid))
+      if ((changed & 32) != 0) lFlags = c.symbol(ArithmeticModel.at(mBitByte, lFlags, 256), p.flags)
+      val r = lFlags & 7
+      val n = (lFlags >>> 3) & 7
       val m = NumberReturnMap(n)(r)
       val l = NumberReturnLevel(n)(r)
-
-      var changed = 0
-      if (lFlags != p.flags) changed |= 32
-      if (lastIntensity(m) != p.intensity) changed |= 16
-      if (lCls != p.cls) changed |= 8
-      if (lScanAngle != p.scanAngle) changed |= 4
-      if (lUser != p.user) changed |= 2
-      if (lPsid != p.psid) changed |= 1
-      enc.encodeSymbol(mChanged, changed)
-
-      if ((changed & 32) != 0) enc.encodeSymbol(byteModel(mBitByte, lFlags), p.flags)
-      if ((changed & 16) != 0) {
-        icIntensity.compress(enc, lastIntensity(m), p.intensity, if (m < 3) m else 3)
-        lastIntensity(m) = p.intensity
-      }
-      if ((changed & 8) != 0) enc.encodeSymbol(byteModel(mClassification, lCls), p.cls)
-      if ((changed & 4) != 0) {
-        val f = (p.flags >>> 6) & 1
-        enc.encodeSymbol(mScanAngleRank(f), (p.scanAngle - lScanAngle) & 0xFF)
-      }
-      if ((changed & 2) != 0) enc.encodeSymbol(byteModel(mUserData, lUser), p.user)
-      if ((changed & 1) != 0) icPointSource.compress(enc, lPsid, p.psid, 0)
+      if ((changed & 16) != 0)
+        lastIntensity(m) = icIntensity.code(c, lastIntensity(m), p.intensity, if (m < 3) m else 3)
+      if ((changed & 8) != 0) lCls = c.symbol(ArithmeticModel.at(mClassification, lCls, 256), p.cls)
+      if ((changed & 4) != 0) // angle difference folded mod 256
+        lScanAngle = (lScanAngle + c.symbol(mScanAngleRank((lFlags >>> 6) & 1),
+          (p.scanAngle - lScanAngle) & 0xFF)) & 0xFF
+      if ((changed & 2) != 0) lUser = c.symbol(ArithmeticModel.at(mUserData, lUser, 256), p.user)
+      if ((changed & 1) != 0) lPsid = icPointSource.code(c, lPsid, p.psid, 0)
 
       // x: median-of-5 predicted difference, context = single-return?
-      val dx = p.x - lx
-      icDx.compress(enc, lastXDiff(m).get, dx, if (n == 1) 1 else 0)
+      val single = if (n == 1) 1 else 0
+      val dx = icDx.code(c, lastXDiff(m).get, p.x - lx, single)
       lastXDiff(m).add(dx)
+      lx += dx
       // y: context folds in the x corrector's bit width (low bit cleared)
       val kx = icDx.lastK
-      val dy = p.y - ly
-      icDy.compress(enc, lastYDiff(m).get, dy,
-        (if (n == 1) 1 else 0) + (if (kx < 20) kx & 0xFE else 20))
+      val dy = icDy.code(c, lastYDiff(m).get, p.y - ly, single + (if (kx < 20) kx & 0xFE else 20))
       lastYDiff(m).add(dy)
+      ly += dy
       // z: predicted by the last height at this return level
       val kz = (icDx.lastK + icDy.lastK) / 2
-      icZ.compress(enc, lastHeight(l), p.z,
-        (if (n == 1) 1 else 0) + (if (kz < 18) kz & 0xFE else 18))
-      lastHeight(l) = p.z
-
-      lx = p.x; ly = p.y; lz = p.z
-      lFlags = p.flags; lCls = p.cls; lScanAngle = p.scanAngle
-      lUser = p.user; lPsid = p.psid
-    }
-
-    def decompress(dec: ArithmeticDecoder): Point10 = {
-      val changed = dec.decodeSymbol(mChanged)
-
-      val flags =
-        if ((changed & 32) != 0) dec.decodeSymbol(byteModel(mBitByte, lFlags)) else lFlags
-      val r = flags & 7
-      val n = (flags >>> 3) & 7
-      val m = NumberReturnMap(n)(r)
-      val l = NumberReturnLevel(n)(r)
-
-      if ((changed & 16) != 0)
-        lastIntensity(m) = icIntensity.decompress(dec, lastIntensity(m), if (m < 3) m else 3)
-      val intensity = lastIntensity(m)
-      val cls =
-        if ((changed & 8) != 0) dec.decodeSymbol(byteModel(mClassification, lCls)) else lCls
-      val scanAngle =
-        if ((changed & 4) != 0) {
-          val f = (flags >>> 6) & 1
-          (lScanAngle + dec.decodeSymbol(mScanAngleRank(f))) & 0xFF
-        } else lScanAngle
-      val user =
-        if ((changed & 2) != 0) dec.decodeSymbol(byteModel(mUserData, lUser)) else lUser
-      val psid =
-        if ((changed & 1) != 0) icPointSource.decompress(dec, lPsid, 0) else lPsid
-
-      val dx = icDx.decompress(dec, lastXDiff(m).get, if (n == 1) 1 else 0)
-      val x = lx + dx
-      lastXDiff(m).add(dx)
-      val kx = icDx.lastK
-      val dy = icDy.decompress(dec, lastYDiff(m).get,
-        (if (n == 1) 1 else 0) + (if (kx < 20) kx & 0xFE else 20))
-      val y = ly + dy
-      lastYDiff(m).add(dy)
-      val kz = (icDx.lastK + icDy.lastK) / 2
-      val z = icZ.decompress(dec, lastHeight(l),
-        (if (n == 1) 1 else 0) + (if (kz < 18) kz & 0xFE else 18))
-      lastHeight(l) = z
-
-      lx = x; ly = y; lz = z
-      lFlags = flags; lCls = cls; lScanAngle = scanAngle
-      lUser = user; lPsid = psid
-      Point10(x, y, z, intensity, flags, cls, scanAngle, user, psid)
+      lastHeight(l) = icZ.code(c, lastHeight(l), p.z, single + (if (kz < 18) kz & 0xFE else 18))
+      if (c.encoding) p
+      else Point10(lx, ly, lastHeight(l), lastIntensity(m), lFlags, lCls, lScanAngle, lUser, lPsid)
     }
   }
 
@@ -274,13 +235,16 @@ object Laz {
     * no float arithmetic ever touches them. */
   final case class Wavepacket(index: Int, offset: Long, size: Int,
       retPoint: Int, xt: Int, yt: Int, zt: Int)
+  private[sources] val NoWave = Wavepacket(0, 0L, 0, 0, 0, 0, 0)
 
   /** A full LAS 1.2/1.3-family record: POINT10 core plus the optional
     * GPS time (raw IEEE-754 bits), RGB, wavepacket descriptor
     * (formats 4/5), and trailing extra-bytes items (`extra`/`wave`
     * are null when the record layout carries none). */
   final case class FullPoint(core: Point10, gps: Long = 0L, r: Int = 0, g: Int = 0, b: Int = 0,
-      extra: Array[Byte] = null, wave: Wavepacket = null)
+      extra: Array[Byte] = null, wave: Wavepacket = null) {
+    def waveOrZero: Wavepacket = if (wave == null) NoWave else wave
+  }
 
   // GPSTIME11 v2 constants (LAZ spec): multiplier symbol space
   private val GpsMulti = 500
@@ -292,8 +256,8 @@ object Laz {
   /** GPSTIME11 version-2 item codec: four rotating last-value slots,
     * an integer-multiplier model over the previous 32-bit delta, and a
     * high-bits-corrector + raw-low-32 escape for deltas past 32 bits.
-    * Symmetric compress/decompress; one instance per chunk. */
-  private[sources] final class GpsTime11Codec(firstBits: Long) {
+    * One instance per chunk. */
+  private[sources] final class GpsTime11Codec(firstBits: Long) extends GpsItem {
     private val mMulti = new ArithmeticModel(GpsMultiTotal).init()
     private val m0Diff = new ArithmeticModel(6).init()
     private val icGps = new IntegerCompressor(32, 9).initModels()
@@ -306,172 +270,72 @@ object Laz {
     private def quantize(f: Float): Int =
       if (f >= 0) (f + 0.5f).toInt else (f - 0.5f).toInt
 
-    @annotation.tailrec
-    def compress(enc: ArithmeticEncoder, bits: Long): Unit = {
-      if (lastDiff(last) == 0) { // no 32-bit delta established yet
-        if (bits == lastGps(last)) { enc.encodeSymbol(m0Diff, 0); return }
-        val diff64 = bits - lastGps(last)
-        val diff = diff64.toInt
-        if (diff64 == diff.toLong) {
-          enc.encodeSymbol(m0Diff, 1)
-          icGps.compress(enc, 0, diff, 0)
-          lastDiff(last) = diff
-          extreme(last) = 0
-          lastGps(last) = bits
-        } else {
-          var i = 1
-          var switched = 0
-          while (i < 4 && switched == 0) {
-            val od = bits - lastGps((last + i) & 3)
-            if (od == od.toInt.toLong) switched = i
-            i += 1
-          }
-          if (switched != 0) {
-            enc.encodeSymbol(m0Diff, switched + 2) // symbols 3..5: switch slot
-            last = (last + switched) & 3
-            compress(enc, bits)
-          } else {
-            enc.encodeSymbol(m0Diff, 2) // full 64-bit value
-            icGps.compress(enc, (lastGps(last) >>> 32).toInt, (bits >>> 32).toInt, 8)
-            enc.writeBits(32, bits & 0xFFFFFFFFL)
-            next = (next + 1) & 3
-            last = next
-            lastGps(last) = bits
-            lastDiff(last) = 0
-            extreme(last) = 0
-          }
+    /** Encoder side: the symbol for `bits` — `unchanged`, a 32-bit
+      * delta (1 while no delta is established, else its multiplier of
+      * the last delta), `full` + i to switch to the slot i ahead that
+      * lies within 32 bits, or `full` for a whole 64-bit value. */
+    private def symbolFor(bits: Long, unchanged: Int, full: Int): Int = {
+      val diff64 = bits - lastGps(last)
+      if (diff64 == 0) unchanged
+      else if (diff64 == diff64.toInt.toLong) {
+        if (lastDiff(last) == 0) 1
+        else {
+          val multi = quantize(diff64.toInt.toFloat / lastDiff(last).toFloat)
+          if (multi >= 0) math.min(multi, GpsMulti)
+          else if (multi > GpsMultiMinus) GpsMulti - multi // 501..509
+          else GpsMulti - GpsMultiMinus // 510
         }
       } else {
-        if (bits == lastGps(last)) { enc.encodeSymbol(mMulti, GpsMultiUnchanged); return }
-        val diff64 = bits - lastGps(last)
-        val diff = diff64.toInt
-        if (diff64 == diff.toLong) {
-          val multi = quantize(diff.toFloat / lastDiff(last).toFloat)
-          if (multi == 1) { // twice the same interval — the common case
-            enc.encodeSymbol(mMulti, 1)
-            icGps.compress(enc, lastDiff(last), diff, 1)
-            extreme(last) = 0
-          } else if (multi > 0) {
-            if (multi < GpsMulti) {
-              enc.encodeSymbol(mMulti, multi)
-              icGps.compress(enc, multi * lastDiff(last), diff, if (multi < 10) 2 else 3)
-            } else {
-              enc.encodeSymbol(mMulti, GpsMulti)
-              icGps.compress(enc, GpsMulti * lastDiff(last), diff, 4)
-              extreme(last) += 1
-              if (extreme(last) > 3) { lastDiff(last) = diff; extreme(last) = 0 }
-            }
-          } else if (multi < 0) {
-            if (multi > GpsMultiMinus) {
-              enc.encodeSymbol(mMulti, GpsMulti - multi) // 501..509
-              icGps.compress(enc, multi * lastDiff(last), diff, 5)
-            } else {
-              enc.encodeSymbol(mMulti, GpsMulti - GpsMultiMinus) // 510
-              icGps.compress(enc, GpsMultiMinus * lastDiff(last), diff, 6)
-              extreme(last) += 1
-              if (extreme(last) > 3) { lastDiff(last) = diff; extreme(last) = 0 }
-            }
-          } else { // multi == 0
-            enc.encodeSymbol(mMulti, 0)
-            icGps.compress(enc, 0, diff, 7)
-            extreme(last) += 1
-            if (extreme(last) > 3) { lastDiff(last) = diff; extreme(last) = 0 }
-          }
-          lastGps(last) = bits
-        } else {
-          var i = 1
-          var switched = 0
-          while (i < 4 && switched == 0) {
-            val od = bits - lastGps((last + i) & 3)
-            if (od == od.toInt.toLong) switched = i
-            i += 1
-          }
-          if (switched != 0) {
-            enc.encodeSymbol(mMulti, GpsMultiCodeFull + switched) // 513..515
-            last = (last + switched) & 3
-            compress(enc, bits)
-          } else {
-            enc.encodeSymbol(mMulti, GpsMultiCodeFull) // 512
-            icGps.compress(enc, (lastGps(last) >>> 32).toInt, (bits >>> 32).toInt, 8)
-            enc.writeBits(32, bits & 0xFFFFFFFFL)
-            next = (next + 1) & 3
-            last = next
-            lastGps(last) = bits
-            lastDiff(last) = 0
-            extreme(last) = 0
-          }
-        }
+        var i = 1
+        while (i < 4 && { val od = bits - lastGps((last + i) & 3); od != od.toInt.toLong }) i += 1
+        if (i < 4) full + i else full
       }
     }
 
+    /** The fourth misfit since the last repeated interval re-anchors the delta. */
+    private def misfit(d: Int): Int = {
+      extreme(last) += 1
+      if (extreme(last) > 3) { lastDiff(last) = d; extreme(last) = 0 }
+      d
+    }
+
     @annotation.tailrec
-    def decompress(dec: ArithmeticDecoder): Long = {
-      if (lastDiff(last) == 0) {
-        val sym = dec.decodeSymbol(m0Diff)
-        if (sym == 0) lastGps(last)
-        else if (sym == 1) {
-          val diff = icGps.decompress(dec, 0, 0)
-          lastDiff(last) = diff
-          extreme(last) = 0
-          lastGps(last) += diff
-          lastGps(last)
-        } else if (sym == 2) {
-          val high = icGps.decompress(dec, (lastGps(last) >>> 32).toInt, 8)
-          val bits = (high.toLong << 32) | dec.readBits(32)
-          next = (next + 1) & 3
-          last = next
-          lastGps(last) = bits
-          lastDiff(last) = 0
-          extreme(last) = 0
-          bits
-        } else {
-          last = (last + sym - 2) & 3
-          decompress(dec)
-        }
+    def code(c: Coder, bits: Long): Long = {
+      val fresh = lastDiff(last) == 0 // no 32-bit delta established yet
+      val unchanged = if (fresh) 0 else GpsMultiUnchanged
+      val full = if (fresh) 2 else GpsMultiCodeFull
+      val sym = c.symbol(if (fresh) m0Diff else mMulti,
+        if (c.encoding) symbolFor(bits, unchanged, full) else 0)
+      if (sym == unchanged) lastGps(last)
+      else if (sym > full) { // switch slot, then code against it
+        last = (last + sym - full) & 3
+        code(c, bits)
+      } else if (sym == full) {
+        val high = icGps.code(c, (lastGps(last) >>> 32).toInt, (bits >>> 32).toInt, 8)
+        next = (next + 1) & 3
+        last = next
+        lastGps(last) = (high.toLong << 32) | c.bits(32, bits & 0xFFFFFFFFL)
+        lastDiff(last) = 0
+        extreme(last) = 0
+        lastGps(last)
       } else {
-        val sym = dec.decodeSymbol(mMulti)
-        if (sym == GpsMultiUnchanged) lastGps(last)
-        else if (sym == GpsMultiCodeFull) {
-          val high = icGps.decompress(dec, (lastGps(last) >>> 32).toInt, 8)
-          val bits = (high.toLong << 32) | dec.readBits(32)
-          next = (next + 1) & 3
-          last = next
-          lastGps(last) = bits
-          lastDiff(last) = 0
-          extreme(last) = 0
-          bits
-        } else if (sym > GpsMultiCodeFull) {
-          last = (last + sym - GpsMultiCodeFull) & 3
-          decompress(dec)
-        } else {
-          val diff =
-            if (sym == 1) {
-              val d = icGps.decompress(dec, lastDiff(last), 1)
-              extreme(last) = 0
-              d
-            } else if (sym == 0) {
-              val d = icGps.decompress(dec, 0, 7)
-              extreme(last) += 1
-              if (extreme(last) > 3) { lastDiff(last) = d; extreme(last) = 0 }
-              d
-            } else if (sym < GpsMulti) {
-              icGps.decompress(dec, sym * lastDiff(last), if (sym < 10) 2 else 3)
-            } else if (sym == GpsMulti) {
-              val d = icGps.decompress(dec, GpsMulti * lastDiff(last), 4)
-              extreme(last) += 1
-              if (extreme(last) > 3) { lastDiff(last) = d; extreme(last) = 0 }
-              d
-            } else if (sym < GpsMulti - GpsMultiMinus) {
-              icGps.decompress(dec, (GpsMulti - sym) * lastDiff(last), 5)
-            } else { // 510
-              val d = icGps.decompress(dec, GpsMultiMinus * lastDiff(last), 6)
-              extreme(last) += 1
-              if (extreme(last) > 3) { lastDiff(last) = d; extreme(last) = 0 }
-              d
-            }
-          lastGps(last) += diff
-          lastGps(last)
-        }
+        val diff = (bits - lastGps(last)).toInt
+        val ld = lastDiff(last)
+        val d =
+          if (fresh) {
+            lastDiff(last) = icGps.code(c, 0, diff, 0)
+            extreme(last) = 0
+            lastDiff(last)
+          } else if (sym == 1) { // twice the same interval — the common case
+            extreme(last) = 0
+            icGps.code(c, ld, diff, 1)
+          } else if (sym == 0) misfit(icGps.code(c, 0, diff, 7))
+          else if (sym < GpsMulti) icGps.code(c, sym * ld, diff, if (sym < 10) 2 else 3)
+          else if (sym == GpsMulti) misfit(icGps.code(c, GpsMulti * ld, diff, 4))
+          else if (sym < GpsMulti - GpsMultiMinus) icGps.code(c, (GpsMulti - sym) * ld, diff, 5)
+          else misfit(icGps.code(c, GpsMultiMinus * ld, diff, 6))
+        lastGps(last) += d
+        lastGps(last)
       }
     }
   }
@@ -479,121 +343,108 @@ object Laz {
   /** RGB12 version-2 item codec: a changed-bytes symbol plus folded
     * byte-difference models, green/blue predicted from the red delta
     * (clamped), with a gray shortcut when all channels move together. */
-  private[sources] final class Rgb12Codec(firstR: Int, firstG: Int, firstB: Int) {
+  private[sources] final class Rgb12Codec(firstR: Int, firstG: Int, firstB: Int) extends RgbItem {
     private val mByteUsed = new ArithmeticModel(128).init()
     private val mDiff = Array.fill(6)(new ArithmeticModel(256).init())
     private var lr = firstR
     private var lg = firstG
     private var lb = firstB
+    def r: Int = lr
+    def g: Int = lg
+    def b: Int = lb
 
     private def clamp(x: Int): Int = if (x < 0) 0 else if (x > 255) 255 else x
 
-    def compress(enc: ArithmeticEncoder, r: Int, g: Int, b: Int): Unit = {
+    /** One byte of a channel: the difference to `pred`, folded mod 256. */
+    private def byte(c: Coder, model: Int, pred: Int, cur: Int): Int =
+      (c.symbol(mDiff(model), (cur - pred) & 0xFF) + pred) & 0xFF
+
+    def code(c: Coder, r: Int, g: Int, b: Int): Unit = {
       var sym = 0
-      if ((lr & 0xFF) != (r & 0xFF)) sym |= 1
-      if ((lr >>> 8) != (r >>> 8)) sym |= 2
-      if ((lg & 0xFF) != (g & 0xFF)) sym |= 4
-      if ((lg >>> 8) != (g >>> 8)) sym |= 8
-      if ((lb & 0xFF) != (b & 0xFF)) sym |= 16
-      if ((lb >>> 8) != (b >>> 8)) sym |= 32
-      val colored = ((r & 0xFF) != (g & 0xFF)) || ((r & 0xFF) != (b & 0xFF)) ||
-        ((r >>> 8) != (g >>> 8)) || ((r >>> 8) != (b >>> 8))
-      if (colored) sym |= 64
-      enc.encodeSymbol(mByteUsed, sym)
-      var diffL = 0
-      var diffH = 0
-      if ((sym & 1) != 0) {
-        diffL = (r & 0xFF) - (lr & 0xFF)
-        enc.encodeSymbol(mDiff(0), diffL & 0xFF)
+      if (c.encoding) {
+        if ((lr & 0xFF) != (r & 0xFF)) sym |= 1
+        if ((lr >>> 8) != (r >>> 8)) sym |= 2
+        if ((lg & 0xFF) != (g & 0xFF)) sym |= 4
+        if ((lg >>> 8) != (g >>> 8)) sym |= 8
+        if ((lb & 0xFF) != (b & 0xFF)) sym |= 16
+        if ((lb >>> 8) != (b >>> 8)) sym |= 32
+        if (((r & 0xFF) != (g & 0xFF)) || ((r & 0xFF) != (b & 0xFF)) ||
+          ((r >>> 8) != (g >>> 8)) || ((r >>> 8) != (b >>> 8))) sym |= 64 // colored
       }
-      if ((sym & 2) != 0) {
-        diffH = (r >>> 8) - (lr >>> 8)
-        enc.encodeSymbol(mDiff(1), diffH & 0xFF)
+      sym = c.symbol(mByteUsed, sym)
+      // red deltas are true signed differences, for the G/B predictors
+      val rL = if ((sym & 1) != 0) byte(c, 0, lr & 0xFF, r & 0xFF) else lr & 0xFF
+      val rH = if ((sym & 2) != 0) byte(c, 1, lr >>> 8, r >>> 8) else lr >>> 8
+      val diffL = rL - (lr & 0xFF)
+      val diffH = rH - (lr >>> 8)
+      lr = rL | (rH << 8)
+      if ((sym & 64) == 0) { lg = lr; lb = lr }
+      else {
+        val gL = if ((sym & 4) != 0) byte(c, 2, clamp(diffL + (lg & 0xFF)), g & 0xFF) else lg & 0xFF
+        val gH = if ((sym & 8) != 0) byte(c, 3, clamp(diffH + (lg >>> 8)), g >>> 8) else lg >>> 8
+        val bL = if ((sym & 16) == 0) lb & 0xFF
+          else byte(c, 4, clamp((diffL + (gL - (lg & 0xFF))) / 2 + (lb & 0xFF)), b & 0xFF)
+        val bH = if ((sym & 32) == 0) lb >>> 8
+          else byte(c, 5, clamp((diffH + (gH - (lg >>> 8))) / 2 + (lb >>> 8)), b >>> 8)
+        lg = gL | (gH << 8)
+        lb = bL | (bH << 8)
       }
-      if ((sym & 64) != 0) {
-        if ((sym & 4) != 0) {
-          val corr = (g & 0xFF) - clamp(diffL + (lg & 0xFF))
-          enc.encodeSymbol(mDiff(2), corr & 0xFF)
-        }
-        if ((sym & 8) != 0) {
-          val corr = (g >>> 8) - clamp(diffH + (lg >>> 8))
-          enc.encodeSymbol(mDiff(3), corr & 0xFF)
-        }
-        if ((sym & 16) != 0) {
-          val dL = (diffL + ((g & 0xFF) - (lg & 0xFF))) / 2
-          val corr = (b & 0xFF) - clamp(dL + (lb & 0xFF))
-          enc.encodeSymbol(mDiff(4), corr & 0xFF)
-        }
-        if ((sym & 32) != 0) {
-          val dH = (diffH + ((g >>> 8) - (lg >>> 8))) / 2
-          val corr = (b >>> 8) - clamp(dH + (lb >>> 8))
-          enc.encodeSymbol(mDiff(5), corr & 0xFF)
-        }
-      }
-      lr = r; lg = g; lb = b
-    }
-
-    def decompress(dec: ArithmeticDecoder): (Int, Int, Int) = {
-      val sym = dec.decodeSymbol(mByteUsed)
-      var diffL = 0
-      var diffH = 0
-      var rL = lr & 0xFF
-      var rH = lr >>> 8
-      if ((sym & 1) != 0) {
-        rL = (rL + dec.decodeSymbol(mDiff(0))) & 0xFF
-        diffL = rL - (lr & 0xFF) // true signed delta, for the G/B predictors
-      }
-      if ((sym & 2) != 0) {
-        rH = (rH + dec.decodeSymbol(mDiff(1))) & 0xFF
-        diffH = rH - (lr >>> 8)
-      }
-      val r = rL | (rH << 8)
-      var g = 0
-      var b = 0
-      if ((sym & 64) != 0) {
-        var gL = lg & 0xFF
-        var gH = lg >>> 8
-        var bL = lb & 0xFF
-        var bH = lb >>> 8
-        if ((sym & 4) != 0) gL = (dec.decodeSymbol(mDiff(2)) + clamp(diffL + (lg & 0xFF))) & 0xFF
-        if ((sym & 8) != 0) gH = (dec.decodeSymbol(mDiff(3)) + clamp(diffH + (lg >>> 8))) & 0xFF
-        if ((sym & 16) != 0) {
-          val dL = (diffL + (gL - (lg & 0xFF))) / 2
-          bL = (dec.decodeSymbol(mDiff(4)) + clamp(dL + (lb & 0xFF))) & 0xFF
-        }
-        if ((sym & 32) != 0) {
-          val dH = (diffH + (gH - (lg >>> 8))) / 2
-          bH = (dec.decodeSymbol(mDiff(5)) + clamp(dH + (lb >>> 8))) & 0xFF
-        }
-        g = gL | (gH << 8)
-        b = bL | (bH << 8)
-      } else {
-        g = r
-        b = r
-      }
-      lr = r; lg = g; lb = b
-      (r, g, b)
     }
   }
-
-  private[sources] def putPoint10(bb: ByteBuffer, p: Point10): Unit = {
-    bb.putInt(p.x).putInt(p.y).putInt(p.z)
-    bb.putShort(p.intensity.toShort)
-    bb.put(p.flags.toByte).put(p.cls.toByte).put(p.scanAngle.toByte).put(p.user.toByte)
-    bb.putShort(p.psid.toShort)
-  }
-
-  private[sources] def getPoint10(bb: ByteBuffer): Point10 =
-    Point10(bb.getInt, bb.getInt, bb.getInt, bb.getShort & 0xFFFF,
-      bb.get & 0xFF, bb.get & 0xFF, bb.get & 0xFF, bb.get & 0xFF, bb.getShort & 0xFFFF)
 
   private[sources] def recordLen(format: Int): Int = FormatItems(format).map(_._2).sum
+
+  /** The raw record's fields, read or written by one routine: each call
+    * writes its argument and returns it, or ignores it and returns the
+    * value read. Little-endian, as LAS is. */
+  private[sources] final class RawFields(bb: ByteBuffer, write: Boolean) {
+    def i32(v: Int): Int = if (write) { bb.putInt(v); v } else bb.getInt
+    def i64(v: Long): Long = if (write) { bb.putLong(v); v } else bb.getLong
+    def u16(v: Int): Int = if (write) { bb.putShort(v.toShort); v } else bb.getShort & 0xFFFF
+    def u8(v: Int): Int = if (write) { bb.put(v.toByte); v } else bb.get & 0xFF
+    def bytes(v: Array[Byte], n: Int): Array[Byte] =
+      if (write) { bb.put(v); v } else { val a = new Array[Byte](n); bb.get(a); a }
+  }
+
+  private[sources] def rawWave(io: RawFields, w: Wavepacket): Wavepacket =
+    Wavepacket(io.u8(w.index), io.i64(w.offset), io.i32(w.size), io.i32(w.retPoint),
+      io.i32(w.xt), io.i32(w.yt), io.i32(w.zt))
+
+  private val Blank = FullPoint(Point10(0, 0, 0, 0, 0, 0, 0, 0, 0))
+
+  /** The uncompressed record of formats 0–5 plus `extraLen` extra bytes. */
+  private def rawPoint(io: RawFields, format: Int, p: FullPoint, extraLen: Int): FullPoint = {
+    val q = p.core
+    val core = Point10(io.i32(q.x), io.i32(q.y), io.i32(q.z), io.u16(q.intensity),
+      io.u8(q.flags), io.u8(q.cls), io.u8(q.scanAngle), io.u8(q.user), io.u16(q.psid))
+    val gps = if (hasGps(format)) io.i64(p.gps) else 0L
+    val r = if (hasRgb(format)) io.u16(p.r) else 0
+    val g = if (hasRgb(format)) io.u16(p.g) else 0
+    val b = if (hasRgb(format)) io.u16(p.b) else 0
+    val wave = if (hasWave(format)) rawWave(io, p.waveOrZero) else null
+    FullPoint(core, gps, r, g, b, if (extraLen == 0) null else io.bytes(p.extra, extraLen), wave)
+  }
 
   /** BYTE version-2 item codec (the LAZ "extra bytes" payload): one
     * 256-ary folded-difference model per byte index — symbol =
     * (cur - last) mod 256, exactly the Rgb12 byte-delta scheme without
     * the inter-channel prediction, per the public LASzip BYTE v2
     * layout. */
+  private[sources] final class ByteV2Codec(first: Array[Byte]) extends BytesItem {
+    private val n = first.length
+    private val models = Array.fill(n)(new ArithmeticModel(256).init())
+    private val last = first.clone()
+
+    def code(c: Coder, cur: Array[Byte]): Array[Byte] = {
+      var i = 0
+      while (i < n) {
+        last(i) = ((last(i) + c.symbol(models(i), (cur(i) - last(i)) & 0xFF)) & 0xFF).toByte
+        i += 1
+      }
+      last.clone()
+    }
+  }
+
   /** WAVEPACKET13 version-1 item codec (the wavepacket codec never
     * moved past v1, even inside compressor-2 chunks): descriptor index
     * through a byte model; the 64-bit waveform offset classified per
@@ -613,193 +464,100 @@ object Laz {
     private var lastDiff32 = 0
     private var lastClass = 0
 
-    def compress(enc: ArithmeticEncoder, w: Wavepacket): Unit = {
-      enc.encodeSymbol(mIndex, w.index & 0xFF)
+    def code(c: Coder, w: Wavepacket): Wavepacket = {
+      val index = c.symbol(mIndex, w.index & 0xFF)
       val diff = w.offset - last.offset
-      val cls =
+      lastClass = c.symbol(mOffsetClass(lastClass),
         if (diff == 0L) 0
         else if (diff == (last.size & 0xFFFFFFFFL)) 1 // size is u32
         else if (diff == diff.toInt.toLong) 2
-        else 3
-      enc.encodeSymbol(mOffsetClass(lastClass), cls)
-      lastClass = cls
-      cls match {
-        case 0 | 1 => ()
-        case 2 =>
-          icOffsetDiff.compress(enc, lastDiff32, diff.toInt, 0)
-          lastDiff32 = diff.toInt
-        case _ =>
-          enc.writeBits(32, w.offset >>> 32)
-          enc.writeBits(32, w.offset & 0xFFFFFFFFL)
-      }
-      icSize.compress(enc, last.size, w.size, 0)
-      icRetPoint.compress(enc, last.retPoint, w.retPoint, 0)
-      icXyz.compress(enc, last.xt, w.xt, 0)
-      icXyz.compress(enc, last.yt, w.yt, 1)
-      icXyz.compress(enc, last.zt, w.zt, 2)
-      last = w
-    }
-
-    def decompress(dec: ArithmeticDecoder): Wavepacket = {
-      val index = dec.decodeSymbol(mIndex)
-      val cls = dec.decodeSymbol(mOffsetClass(lastClass))
-      lastClass = cls
-      val offset = cls match {
+        else 3)
+      val offset = lastClass match {
         case 0 => last.offset
         case 1 => last.offset + (last.size & 0xFFFFFFFFL)
         case 2 =>
-          lastDiff32 = icOffsetDiff.decompress(dec, lastDiff32, 0)
+          lastDiff32 = icOffsetDiff.code(c, lastDiff32, diff.toInt, 0)
           last.offset + lastDiff32
-        case _ => (dec.readBits(32) << 32) | dec.readBits(32)
+        case _ => (c.bits(32, w.offset >>> 32) << 32) | c.bits(32, w.offset & 0xFFFFFFFFL)
       }
-      val size = icSize.decompress(dec, last.size, 0)
-      val retPoint = icRetPoint.decompress(dec, last.retPoint, 0)
-      val xt = icXyz.decompress(dec, last.xt, 0)
-      val yt = icXyz.decompress(dec, last.yt, 1)
-      val zt = icXyz.decompress(dec, last.zt, 2)
-      last = Wavepacket(index, offset, size, retPoint, xt, yt, zt)
+      last = Wavepacket(index, offset, icSize.code(c, last.size, w.size, 0),
+        icRetPoint.code(c, last.retPoint, w.retPoint, 0), icXyz.code(c, last.xt, w.xt, 0),
+        icXyz.code(c, last.yt, w.yt, 1), icXyz.code(c, last.zt, w.zt, 2))
       last
     }
   }
 
-  private[sources] final class ByteV2Codec(first: Array[Byte]) {
-    private val n = first.length
-    private val models = Array.fill(n)(new ArithmeticModel(256).init())
-    private val last = first.clone()
+  /** The item codecs of one pointwise stream in VLR order — POINT10,
+    * then GPSTIME11, RGB12, WAVEPACKET13 and BYTE where the record has
+    * them — seeded from the raw first record; `v1` picks the
+    * compressor-1 versions ([[LazV1]]). */
+  private final class PointCodec(format: Int, extraLen: Int, v1: Boolean, first: FullPoint) {
+    private val core: Point10Item =
+      if (v1) new LazV1.Point10V1Codec(first.core) else new Point10Codec(first.core)
+    private val gps: GpsItem =
+      if (!hasGps(format)) null
+      else if (v1) new LazV1.GpsTime11V1Codec(first.gps) else new GpsTime11Codec(first.gps)
+    private val rgb: RgbItem =
+      if (!hasRgb(format)) null
+      else if (v1) new LazV1.Rgb12V1Codec(first.r, first.g, first.b)
+      else new Rgb12Codec(first.r, first.g, first.b)
+    private val wave = if (hasWave(format)) new Wavepacket13Codec(first.waveOrZero) else null
+    private val extra: BytesItem =
+      if (extraLen == 0) null
+      else if (v1) new LazV1.ByteV1Codec(first.extra) else new ByteV2Codec(first.extra)
 
-    def compress(enc: ArithmeticEncoder, cur: Array[Byte]): Unit = {
-      var i = 0
-      while (i < n) {
-        enc.encodeSymbol(models(i), (cur(i) - last(i)) & 0xFF)
-        last(i) = cur(i)
-        i += 1
-      }
-    }
-
-    def decompress(dec: ArithmeticDecoder): Array[Byte] = {
-      val out = new Array[Byte](n)
-      var i = 0
-      while (i < n) {
-        out(i) = ((last(i) + dec.decodeSymbol(models(i))) & 0xFF).toByte
-        last(i) = out(i)
-        i += 1
-      }
-      out
-    }
-  }
-
-  private[sources] def putFullPoint(bb: ByteBuffer, format: Int, p: FullPoint, extraLen: Int): Unit = {
-    putPoint10(bb, p.core)
-    if (hasGps(format)) bb.putLong(p.gps)
-    if (hasRgb(format))
-      bb.putShort(p.r.toShort).putShort(p.g.toShort).putShort(p.b.toShort)
-    if (hasWave(format)) {
-      val w = if (p.wave == null) Wavepacket(0, 0L, 0, 0, 0, 0, 0) else p.wave
-      bb.put(w.index.toByte).putLong(w.offset).putInt(w.size)
-        .putInt(w.retPoint).putInt(w.xt).putInt(w.yt).putInt(w.zt)
-    }
-    if (extraLen > 0) {
-      require(p.extra != null && p.extra.length == extraLen,
-        s"extra-bytes length ${if (p.extra == null) -1 else p.extra.length} != declared $extraLen")
-      bb.put(p.extra)
+    def code(c: Coder, p: FullPoint): FullPoint = {
+      val core = this.core.code(c, p.core)
+      val gps = if (this.gps == null) 0L else this.gps.code(c, p.gps)
+      if (rgb != null) rgb.code(c, p.r, p.g, p.b)
+      val wave = if (this.wave == null) null else this.wave.code(c, p.waveOrZero)
+      val extra = if (this.extra == null) null else this.extra.code(c, p.extra)
+      if (c.encoding) p
+      else if (rgb == null) FullPoint(core, gps, extra = extra, wave = wave)
+      else FullPoint(core, gps, rgb.r, rgb.g, rgb.b, extra, wave)
     }
   }
 
-  private[sources] def getFullPoint(bb: ByteBuffer, format: Int, extraLen: Int): FullPoint = {
-    val core = getPoint10(bb)
-    val gps = if (hasGps(format)) bb.getLong else 0L
-    val (r, g, b) =
-      if (hasRgb(format)) (bb.getShort & 0xFFFF, bb.getShort & 0xFFFF, bb.getShort & 0xFFFF)
-      else (0, 0, 0)
-    val wave = if (hasWave(format))
-      Wavepacket(bb.get & 0xFF, bb.getLong, bb.getInt, bb.getInt, bb.getInt, bb.getInt, bb.getInt)
-    else null
-    val extra = if (extraLen > 0) {
-      val a = new Array[Byte](extraLen); bb.get(a); a
-    } else null
-    FullPoint(core, gps, r, g, b, extra, wave)
-  }
-
-  /** Encode one chunk: raw first record, then the coded residual
-    * stream — per point, items in VLR order (POINT10, GPSTIME11,
-    * RGB12), matching the spec's interleaving. Single-point chunks
-    * carry no coder stream (the decoder never initializes for them). */
-  private[sources] def encodeChunkFull(format: Int, points: Array[FullPoint],
-      extraLen: Int = 0): Array[Byte] = {
+  /** Encode one compressor-2 chunk, or with `v1` a whole compressor-1
+    * stream: the raw first record, then one arithmetic stream coding
+    * each later point's items in VLR order. A single point carries no
+    * stream (the decoder never initializes for it). */
+  private[sources] def encodeChunk(format: Int, points: Array[FullPoint],
+      extraLen: Int = 0, v1: Boolean = false): Array[Byte] = {
     require(points.nonEmpty, "empty LAZ chunk")
-    val len = recordLen(format) + extraLen
-    val raw = ByteBuffer.allocate(len).order(ByteOrder.LITTLE_ENDIAN)
-    putFullPoint(raw, format, points(0), extraLen)
+    val bad = if (extraLen == 0) -1
+      else points.indexWhere(p => p.extra == null || p.extra.length != extraLen)
+    require(bad < 0, s"extra-bytes length mismatch at point $bad: declared $extraLen")
+    val raw = ByteBuffer.allocate(recordLen(format) + extraLen).order(ByteOrder.LITTLE_ENDIAN)
+    rawPoint(new RawFields(raw, write = true), format, points(0), extraLen)
     if (points.length == 1) raw.array()
     else {
-      val core = new Point10Codec(points(0).core)
-      val gps = if (hasGps(format)) new GpsTime11Codec(points(0).gps) else null
-      val rgb = if (hasRgb(format))
-        new Rgb12Codec(points(0).r, points(0).g, points(0).b) else null
-      val wav = if (hasWave(format))
-        new Wavepacket13Codec(
-          if (points(0).wave == null) Wavepacket(0, 0L, 0, 0, 0, 0, 0) else points(0).wave)
-        else null
-      val xb = if (extraLen > 0) new ByteV2Codec(points(0).extra) else null
       val enc = new ArithmeticEncoder
+      val c = Coder(enc)
+      val codec = new PointCodec(format, extraLen, v1, points(0))
       var i = 1
-      while (i < points.length) {
-        val p = points(i)
-        core.compress(enc, p.core)
-        if (gps != null) gps.compress(enc, p.gps)
-        if (rgb != null) rgb.compress(enc, p.r, p.g, p.b)
-        if (wav != null) wav.compress(enc,
-          if (p.wave == null) Wavepacket(0, 0L, 0, 0, 0, 0, 0) else p.wave)
-        if (xb != null) {
-          require(p.extra != null && p.extra.length == extraLen,
-            s"extra-bytes length mismatch at point $i")
-          xb.compress(enc, p.extra)
-        }
-        i += 1
-      }
+      while (i < points.length) { codec.code(c, points(i)); i += 1 }
       enc.done()
-      val coded = enc.result()
-      val out = new Array[Byte](len + coded.length)
-      System.arraycopy(raw.array(), 0, out, 0, len)
-      System.arraycopy(coded, 0, out, len, coded.length)
-      out
+      raw.array() ++ enc.result()
     }
   }
 
-  private[sources] def decodeChunkFull(format: Int, bytes: Array[Byte], offset: Int,
-      count: Int, extraLen: Int = 0): Array[FullPoint] = {
+  /** Decode what [[encodeChunk]] wrote: the same item codecs, run on a
+    * decoding [[Coder]] with the first record as placeholder input. */
+  private[sources] def decodeChunk(format: Int, bytes: Array[Byte], offset: Int,
+      count: Int, extraLen: Int = 0, v1: Boolean = false): Array[FullPoint] = {
     val len = recordLen(format) + extraLen
     val out = new Array[FullPoint](count)
-    val raw = ByteBuffer.wrap(bytes, offset, len).order(ByteOrder.LITTLE_ENDIAN)
-    out(0) = getFullPoint(raw, format, extraLen)
+    out(0) = rawPoint(new RawFields(ByteBuffer.wrap(bytes, offset, len)
+      .order(ByteOrder.LITTLE_ENDIAN), write = false), format, Blank, extraLen)
     if (count > 1) {
-      val core = new Point10Codec(out(0).core)
-      val gps = if (hasGps(format)) new GpsTime11Codec(out(0).gps) else null
-      val rgb = if (hasRgb(format))
-        new Rgb12Codec(out(0).r, out(0).g, out(0).b) else null
-      val wav = if (hasWave(format)) new Wavepacket13Codec(out(0).wave) else null
-      val xb = if (extraLen > 0) new ByteV2Codec(out(0).extra) else null
-      val dec = new ArithmeticDecoder(bytes, offset + len, bytes.length).init()
+      val c = Coder(new ArithmeticDecoder(bytes, offset + len, bytes.length).init())
+      val codec = new PointCodec(format, extraLen, v1, out(0))
       var i = 1
-      while (i < count) {
-        val c = core.decompress(dec)
-        val g = if (gps != null) gps.decompress(dec) else 0L
-        val (cr, cg, cb) = if (rgb != null) rgb.decompress(dec) else (0, 0, 0)
-        val w = if (wav != null) wav.decompress(dec) else null
-        val xa = if (xb != null) xb.decompress(dec) else null
-        out(i) = FullPoint(c, g, cr, cg, cb, xa, w)
-        i += 1
-      }
+      while (i < count) { out(i) = codec.code(c, out(0)); i += 1 }
     }
     out
   }
-
-  /** Point-format-0 conveniences (the sink's default payload). */
-  private[sources] def encodeChunk(points: Array[Point10]): Array[Byte] =
-    encodeChunkFull(0, points.map(FullPoint(_)))
-
-  private[sources] def decodeChunk(bytes: Array[Byte], offset: Int, count: Int): Array[Point10] =
-    decodeChunkFull(0, bytes, offset, count).map(_.core)
 
   // ------------------------------------------------------------ entry points
   // The container (header, laszip VLR, chunk table, sink, scan) is
@@ -813,13 +571,6 @@ object Laz {
       chunkTableOffset: Long,
       items: Seq[(Int, Int, Int)]) // (type, size, version)
 
-  /** Parse header + laszip VLR of a .laz file (driver side, O(KB)). */
-  def readInfo(path: String): LazInfo = Las.lazInfo(path)
-
-  /** The chunk table → per-chunk (fileOffset, pointCount, byteSize). */
-  def readChunkDescriptors(path: String, info: LazInfo): Array[(Long, Int, Int)] =
-    Las.lazChunks(path, info)
-
   /** Distributed full scan: DataFrame[x, y, z] in world coordinates,
     * plus an `extra_bytes` binary column when the file carries a BYTE
     * item. Chunks are the parallelism unit — each task seeks to its
@@ -830,11 +581,11 @@ object Laz {
     * over legacy archives comes from the FILE count, not intra-file
     * splits. */
   def readPoints(spark: SparkSession, path: String, chunksPerTask: Int = 8): DataFrame = {
-    val info = readInfo(path)
+    val info = Las.lazInfo(path)
     if (info.compressor == 3) // layered LAS 1.4 file — same x/y/z contract
       return Laz14.readPoints14(spark, path, columns = Seq("x", "y", "z"),
         chunksPerTask = chunksPerTask)
-    val chunks = readChunkDescriptors(path, info)
+    val chunks = Las.lazChunks(path, info)
     val h = info.header
     val (fmtItems, extraItems) = info.items.span(_._1 != ItemByte)
     val fmtPairs = fmtItems.map(i => (i._1, i._2))
@@ -853,17 +604,14 @@ object Laz {
       (if (extraLen == 0) Array.empty[StructField]
        else Array(StructField("extra_bytes", BinaryType))))
     Las.scan(spark, path, schema, chunks.toSeq, chunksPerTask) { (bytes, count) =>
-      val points =
-        if (v1) LazV1.decodeStream(format, bytes, 0, count, extraLen)
-        else decodeChunkFull(format, bytes, 0, count, extraLen)
-      points.iterator.map { fp =>
+      decodeChunk(format, bytes, 0, count, extraLen, v1).iterator.map { fp =>
         val p = fp.core
         val x = p.x * h.scaleX + h.offX
         val y = p.y * h.scaleY + h.offY
         val z = p.z * h.scaleZ + h.offZ
         val base: Seq[Any] = Seq(x, y, z)
         val wv: Seq[Any] = if (!wave) Nil else {
-          val w = if (fp.wave == null) Wavepacket(0, 0L, 0, 0, 0, 0, 0) else fp.wave
+          val w = fp.waveOrZero
           Seq(w.index.toLong, w.offset, w.size & 0xFFFFFFFFL,
             w.retPoint & 0xFFFFFFFFL, w.xt & 0xFFFFFFFFL,
             w.yt & 0xFFFFFFFFL, w.zt & 0xFFFFFFFFL)
@@ -899,8 +647,7 @@ object Laz {
       FullPoint(Point10(x, y, z, 0, 0, 0, 0, 0, 0), extra = extra, wave = wave)
     }
     def encode(points: Array[FullPoint]): Array[Byte] =
-      if (v1) LazV1.encodeStream(format, points, extraBytes)
-      else encodeChunkFull(format, points, extraBytes)
+      encodeChunk(format, points, extraBytes, v1)
   }
 
   /** The sink's extra columns for `format` and `extraBytes`, checked

@@ -46,7 +46,9 @@ import Laz.{StreamingMedian5, NumberReturnMap, NumberReturnLevel, GpsTime11Codec
   * 8-way last-point-return (lpr) selector, return-map/level keyed
   * median-of-5 coordinate prediction, per-level Z, cpr-context
   * intensity, and change-gated scan angle / point source / GPS time
-  * (the GPSTIME11 multi-history predictor, one per context). As with
+  * (the GPSTIME11 multi-history predictor, one per context). All of
+  * it is one routine, `ChunkCoder14.code`, that the encoder and the
+  * decoder both run, each layer through its own [[Coder]]. As with
   * [[Laz]], in-sandbox validation is layer/chunk/file roundtrip plus
   * the oracle-checked `pc_laz14_roundtrip` — no second LASzip
   * implementation exists in this environment, so cross-implementation
@@ -87,8 +89,7 @@ object Laz14 {
       returns: Int, flags: Int, cls: Int, user: Int, scanAngle: Int,
       psid: Int, gpsBits: Long, r: Int = 0, g: Int = 0, b: Int = 0,
       nir: Int = 0, wave: Laz.Wavepacket = null) {
-    def waveOrZero: Laz.Wavepacket =
-      if (wave == null) Laz.Wavepacket(0, 0L, 0, 0, 0, 0, 0) else wave
+    def waveOrZero: Laz.Wavepacket = if (wave == null) Laz.NoWave else wave
     def returnNumber: Int = returns & 15
     def numberOfReturns: Int = (returns >>> 4) & 15
     def channel: Int = (flags >>> 4) & 3
@@ -106,21 +107,20 @@ object Laz14 {
       nir: Boolean = true, wave: Boolean = true)
   val AllFields: FieldMask = FieldMask()
 
-  // layer indices, in on-disk order (POINT14's nine, then RGB, then NIR)
+  // field slots of the layers: POINT14's nine, then RGB, NIR and the
+  // wavepacket; `layers` gives a format's on-disk order of them
   private val LXy = 0; private val LZ = 1; private val LCls = 2
   private val LFlags = 3; private val LIntensity = 4; private val LAngle = 5
   private val LUser = 6; private val LPsid = 7; private val LGps = 8
-  private val LRgb = 9; private val LNir = 10
-  // the wavepacket layer is LAST on disk: right after the nine point
-  // layers for pf9, after RGB+NIR for pf10
-  private def waveLayer(format: Int): Int = if (format == 9) 9 else 11
-  private def layerCount(format: Int): Int = format match {
-    case 6 => 9
-    case 7 => 10
-    case 8 => 11
-    case 9 => 10
-    case _ => 12
-  }
+  private val LRgb = 9; private val LNir = 10; private val LWave = 11
+  private val Slots = 12
+
+  /** The layers of `format` on disk, as slots: the nine point layers,
+    * then RGB and NIR where the format has them, the wavepacket last. */
+  private def layers(format: Int): Array[Int] =
+    ((LXy to LGps) ++ (if (hasRgb14(format)) Seq(LRgb) else Nil) ++
+      (if (hasNir14(format)) Seq(LNir) else Nil) ++
+      (if (hasWave14(format)) Seq(LWave) else Nil)).toArray
 
   /** Per-scanner-channel codec context: models + prediction state,
     * seeded from the point that was current when the channel first
@@ -162,11 +162,6 @@ object Laz14 {
     // the pointwise WAVEPACKET13 item, one instance per context
     val waveCodec: Laz.Wavepacket13Codec =
       if (hasWave14(format)) new Laz.Wavepacket13Codec(seed.waveOrZero) else null
-
-    def model(arr: Array[ArithmeticModel], idx: Int, syms: Int): ArithmeticModel = {
-      if (arr(idx) == null) arr(idx) = new ArithmeticModel(syms).init()
-      arr(idx)
-    }
   }
 
   /** lpr selector: is the last point a first return / a last return /
@@ -178,318 +173,201 @@ object Laz14 {
 
   private def m8(v: Int): Int = if (v > 7) 7 else v
 
-  // ------------------------------------------------------------- encoder
+  // --------------------------------------------------------------- codec
 
-  private final class ChunkEncoder14(format: Int, first: Point14) {
-    private val encs = Array.fill(layerCount(format))(new ArithmeticEncoder)
-    private val used = new Array[Boolean](layerCount(format))
+  /** The layered codec of one chunk, run by encoder and decoder alike:
+    * `code` codes a point's fields into their layers' coders, indexed
+    * by slot, and returns the point given (encoding) or read (decoding).
+    * A null coder is a layer the format lacks or the reader skips: it
+    * is never run, and its fields come back zero. */
+  private final class ChunkCoder14(format: Int, first: Point14, coders: Array[Coder]) {
     private val ctxs = new Array[Ctx14](4)
     private var cur = first.channel
     ctxs(cur) = new Ctx14(first, format)
+    private val xy = coders(LXy)
 
-    private def enc(l: Int): ArithmeticEncoder = { used(l) = true; encs(l) }
+    /** Encoder side: the changed-values symbol of `p` against the last
+      * point of its channel's context (the current one's when the
+      * channel is new this chunk). */
+    private def changes(p: Point14): Int = {
+      val lp = if (ctxs(p.channel) == null) ctxs(cur).last else ctxs(p.channel).last
+      val rCode = (p.returnNumber - lp.returnNumber) & 15 match {
+        case 0 => 0; case 1 => 1; case 15 => 2; case _ => 3
+      }
+      (if (p.channel != cur) 64 else 0) | (if (p.psid != lp.psid) 32 else 0) |
+        (if (p.gpsBits != lp.gpsBits) 16 else 0) | (if (p.scanAngle != lp.scanAngle) 8 else 0) |
+        (if (p.numberOfReturns != lp.numberOfReturns) 4 else 0) | rCode
+    }
 
-    def add(p: Point14): Unit = {
+    def code(p: Point14): Point14 = {
       val old = ctxs(cur)
-      val newChannel = p.channel
-      val channelChanged = newChannel != cur
-      // prediction base: the TARGET context's last point (seeded from
-      // the old context's last when the channel is new this chunk)
-      val tgt =
-        if (!channelChanged) old
-        else {
-          if (ctxs(newChannel) == null) ctxs(newChannel) = new Ctx14(old.last, format)
-          ctxs(newChannel)
-        }
-      val lp = tgt.last
-      val psidChanged = p.psid != lp.psid
-      val gpsChanged = p.gpsBits != lp.gpsBits
-      val angChanged = p.scanAngle != lp.scanAngle
-      val nChanged = p.numberOfReturns != lp.numberOfReturns
-      val rDiff = (p.returnNumber - lp.returnNumber) & 15
-      val rCode = rDiff match { case 0 => 0; case 1 => 1; case 15 => 2; case _ => 3 }
-      val sym = (if (channelChanged) 64 else 0) | (if (psidChanged) 32 else 0) |
-        (if (gpsChanged) 16 else 0) | (if (angChanged) 8 else 0) |
-        (if (nChanged) 4 else 0) | rCode
       // the changed symbol and channel diff are coded with the OLD
       // (current) context's models — the decoder must be able to pick
       // the model before it learns the channel switched
-      enc(LXy).encodeSymbol(old.mChanged(lprOf(old)), sym)
-      if (channelChanged) {
-        enc(LXy).encodeSymbol(old.mChannelDiff, ((newChannel - cur) & 3) - 1)
-        cur = newChannel
-      }
-
-      if (nChanged)
-        enc(LXy).encodeSymbol(
-          tgt.model(tgt.mNReturns, lp.numberOfReturns, 16), p.numberOfReturns)
-      if (rCode == 3)
-        enc(LXy).encodeSymbol(
-          tgt.model(tgt.mRNumber, lp.returnNumber, 16), p.returnNumber)
-      val n = p.numberOfReturns
-      val r = p.returnNumber
-      val m = NumberReturnMap(m8(n))(m8(r))
-      val l = NumberReturnLevel(m8(n))(m8(r))
-      val gbit = if (gpsChanged) 1 else 0
-
-      val dx = p.x - lp.x
-      tgt.icDx.compress(enc(LXy), tgt.xDiff((m << 1) | gbit).get, dx,
-        if (n == 1) 1 else 0)
-      tgt.xDiff((m << 1) | gbit).add(dx)
-      val kx = tgt.icDx.lastK
-      val dy = p.y - lp.y
-      tgt.icDy.compress(enc(LXy), tgt.yDiff((m << 1) | gbit).get, dy,
-        (if (n == 1) 1 else 0) + (if (kx < 20) kx & 0xFE else 20))
-      tgt.yDiff((m << 1) | gbit).add(dy)
-
-      val kz = (tgt.icDx.lastK + tgt.icDy.lastK) / 2
-      tgt.icZ.compress(enc(LZ), tgt.lastZ(l), p.z,
-        (if (n == 1) 1 else 0) + (if (kz < 18) kz & 0xFE else 18))
-      tgt.lastZ(l) = p.z
-
-      enc(LCls).encodeSymbol(
-        tgt.model(tgt.mCls, ((lp.cls & 31) << 1) | (if (r >= n) 1 else 0), 256), p.cls)
-      enc(LFlags).encodeSymbol(tgt.model(tgt.mFlags, lp.flags6, 64), p.flags6)
-
-      val cpr = (if (r == 1) 2 else 0) | (if (r >= n) 1 else 0)
-      tgt.icIntensity.compress(enc(LIntensity), tgt.lastIntensity(cpr), p.intensity, cpr)
-      tgt.lastIntensity(cpr) = p.intensity
-
-      if (angChanged)
-        tgt.icScanAngle.compress(enc(LAngle), lp.scanAngle, p.scanAngle, gbit)
-      enc(LUser).encodeSymbol(tgt.model(tgt.mUser, lp.user >>> 2, 256), p.user)
-      if (psidChanged) tgt.icPsid.compress(enc(LPsid), lp.psid, p.psid, 0)
-      if (gpsChanged) tgt.gps.compress(enc(LGps), p.gpsBits)
-
-      if (hasRgb14(format)) tgt.rgb.compress(enc(LRgb), p.r, p.g, p.b)
-      if (hasNir14(format)) {
-        tgt.icNir.compress(enc(LNir), tgt.lastNir, p.nir, 0)
-        tgt.lastNir = p.nir
-      }
-      if (hasWave14(format))
-        tgt.waveCodec.compress(enc(waveLayer(format)), p.waveOrZero)
-
-      tgt.prevGpsChanged = gpsChanged
-      tgt.last = p
-    }
-
-    /** Per-layer byte streams; never-touched layers are zero-length
-      * (their decoders are never consulted either). */
-    def finish(): Array[Array[Byte]] =
-      encs.indices.map { i =>
-        if (!used(i)) Array.emptyByteArray
-        else { encs(i).done(); encs(i).result() }
-      }.toArray
-  }
-
-  // -------------------------------------------------------------- decoder
-
-  private final class ChunkDecoder14(format: Int, first: Point14,
-      decs: Array[ArithmeticDecoder], want: FieldMask) {
-    private val ctxs = new Array[Ctx14](4)
-    private var cur = first.channel
-    ctxs(cur) = new Ctx14(first, format)
-
-    def next(): Point14 = {
-      val old = ctxs(cur)
-      val sym = decs(LXy).decodeSymbol(old.mChanged(lprOf(old)))
-      val channelChanged = (sym & 64) != 0
-      if (channelChanged) {
-        val diff = decs(LXy).decodeSymbol(old.mChannelDiff) + 1
-        val newChannel = (cur + diff) & 3
-        if (ctxs(newChannel) == null) ctxs(newChannel) = new Ctx14(old.last, format)
-        cur = newChannel
+      val sym = xy.symbol(old.mChanged(lprOf(old)), if (xy.encoding) changes(p) else 0)
+      if ((sym & 64) != 0) {
+        cur = (cur + xy.symbol(old.mChannelDiff, ((p.channel - cur) & 3) - 1) + 1) & 3
+        // prediction base: the TARGET context's last point (seeded from
+        // the old context's last when the channel is new this chunk)
+        if (ctxs(cur) == null) ctxs(cur) = new Ctx14(old.last, format)
       }
       val tgt = ctxs(cur)
       val lp = tgt.last
-      val psidChanged = (sym & 32) != 0
       val gpsChanged = (sym & 16) != 0
-      val angChanged = (sym & 8) != 0
-      val nChanged = (sym & 4) != 0
       val n =
-        if (nChanged)
-          decs(LXy).decodeSymbol(tgt.model(tgt.mNReturns, lp.numberOfReturns, 16))
-        else lp.numberOfReturns
+        if ((sym & 4) == 0) lp.numberOfReturns
+        else xy.symbol(ArithmeticModel.at(tgt.mNReturns, lp.numberOfReturns, 16), p.numberOfReturns)
       val r = (sym & 3) match {
         case 0 => lp.returnNumber
         case 1 => (lp.returnNumber + 1) & 15
         case 2 => (lp.returnNumber + 15) & 15
-        case _ => decs(LXy).decodeSymbol(tgt.model(tgt.mRNumber, lp.returnNumber, 16))
+        case _ => xy.symbol(ArithmeticModel.at(tgt.mRNumber, lp.returnNumber, 16), p.returnNumber)
       }
       val m = NumberReturnMap(m8(n))(m8(r))
       val l = NumberReturnLevel(m8(n))(m8(r))
       val gbit = if (gpsChanged) 1 else 0
+      val single = if (n == 1) 1 else 0
 
-      val dx = tgt.icDx.decompress(decs(LXy), tgt.xDiff((m << 1) | gbit).get,
-        if (n == 1) 1 else 0)
-      val x = lp.x + dx
-      tgt.xDiff((m << 1) | gbit).add(dx)
+      val xCtx = (m << 1) | gbit
+      val dx = tgt.icDx.code(xy, tgt.xDiff(xCtx).get, p.x - lp.x, single)
+      tgt.xDiff(xCtx).add(dx)
       val kx = tgt.icDx.lastK
-      val dy = tgt.icDy.decompress(decs(LXy), tgt.yDiff((m << 1) | gbit).get,
-        (if (n == 1) 1 else 0) + (if (kx < 20) kx & 0xFE else 20))
-      val y = lp.y + dy
-      tgt.yDiff((m << 1) | gbit).add(dy)
+      val dy = tgt.icDy.code(xy, tgt.yDiff(xCtx).get, p.y - lp.y,
+        single + (if (kx < 20) kx & 0xFE else 20))
+      tgt.yDiff(xCtx).add(dy)
 
-      val z =
-        if (want.z) {
+      val z = coders(LZ) match {
+        case null => 0
+        case zc =>
           val kz = (tgt.icDx.lastK + tgt.icDy.lastK) / 2
-          val v = tgt.icZ.decompress(decs(LZ), tgt.lastZ(l),
-            (if (n == 1) 1 else 0) + (if (kz < 18) kz & 0xFE else 18))
-          tgt.lastZ(l) = v
-          v
-        } else 0
-
-      val cls =
-        if (want.cls) decs(LCls).decodeSymbol(
-          tgt.model(tgt.mCls, ((lp.cls & 31) << 1) | (if (r >= n) 1 else 0), 256))
-        else 0
-      val f6 =
-        if (want.flags) decs(LFlags).decodeSymbol(tgt.model(tgt.mFlags, lp.flags6, 64))
-        else 0
-      val flags = (f6 & 15) | (cur << 4) | ((f6 >>> 4) << 6)
-
-      val intensity =
-        if (want.intensity) {
+          tgt.lastZ(l) = tgt.icZ.code(zc, tgt.lastZ(l), p.z,
+            single + (if (kz < 18) kz & 0xFE else 18))
+          tgt.lastZ(l)
+      }
+      val cls = coders(LCls) match {
+        case null => 0
+        case cc => cc.symbol(ArithmeticModel.at(tgt.mCls,
+          ((lp.cls & 31) << 1) | (if (r >= n) 1 else 0), 256), p.cls)
+      }
+      val f6 = coders(LFlags) match {
+        case null => 0
+        case fc => fc.symbol(ArithmeticModel.at(tgt.mFlags, lp.flags6, 64), p.flags6)
+      }
+      val intensity = coders(LIntensity) match {
+        case null => 0
+        case ic =>
           val cpr = (if (r == 1) 2 else 0) | (if (r >= n) 1 else 0)
-          val v = tgt.icIntensity.decompress(decs(LIntensity), tgt.lastIntensity(cpr), cpr)
-          tgt.lastIntensity(cpr) = v
-          v
-        } else 0
-      val ang =
-        if (!want.scanAngle) 0
-        else if (angChanged) tgt.icScanAngle.decompress(decs(LAngle), lp.scanAngle, gbit)
-        else lp.scanAngle
-      val user =
-        if (want.user) decs(LUser).decodeSymbol(tgt.model(tgt.mUser, lp.user >>> 2, 256))
-        else 0
-      val psid =
-        if (!want.psid) 0
-        else if (psidChanged) tgt.icPsid.decompress(decs(LPsid), lp.psid, 0)
-        else lp.psid
-      val gps =
-        if (!want.gps) 0L
-        else if (gpsChanged) tgt.gps.decompress(decs(LGps))
-        else lp.gpsBits
+          tgt.lastIntensity(cpr) = tgt.icIntensity.code(ic, tgt.lastIntensity(cpr), p.intensity, cpr)
+          tgt.lastIntensity(cpr)
+      }
+      val ang = coders(LAngle) match {
+        case null => 0
+        case ac => if ((sym & 8) != 0) tgt.icScanAngle.code(ac, lp.scanAngle, p.scanAngle, gbit)
+          else lp.scanAngle
+      }
+      val user = coders(LUser) match {
+        case null => 0
+        case uc => uc.symbol(ArithmeticModel.at(tgt.mUser, lp.user >>> 2, 256), p.user)
+      }
+      val psid = coders(LPsid) match {
+        case null => 0
+        case pc => if ((sym & 32) != 0) tgt.icPsid.code(pc, lp.psid, p.psid, 0) else lp.psid
+      }
+      val gps = coders(LGps) match {
+        case null => 0L
+        case gc => if (gpsChanged) tgt.gps.code(gc, p.gpsBits) else lp.gpsBits
+      }
+      val rgb = coders(LRgb)
+      if (rgb != null) tgt.rgb.code(rgb, p.r, p.g, p.b)
+      val nir = coders(LNir) match {
+        case null => 0
+        case nc => tgt.lastNir = tgt.icNir.code(nc, tgt.lastNir, p.nir, 0); tgt.lastNir
+      }
+      val wave = coders(LWave) match {
+        case null => null
+        case wc => tgt.waveCodec.code(wc, p.waveOrZero)
+      }
 
-      val (cr, cg, cb) =
-        if (hasRgb14(format) && want.rgb) tgt.rgb.decompress(decs(LRgb)) else (0, 0, 0)
-      val nir =
-        if (hasNir14(format) && want.nir) {
-          val v = tgt.icNir.decompress(decs(LNir), tgt.lastNir, 0)
-          tgt.lastNir = v
-          v
-        } else 0
-      val wv =
-        if (hasWave14(format) && want.wave)
-          tgt.waveCodec.decompress(decs(waveLayer(format)))
-        else null
-
-      val p = Point14(x, y, z, intensity, (n << 4) | r, flags, cls, user,
-        ang, psid, gps, cr, cg, cb, nir, wv)
+      val q = if (xy.encoding) p else Point14(lp.x + dx, lp.y + dy, z, intensity, (n << 4) | r,
+        (f6 & 15) | (cur << 4) | ((f6 >>> 4) << 6), cls, user, ang, psid, gps,
+        if (rgb == null) 0 else tgt.rgb.r, if (rgb == null) 0 else tgt.rgb.g,
+        if (rgb == null) 0 else tgt.rgb.b, nir, wave)
       tgt.prevGpsChanged = gpsChanged
-      tgt.last = p
-      p
+      tgt.last = q
+      q
     }
   }
 
-  // --------------------------------------------------------- raw records
+  // ------------------------------------------------ raw record and framing
 
-  private def putPoint14(bb: ByteBuffer, format: Int, p: Point14): Unit = {
-    bb.putInt(p.x).putInt(p.y).putInt(p.z)
-    bb.putShort(p.intensity.toShort)
-    bb.put(p.returns.toByte).put(p.flags.toByte).put(p.cls.toByte).put(p.user.toByte)
-    bb.putShort(p.scanAngle.toShort)
-    bb.putShort(p.psid.toShort)
-    bb.putLong(p.gpsBits)
-    if (hasRgb14(format)) bb.putShort(p.r.toShort).putShort(p.g.toShort).putShort(p.b.toShort)
-    if (hasNir14(format)) bb.putShort(p.nir.toShort)
-    if (hasWave14(format)) {
-      val w = p.waveOrZero
-      bb.put(w.index.toByte).putLong(w.offset).putInt(w.size)
-        .putInt(w.retPoint).putInt(w.xt).putInt(w.yt).putInt(w.zt)
-    }
-  }
+  private val Blank14 = Point14(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0L)
 
-  private def getPoint14(bb: ByteBuffer, format: Int): Point14 = {
-    val x = bb.getInt; val y = bb.getInt; val z = bb.getInt
-    val intensity = bb.getShort & 0xFFFF
-    val returns = bb.get & 0xFF; val flags = bb.get & 0xFF
-    val cls = bb.get & 0xFF; val user = bb.get & 0xFF
-    val ang = bb.getShort & 0xFFFF; val psid = bb.getShort & 0xFFFF
-    val gps = bb.getLong
-    val (r, g, b) =
-      if (hasRgb14(format)) (bb.getShort & 0xFFFF, bb.getShort & 0xFFFF, bb.getShort & 0xFFFF)
-      else (0, 0, 0)
-    val nir = if (hasNir14(format)) bb.getShort & 0xFFFF else 0
-    val wv = if (hasWave14(format))
-      Laz.Wavepacket(bb.get & 0xFF, bb.getLong, bb.getInt, bb.getInt,
-        bb.getInt, bb.getInt, bb.getInt)
-    else null
-    Point14(x, y, z, intensity, returns, flags, cls, user, ang, psid, gps,
-      r, g, b, nir, wv)
-  }
-
-  // ------------------------------------------------------ chunk framing
+  /** The uncompressed LAS 1.4 record of `format`. */
+  private def rawPoint14(io: Laz.RawFields, format: Int, p: Point14): Point14 =
+    Point14(io.i32(p.x), io.i32(p.y), io.i32(p.z), io.u16(p.intensity),
+      io.u8(p.returns), io.u8(p.flags), io.u8(p.cls), io.u8(p.user),
+      io.u16(p.scanAngle), io.u16(p.psid), io.i64(p.gpsBits),
+      if (hasRgb14(format)) io.u16(p.r) else 0, if (hasRgb14(format)) io.u16(p.g) else 0,
+      if (hasRgb14(format)) io.u16(p.b) else 0, if (hasNir14(format)) io.u16(p.nir) else 0,
+      if (hasWave14(format)) Laz.rawWave(io, p.waveOrZero) else null)
 
   /** Encode one layered chunk: raw first point, u32 point count, u32
-    * byte count per layer, then the concatenated layer streams. */
+    * byte count per layer, then the concatenated layer streams. A layer
+    * no point touched is zero-length. */
   private[sources] def encodeChunk14(format: Int, points: Array[Point14]): Array[Byte] = {
     require(points.nonEmpty, "empty LAZ chunk")
-    val len = recordLen(format)
-    val nLayers = layerCount(format)
-    val layers: Array[Array[Byte]] =
-      if (points.length == 1) Array.fill(nLayers)(Array.emptyByteArray)
-      else {
-        val ce = new ChunkEncoder14(format, points(0))
-        var i = 1
-        while (i < points.length) { ce.add(points(i)); i += 1 }
-        ce.finish()
-      }
-    val total = len + 4 + 4 * nLayers + layers.map(_.length).sum
-    val bb = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    putPoint14(bb, format, points(0))
+    val order = layers(format)
+    val encs = order.map(_ => new ArithmeticEncoder)
+    val coders = new Array[Coder](Slots)
+    order.indices.foreach(i => coders(order(i)) = Coder(encs(i)))
+    val cc = new ChunkCoder14(format, points(0), coders)
+    var i = 1
+    while (i < points.length) { cc.code(points(i)); i += 1 }
+    val streams = encs.map(e => if (e.isEmpty) Array.emptyByteArray else { e.done(); e.result() })
+    val bb = ByteBuffer.allocate(recordLen(format) + 4 + 4 * order.length +
+      streams.map(_.length).sum).order(ByteOrder.LITTLE_ENDIAN)
+    rawPoint14(new Laz.RawFields(bb, write = true), format, points(0))
     bb.putInt(points.length)
-    layers.foreach(l => bb.putInt(l.length))
-    layers.foreach(bb.put)
+    streams.foreach(l => bb.putInt(l.length))
+    streams.foreach(bb.put)
     bb.array()
   }
 
-  /** Decode a layered chunk; layers excluded by `want` are seeked
-    * past, never decoded (their fields come back zero). */
+  /** Decode a layered chunk with the codec [[encodeChunk14]] ran, the
+    * first point as placeholder input. Layers excluded by `want` get no
+    * coder: they are seeked past, never decoded (fields come back zero). */
   private[sources] def decodeChunk14(format: Int, bytes: Array[Byte], offset: Int,
       count: Int, want: FieldMask = AllFields): Array[Point14] = {
-    val len = recordLen(format)
-    val nLayers = layerCount(format)
+    val order = layers(format)
     val bb = ByteBuffer.wrap(bytes, offset, bytes.length - offset)
       .order(ByteOrder.LITTLE_ENDIAN)
     val out = new Array[Point14](count)
-    out(0) = getPoint14(bb, format)
+    out(0) = rawPoint14(new Laz.RawFields(bb, write = false), format, Blank14)
     if (count == 1) return out
     val stored = bb.getInt
     require(stored == count,
       s"layered chunk header says $stored points, chunk table says $count")
-    val sizes = Array.fill(nLayers)(bb.getInt)
-    val starts = new Array[Int](nLayers)
+    val sizes = Array.fill(order.length)(bb.getInt)
+    val wanted = Array(true, want.z, want.cls, want.flags, want.intensity, want.scanAngle,
+      want.user, want.psid, want.gps, want.rgb, want.nir, want.wave)
+    val coders = new Array[Coder](Slots)
     // layer byte counts are untrusted: negative sizes would misalign
     // every following layer, and Int-overflowing sums would wrap past
     // the bounds check — walk in Long and reject each bad length
-    var off = (offset + len + 4 + 4 * nLayers).toLong
+    var off = (offset + recordLen(format) + 4 + 4 * order.length).toLong
     var i = 0
-    while (i < nLayers) {
+    while (i < order.length) {
       require(sizes(i) >= 0 && off + sizes(i) <= bytes.length,
         s"layered chunk layer $i (${sizes(i)} bytes at $off) overruns " +
           s"the ${bytes.length}-byte buffer")
-      starts(i) = off.toInt; off += sizes(i); i += 1
-    }
-    val decs = new Array[ArithmeticDecoder](nLayers)
-    i = 0
-    while (i < nLayers) {
-      decs(i) = new ArithmeticDecoder(bytes, starts(i), starts(i) + sizes(i)).init()
+      if (wanted(order(i))) coders(order(i)) =
+        Coder(new ArithmeticDecoder(bytes, off.toInt, (off + sizes(i)).toInt).init())
+      off += sizes(i)
       i += 1
     }
-    val cd = new ChunkDecoder14(format, out(0), decs, want)
+    val cc = new ChunkCoder14(format, out(0), coders)
     i = 1
-    while (i < count) { out(i) = cd.next(); i += 1 }
+    while (i < count) { out(i) = cc.code(out(0)); i += 1 }
     out
   }
 
@@ -540,10 +418,10 @@ object Laz14 {
   def readPoints14(spark: SparkSession, path: String,
       columns: Seq[String] = pointSchema.map(_.name),
       chunksPerTask: Int = 8): DataFrame = {
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     require(info.compressor == 3, s"$path: not a layered (compressor 3) file")
     val format = FormatItems.collectFirst { case (f, is) if is == info.items => f }.get
-    val chunks = Laz.readChunkDescriptors(path, info)
+    val chunks = Las.lazChunks(path, info)
     val cols = pointSchema.filter(f => columns.contains(f.name))
     val h = info.header
     val want = maskFor(columns)

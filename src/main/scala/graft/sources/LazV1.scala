@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
-
-import graft.sources.Laz.{FullPoint, Point10}
+import graft.sources.Laz.Point10
 
 /** LASzip compressor-1 ("pointwise", pre-2013) item codecs — the
   * version-1 variants of POINT10/GPSTIME11/RGB12/BYTE that original
@@ -32,6 +30,10 @@ import graft.sources.Laz.{FullPoint, Point10}
   *  - BYTE items code each lane through one 8-bit corrector with the
   *    lane index as context.
   *
+  * Each codec is one `code` routine both directions run, and the
+  * stream uses [[Laz.encodeChunk]]'s framing with `v1` set: it differs
+  * from a compressor-2 chunk only in these codec versions.
+  *
   * A compressor-1 file is ONE arithmetic stream — models never reset,
   * so the format is inherently unsplittable: the reader decodes a
   * file in a single task and parallelism comes from the file count
@@ -57,7 +59,7 @@ private[sources] object LazV1 {
 
   /** POINT10 version-1 codec: coords first (median-of-3 predicted,
     * k-chained contexts), then the changed mask and attributes. */
-  private[sources] final class Point10V1Codec(first: Point10) {
+  private[sources] final class Point10V1Codec(first: Point10) extends Laz.Point10Item {
     private val icDx = new IntegerCompressor(32, 1).initModels()
     private val icDy = new IntegerCompressor(32, 20).initModels()
     private val icZ = new IntegerCompressor(32, 20).initModels()
@@ -82,74 +84,27 @@ private[sources] object LazV1 {
     private var lUser = first.user
     private var lPsid = first.psid
 
-    private def byteModel(arr: Array[ArithmeticModel], idx: Int): ArithmeticModel = {
-      if (arr(idx) == null) arr(idx) = new ArithmeticModel(256).init()
-      arr(idx)
-    }
-
-    def compress(enc: ArithmeticEncoder, p: Point10): Unit = {
-      val dx = p.x - lx
-      icDx.compress(enc, xDiffs.get, dx, 0)
+    def code(c: Coder, p: Point10): Point10 = {
+      val dx = icDx.code(c, xDiffs.get, p.x - lx, 0)
       xDiffs.add(dx)
+      lx += dx
       val kx = icDx.lastK
-      val dy = p.y - ly
-      icDy.compress(enc, yDiffs.get, dy, if (kx < 19) kx else 19)
+      val dy = icDy.code(c, yDiffs.get, p.y - ly, if (kx < 19) kx else 19)
       yDiffs.add(dy)
+      ly += dy
       val kz = (kx + icDy.lastK) / 2
-      icZ.compress(enc, lz, p.z, if (kz < 19) kz else 19)
+      lz = icZ.code(c, lz, p.z, if (kz < 19) kz else 19)
 
-      var changed = 0
-      if (lFlags != p.flags) changed |= 32
-      if (lIntensity != p.intensity) changed |= 16
-      if (lCls != p.cls) changed |= 8
-      if (lScanAngle != p.scanAngle) changed |= 4
-      if (lUser != p.user) changed |= 2
-      if (lPsid != p.psid) changed |= 1
-      enc.encodeSymbol(mChanged, changed)
-      if ((changed & 32) != 0) enc.encodeSymbol(byteModel(mBitByte, lFlags), p.flags)
-      if ((changed & 16) != 0) icIntensity.compress(enc, lIntensity, p.intensity, 0)
-      if ((changed & 8) != 0) enc.encodeSymbol(byteModel(mClassification, lCls), p.cls)
+      val changed = c.symbol(mChanged, if (!c.encoding) 0
+        else Laz.changedMask(p, lFlags, lIntensity, lCls, lScanAngle, lUser, lPsid))
+      if ((changed & 32) != 0) lFlags = c.symbol(ArithmeticModel.at(mBitByte, lFlags, 256), p.flags)
+      if ((changed & 16) != 0) lIntensity = icIntensity.code(c, lIntensity, p.intensity, 0)
+      if ((changed & 8) != 0) lCls = c.symbol(ArithmeticModel.at(mClassification, lCls, 256), p.cls)
       if ((changed & 4) != 0)
-        icScanAngle.compress(enc, lScanAngle, p.scanAngle, (p.flags >>> 6) & 1)
-      if ((changed & 2) != 0) enc.encodeSymbol(byteModel(mUserData, lUser), p.user)
-      if ((changed & 1) != 0) icPointSource.compress(enc, lPsid, p.psid, 0)
-
-      lx = p.x; ly = p.y; lz = p.z; lIntensity = p.intensity
-      lFlags = p.flags; lCls = p.cls; lScanAngle = p.scanAngle
-      lUser = p.user; lPsid = p.psid
-    }
-
-    def decompress(dec: ArithmeticDecoder): Point10 = {
-      val dx = icDx.decompress(dec, xDiffs.get, 0)
-      val x = lx + dx
-      xDiffs.add(dx)
-      val kx = icDx.lastK
-      val dy = icDy.decompress(dec, yDiffs.get, if (kx < 19) kx else 19)
-      val y = ly + dy
-      yDiffs.add(dy)
-      val kz = (kx + icDy.lastK) / 2
-      val z = icZ.decompress(dec, lz, if (kz < 19) kz else 19)
-
-      val changed = dec.decodeSymbol(mChanged)
-      val flags =
-        if ((changed & 32) != 0) dec.decodeSymbol(byteModel(mBitByte, lFlags)) else lFlags
-      val intensity =
-        if ((changed & 16) != 0) icIntensity.decompress(dec, lIntensity, 0) else lIntensity
-      val cls =
-        if ((changed & 8) != 0) dec.decodeSymbol(byteModel(mClassification, lCls)) else lCls
-      val scanAngle =
-        if ((changed & 4) != 0)
-          icScanAngle.decompress(dec, lScanAngle, (flags >>> 6) & 1)
-        else lScanAngle
-      val user =
-        if ((changed & 2) != 0) dec.decodeSymbol(byteModel(mUserData, lUser)) else lUser
-      val psid =
-        if ((changed & 1) != 0) icPointSource.decompress(dec, lPsid, 0) else lPsid
-
-      lx = x; ly = y; lz = z; lIntensity = intensity
-      lFlags = flags; lCls = cls; lScanAngle = scanAngle
-      lUser = user; lPsid = psid
-      Point10(x, y, z, intensity, flags, cls, scanAngle, user, psid)
+        lScanAngle = icScanAngle.code(c, lScanAngle, p.scanAngle, (lFlags >>> 6) & 1)
+      if ((changed & 2) != 0) lUser = c.symbol(ArithmeticModel.at(mUserData, lUser, 256), p.user)
+      if ((changed & 1) != 0) lPsid = icPointSource.code(c, lPsid, p.psid, 0)
+      if (c.encoding) p else Point10(lx, ly, lz, lIntensity, lFlags, lCls, lScanAngle, lUser, lPsid)
     }
   }
 
@@ -169,7 +124,7 @@ private[sources] object LazV1 {
     * re-anchoring the delta after repeated misfits. The decoder's
     * value reconstruction depends only on the coded symbols, so the
     * encoder's multiplier heuristic affects ratio, never losslessness. */
-  private[sources] final class GpsTime11V1Codec(firstBits: Long) {
+  private[sources] final class GpsTime11V1Codec(firstBits: Long) extends Laz.GpsItem {
     private val m0Diff = new ArithmeticModel(3).init()
     private val mMulti = new ArithmeticModel(GpsV1MultiMax).init()
     private val icGps = new IntegerCompressor(32, 6).initModels()
@@ -184,111 +139,53 @@ private[sources] object LazV1 {
       else if (multi < 50) 4
       else 5
 
-    private def applyExtreme(diff: Int): Unit = {
+    private def applyExtreme(diff: Int): Int = {
       extreme += 1
       if (extreme > 3) { lastDiff = diff; extreme = 0 }
+      diff
     }
 
-    def compress(enc: ArithmeticEncoder, bits: Long): Unit = {
-      if (lastDiff == 0) {
-        if (bits == lastGps) { enc.encodeSymbol(m0Diff, 0); return }
-        val diff64 = bits - lastGps
-        if (diff64 == diff64.toInt.toLong) {
-          enc.encodeSymbol(m0Diff, 1)
-          icGps.compress(enc, 0, diff64.toInt, 0)
-          lastDiff = diff64.toInt
-          extreme = 0
-          lastGps = bits
-        } else {
-          enc.encodeSymbol(m0Diff, 2)
-          enc.writeBits(32, bits >>> 32)
-          enc.writeBits(32, bits & 0xFFFFFFFFL)
-          lastGps = bits
-          lastDiff = 0
-          extreme = 0
-        }
+    /** Encoder side: a multiplier of the established delta, clamped into
+      * the codable range; out-of-range or negative fits fall to the
+      * irregular symbol (pred 0) — exact either way. */
+    private def multiSymbol(diff: Int): Int = {
+      val q = math.round(diff.toDouble / lastDiff.toDouble)
+      if (q >= 2 && q <= GpsV1MultiClamp) q.toInt
+      else if (q == 1) GpsV1SymSameDelta
+      else GpsV1SymIrregular
+    }
+
+    def code(c: Coder, bits: Long): Long = {
+      val fresh = lastDiff == 0 // no 32-bit delta established yet
+      val unchanged = if (fresh) 0 else GpsV1SymUnchanged
+      val huge = if (fresh) 2 else GpsV1SymHuge
+      val diff64 = bits - lastGps
+      val diff = diff64.toInt
+      val sym = c.symbol(if (fresh) m0Diff else mMulti,
+        if (!c.encoding) 0
+        else if (diff64 == 0) unchanged
+        else if (diff64 != diff.toLong) huge
+        else if (fresh) 1
+        else multiSymbol(diff))
+      if (sym == unchanged) lastGps
+      else if (sym == huge) {
+        lastGps = (c.bits(32, bits >>> 32) << 32) | c.bits(32, bits & 0xFFFFFFFFL)
+        lastDiff = 0
+        extreme = 0
+        lastGps
       } else {
-        if (bits == lastGps) { enc.encodeSymbol(mMulti, GpsV1SymUnchanged); return }
-        val diff64 = bits - lastGps
-        val diff = diff64.toInt
-        if (diff64 == diff.toLong) {
-          // multiplier of the established delta, clamped into the
-          // codable range; out-of-range or negative fits fall to the
-          // irregular symbol (pred 0) — exact either way
-          val q = math.round(diff.toDouble / lastDiff.toDouble)
-          val multi =
-            if (q >= 2 && q <= GpsV1MultiClamp) q.toInt
-            else if (q == 1) GpsV1SymSameDelta
-            else GpsV1SymIrregular
-          enc.encodeSymbol(mMulti, multi)
-          if (multi == GpsV1SymSameDelta) {
-            icGps.compress(enc, lastDiff, diff, 1)
-            lastDiff = diff
+        val d =
+          if (sym == GpsV1SymSameDelta) { // also the first delta (pred 0, context 0)
+            lastDiff = icGps.code(c, lastDiff, diff, if (fresh) 0 else 1)
             extreme = 0
-          } else if (multi == GpsV1SymIrregular) {
-            icGps.compress(enc, 0, diff, 2)
-            applyExtreme(diff)
-          } else {
-            icGps.compress(enc, multi * lastDiff, diff, multiContext(multi))
-            if (multi == GpsV1MultiClamp) applyExtreme(diff)
+            lastDiff
+          } else if (sym == GpsV1SymIrregular) applyExtreme(icGps.code(c, 0, diff, 2))
+          else {
+            val d = icGps.code(c, sym * lastDiff, diff, multiContext(sym))
+            if (sym == GpsV1MultiClamp) applyExtreme(d) else d
           }
-          lastGps = bits
-        } else {
-          enc.encodeSymbol(mMulti, GpsV1SymHuge)
-          enc.writeBits(32, bits >>> 32)
-          enc.writeBits(32, bits & 0xFFFFFFFFL)
-          lastGps = bits
-          lastDiff = 0
-          extreme = 0
-        }
-      }
-    }
-
-    def decompress(dec: ArithmeticDecoder): Long = {
-      if (lastDiff == 0) {
-        val sym = dec.decodeSymbol(m0Diff)
-        if (sym == 0) lastGps
-        else if (sym == 1) {
-          val diff = icGps.decompress(dec, 0, 0)
-          lastDiff = diff
-          extreme = 0
-          lastGps += diff
-          lastGps
-        } else {
-          val bits = (dec.readBits(32) << 32) | dec.readBits(32)
-          lastGps = bits
-          lastDiff = 0
-          extreme = 0
-          bits
-        }
-      } else {
-        val sym = dec.decodeSymbol(mMulti)
-        if (sym == GpsV1SymUnchanged) lastGps
-        else if (sym == GpsV1SymHuge) {
-          val bits = (dec.readBits(32) << 32) | dec.readBits(32)
-          lastGps = bits
-          lastDiff = 0
-          extreme = 0
-          bits
-        } else {
-          val diff =
-            if (sym == GpsV1SymSameDelta) {
-              val d = icGps.decompress(dec, lastDiff, 1)
-              lastDiff = d
-              extreme = 0
-              d
-            } else if (sym == GpsV1SymIrregular) {
-              val d = icGps.decompress(dec, 0, 2)
-              applyExtreme(d)
-              d
-            } else {
-              val d = icGps.decompress(dec, sym * lastDiff, multiContext(sym))
-              if (sym == GpsV1MultiClamp) applyExtreme(d)
-              d
-            }
-          lastGps += diff
-          lastGps
-        }
+        lastGps += d
+        lastGps
       }
     }
   }
@@ -296,133 +193,42 @@ private[sources] object LazV1 {
   /** RGB12 version-1 codec: 6-bit changed-bytes mask, then each
     * changed byte through an 8-bit corrector with the byte index as
     * context (byte order r-lo, r-hi, g-lo, g-hi, b-lo, b-hi). */
-  private[sources] final class Rgb12V1Codec(firstR: Int, firstG: Int, firstB: Int) {
+  private[sources] final class Rgb12V1Codec(firstR: Int, firstG: Int, firstB: Int)
+      extends Laz.RgbItem {
     private val mByteUsed = new ArithmeticModel(64).init()
     private val icRgb = new IntegerCompressor(8, 6).initModels()
-    private val last = Array(firstR & 0xFF, (firstR >>> 8) & 0xFF,
-      firstG & 0xFF, (firstG >>> 8) & 0xFF, firstB & 0xFF, (firstB >>> 8) & 0xFF)
+    private val last = Array.tabulate(6)(lane(firstR, firstG, firstB, _))
+    def r: Int = last(0) | (last(1) << 8)
+    def g: Int = last(2) | (last(3) << 8)
+    def b: Int = last(4) | (last(5) << 8)
 
-    def compress(enc: ArithmeticEncoder, r: Int, g: Int, b: Int): Unit = {
-      val cur = Array(r & 0xFF, (r >>> 8) & 0xFF,
-        g & 0xFF, (g >>> 8) & 0xFF, b & 0xFF, (b >>> 8) & 0xFF)
+    private def lane(r: Int, g: Int, b: Int, i: Int): Int =
+      ((if (i < 2) r else if (i < 4) g else b) >>> (8 * (i & 1))) & 0xFF
+
+    def code(c: Coder, r: Int, g: Int, b: Int): Unit = {
       var mask = 0
       var i = 0
-      while (i < 6) { if (cur(i) != last(i)) mask |= 1 << i; i += 1 }
-      enc.encodeSymbol(mByteUsed, mask)
+      if (c.encoding) while (i < 6) { if (lane(r, g, b, i) != last(i)) mask |= 1 << i; i += 1 }
+      mask = c.symbol(mByteUsed, mask)
       i = 0
       while (i < 6) {
-        if ((mask & (1 << i)) != 0) {
-          icRgb.compress(enc, last(i), cur(i), i)
-          last(i) = cur(i)
-        }
+        if ((mask & (1 << i)) != 0) last(i) = icRgb.code(c, last(i), lane(r, g, b, i), i)
         i += 1
       }
-    }
-
-    def decompress(dec: ArithmeticDecoder): (Int, Int, Int) = {
-      val mask = dec.decodeSymbol(mByteUsed)
-      var i = 0
-      while (i < 6) {
-        if ((mask & (1 << i)) != 0) last(i) = icRgb.decompress(dec, last(i), i)
-        i += 1
-      }
-      (last(0) | (last(1) << 8), last(2) | (last(3) << 8), last(4) | (last(5) << 8))
     }
   }
 
   /** BYTE version-1 codec: each extra-bytes lane through an 8-bit
     * corrector with the lane index as context. */
-  private[sources] final class ByteV1Codec(first: Array[Byte]) {
+  private[sources] final class ByteV1Codec(first: Array[Byte]) extends Laz.BytesItem {
     private val n = first.length
     private val icByte = new IntegerCompressor(8, n).initModels()
     private val last = Array.tabulate(n)(i => first(i) & 0xFF)
 
-    def compress(enc: ArithmeticEncoder, cur: Array[Byte]): Unit = {
+    def code(c: Coder, cur: Array[Byte]): Array[Byte] = {
       var i = 0
-      while (i < n) {
-        val c = cur(i) & 0xFF
-        icByte.compress(enc, last(i), c, i)
-        last(i) = c
-        i += 1
-      }
+      while (i < n) { last(i) = icByte.code(c, last(i), cur(i) & 0xFF, i); i += 1 }
+      last.map(_.toByte)
     }
-
-    def decompress(dec: ArithmeticDecoder): Array[Byte] = {
-      val out = new Array[Byte](n)
-      var i = 0
-      while (i < n) {
-        last(i) = icByte.decompress(dec, last(i), i)
-        out(i) = last(i).toByte
-        i += 1
-      }
-      out
-    }
-  }
-
-  // --------------------------------------------------- whole-file stream
-
-  /** Encode an entire compressor-1 point stream: first record raw,
-    * then one arithmetic stream over ALL remaining points (models
-    * never reset — that is what makes the format unsplittable). */
-  private[sources] def encodeStream(format: Int, points: Array[FullPoint],
-      extraLen: Int = 0): Array[Byte] = {
-    require(points.nonEmpty, "empty LAZ v1 stream")
-    val len = Laz.recordLen(format) + extraLen
-    val raw = ByteBuffer.allocate(len).order(ByteOrder.LITTLE_ENDIAN)
-    Laz.putFullPoint(raw, format, points(0), extraLen)
-    if (points.length == 1) raw.array()
-    else {
-      val core = new Point10V1Codec(points(0).core)
-      val gps = if (format == 1 || format == 3) new GpsTime11V1Codec(points(0).gps) else null
-      val rgb = if (format == 2 || format == 3)
-        new Rgb12V1Codec(points(0).r, points(0).g, points(0).b) else null
-      val xb = if (extraLen > 0) new ByteV1Codec(points(0).extra) else null
-      val enc = new ArithmeticEncoder
-      var i = 1
-      while (i < points.length) {
-        val p = points(i)
-        core.compress(enc, p.core)
-        if (gps != null) gps.compress(enc, p.gps)
-        if (rgb != null) rgb.compress(enc, p.r, p.g, p.b)
-        if (xb != null) {
-          require(p.extra != null && p.extra.length == extraLen,
-            s"extra-bytes length mismatch at point $i")
-          xb.compress(enc, p.extra)
-        }
-        i += 1
-      }
-      enc.done()
-      val coded = enc.result()
-      val out = new Array[Byte](len + coded.length)
-      System.arraycopy(raw.array(), 0, out, 0, len)
-      System.arraycopy(coded, 0, out, len, coded.length)
-      out
-    }
-  }
-
-  private[sources] def decodeStream(format: Int, bytes: Array[Byte], offset: Int,
-      count: Int, extraLen: Int = 0): Array[FullPoint] = {
-    val len = Laz.recordLen(format) + extraLen
-    val out = new Array[FullPoint](count)
-    val raw = ByteBuffer.wrap(bytes, offset, len).order(ByteOrder.LITTLE_ENDIAN)
-    out(0) = Laz.getFullPoint(raw, format, extraLen)
-    if (count > 1) {
-      val core = new Point10V1Codec(out(0).core)
-      val gps = if (format == 1 || format == 3) new GpsTime11V1Codec(out(0).gps) else null
-      val rgb = if (format == 2 || format == 3)
-        new Rgb12V1Codec(out(0).r, out(0).g, out(0).b) else null
-      val xb = if (extraLen > 0) new ByteV1Codec(out(0).extra) else null
-      val dec = new ArithmeticDecoder(bytes, offset + len, bytes.length).init()
-      var i = 1
-      while (i < count) {
-        val c = core.decompress(dec)
-        val g = if (gps != null) gps.decompress(dec) else 0L
-        val (cr, cg, cb) = if (rgb != null) rgb.decompress(dec) else (0, 0, 0)
-        val xa = if (xb != null) xb.decompress(dec) else null
-        out(i) = FullPoint(c, g, cr, cg, cb, xa)
-        i += 1
-      }
-    }
-    out
   }
 }

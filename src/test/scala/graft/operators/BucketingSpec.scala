@@ -6,10 +6,12 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TempDir
+
 /** Bucketed co-located joins: the write-once / join-shuffle-free layout
   * lever. Asserts on the PHYSICAL plan — zero Exchange nodes — not just
   * on result correctness. */
-class BucketingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class BucketingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TempDir {
 
   // the suite shares one JVM session (getOrCreate) — builder configs
   // would be silently ignored if another spec created it first, so
@@ -22,19 +24,13 @@ class BucketingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
-  /** Drop the tables and scrub their files under the ACTIVE warehouse
-    * dir (a fresh in-memory catalog forgets managed tables but their
-    * files survive the JVM -> LOCATION_ALREADY_EXISTS on rewrite). */
-  private def scrub(tables: String*): Unit = tables.foreach { t =>
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val p = java.nio.file.Paths.get(s"$wh/$t")
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
+  /** A database located in the suite's temporary directory, so the
+    * managed tables' files land there and not in the session's
+    * warehouse dir (by default `spark-warehouse` in the working dir). */
+  private lazy val db: String = {
+    spark.sql("DROP DATABASE IF EXISTS bucketing_spec CASCADE")
+    spark.sql(s"CREATE DATABASE bucketing_spec LOCATION '${tmp("warehouse")}'")
+    "bucketing_spec"
   }
 
   test("same-bucketed tables join without any exchange; result matches plain join") {
@@ -43,15 +39,14 @@ class BucketingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .select(col("l_orderkey").as("okey"), col("l_quantity"))
     val ord = spark.read.parquet(s"$sf/orders.parquet")
       .select(col("o_orderkey").as("okey"), col("o_totalprice"))
-    scrub("b_lineitem", "b_orders")
-    Bucketing.writeBucketed(li, "b_lineitem", "okey", 8)
-    Bucketing.writeBucketed(ord, "b_orders", "okey", 8)
+    Bucketing.writeBucketed(li, s"$db.b_lineitem", "okey", 8)
+    Bucketing.writeBucketed(ord, s"$db.b_orders", "okey", 8)
 
     // force the SMJ path: a broadcast would hide the bucketing effect
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Bucketing.bucketedJoin(spark, "b_lineitem", "b_orders", "okey")
+      val joined = Bucketing.bucketedJoin(spark, s"$db.b_lineitem", s"$db.b_orders", "okey")
       val n = joined.count()
 
       // plan shape: no Exchange anywhere under the join (bucket layout

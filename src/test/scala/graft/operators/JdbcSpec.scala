@@ -25,6 +25,9 @@ class JdbcSpec extends AnyFunSuite with TempDir {
 
   test("writeJdbc stores pc_record/pc_metadata tables an independent client can read back") {
     import spark.implicits._
+    // Derby boots on the first connection and writes its log there,
+    // by default into the working directory
+    System.setProperty("derby.stream.error.file", tmp("derby.log"))
     val url = s"jdbc:derby:${tmp("pcdb")};create=true"
 
     val pts = (0 until 2000).map { i =>

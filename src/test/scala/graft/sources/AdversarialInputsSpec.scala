@@ -33,7 +33,7 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
     import spark.implicits._
     val pts = (0 until 500).map(i => (i * 0.1, i * 0.2, i * 0.3))
     Laz.writePoints(pts.toDF("x", "y", "z"), path, chunkPoints = 100)
-    Laz.readInfo(path)
+    Las.lazInfo(path)
   }
 
   test("LAZ: negative and absurd chunk counts are rejected, not allocated") {
@@ -42,7 +42,7 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
     for (bad <- Seq(-5, Int.MaxValue)) {
       patch(path, info.chunkTableOffset + 4, leInt(bad))
       val e = intercept[IllegalArgumentException](
-        Laz.readChunkDescriptors(path, Laz.readInfo(path)))
+        Las.lazChunks(path, Las.lazInfo(path)))
       assert(e.getMessage.contains("chunk count"), e.getMessage)
     }
   }
@@ -53,7 +53,7 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
     val fileLen = Files.size(Paths.get(path))
     patch(path, info.pointDataStart - 8,
       leInt((fileLen + 100).toInt) ++ leInt(0))
-    val e = intercept[IllegalArgumentException](Laz.readInfo(path))
+    val e = intercept[IllegalArgumentException](Las.lazInfo(path))
     assert(e.getMessage.contains("out of range"), e.getMessage)
   }
 
@@ -65,7 +65,7 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
     // into garbage and the count/size/tiling requires must catch it
     patch(path, info.chunkTableOffset + 4, leInt(50))
     val e = intercept[IllegalArgumentException](
-      Laz.readChunkDescriptors(path, Laz.readInfo(path)))
+      Las.lazChunks(path, Las.lazInfo(path)))
     assert(e.getMessage.contains("chunk"), e.getMessage)
   }
 
@@ -78,7 +78,7 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
     assert(idx > 0, "laszip VLR user id not found in written file")
     val numItemsOff = (idx - 2) + 54 + 32
     patch(path, numItemsOff, Array[Byte](0xFF.toByte, 0xFF.toByte))
-    val e = intercept[IllegalArgumentException](Laz.readInfo(path))
+    val e = intercept[IllegalArgumentException](Las.lazInfo(path))
     assert(e.getMessage.contains("items"), e.getMessage)
   }
 
@@ -136,15 +136,15 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
       Files.write(Paths.get(evilPath), evil)
       val t0 = System.nanoTime()
       try {
-        val info = Laz.readInfo(evilPath)
-        val chunks = Laz.readChunkDescriptors(evilPath, info)
+        val info = Las.lazInfo(evilPath)
+        val chunks = Las.lazChunks(evilPath, info)
         // decode the first chunk if the tables survived — bounded work
         chunks.headOption.foreach { case (off, count, size) =>
           val raf = new java.io.RandomAccessFile(evilPath, "r")
           try {
             val b = new Array[Byte](size)
             raf.seek(off); raf.readFully(b)
-            Laz.decodeChunk(b, 0, count)
+            Laz.decodeChunk(0, b, 0, count)
           } finally raf.close()
         }
       } catch { case _: Exception => () } // loud rejection is fine
@@ -154,7 +154,7 @@ class AdversarialInputsSpec extends AnyFunSuite with TempDir {
     // cleanly (EOF/require), never loop
     (1 until 20).foreach { i =>
       Files.write(Paths.get(evilPath), good.take(good.length * i / 20))
-      try { Laz.readChunkDescriptors(evilPath, Laz.readInfo(evilPath)); () }
+      try { Las.lazChunks(evilPath, Las.lazInfo(evilPath)); () }
       catch { case _: Exception => () }
     }
   }

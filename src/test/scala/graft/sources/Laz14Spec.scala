@@ -151,7 +151,7 @@ class Laz14Spec extends AnyFunSuite with TempDir {
     val path = tmp("laz14_pf8.laz")
     Laz14.writePoints14(df, path, chunkPoints = 1000, pointFormat = 8)
 
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.compressor == 3)
     assert(info.header.versionMinor == 4 && info.header.pointFormat == 8)
     assert(info.header.pointCount == n && info.header.recordLen == 38)

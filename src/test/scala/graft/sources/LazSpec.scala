@@ -84,14 +84,14 @@ class LazSpec extends AnyFunSuite with TempDir {
 
     val enc = new ArithmeticEncoder
     val eic = new IntegerCompressor(32, 3).initModels()
-    stream.indices.foreach(i => eic.compress(enc, preds(i), stream(i), i % 3))
+    stream.indices.foreach(i => eic.code(Coder(enc), preds(i), stream(i), i % 3))
     enc.done()
     val bytes = enc.result()
     assert(sha256(bytes) == "1843db9896f7fc0da32b3c55596c52964b9d179391b1e96bb1f3dd53ea69391f")
     val dec = new ArithmeticDecoder(bytes, 0, bytes.length).init()
     val dic = new IntegerCompressor(32, 3).initModels()
     stream.indices.foreach { i =>
-      assert(dic.decompress(dec, preds(i), i % 3) == stream(i), s"value $i (${stream(i)})")
+      assert(dic.code(Coder(dec), preds(i), 0, i % 3) == stream(i), s"value $i (${stream(i)})")
     }
   }
 
@@ -101,14 +101,14 @@ class LazSpec extends AnyFunSuite with TempDir {
     val enc = new ArithmeticEncoder
     val eic = new IntegerCompressor(16, 1).initModels()
     var prev = 0
-    vals.foreach { v => eic.compress(enc, prev, v, 0); prev = v }
+    vals.foreach { v => eic.code(Coder(enc), prev, v, 0); prev = v }
     enc.done()
     assert(sha256(enc.result()) == "4c4a3c7201109b4ae94ece2066dd3a681c0541a61d6c39a386233c507bcb44c5")
     val dec = new ArithmeticDecoder(enc.result(), 0, enc.byteCount).init()
     val dic = new IntegerCompressor(16, 1).initModels()
     prev = 0
     vals.zipWithIndex.foreach { case (v, i) =>
-      val got = dic.decompress(dec, prev, 0); prev = got
+      val got = dic.code(Coder(dec), prev, 0, 0); prev = got
       assert(got == v, s"value $i")
     }
   }
@@ -135,11 +135,11 @@ class LazSpec extends AnyFunSuite with TempDir {
   test("POINT10 chunk roundtrips with every attribute varying") {
     val rnd = new Random(11)
     val pts = randomPoints(rnd, 60000)
-    val bytes = Laz.encodeChunk(pts)
+    val bytes = Laz.encodeChunk(0, pts.map(Laz.FullPoint(_)))
     assert(sha256(bytes) == "2c2a6b1b31e76ecff7f426b64f1d2464bef0ba4b018fc2ef8e643c0642223a77")
     assert(bytes.length < pts.length * 20 / 2,
       s"compression ratio sanity: ${bytes.length} vs raw ${pts.length * 20}")
-    val back = Laz.decodeChunk(bytes, 0, pts.length)
+    val back = Laz.decodeChunk(0, bytes, 0, pts.length).map(_.core)
     assert(back.length == pts.length)
     var i = 0
     while (i < pts.length) {
@@ -150,12 +150,12 @@ class LazSpec extends AnyFunSuite with TempDir {
 
   test("single-point and two-point chunks") {
     val p = Laz.Point10(1, 2, 3, 4, 0x49, 6, 250, 8, 9)
-    val one = Laz.encodeChunk(Array(p))
+    val one = Laz.encodeChunk(0, Array(Laz.FullPoint(p)))
     assert(one.length == 20)
-    assert(Laz.decodeChunk(one, 0, 1).toSeq == Seq(p))
+    assert(Laz.decodeChunk(0, one, 0, 1).map(_.core).toSeq == Seq(p))
     val q = Laz.Point10(-100, 2000000, -3, 0, 0x0A, 1, 5, 0, 9)
-    val two = Laz.encodeChunk(Array(p, q))
-    assert(Laz.decodeChunk(two, 0, 2).toSeq == Seq(p, q))
+    val two = Laz.encodeChunk(0, Array(p, q).map(Laz.FullPoint(_)))
+    assert(Laz.decodeChunk(0, two, 0, 2).map(_.core).toSeq == Seq(p, q))
   }
 
   test("GPSTIME11 chunk roundtrips adversarial time sequences") {
@@ -180,9 +180,9 @@ class LazSpec extends AnyFunSuite with TempDir {
     }
     val times = seq.result()
     val pts = times.map(g => Laz.FullPoint(Laz.Point10(0, 0, 0, 0, 0, 0, 0, 0, 0), gps = g))
-    val bytes = Laz.encodeChunkFull(1, pts)
+    val bytes = Laz.encodeChunk(1, pts)
     assert(sha256(bytes) == "d78acdd542599ed46d0ec63ff56882e227bd4723dfde7cda876fbe2fa4a548e7")
-    val back = Laz.decodeChunkFull(1, bytes, 0, pts.length)
+    val back = Laz.decodeChunk(1, bytes, 0, pts.length)
     times.indices.foreach { j =>
       assert(back(j).gps == times(j), s"gps $j: ${back(j).gps} vs ${times(j)}")
     }
@@ -202,9 +202,9 @@ class LazSpec extends AnyFunSuite with TempDir {
       }
       Laz.FullPoint(Laz.Point10(0, 0, 0, 0, 0, 0, 0, 0, 0), r = r, g = g, b = b)
     }
-    val bytes = Laz.encodeChunkFull(2, pts)
+    val bytes = Laz.encodeChunk(2, pts)
     assert(sha256(bytes) == "c22fb4b8e4b676e4569685fd17f1b3db8742bdd17873a7245f03d4e50b6ad11f")
-    val back = Laz.decodeChunkFull(2, bytes, 0, pts.length)
+    val back = Laz.decodeChunk(2, bytes, 0, pts.length)
     pts.indices.foreach { j =>
       assert((back(j).r, back(j).g, back(j).b) == (pts(j).r, pts(j).g, pts(j).b), s"rgb $j")
     }
@@ -219,9 +219,9 @@ class LazSpec extends AnyFunSuite with TempDir {
       Laz.FullPoint(c, gps = t, r = rnd.nextInt(65536),
         g = rnd.nextInt(65536), b = rnd.nextInt(65536))
     }
-    val bytes = Laz.encodeChunkFull(3, pts)
+    val bytes = Laz.encodeChunk(3, pts)
     assert(sha256(bytes) == "cd9037ee71f158b7f6bfb3915f83361f2269ad119c14bffc7f58d2a9416535ff")
-    val back = Laz.decodeChunkFull(3, bytes, 0, pts.length)
+    val back = Laz.decodeChunk(3, bytes, 0, pts.length)
     pts.indices.foreach(j => assert(back(j) == pts(j), s"point $j"))
   }
 
@@ -231,7 +231,7 @@ class LazSpec extends AnyFunSuite with TempDir {
       .toDF("x", "y", "z").repartition(3)
     val path = tmp("laz_pf3.laz")
     Laz.writePoints(df, path, chunkPoints = 1000, pointFormat = 3)
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.header.pointFormat == 3 && info.header.recordLen == 34)
     assert(info.items == Seq((6, 20, 2), (7, 8, 2), (8, 6, 2)))
     val back = Laz.readPoints(spark, path)
@@ -249,9 +249,9 @@ class LazSpec extends AnyFunSuite with TempDir {
         rnd.nextInt(256).toByte, // noise lane
         (i / 100).toByte)) // slow ramp
     }
-    val bytes = Laz.encodeChunkFull(0, pts, extraLen = 4)
+    val bytes = Laz.encodeChunk(0, pts, extraLen = 4)
     assert(sha256(bytes) == "6c82b6d802f9c226a5091ab7117fbae5955ac8d036e4b1e021bd1c11d886132c")
-    val back = Laz.decodeChunkFull(0, bytes, 0, pts.length, extraLen = 4)
+    val back = Laz.decodeChunk(0, bytes, 0, pts.length, extraLen = 4)
     pts.indices.foreach { j =>
       assert(back(j).core == pts(j).core, s"core $j")
       assert(back(j).extra.toSeq == pts(j).extra.toSeq, s"extra $j")
@@ -266,7 +266,7 @@ class LazSpec extends AnyFunSuite with TempDir {
     }.toDF("x", "y", "z", "extra_bytes").repartition(3)
     val path = tmp("laz_extra.laz")
     Laz.writePoints(df, path, chunkPoints = 1000, extraBytes = 3)
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.header.pointFormat == 0 && info.header.recordLen == 23)
     assert(info.items == Seq((6, 20, 2), (0, 3, 2)))
     val back = Laz.readPoints(spark, path)
@@ -289,7 +289,7 @@ class LazSpec extends AnyFunSuite with TempDir {
     val path = tmp("laz_test.laz")
     Laz.writePoints(pts.toDF("x", "y", "z"), path)
 
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.header.versionMajor == 1 && info.header.versionMinor == 2)
     assert(info.header.pointFormat == 0 && info.header.recordLen == 20)
     assert(info.header.pointCount == 3)
@@ -313,8 +313,8 @@ class LazSpec extends AnyFunSuite with TempDir {
     val path = tmp("laz_chunks.laz")
     Laz.writePoints(df, path, chunkPoints = 1000)
 
-    val info = Laz.readInfo(path)
-    val chunks = Laz.readChunkDescriptors(path, info)
+    val info = Las.lazInfo(path)
+    val chunks = Las.lazChunks(path, info)
     assert(chunks.length >= 21, s"expected >=21 variable chunks, got ${chunks.length}")
     assert(chunks.map(_._2.toLong).sum == n)
     // partition tails are short chunks — the variable-size table must carry them
@@ -355,7 +355,7 @@ class LazSpec extends AnyFunSuite with TempDir {
       .putLong(0, offset + 8L)
     val path = tmp("laz_count.laz")
     java.nio.file.Files.write(java.nio.file.Paths.get(path), header ++ vlr ++ table.array())
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.header.pointCount == n && info.compressor == 2)
     intercept[IllegalArgumentException](
       Las.writeHeader(2, 0x80, 20, 1L << 32, 1, offset, 0.1, Las.Extent(0, 1, 0, 1, 0, 1)))
@@ -366,14 +366,14 @@ class LazSpec extends AnyFunSuite with TempDir {
       Las.pointSchema)
     val path = tmp("laz_empty.laz")
     Laz.writePoints(df, path)
-    assert(Laz.readInfo(path).header.pointCount == 0)
+    assert(Las.lazInfo(path).header.pointCount == 0)
     assert(Laz.readPoints(spark, path).count() == 0)
   }
 
   test("uncompressed LAS is rejected with a pointer to Las") {
     val df = Seq((1.0, 2.0, 3.0)).toDF("x", "y", "z")
     Las.writePoints(df, tmp("not_laz.las"))
-    val e = intercept[IllegalArgumentException](Laz.readInfo(tmp("not_laz.las")))
+    val e = intercept[IllegalArgumentException](Las.lazInfo(tmp("not_laz.las")))
     assert(e.getMessage.contains("not compressed"))
     val e2 = intercept[IllegalArgumentException](Las.readHeader(tmp("laz_test.laz")))
     assert(e2.getMessage.contains("LAZ"))

@@ -80,18 +80,18 @@ class LazV1Spec extends AnyFunSuite with TempDir {
       (3, 3) -> "ccd41b3ba2bd37b7169ea968597161bb3cec15dec537fb2a26c53a3aa5b1425d")
     for (fmt <- 0 to 3; extraLen <- Seq(0, 3)) {
       val pts = walkPoints(new Random(fmt * 10 + extraLen), 4000, fmt, extraLen)
-      val bytes = LazV1.encodeStream(fmt, pts, extraLen)
+      val bytes = Laz.encodeChunk(fmt, pts, extraLen, v1 = true)
       assert(sha256(bytes) == pins((fmt, extraLen)), s"pf$fmt extra $extraLen")
-      val back = LazV1.decodeStream(fmt, bytes, 0, pts.length, extraLen)
+      val back = Laz.decodeChunk(fmt, bytes, 0, pts.length, extraLen, v1 = true)
       assertSame(pts, back)
     }
   }
 
   test("v1 stream roundtrips a single-point file (raw record only)") {
     val pts = walkPoints(new Random(7), 1, 3, 2)
-    val bytes = LazV1.encodeStream(3, pts, 2)
+    val bytes = Laz.encodeChunk(3, pts, 2, v1 = true)
     assert(bytes.length == Laz.recordLen(3) + 2, "one point = raw record, no stream")
-    assertSame(pts, LazV1.decodeStream(3, bytes, 0, 1, 2))
+    assertSame(pts, Laz.decodeChunk(3, bytes, 0, 1, 2, v1 = true))
   }
 
   test("v1 gps codec survives adversarial delta regimes") {
@@ -113,13 +113,13 @@ class LazV1Spec extends AnyFunSuite with TempDir {
     }
     val enc = new ArithmeticEncoder
     val c = new LazV1.GpsTime11V1Codec(seq(0))
-    seq.drop(1).foreach(c.compress(enc, _))
+    seq.drop(1).foreach(c.code(Coder(enc), _))
     enc.done()
     val bytes = enc.result()
     assert(sha256(bytes) == "23462c03e264d3e793e76e48d430d25ed43a08798bf79bf20c816bb39d99c43f")
     val dec = new ArithmeticDecoder(bytes, 0, bytes.length).init()
     val d = new LazV1.GpsTime11V1Codec(seq(0))
-    seq.drop(1).foreach(v => assert(d.decompress(dec) == v))
+    seq.drop(1).foreach(v => assert(d.code(Coder(dec), 0L) == v))
   }
 
   test("writePointsV1 emits a pointwise container readPoints scans back exactly") {
@@ -129,7 +129,7 @@ class LazV1Spec extends AnyFunSuite with TempDir {
     }.toDF("x", "y", "z")
     val path = tmp("v1_container_test.laz")
     Laz.writePointsV1(src, path)
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.compressor == 1 && info.chunkTableOffset == -1L)
     assert(info.items.forall(_._3 == 1), s"item versions: ${info.items}")
     val back = Laz.readPoints(spark, path)

@@ -62,9 +62,9 @@ class LazWaveSpec extends AnyFunSuite with TempDir {
       5 -> "dee14fd145118d40642d938cd39f5584469f85fdba2ecde6212e14a23071156b")
     for (fmt <- Seq(4, 5)) {
       val pts = wavePoints(new Random(fmt), 4000, fmt)
-      val bytes = Laz.encodeChunkFull(fmt, pts)
+      val bytes = Laz.encodeChunk(fmt, pts)
       assert(sha256(bytes) == pins(fmt), s"pf$fmt")
-      val back = Laz.decodeChunkFull(fmt, bytes, 0, pts.length)
+      val back = Laz.decodeChunk(fmt, bytes, 0, pts.length)
       pts.indices.foreach { i =>
         assert(back(i).core == pts(i).core, s"core at $i")
         assert(back(i).gps == pts(i).gps, s"gps at $i")
@@ -131,7 +131,7 @@ class LazWaveSpec extends AnyFunSuite with TempDir {
       "wp_ret", "wp_xt", "wp_yt", "wp_zt")
     val path = tmp("wave14_container_test.laz")
     Laz14.writePoints14(src, path, chunkPoints = 600, pointFormat = 9)
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.compressor == 3 && info.header.pointFormat == 9)
     val back = Laz14.readPoints14(spark, path,
         columns = Seq("x", "wp_index", "wp_offset", "wp_size", "wp_ret",
@@ -177,7 +177,7 @@ class LazWaveSpec extends AnyFunSuite with TempDir {
       "wp_ret", "wp_xt", "wp_yt", "wp_zt")
     val path = tmp("wave_container_test.laz")
     Laz.writePoints(src, path, chunkPoints = 700, pointFormat = 5)
-    val info = Laz.readInfo(path)
+    val info = Las.lazInfo(path)
     assert(info.header.versionMinor == 3 && info.header.pointFormat == 5)
     assert(info.items.exists(it => it._1 == 9 && it._2 == 29 && it._3 == 1),
       s"wavepacket item missing: ${info.items}")
